@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.GraftConfig
-import graft.sources.Tables
+import graft.sources.{Artifact, Tables}
 
 /** Behavioral / product analytics over the event stream: SCD2 history
   * building, ordered funnel analysis, cohort retention. The warehouse
@@ -83,21 +83,13 @@ class BehavioralOps(val cfg: GraftConfig) {
     val e = ev(spark, dir)
     val maxDay = e.agg(max(expr(s"ms div $DayMs")).as("max_day"))
     val cut = e.crossJoin(broadcast(maxDay))
-    // build-if-absent (round-11 advice): the pre-cutoff history is the
-    // persisted NIGHTLY table — written once, loaded on every later
-    // run, so steady-state cost really is delta-proportional as the
-    // scaladoc claims. The path is content-keyed on the events file's
-    // metadata, so an in-place feed regeneration (which can move the
-    // cutoff day itself) rebuilds instead of merging into a stale base.
-    val basePath = graft.sources.Scratch.keyedDir(
-      "scd2base", dir, spark, Seq("events.parquet"), "")
-    val success = new org.apache.hadoop.fs.Path(basePath, "_SUCCESS")
-    val fs = success.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(success))
-      scd2Of(cut.filter(expr(s"ms div $DayMs") < col("max_day"))
-          .drop("max_day"))
-        .write.mode("overwrite").parquet(basePath)
-    val hist = spark.read.parquet(basePath)
+    // the pre-cutoff history is the persisted NIGHTLY table, so
+    // steady-state cost really is delta-proportional as the scaladoc
+    // claims. The key needs no knob: the events fingerprint already
+    // moves when a feed regeneration moves the cutoff day itself.
+    val hist = Artifact.getOrBuild(spark, "scd2base", dir, Seq("events.parquet"), "") { p =>
+      scd2Of(cut.filter(expr(s"ms div $DayMs") < col("max_day")).drop("max_day")).write.parquet(p)
+    }
     val affected = cut.filter(expr(s"ms div $DayMs") === col("max_day"))
       .select("user_id").distinct()
     val kept = hist.join(broadcast(affected), Seq("user_id"), "left_anti")

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.GraftConfig
-import graft.sources.Tables
+import graft.sources.{Artifact, Tables}
 import graft.functions.Vec
 
 /** Near-duplicate detection family for training-data pipelines.
@@ -550,34 +550,25 @@ class DedupOps(val cfg: GraftConfig) {
     * recompute on the surviving docs over the artifact's pair set;
     * spec pins untouched-family rows byte-identical and relabeled
     * docs ⊆ touched families. */
-  /** The persisted full near-dup pair table + family labels —
-    * content-keyed build-if-absent (the knn_cents/truth lifecycle):
-    * q296 reads both, q322 reads the labels; a corpus regeneration or
-    * a knob change reroutes the key instead of serving stale
-    * families. Returns (pairs, labels(doc_id, lbl)). */
+  /** The persisted full near-dup pair table + family labels (the
+    * knn_cents/truth lifecycle): q296 reads both, q322 reads the
+    * labels. The key carries every knob that shapes a pair, so a knob
+    * change never serves stale families. Returns (pairs,
+    * labels(doc_id, lbl)). */
   private[graft] def persistedFamilyArtifacts(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
     graft.GraftSession.ensureCheckpointDir(spark)
     val ckey = s"k=${cfg.shingleK},rdf=$RareDf,mh=$MinhashJ,j=$JaccardJ"
-    val pPath = graft.sources.Scratch.keyedDir("ndpairs_full", dir, spark,
-      Seq("documents.parquet"), ckey)
-    val lPath = graft.sources.Scratch.keyedDir("famlbl_full", dir, spark,
-      Seq("documents.parquet"), ckey)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    def missing(p: String): Boolean = {
-      val s = new org.apache.hadoop.fs.Path(p, "_SUCCESS")
-      !s.getFileSystem(hconf).exists(s)
-    }
-    if (missing(pPath) || missing(lPath)) {
+    val pairs = Artifact.getOrBuild(spark, "ndpairs_full", dir, Seq("documents.parquet"),
+        ckey) { p =>
       val (edges, arr) = nearDupEdgesScratch(spark, dir)
-      val pairs = graft.Trace("q296.pairs")(edges.localCheckpoint(true))
+      graft.Trace("q296.pairs")(edges.write.parquet(p))
       arr.unpersist(false)
-      pairs.write.mode("overwrite").parquet(pPath)
-      Cc.labels(pairs.select(col("id_a").as("u"), col("id_b").as("v")), cfg)
-        .write.mode("overwrite").parquet(lPath)
-      pairs.unpersist(false)
     }
-    (spark.read.parquet(pPath),
-      spark.read.parquet(lPath).select(col("node").as("doc_id"), col("lbl")))
+    val labels = Artifact.getOrBuild(spark, "famlbl_full", dir, Seq("documents.parquet"),
+        ckey) { p =>
+      Cc.labels(pairs.select(col("id_a").as("u"), col("id_b").as("v")), cfg).write.parquet(p)
+    }
+    (pairs, labels.select(col("node").as("doc_id"), col("lbl")))
   }
 
   def q296DecrementalFamilies(spark: SparkSession, dir: String): DataFrame = {
@@ -974,43 +965,35 @@ class DedupOps(val cfg: GraftConfig) {
   def q324ContainmentJoin(spark: SparkSession, dir: String): DataFrame =
     persistedContainmentPairs(spark, dir)
 
-  /** The containment pair table as a content-keyed build-if-absent
-    * artifact (the knn_cents/famlbl lifecycle): q324 serves it, q329
+  /** The containment pair table as a persisted artifact (the
+    * knn_cents/famlbl lifecycle): q324 serves it, q329
     * consumes it — without this, q329 re-paid the whole prefix-filter
     * join inline (measured 5.2 s at sf0.1 vs q324's 3.9 — the q291
     * disease, cured the same way). The oracle rebuilds the pairs from
     * scratch every Verify round, re-proving artifact ≡ recompute. */
-  private[graft] def persistedContainmentPairs(spark: SparkSession, dir: String): DataFrame = {
-    val path = graft.sources.Scratch.keyedDir("contain_pairs", dir, spark,
-      Seq("documents.parquet"), s"w=$SimW,t=${cfg.contTNum}/${cfg.contTDen}")
-    val p = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p))
-      containmentJoinFresh(spark, dir).write.mode("overwrite").parquet(path)
-    spark.read.parquet(path)
-  }
-
-  private[graft] def containmentJoinFresh(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val CNum = cfg.contTNum
-    val CDen = cfg.contTDen
-    val sh = wordGrams(spark, dir)
-    val df = sh.groupBy("s").agg(count(lit(1)).as("df"))
-    val ranked = sh.join(df, "s")
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("doc_id").orderBy(col("df"), col("s"))))
-      .withColumn("n", count(lit(1)).over(Window.partitionBy("doc_id")))
-    val prefix = ranked
-      .filter(col("rk") <= col("n") - expr(s"($CNum * n + ${CDen - 1}) div $CDen") + 1)
-      .select(col("s"), col("doc_id").as("src_id"), col("n").as("nsrc"))
-    val grams = ranked.select(col("s"), col("doc_id").as("dst_id"), col("n").as("ndst"))
-    val cand = prefix.join(grams,
-        prefix("s") === grams("s") && col("src_id") =!= col("dst_id") &&
-        lit(CDen) * col("ndst") >= lit(CNum) * col("nsrc"))
-      .select("src_id", "dst_id")
-      .distinct()
-    containmentVerify(spark, dir, cand)
-  }
+  private[graft] def persistedContainmentPairs(spark: SparkSession, dir: String): DataFrame =
+    Artifact.getOrBuild(spark, "contain_pairs", dir, Seq("documents.parquet"),
+        s"w=$SimW,t=${cfg.contTNum}/${cfg.contTDen}") { p =>
+      import org.apache.spark.sql.expressions.Window
+      val CNum = cfg.contTNum
+      val CDen = cfg.contTDen
+      val sh = wordGrams(spark, dir)
+      val df = sh.groupBy("s").agg(count(lit(1)).as("df"))
+      val ranked = sh.join(df, "s")
+        .withColumn("rk", row_number().over(
+          Window.partitionBy("doc_id").orderBy(col("df"), col("s"))))
+        .withColumn("n", count(lit(1)).over(Window.partitionBy("doc_id")))
+      val prefix = ranked
+        .filter(col("rk") <= col("n") - expr(s"($CNum * n + ${CDen - 1}) div $CDen") + 1)
+        .select(col("s"), col("doc_id").as("src_id"), col("n").as("nsrc"))
+      val grams = ranked.select(col("s"), col("doc_id").as("dst_id"), col("n").as("ndst"))
+      val cand = prefix.join(grams,
+          prefix("s") === grams("s") && col("src_id") =!= col("dst_id") &&
+          lit(CDen) * col("ndst") >= lit(CNum) * col("nsrc"))
+        .select("src_id", "dst_id")
+        .distinct()
+      containmentVerify(spark, dir, cand).write.parquet(p)
+    }
 
   /** The exact-verification tail shared by the full rebuild and the
     * delta absorption (q332): candidates → in-row gram-set intersect →
@@ -1103,8 +1086,8 @@ class DedupOps(val cfg: GraftConfig) {
        |  q.n_containers IS NOT NULL AS is_quote
        |FROM documents d LEFT JOIN q USING (doc_id)""".stripMargin
 
-  /** The nightly BASE-SPLIT containment state (three content-keyed
-    * build-if-absent artifacts, the knnd_cents lifecycle on the text
+  /** The nightly BASE-SPLIT containment state (three artifacts, each
+    * built from the one before, the knnd_cents lifecycle on the text
     * axis): the base gram DF table (the global prefix order), the base
     * gram index with per-gram prefix membership under that order, and
     * the verified base→base pair table. [[q332ContainmentDelta]]
@@ -1115,30 +1098,23 @@ class DedupOps(val cfg: GraftConfig) {
     import org.apache.spark.sql.expressions.Window
     val CNum = cfg.contTNum
     val CDen = cfg.contTDen
-    val key = s"w=$SimW,t=$CNum/$CDen,u=${cfg.splitTrainUpper}"
-    def pathOf(tag: String) = graft.sources.Scratch.keyedDir(tag, dir, spark,
-      Seq("documents.parquet"), key)
-    val (dfP, idxP, prP) = (pathOf("cont_base_df"), pathOf("cont_base_idx"),
-      pathOf("cont_base_pairs"))
-    val hconf = spark.sparkContext.hadoopConfiguration
-    def missing(p: String): Boolean = {
-      val s = new org.apache.hadoop.fs.Path(p, "_SUCCESS")
-      !s.getFileSystem(hconf).exists(s)
-    }
-    if (missing(dfP) || missing(idxP) || missing(prP)) {
-      val bsh = wordGrams(spark, dir)
-        .filter(substring(md5(col("doc_id").cast("string")), 1, 2) < cfg.splitTrainUpper)
-      bsh.groupBy("s").agg(count(lit(1)).as("df"))
-        .write.mode("overwrite").parquet(dfP)
-      val bdf = spark.read.parquet(dfP)
-      val ranked = bsh.join(bdf, "s")
+    def artifact(tag: String)(build: String => Unit): DataFrame =
+      Artifact.getOrBuild(spark, tag, dir, Seq("documents.parquet"),
+        s"w=$SimW,t=$CNum/$CDen,u=${cfg.splitTrainUpper}")(build)
+    def bsh = wordGrams(spark, dir)
+      .filter(substring(md5(col("doc_id").cast("string")), 1, 2) < cfg.splitTrainUpper)
+    val bdf = artifact("cont_base_df")(
+      bsh.groupBy("s").agg(count(lit(1)).as("df")).write.parquet(_))
+    val idx = artifact("cont_base_idx") { p =>
+      bsh.join(bdf, "s")
         .withColumn("rk", row_number().over(
           Window.partitionBy("doc_id").orderBy(col("df"), col("s"))))
         .withColumn("n", count(lit(1)).over(Window.partitionBy("doc_id")))
-      ranked.select(col("s"), col("doc_id"), col("n"),
+        .select(col("s"), col("doc_id"), col("n"),
           (col("rk") <= col("n") - expr(s"($CNum * n + ${CDen - 1}) div $CDen") + 1).as("pfx"))
-        .write.mode("overwrite").parquet(idxP)
-      val idx = spark.read.parquet(idxP)
+        .write.parquet(p)
+    }
+    val pairs = artifact("cont_base_pairs") { p =>
       val prefix = idx.filter(col("pfx"))
         .select(col("s"), col("doc_id").as("src_id"), col("n").as("nsrc"))
       val grams = idx.select(col("s"), col("doc_id").as("dst_id"), col("n").as("ndst"))
@@ -1147,9 +1123,9 @@ class DedupOps(val cfg: GraftConfig) {
           lit(CDen) * col("ndst") >= lit(CNum) * col("nsrc"))
         .select("src_id", "dst_id")
         .distinct()
-      containmentVerify(spark, dir, cand).write.mode("overwrite").parquet(prP)
+      containmentVerify(spark, dir, cand).write.parquet(p)
     }
-    (spark.read.parquet(dfP), spark.read.parquet(idxP), spark.read.parquet(prP))
+    (bdf, idx, pairs)
   }
 
   /** q332: INCREMENTAL CONTAINMENT MAINTENANCE — the q285/q133 delta

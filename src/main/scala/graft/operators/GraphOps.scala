@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.GraftConfig
-import graft.sources.Tables
+import graft.sources.{Artifact, Tables}
 
 /** String-graph operators — CloudBrush's overlap / graph-cleaning /
   * compression phases on the document corpus.
@@ -1733,26 +1733,14 @@ class GraphOpsLib(val cfg: GraftConfig) {
         .withColumn("b", edgeBucket),
       cfg)
     // the nightly base labels are a PERSISTED artifact (the
-    // q210/q204 lifecycle): built on first use, loaded forever after —
-    // the kernel is deterministic and the corpora immutable, so
-    // load-or-build can never diverge from rebuilding (and the oracle
-    // re-verifies the merged result against the full recompute every
-    // round regardless). Steady-state cost is the incremental side
-    // only: measured 6.3 s (build run) → ~2 s (load runs) at sf0.1.
-    // The path is CONTENT-KEYED (round-11 advice): it carries the one
-    // knob that shapes the edge set (maxOverlapKeyDf — the hot-key
-    // skip changes which edges exist) and a metadata fingerprint of
-    // the corpus file, so a reconfigured instance or an in-place
-    // corpus regeneration rebuilds instead of reusing stale labels.
-    val basePath = graft.sources.Scratch.keyedDir(
-      s"ccbase_${cfg.splitTrainUpper}", dir, spark,
-      Seq("documents.parquet"), s"maxOverlapKeyDf=${cfg.maxOverlapKeyDf}")
-    val success = new org.apache.hadoop.fs.Path(basePath, "_SUCCESS")
-    val fs = success.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(success))
-      Cc.labels(e.filter(col("b") < cfg.splitTrainUpper).drop("b"), cfg)
-        .write.mode("overwrite").parquet(basePath)
-    val baseLbl = spark.read.parquet(basePath)
+    // q210/q204 lifecycle): steady-state cost is the incremental side
+    // only, measured 6.3 s (build run) → ~2 s (load runs) at sf0.1.
+    // The key carries the one knob that shapes the edge set
+    // (maxOverlapKeyDf — the hot-key skip changes which edges exist).
+    val baseLbl = Artifact.getOrBuild(spark, s"ccbase_${cfg.splitTrainUpper}", dir,
+        Seq("documents.parquet"), s"maxOverlapKeyDf=${cfg.maxOverlapKeyDf}") { p =>
+      Cc.labels(e.filter(col("b") < cfg.splitTrainUpper).drop("b"), cfg).write.parquet(p)
+    }
     val delta = e.filter(col("b") >= cfg.splitTrainUpper).drop("b")
     val contracted = delta
       .join(baseLbl.select(col("node").as("u"), col("lbl").as("lu")), Seq("u"), "left")
@@ -1823,15 +1811,10 @@ class GraphOpsLib(val cfg: GraftConfig) {
         .withColumn("b", edgeBucket),
       cfg)
     // base labels over the FULL edge set (not q242's train split — the
-    // decremental story starts from a complete nightly artifact);
-    // content-keyed on the one edge-shaping knob + corpus metadata
-    val basePath = graft.sources.Scratch.keyedDir("ccfull", dir, spark,
-      Seq("documents.parquet"), s"maxOverlapKeyDf=${cfg.maxOverlapKeyDf}")
-    val success = new org.apache.hadoop.fs.Path(basePath, "_SUCCESS")
-    val fs = success.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(success))
-      Cc.labels(e.select("u", "v"), cfg).write.mode("overwrite").parquet(basePath)
-    val baseLbl = spark.read.parquet(basePath)
+    // decremental story starts from a complete nightly artifact),
+    // keyed on the one edge-shaping knob
+    val baseLbl = Artifact.getOrBuild(spark, "ccfull", dir, Seq("documents.parquet"),
+      s"maxOverlapKeyDf=${cfg.maxOverlapKeyDf}")(Cc.labels(e.select("u", "v"), cfg).write.parquet(_))
     val deleted = e.filter(col("b") >= cfg.ccDeleteLower)
     val kept = e.filter(col("b") < cfg.ccDeleteLower).select("u", "v")
     // touched components: every base label adjacent to a deleted edge

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.GraftConfig
-import graft.sources.Tables
+import graft.sources.{Artifact, Tables}
 
 /** Segment-granular curation — the exact-substring/boilerplate layer of
   * a training-data pipeline (Lee et al. 2021 dedup at paragraph
@@ -311,25 +311,18 @@ class SegmentOps(val cfg: GraftConfig) {
     stats.join(head, "token")
   }
 
-  /** Persisted BASE-split index artifact (the q242/q210 build-if-absent
-    * lifecycle: built once over the train split, every later run
-    * loads). The path carries BOTH knobs that shape the artifact's
-    * content — the posting cap and the split boundary — AND a metadata
-    * fingerprint of documents.parquet itself, so neither a
-    * reconfigured instance nor an in-place corpus regeneration can
-    * silently reuse a stale index (the round-12 advice closure). */
-  private[graft] def persistedBaseIndex(spark: SparkSession, dir: String): DataFrame = {
-    val path = graft.sources.Scratch.keyedDir("inv_idx", dir, spark,
-      Seq("documents.parquet"), s"cap=$Cap,u=${cfg.splitTrainUpper}")
-    val p = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) {
+  /** Persisted BASE-split index artifact (the q242/q210 lifecycle:
+    * built once over the train split, every later run loads). The key
+    * carries BOTH knobs that shape the artifact's content — the
+    * posting cap and the split boundary — so a reconfigured instance
+    * never reuses a stale index. */
+  private[graft] def persistedBaseIndex(spark: SparkSession, dir: String): DataFrame =
+    Artifact.getOrBuild(spark, "inv_idx", dir, Seq("documents.parquet"),
+        s"cap=$Cap,u=${cfg.splitTrainUpper}") { p =>
       val base = Tables.documents(spark, dir).filter(
         substring(md5(col("doc_id").cast("string")), 1, 2) < cfg.splitTrainUpper)
-      indexOf(base).write.mode("overwrite").parquet(path)
+      indexOf(base).write.parquet(p)
     }
-    spark.read.parquet(path)
-  }
 
   /** q263: INCREMENTAL inverted-index maintenance — the q188/q242 delta
     * discipline applied to q102's postings and q90's df stats (the

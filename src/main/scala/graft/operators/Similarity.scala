@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.GraftConfig
-import graft.sources.Tables
+import graft.sources.{Artifact, Tables}
 import graft.functions.Vec
 
 /** Approximate-nearest-neighbor search over the embeddings table.
@@ -175,23 +175,12 @@ class SimilarityOps(val cfg: GraftConfig) {
     * every round, re-proving it). At 100 TB training-per-query is the
     * difference between an index and a re-index: before this, ~12 call
     * sites re-ran the full Lloyd chain inline per call. */
-  def trainIndex(spark: SparkSession, dir: String): DataFrame = {
-    val path = graft.sources.Scratch.keyedDir("ivf_cents", dir, spark,
-      Seq("embeddings.parquet"), s"c=$NumCentroids,ki=$KmeansIters,tm=$TrainMod")
-    val p = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p))
-      trainIndexFresh(spark, dir).write.mode("overwrite").parquet(path)
-    spark.read.parquet(path)
-  }
-
-  /** One full Lloyd training run over the corpus — the artifact
-    * builder behind [[trainIndex]]; callers that need a fresh
-    * non-persisted train (spec plumbing) use this directly. */
-  private[graft] def trainIndexFresh(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftExtensions.ensureRegistered(spark)
-    trainIndexOn(emb(spark, dir).withColumn("n2", Vec.norm2N("embedding")))
-  }
+  def trainIndex(spark: SparkSession, dir: String): DataFrame =
+    Artifact.getOrBuild(spark, "ivf_cents", dir, Seq("embeddings.parquet"),
+        s"c=$NumCentroids,ki=$KmeansIters,tm=$TrainMod") { p =>
+      graft.plans.GraftExtensions.ensureRegistered(spark)
+      trainIndexOn(emb(spark, dir).withColumn("n2", Vec.norm2N("embedding"))).write.parquet(p)
+    }
 
   /** Train over an explicit vector set (must carry n2) — the corpus
     * slice the index is allowed to see at training time; q188 trains on
@@ -1581,21 +1570,12 @@ class SimilarityOps(val cfg: GraftConfig) {
         .withColumn("sub_id", lit(s))
     }.reduce(_ unionAll _)
 
-  /** The persisted PQ codebook for a dataset — loaded from the shared
-    * scratch artifact, trained-and-saved on first use (the q210/q188
-    * artifact lifecycle: training runs once, every consumer loads).
-    * Parquet round-trips the DOUBLE codeword arrays bit-exactly. */
-  private[graft] def persistedPqCodebook(spark: SparkSession, dir: String): DataFrame = {
-    // Content-keyed (config + embeddings metadata fingerprint): an
-    // in-place corpus regeneration changes the path, so a codebook
-    // trained on the old vectors can never be silently served.
-    val path = graft.sources.Scratch.keyedDir("pq_cb", dir, spark,
-      Seq("embeddings.parquet"), s"m=$PqM,k=$PqK,i=$PqIters")
-    val p = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) pqTrain(spark, dir).write.mode("overwrite").parquet(path)
-    spark.read.parquet(path)
-  }
+  /** The persisted PQ codebook for a dataset (the q210/q188 artifact
+    * lifecycle: training runs once, every consumer loads). Parquet
+    * round-trips the DOUBLE codeword arrays bit-exactly. */
+  private[graft] def persistedPqCodebook(spark: SparkSession, dir: String): DataFrame =
+    Artifact.getOrBuild(spark, "pq_cb", dir, Seq("embeddings.parquet"),
+      s"m=$PqM,k=$PqK,i=$PqIters")(pqTrain(spark, dir).write.parquet(_))
 
   /** Corpus codes under a codebook, ONE scan: all m codebooks pack
     * into a single broadcast row and every subspace's argmin runs as a
@@ -1967,19 +1947,12 @@ class SimilarityOps(val cfg: GraftConfig) {
     * fingerprint — the q242/q263 content-keying discipline): a knob
     * change or an in-place regeneration makes the stale artifact
     * unreachable instead of silently trusted. */
-  private[graft] def persistedResCodebook(spark: SparkSession, dir: String): DataFrame = {
-    val path = graft.sources.Scratch.keyedDir("pqres_cb", dir, spark,
-      Seq("embeddings.parquet"),
-      s"m=$PqM,k=$PqK,i=$PqIters,c=$NumCentroids,ki=$KmeansIters,tm=$TrainMod")
-    val p = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) {
+  private[graft] def persistedResCodebook(spark: SparkSession, dir: String): DataFrame =
+    Artifact.getOrBuild(spark, "pqres_cb", dir, Seq("embeddings.parquet"),
+        s"m=$PqM,k=$PqK,i=$PqIters,c=$NumCentroids,ki=$KmeansIters,tm=$TrainMod") { p =>
       val e = emb(spark, dir).withColumn("n2", Vec.norm2N("embedding"))
-      pqTrainOn(residualsOf(e, trainIndex(spark, dir)))
-        .write.mode("overwrite").parquet(path)
+      pqTrainOn(residualsOf(e, trainIndex(spark, dir))).write.parquet(p)
     }
-    spark.read.parquet(path)
-  }
 
   /** q271: RESIDUAL IVF-PQ SEARCH — the full Faiss-style IVFPQ serving
     * shape, one refinement past q261: the PQ codebook is trained on and
@@ -2287,20 +2260,14 @@ class SimilarityOps(val cfg: GraftConfig) {
 
   // ---------- Graph-ANN serving (q279/q280) ----------
 
-  /** The persisted kNN-graph artifact — q140's output under the
-    * build-if-absent lifecycle (train once, every consumer loads), the
-    * q188/q210 discipline. Content-keyed on every knob that shapes the
-    * graph (k, probe width, the IVF index's own config) AND the corpus
-    * metadata fingerprint, so neither a reconfigured instance nor an
-    * in-place regeneration can serve a stale graph. */
-  private[graft] def persistedKnnGraph(spark: SparkSession, dir: String): DataFrame = {
-    val path = graft.sources.Scratch.keyedDir("knn_graph", dir, spark,
-      Seq("embeddings.parquet"), knnArtifactKey)
-    val p = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) q140KnnGraph(spark, dir).write.mode("overwrite").parquet(path)
-    spark.read.parquet(path)
-  }
+  /** The persisted kNN-graph artifact — q140's output, built once and
+    * loaded by every consumer (the q188/q210 discipline). Keyed on
+    * every knob that shapes the graph (k, probe width, the IVF index's
+    * own config), so a reconfigured instance never serves a stale
+    * graph. */
+  private[graft] def persistedKnnGraph(spark: SparkSession, dir: String): DataFrame =
+    Artifact.getOrBuild(spark, "knn_graph", dir, Seq("embeddings.parquet"),
+      knnArtifactKey)(q140KnnGraph(spark, dir).write.parquet(_))
 
   private def knnArtifactKey: String =
     s"k=${cfg.knnK},np=${cfg.ivfNprobe},c=$NumCentroids,ki=$KmeansIters,tm=$TrainMod"
@@ -2312,23 +2279,14 @@ class SimilarityOps(val cfg: GraftConfig) {
     * per query was the dominant cost of the guided-entry switch
     * (measured: q279 8.2 → 2.6 s at sf0.1 once both load). */
   private def persistedKnnQuantizer(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    def missing(p: String): Boolean = {
-      val s = new org.apache.hadoop.fs.Path(p, "_SUCCESS")
-      !s.getFileSystem(hconf).exists(s)
-    }
-    val centsPath = graft.sources.Scratch.keyedDir("knn_cents", dir, spark,
-      Seq("embeddings.parquet"), knnArtifactKey)
-    if (missing(centsPath))
-      trainIndex(spark, dir).write.mode("overwrite").parquet(centsPath)
-    val cents = spark.read.parquet(centsPath)
-    val cellsPath = graft.sources.Scratch.keyedDir("knn_cells", dir, spark,
-      Seq("embeddings.parquet"), knnArtifactKey)
-    if (missing(cellsPath))
+    val cents = Artifact.getOrBuild(spark, "knn_cents", dir, Seq("embeddings.parquet"),
+      knnArtifactKey)(trainIndex(spark, dir).write.parquet(_))
+    val cells = Artifact.getOrBuild(spark, "knn_cells", dir, Seq("embeddings.parquet"),
+        knnArtifactKey) { p =>
       assign(emb(spark, dir).withColumn("n2", Vec.norm2N("embedding")), cents)
-        .select(col("vec_id"), col("cell"))
-        .write.mode("overwrite").parquet(cellsPath)
-    (cents, spark.read.parquet(cellsPath))
+        .select(col("vec_id"), col("cell")).write.parquet(p)
+    }
+    (cents, cells)
   }
 
   /** q279: GRAPH-ANN SEARCH — the third serving tier beside IVF (q41)
@@ -2641,15 +2599,9 @@ class SimilarityOps(val cfg: GraftConfig) {
     * instead of serving stale truth. At 100 TB the truth table is
     * exactly what an eval pipeline snapshots once per corpus
     * version. */
-  private[graft] def persistedBruteTruth(spark: SparkSession, dir: String): DataFrame = {
-    val path = graft.sources.Scratch.keyedDir("ann_truth", dir, spark,
-      Seq("embeddings.parquet"), s"nq=$NumQueries,k=$TopK")
-    val p = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p))
-      q40AnnBrute(spark, dir).write.mode("overwrite").parquet(path)
-    spark.read.parquet(path)
-  }
+  private[graft] def persistedBruteTruth(spark: SparkSession, dir: String): DataFrame =
+    Artifact.getOrBuild(spark, "ann_truth", dir, Seq("embeddings.parquet"),
+      s"nq=$NumQueries,k=$TopK")(q40AnnBrute(spark, dir).write.parquet(_))
 
   /** The exact full-space fixed-point-L2 truth as a content-keyed
     * persisted artifact — [[persistedBruteTruth]]'s lifecycle applied
@@ -2664,11 +2616,8 @@ class SimilarityOps(val cfg: GraftConfig) {
   private[graft] def persistedL2Truth(spark: SparkSession, dir: String): DataFrame = {
     graft.plans.GraftExtensions.ensureRegistered(spark)
     val kMax = math.max(TopK, IvfTopK)
-    val path = graft.sources.Scratch.keyedDir("l2_truth", dir, spark,
-      Seq("embeddings.parquet"), s"nq=$NumQueries,k=$kMax")
-    val p = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) {
+    Artifact.getOrBuild(spark, "l2_truth", dir, Seq("embeddings.parquet"),
+        s"nq=$NumQueries,k=$kMax") { p =>
       val e = emb(spark, dir)
         .withColumn("n2", expr("vec_dot_fixed(embedding, embedding)"))
       val qv = e.filter(col("vec_id") < NumQueries)
@@ -2680,9 +2629,8 @@ class SimilarityOps(val cfg: GraftConfig) {
           (col("qn2") + col("n2")
             - lit(2L) * expr("vec_dot_fixed(qe, embedding)")).as("d2"))
         .withColumn("rk", row_number().over(wq)).filter(col("rk") <= kMax)
-        .write.mode("overwrite").parquet(path)
+        .write.parquet(p)
     }
-    spark.read.parquet(path)
   }
 
   /** Per-query |approx ∩ exact-top-k| / k against q40's exhaustive
@@ -2771,16 +2719,10 @@ class SimilarityOps(val cfg: GraftConfig) {
     * from a lineage cut alone, further once loaded. `base` must be
     * the cfg.splitTrainUpper md5-band split the key encodes. */
   private[graft] def persistedBaseCents(spark: SparkSession, dir: String,
-      base: DataFrame): DataFrame = {
-    val centsPath = graft.sources.Scratch.keyedDir("knnd_cents", dir, spark,
-      Seq("embeddings.parquet"),
-      s"c=$NumCentroids,ki=$KmeansIters,tm=$TrainMod,u=${cfg.splitTrainUpper}")
-    val csp = new org.apache.hadoop.fs.Path(centsPath, "_SUCCESS")
-    val cfs = csp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!cfs.exists(csp))
-      trainIndexOn(base).write.mode("overwrite").parquet(centsPath)
-    spark.read.parquet(centsPath)
-  }
+      base: DataFrame): DataFrame =
+    Artifact.getOrBuild(spark, "knnd_cents", dir, Seq("embeddings.parquet"),
+      s"c=$NumCentroids,ki=$KmeansIters,tm=$TrainMod,u=${cfg.splitTrainUpper}")(
+      trainIndexOn(base).write.parquet(_))
 
   private[graft] def knnDeltaParts(spark: SparkSession, dir: String): KnnDeltaState = {
     graft.plans.GraftExtensions.ensureRegistered(spark)
@@ -2792,15 +2734,6 @@ class SimilarityOps(val cfg: GraftConfig) {
     val bAssigned = assign(base, cents)
     val ckey = s"k=${cfg.knnK},np=${cfg.ivfNprobe},c=$NumCentroids," +
       s"ki=$KmeansIters,tm=$TrainMod,u=${cfg.splitTrainUpper}"
-    val gPath = graft.sources.Scratch.keyedDir("knnd_graph", dir, spark,
-      Seq("embeddings.parquet"), ckey)
-    val pPath = graft.sources.Scratch.keyedDir("knnd_probes", dir, spark,
-      Seq("embeddings.parquet"), ckey)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    def missing(p: String): Boolean = {
-      val s = new org.apache.hadoop.fs.Path(p, "_SUCCESS")
-      !s.getFileSystem(hconf).exists(s)
-    }
     val wK = Window.partitionBy("vec_id").orderBy(col("cosine").desc, col("nbr_id"))
     def knnOver(probes: DataFrame, q: DataFrame): DataFrame = probes
       .join(q.select(col("vec_id"), col("embedding").as("qe"), col("n2").as("qn2")), "vec_id")
@@ -2811,13 +2744,10 @@ class SimilarityOps(val cfg: GraftConfig) {
         Vec.cosineFromParts(Vec.dotN("qe", "ve"), col("qn2"), col("vn2")).as("cosine"))
       .withColumn("rk", row_number().over(wK))
       .filter(col("rk") <= cfg.knnK)
-    if (missing(pPath))
-      probeCells(base, cents, cfg.ivfNprobe)
-        .write.mode("overwrite").parquet(pPath)
-    val pr = spark.read.parquet(pPath)
-    if (missing(gPath))
-      knnOver(pr, base).write.mode("overwrite").parquet(gPath)
-    val g = spark.read.parquet(gPath)
+    val pr = Artifact.getOrBuild(spark, "knnd_probes", dir, Seq("embeddings.parquet"),
+      ckey)(probeCells(base, cents, cfg.ivfNprobe).write.parquet(_))
+    val g = Artifact.getOrBuild(spark, "knnd_graph", dir, Seq("embeddings.parquet"),
+      ckey)(knnOver(pr, base).write.parquet(_))
     // nightly delta pass — delta-proportional
     val dAssigned = assign(delta, cents).select(col("vec_id"), col("cell"))
     val dProbes = probeCells(delta, cents, cfg.ivfNprobe)
@@ -3047,25 +2977,18 @@ class SimilarityOps(val cfg: GraftConfig) {
   /** The recompacted graph AS the persisted nightly artifact — the
     * knn_cents/truth-artifact lifecycle applied a third time (the
     * round-14 verdict's one efficiency finding): q290 IS the nightly
-    * job that pays the debt, so its output persists content-keyed
-    * (build-if-absent, the q210/q242 discipline — the key carries every
-    * index knob plus the split boundary plus the corpus fingerprint,
-    * so a knob change or corpus rewrite reroutes instead of serving
-    * stale edges), and q291 re-prices serving by READING it instead of
+    * job that pays the debt, so its output persists (the key carries
+    * every index knob plus the split boundary), and q291 re-prices
+    * serving by READING it instead of
     * re-deriving knnDeltaParts + the recompaction merge inline on
     * every call — previously the suite's slowest query (12.7 s quiet /
     * 24 s hot at sf0.1) for work q290 had already done. */
   private[graft] def persistedRecompactedGraph(spark: SparkSession, dir: String,
-      st: => KnnDeltaState): DataFrame = {
-    val path = graft.sources.Scratch.keyedDir("knnd_recompact", dir, spark,
-      Seq("embeddings.parquet"),
+      st: => KnnDeltaState): DataFrame =
+    Artifact.getOrBuild(spark, "knnd_recompact", dir, Seq("embeddings.parquet"),
       s"k=${cfg.knnK},np=${cfg.ivfNprobe},c=$NumCentroids," +
-        s"ki=$KmeansIters,tm=$TrainMod,u=${cfg.splitTrainUpper}")
-    val p = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) recompactFrom(st).write.mode("overwrite").parquet(path)
-    spark.read.parquet(path)
-  }
+        s"ki=$KmeansIters,tm=$TrainMod,u=${cfg.splitTrainUpper}")(
+      recompactFrom(st).write.parquet(_))
 
   /** The recompaction body over an already-derived incremental state —
     * the build side of [[persistedRecompactedGraph]] (evaluated only
@@ -3640,25 +3563,18 @@ class SimilarityOps(val cfg: GraftConfig) {
 
   /** The PQ codebook trained on the BASE split only (the vectors that
     * existed when the index shipped) — q188's frozen-artifact
-    * lifecycle applied to the PQ tier: trained once, keyedDir-
-    * persisted (content-keyed on the PQ knobs AND the split boundary),
-    * loaded by every consumer. */
-  private[graft] def persistedBasePqCodebook(spark: SparkSession, dir: String): DataFrame = {
-    val path = graft.sources.Scratch.keyedDir("pq_cb_base", dir, spark,
-      Seq("embeddings.parquet"),
-      s"m=$PqM,k=$PqK,i=$PqIters,split=${cfg.splitTrainUpper}")
-    val p = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) {
+    * lifecycle applied to the PQ tier: trained once (keyed on the PQ
+    * knobs AND the split boundary), loaded by every consumer. */
+  private[graft] def persistedBasePqCodebook(spark: SparkSession, dir: String): DataFrame =
+    Artifact.getOrBuild(spark, "pq_cb_base", dir, Seq("embeddings.parquet"),
+        s"m=$PqM,k=$PqK,i=$PqIters,split=${cfg.splitTrainUpper}") { p =>
       graft.plans.GraftExtensions.ensureRegistered(spark)
       val base = emb(spark, dir)
         .withColumn("bk", substring(md5(col("vec_id").cast("string")), 1, 2))
         .filter(col("bk") < cfg.splitTrainUpper)
         .select("vec_id", "embedding")
-      pqTrainOn(base).write.mode("overwrite").parquet(path)
+      pqTrainOn(base).write.parquet(p)
     }
-    spark.read.parquet(path)
-  }
 
   /** Per-vector, per-subspace MINIMUM quantization error under a
     * frozen codebook — pqEncodeWith's fold keeping the min d² instead
@@ -3905,21 +3821,18 @@ class SimilarityOps(val cfg: GraftConfig) {
     * per batch one broadcast-argmax map over the batch + a
     * batch-sized aggregate append; the ledger read is sink-sized
     * (waves × cells), never corpus-sized. The ledger itself persists
-    * content-keyed (build-if-absent — the drift dial is a nightly
-    * artifact its batch consumers poll), the base-trained index is
+    * as an artifact (the drift dial is a nightly artifact its batch
+    * consumers poll), the base-trained index is
     * the SHARED `knnd_cents` artifact (no inline retrain), and the
     * landing/checkpoint/sink scratch is RUN-UNIQUE (a UUID namespace,
     * deleted after the drain) so two drivers sharing the scratch
     * filesystem can never clobber each other's in-flight stream. */
   def q325StreamDrift(spark: SparkSession, dir: String): DataFrame = {
     graft.plans.GraftExtensions.ensureRegistered(spark)
-    val ledgerPath = graft.sources.Scratch.keyedDir("sdrift_ledger", dir, spark,
-      Seq("embeddings.parquet"),
-      s"c=$NumCentroids,ki=$KmeansIters,tm=$TrainMod,u=${cfg.splitTrainUpper}," +
-        s"tn=${cfg.driftTNum},td=${cfg.driftTDen}")
     val conf = spark.sparkContext.hadoopConfiguration
-    val lsp = new org.apache.hadoop.fs.Path(ledgerPath, "_SUCCESS")
-    if (!lsp.getFileSystem(conf).exists(lsp)) {
+    Artifact.getOrBuild(spark, "sdrift_ledger", dir, Seq("embeddings.parquet"),
+        s"c=$NumCentroids,ki=$KmeansIters,tm=$TrainMod,u=${cfg.splitTrainUpper}," +
+          s"tn=${cfg.driftTNum},td=${cfg.driftTDen}") { ledgerPath =>
       val run = java.util.UUID.randomUUID.toString.take(8)
       val landing = graft.sources.Scratch.dir(s"sdrift_${run}_landing", dir)
       val ckpt = graft.sources.Scratch.dir(s"sdrift_${run}_ckpt", dir)
@@ -3985,14 +3898,13 @@ class SimilarityOps(val cfg: GraftConfig) {
             coalesce(col("base_n"), lit(0L)).as("base_n"),
             (lit(cfg.driftTDen.toLong) * col("d_cum_total")
               >= lit(cfg.driftTNum.toLong) * col("n_base")).as("retrain"))
-          .write.mode("overwrite").parquet(ledgerPath)
+          .write.parquet(ledgerPath)
       } finally Seq(landing, ckpt, out).foreach { d =>
         val p = new org.apache.hadoop.fs.Path(d)
         val dfs = p.getFileSystem(conf)
         if (dfs.exists(p)) dfs.delete(p, true)
       }
     }
-    spark.read.parquet(ledgerPath)
   }
 
   /** q326: ATTRIBUTE-FILTERED ANN SEARCH — top-k restricted to
@@ -4463,14 +4375,9 @@ class SimilarityOps(val cfg: GraftConfig) {
     * content-keyed (the pq_cb lifecycle — the permutation itself is
     * recomputed on build, one tiny d-row aggregate). */
   private[graft] def persistedOpqCodebook(spark: SparkSession, dir: String,
-      pe: => DataFrame): DataFrame = {
-    val path = graft.sources.Scratch.keyedDir("opq_cb", dir, spark,
-      Seq("embeddings.parquet"), s"m=$PqM,k=$PqK,i=$PqIters")
-    val p = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) pqTrainOn(pe).write.mode("overwrite").parquet(path)
-    spark.read.parquet(path)
-  }
+      pe: => DataFrame): DataFrame =
+    Artifact.getOrBuild(spark, "opq_cb", dir, Seq("embeddings.parquet"),
+      s"m=$PqM,k=$PqK,i=$PqIters")(pqTrainOn(pe).write.parquet(_))
 
   /** q330: OPQ LAYOUT ABLATION — does an energy-balanced dimension
     * permutation before sub-quantization buy the IVF-PQ tier recall at

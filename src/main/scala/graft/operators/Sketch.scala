@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.GraftConfig
-import graft.sources.Tables
+import graft.sources.{Artifact, Tables}
 
 /** Count-Min sketch (Cormode & Muthukrishnan '05) — the sublinear-space
   * frequency summary: $CmRows salted hash rows × 16^$CmHexChars buckets
@@ -1180,14 +1180,8 @@ class SketchOps(val cfg: GraftConfig) {
     val maxDayOpt = Option(ev.agg(max(col("day"))).head().getAs[java.lang.Long](0))
     if (maxDayOpt.isEmpty) return rollingDistinctOf(ev, hllRegisterAgg(ev, Seq("day")))
     val maxDay = maxDayOpt.get.longValue
-    val basePath = graft.sources.Scratch.keyedDir(
-      "hllday_base", dir, spark, Seq("events.parquet"), s"hex=$CmHexChars")
-    val p = new org.apache.hadoop.fs.Path(basePath, "_SUCCESS")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p))
-      hllRegisterAgg(ev.filter(col("day") < maxDay), Seq("day"))
-        .write.mode("overwrite").parquet(basePath)
-    val base = spark.read.parquet(basePath)
+    val base = Artifact.getOrBuild(spark, "hllday_base", dir, Seq("events.parquet"),
+      s"hex=$CmHexChars")(hllRegisterAgg(ev.filter(col("day") < maxDay), Seq("day")).write.parquet(_))
     val delta = hllRegisterAgg(ev.filter(col("day") === maxDay), Seq("day"))
     rollingDistinctOf(ev, base.unionByName(delta))
   }
@@ -1355,17 +1349,13 @@ class SketchOps(val cfg: GraftConfig) {
         lit(0L).as("present"), lit(0.0).as("est_users"), lit(0L).as("exact_users"),
         lit(0.0).as("rel_err")).limit(0)
     val curStart = (maxDayOpt.get.longValue / P) * P
-    val basePath = graft.sources.Scratch.keyedDir(
-      "hllperiod_base", dir, spark, Seq("events.parquet"),
-      s"hex=$CmHexChars,p=$P,cs=$curStart")
-    val sp = new org.apache.hadoop.fs.Path(basePath, "_SUCCESS")
-    val fs = sp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(sp))
+    val compacted = Artifact.getOrBuild(spark, "hllperiod_base", dir, Seq("events.parquet"),
+        s"hex=$CmHexChars,p=$P,cs=$curStart") { p =>
       hllRegisterAgg(ev.filter(col("day") < curStart), Seq("day"))
         .select(expr(s"day div $P").as("period"), col("bucket"), col("max_rho"))
         .groupBy("period", "bucket").agg(max(col("max_rho")).as("max_rho"))
-        .write.mode("overwrite").parquet(basePath)
-    val compacted = spark.read.parquet(basePath)
+        .write.parquet(p)
+    }
     val daily = hllRegisterAgg(ev.filter(col("day") >= curStart), Seq("day"))
       .select(expr(s"day div $P").as("period"), col("bucket"), col("max_rho"))
     val mixed = compacted.unionByName(daily)
@@ -1634,21 +1624,14 @@ class SketchOps(val cfg: GraftConfig) {
         lit(0L).as("n"), lit(0L).as("lo100"), lit(0L).as("hi100"),
         lit(0L).as("exact_v100"), lit(false).as("in_bounds")).limit(0)
     val curStart = (maxDayOpt.get.longValue / P) * P
-    val basePath = graft.sources.Scratch.keyedDir(
-      "qsperiod_base", dir, spark, Seq("orders.parquet"),
-      s"qsk=$QsK,p=$P,cs=$curStart")
-    val sp = new org.apache.hadoop.fs.Path(basePath, "_SUCCESS")
-    val fs = sp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     def periodBuckets(slice: DataFrame): DataFrame =
       qsBuckets(slice.select(col("day").as("cls"), col("v")))
         .select(expr(s"cls div $P").as("period"), col("e"), col("m"),
           col("lo100"), col("hi100"), col("cnt"))
         .groupBy("period", "e", "m", "lo100", "hi100")
         .agg(sum(col("cnt")).as("cnt"))
-    if (!fs.exists(sp))
-      periodBuckets(vals.filter(col("day") < curStart))
-        .write.mode("overwrite").parquet(basePath)
-    val compacted = spark.read.parquet(basePath)
+    val compacted = Artifact.getOrBuild(spark, "qsperiod_base", dir, Seq("orders.parquet"),
+      s"qsk=$QsK,p=$P,cs=$curStart")(periodBuckets(vals.filter(col("day") < curStart)).write.parquet(_))
     val daily = periodBuckets(vals.filter(col("day") >= curStart))
     val mixed = compacted.unionByName(daily)
       .groupBy("period", "e", "m", "lo100", "hi100").agg(sum(col("cnt")).as("cnt"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.GraftConfig
-import graft.sources.Tables
+import graft.sources.{Artifact, Tables}
 
 /** Text-analysis operators for training-data curation: token counting,
   * quality scoring, language ID, fingerprinting. All single-pass,
@@ -758,7 +758,10 @@ class TextAnalysisOps(val cfg: GraftConfig) {
   /** Load a persisted tokenizer back to the (l, r) merge list in
     * training order — the driver-verified load path q210 exercises. */
   def loadTokenizer(spark: SparkSession, path: String): Seq[(String, String)] =
-    spark.read.parquet(path).orderBy(col("iter")).collect()
+    mergeList(spark.read.parquet(path))
+
+  private def mergeList(tok: DataFrame): Seq[(String, String)] =
+    tok.orderBy(col("iter")).collect()
       .map(r => (r.getAs[String]("l_sym"), r.getAs[String]("r_sym"))).toSeq
 
   /** q210: per-doc unit counts under the PERSISTED learned tokenizer —
@@ -783,19 +786,12 @@ class TextAnalysisOps(val cfg: GraftConfig) {
   def q210LearnedUnitsPersisted(spark: SparkSession, dir: String): DataFrame =
     learnedUnitsApply(spark, dir, persistedMerges(spark, dir))
 
-  /** The persisted tokenizer's merge list for a dataset — loaded from
-    * the shared scratch artifact, trained-and-saved on first use (the
-    * q210 lifecycle; q217 consumes the same artifact). Content-keyed on
-    * the merge count AND the documents metadata fingerprint, so a
-    * regenerated corpus retrains instead of serving stale merges. */
-  private[graft] def persistedMerges(spark: SparkSession, dir: String): Seq[(String, String)] = {
-    val path = graft.sources.Scratch.keyedDir("bpe_tok", dir, spark,
-      Seq("documents.parquet"), s"k=${cfg.bpeNumMerges}")
-    val p = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) saveTokenizer(spark, dir, path)
-    loadTokenizer(spark, path)
-  }
+  /** The persisted tokenizer's merge list for a dataset (the q210
+    * lifecycle; q217 consumes the same artifact), keyed on the merge
+    * count. */
+  private[graft] def persistedMerges(spark: SparkSession, dir: String): Seq[(String, String)] =
+    mergeList(Artifact.getOrBuild(spark, "bpe_tok", dir, Seq("documents.parquet"),
+      s"k=${cfg.bpeNumMerges}")(saveTokenizer(spark, dir, _)))
 
   /** Same result as q209 by construction (loaded ≡ retrained), so the
     * oracle IS q209's train+apply SQL — the strongest available gate:

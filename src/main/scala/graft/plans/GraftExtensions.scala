@@ -13,82 +13,28 @@ import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
   * contract passes us its own).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(GraftExtensions.vecDotFixed)
-    ext.injectFunction(GraftExtensions.vecDotLong)
-    ext.injectFunction(GraftExtensions.featHashVec)
-    ext.injectFunction(GraftExtensions.signBandsLong)
-    ext.injectFunction(GraftExtensions.shingleSet)
-    ext.injectFunction(GraftExtensions.shingleStats)
-    ext.injectFunction(GraftExtensions.minhashSig)
-    ext.injectFunction(GraftExtensions.interCount)
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftExtensions.functions.foreach(ext.injectFunction)
 }
 
 object GraftExtensions {
-  private val vecDotFixed: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("vec_dot_fixed"),
-    new ExpressionInfo(classOf[FixedPointDot].getName, "vec_dot_fixed"),
-    (children: Seq[Expression]) => {
-      if (children.length != 2) {
-        throw new org.apache.spark.sql.AnalysisException(
-          errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-          messageParameters = Map(
-            "functionName" -> "vec_dot_fixed",
-            "expectedNum" -> "2",
-            "actualNum" -> children.length.toString,
-            "docroot" -> "https://spark.apache.org/docs/latest"))
-      }
-      FixedPointDot(children(0), children(1))
-    })
+  private type Builder = (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
 
-  private val vecDotLong: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("vec_dot_long"),
-    new ExpressionInfo(classOf[VecDotLong].getName, "vec_dot_long"),
-    (children: Seq[Expression]) => {
-      if (children.length != 2) {
-        throw new org.apache.spark.sql.AnalysisException(
-          errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-          messageParameters = Map(
-            "functionName" -> "vec_dot_long",
-            "expectedNum" -> "2",
-            "actualNum" -> children.length.toString,
-            "docroot" -> "https://spark.apache.org/docs/latest"))
-      }
-      VecDotLong(children(0), children(1))
-    })
-
-  private val featHashVec: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("feat_hash_vec"),
-    new ExpressionInfo(classOf[FeatHashVec].getName, "feat_hash_vec"),
-    (children: Seq[Expression]) => {
-      if (children.length != 2) {
-        throw new org.apache.spark.sql.AnalysisException(
-          errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-          messageParameters = Map(
-            "functionName" -> "feat_hash_vec",
-            "expectedNum" -> "2",
-            "actualNum" -> children.length.toString,
-            "docroot" -> "https://spark.apache.org/docs/latest"))
-      }
-      FeatHashVec(children(0), children(1))
-    })
-
-  private val signBandsLong: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("sign_bands_long"),
-    new ExpressionInfo(classOf[SignBandsLong].getName, "sign_bands_long"),
-    (children: Seq[Expression]) => {
-      if (children.length != 3) {
-        throw new org.apache.spark.sql.AnalysisException(
-          errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-          messageParameters = Map(
-            "functionName" -> "sign_bands_long",
-            "expectedNum" -> "3 (vec, literal bands, literal bits)",
-            "actualNum" -> children.length.toString,
-            "docroot" -> "https://spark.apache.org/docs/latest"))
-      }
-      SignBandsLong(children(0), children(1), children(2))
-    })
+  /** One registered function: `build` is defined exactly on the
+    * argument lists it accepts; any other list fails analysis with
+    * WRONG_NUM_ARGS, naming `expected`. */
+  private def function(name: String, cls: Class[_ <: Expression], expected: String)(
+      build: PartialFunction[Seq[Expression], Expression]): Builder = (
+    FunctionIdentifier(name),
+    new ExpressionInfo(cls.getName, name),
+    (children: Seq[Expression]) => build.applyOrElse(children, (cs: Seq[Expression]) =>
+      throw new org.apache.spark.sql.AnalysisException(
+        errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
+        messageParameters = Map(
+          "functionName" -> name,
+          "expectedNum" -> expected,
+          "actualNum" -> cs.length.toString,
+          "docroot" -> "https://spark.apache.org/docs/latest"))))
 
   /** Validate the evaluated k of a registered shingle function: these
     * are user-facing SQL surfaces, so a NULL k must not NPE and k < 1
@@ -109,78 +55,37 @@ object GraftExtensions {
         Option.empty[Throwable])
   }
 
-  private val shingleSet: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("shingle_set"),
-    new ExpressionInfo(classOf[ShingleSet].getName, "shingle_set"),
-    (children: Seq[Expression]) => {
-      if (children.length != 2 || !children(1).foldable) {
-        throw new org.apache.spark.sql.AnalysisException(
-          errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-          messageParameters = Map(
-            "functionName" -> "shingle_set",
-            "expectedNum" -> "2 (text, literal k)",
-            "actualNum" -> children.length.toString,
-            "docroot" -> "https://spark.apache.org/docs/latest"))
-      }
-      ShingleSet(children(0), literalK("shingle_set", children(1)))
-    })
-
-  private val shingleStats: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("shingle_stats"),
-    new ExpressionInfo(classOf[ShingleStats].getName, "shingle_stats"),
-    (children: Seq[Expression]) => {
-      if (children.length != 2 || !children(1).foldable) {
-        throw new org.apache.spark.sql.AnalysisException(
-          errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-          messageParameters = Map(
-            "functionName" -> "shingle_stats",
-            "expectedNum" -> "2 (text, literal k)",
-            "actualNum" -> children.length.toString,
-            "docroot" -> "https://spark.apache.org/docs/latest"))
-      }
-      ShingleStats(children(0), literalK("shingle_stats", children(1)))
-    })
-
-  private val minhashSig: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("minhash_sig"),
-    new ExpressionInfo(classOf[MinHashSig].getName, "minhash_sig"),
-    (children: Seq[Expression]) => {
-      if (children.length != 1) {
-        throw new org.apache.spark.sql.AnalysisException(
-          errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-          messageParameters = Map(
-            "functionName" -> "minhash_sig",
-            "expectedNum" -> "1 (array<string>)",
-            "actualNum" -> children.length.toString,
-            "docroot" -> "https://spark.apache.org/docs/latest"))
-      }
-      MinHashSig(children(0))
-    })
-
-  private val interCount: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("inter_count"),
-    new ExpressionInfo(classOf[InterCount].getName, "inter_count"),
-    (children: Seq[Expression]) => {
-      if (children.length != 2) {
-        throw new org.apache.spark.sql.AnalysisException(
-          errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-          messageParameters = Map(
-            "functionName" -> "inter_count",
-            "expectedNum" -> "2 (array<string>, array<string>)",
-            "actualNum" -> children.length.toString,
-            "docroot" -> "https://spark.apache.org/docs/latest"))
-      }
-      InterCount(children(0), children(1))
+  private val functions: Seq[Builder] = Seq(
+    function("vec_dot_fixed", classOf[FixedPointDot], "2") {
+      case Seq(a, b) => FixedPointDot(a, b)
+    },
+    function("vec_dot_long", classOf[VecDotLong], "2") {
+      case Seq(a, b) => VecDotLong(a, b)
+    },
+    function("feat_hash_vec", classOf[FeatHashVec], "2") {
+      case Seq(a, b) => FeatHashVec(a, b)
+    },
+    function("sign_bands_long", classOf[SignBandsLong], "3 (vec, literal bands, literal bits)") {
+      case Seq(v, bands, bits) => SignBandsLong(v, bands, bits)
+    },
+    function("shingle_set", classOf[ShingleSet], "2 (text, literal k)") {
+      case Seq(t, k) if k.foldable => ShingleSet(t, literalK("shingle_set", k))
+    },
+    function("shingle_stats", classOf[ShingleStats], "2 (text, literal k)") {
+      case Seq(t, k) if k.foldable => ShingleStats(t, literalK("shingle_stats", k))
+    },
+    function("minhash_sig", classOf[MinHashSig], "1 (array<string>)") {
+      case Seq(a) => MinHashSig(a)
+    },
+    function("inter_count", classOf[InterCount], "2 (array<string>, array<string>)") {
+      case Seq(a, b) => InterCount(a, b)
     })
 
   /** Idempotently register the native functions on an existing session. */
   def ensureRegistered(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    Seq(vecDotFixed, vecDotLong, featHashVec, signBandsLong,
-        shingleSet, shingleStats, minhashSig, interCount).foreach { fn =>
-      if (!reg.functionExists(fn._1)) {
-        reg.registerFunction(fn._1, fn._2, fn._3)
-      }
+    functions.foreach { case (id, info, build) =>
+      if (!reg.functionExists(id)) reg.registerFunction(id, info, build)
     }
   }
 }

@@ -26,8 +26,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * |distinct(sa) ∩ distinct(sb)| — each matched element is removed
   * from the build set so duplicates on the probe side cannot
   * double-count (the verify inputs are per-doc DISTINCT sets by
-  * construction, so this is defensive, not load-bearing). Inputs are
-  * containsNull=false arrays (shingle_set / concat_ws outputs). */
+  * construction, so this is defensive, not load-bearing). A NULL
+  * element counts as `array_intersect` counts it — one shared value
+  * when both sides hold one — so arrays whose type admits nulls take
+  * [[InterCount.computeNullable]]; the verify inputs are
+  * containsNull=false arrays (shingle_set / concat_ws outputs) and
+  * keep the direct path. */
 case class InterCount(left: Expression, right: Expression) extends BinaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
@@ -42,12 +46,20 @@ case class InterCount(left: Expression, right: Expression) extends BinaryExpress
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "inter_count"
 
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    InterCount.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+  @transient private lazy val elemsNullable: Boolean = Seq(left, right).exists(_.dataType match {
+    case ArrayType(_, containsNull) => containsNull
+    case _ => false
+  })
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.plans.InterCount.compute($a, $b);")
+  override protected def nullSafeEval(a: Any, b: Any): Any = {
+    val (x, y) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+    if (elemsNullable) InterCount.computeNullable(x, y) else InterCount.compute(x, y)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val fn = if (elemsNullable) "computeNullable" else "compute"
+    nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = graft.plans.InterCount.$fn($a, $b);")
+  }
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
@@ -160,6 +172,21 @@ object InterCount {
       val n = arr.numElements()
       var i = 0
       while (i < n) { out(i) = pack(arr.getUTF8String(i)); i += 1 }
+  }
+
+  /** [[compute]] for arrays that may hold NULL elements: the count of
+    * the non-null elements' intersection, plus one when both sides
+    * hold a NULL (`array_intersect` keeps one NULL then). Arrays with
+    * no NULL element go straight to [[compute]]. */
+  def computeNullable(a: ArrayData, b: ArrayData): Long = {
+    def nulls(x: ArrayData) = (0 until x.numElements()).count(x.isNullAt)
+    val (na, nb) = (nulls(a), nulls(b))
+    if (na == 0 && nb == 0) return compute(a, b)
+    def nonNull(x: ArrayData, n: Int): ArrayData =
+      if (n == 0) x
+      else new org.apache.spark.sql.catalyst.util.GenericArrayData(
+        (0 until x.numElements()).filterNot(x.isNullAt).map(x.getUTF8String).toArray[Any])
+    compute(nonNull(a, na), nonNull(b, nb)) + (if (na > 0 && nb > 0) 1L else 0L)
   }
 
   def compute(a: ArrayData, b: ArrayData): Long = {

@@ -1,21 +1,26 @@
 package graft.sources
 
-/** Scratch locations for the round-trip verify queries (q65/q72/q79).
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** Paths under the scratch root: a SHARED filesystem on a real cluster
+  * (a driver-local tmp dir is not visible to executors on other
+  * nodes), so it is configurable (GraftConfig.scratchDir, settable at
+  * runtime via -Dgraft.scratchDir or GRAFT_SCRATCH_DIR) and defaults to
+  * java.io.tmpdir for local mode. Every name embeds the FULL sanitized
+  * dataset path, not a hash of it: two datasets served concurrently
+  * must never collide.
   *
-  * The write/read APIs themselves take any path; only the round-trip
-  * QUERIES need a place to put their intermediate files. That place
-  * must be a SHARED filesystem on a real cluster — a driver-local tmp
-  * dir is not visible to executors on other nodes — so it is
-  * configurable (GraftConfig.scratchDir, settable at runtime via
-  * -Dgraft.scratchDir or GRAFT_SCRATCH_DIR) and defaults to
-  * java.io.tmpdir for local mode. The subdirectory embeds the FULL
-  * sanitized dataset path, not a hash of it: two datasets verified
-  * concurrently must never collide. */
+  *  - [[dir]]: the fixed `graft_<tag>_<dataset>` location for a tag.
+  *  - [[withRunDirs]]: run-unique dirs for one query's intermediate
+  *    files, deleted when it returns.
+  *  - [[keyedDir]]: the content-keyed path of a persisted artifact.
+  *    Only [[Artifact.getOrBuild]] calls it; that helper owns the
+  *    build, publish and read of every artifact. */
 private[graft] object Scratch {
   def dir(tag: String, dataDir: String): String = {
     val sane = dataDir.replaceAll("[^A-Za-z0-9._-]", "_")
-    new org.apache.hadoop.fs.Path(
-      graft.GraftConfig.default.scratchDir, s"graft_${tag}_$sane").toString
+    new Path(graft.GraftConfig.default.scratchDir, s"graft_${tag}_$sane").toString
   }
 
   /** Run-unique scratch for a delete+rebuild query (the q325/q335
@@ -24,19 +29,19 @@ private[graft] object Scratch {
     * dir per call, the resulting DataFrame cut EAGERLY (the finally
     * below drops the files a lazy plan would still need), the dirs
     * deleted afterward whatever happens. */
-  def withRunDir(spark: org.apache.spark.sql.SparkSession, dataDir: String,
-      tag: String)(f: String => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+  def withRunDir(spark: SparkSession, dataDir: String,
+      tag: String)(f: String => DataFrame): DataFrame =
     withRunDirs(spark, dataDir, tag)(ps => f(ps.head))
 
-  def withRunDirs(spark: org.apache.spark.sql.SparkSession, dataDir: String,
-      tags: String*)(f: Seq[String] => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+  def withRunDirs(spark: SparkSession, dataDir: String,
+      tags: String*)(f: Seq[String] => DataFrame): DataFrame = {
     val run = java.util.UUID.randomUUID.toString.take(8)
     val paths = tags.map(t => dir(s"${t}_$run", dataDir))
     try f(paths).localCheckpoint(true)
     finally {
       val conf = spark.sparkContext.hadoopConfiguration
       paths.foreach { d =>
-        val p = new org.apache.hadoop.fs.Path(d)
+        val p = new Path(d)
         val fs = p.getFileSystem(conf)
         if (fs.exists(p)) fs.delete(p, true)
       }
@@ -47,10 +52,10 @@ private[graft] object Scratch {
     java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
 
-  /** CONTENT-KEYED artifact location for build-if-absent artifacts whose
-    * value depends on shaping config and on the input bytes: the tag
-    * gains a fingerprint of the caller-named config values and one of
-    * the input files' (name, length, mtime) listing. A knob change or
+  /** CONTENT-KEYED artifact location for artifacts whose value
+    * depends on shaping config and on the input bytes: the tag gains
+    * a fingerprint of the caller-named config values and one of the
+    * input files' (name, length, mtime) listing. A knob change or
     * an in-place corpus regeneration changes the PATH, so a stale
     * artifact becomes unreachable instead of silently trusted (the
     * round-11 advice on q242). The listing is filesystem METADATA — no
@@ -72,12 +77,11 @@ private[graft] object Scratch {
   private val ProbeFiles = 16
   private val ProbeBytes = 16
 
-  def keyedDir(tag: String, dataDir: String,
-      spark: org.apache.spark.sql.SparkSession,
+  def keyedDir(tag: String, dataDir: String, spark: SparkSession,
       inputs: Seq[String], cfgKey: String): String = {
     val hconf = spark.sparkContext.hadoopConfiguration
     val metas = inputs.sorted.flatMap { in =>
-      val p = new org.apache.hadoop.fs.Path(dataDir, in)
+      val p = new Path(dataDir, in)
       val fs = p.getFileSystem(hconf)
       if (!fs.exists(p)) Seq(s"$in:absent")
       else {
@@ -108,5 +112,66 @@ private[graft] object Scratch {
       }
     }
     dir(s"${tag}_c${fp(cfgKey)}_d${fp(metas.mkString(","))}", dataDir)
+  }
+}
+
+/** The one lifecycle of a persisted, content-keyed artifact (an index,
+  * a codebook, a truth table, a ledger base): built once per
+  * [[Scratch.keyedDir]] key, read by every later caller in any session.
+  * The published layout is the keyed dir with `_SUCCESS` inside.
+  *
+  * A miss builds into a run-unique `_`-prefixed staging sibling, then
+  * publishes it under an exclusive claim — the
+  * [[VersionChain.claimRename]] pair a chain commit uses, with the
+  * `_<name>.claim` marker released once the rename is done. The
+  * claimant re-checks `_SUCCESS` first (someone may have published
+  * meanwhile) and deletes a final dir that lacks it (a crashed
+  * writer's leftover): a rename onto an existing dir would move the
+  * staging dir INSIDE it. A writer that loses the claim or finds the
+  * artifact published drops its staging dir and reads the published
+  * copy, so two drivers that both miss never delete files the other
+  * is reading. */
+private[graft] object Artifact {
+  /** How long a writer that lost the claim waits for the winner's
+    * rename. The claim is held for a few filesystem calls, so only a
+    * writer killed inside that window runs into this. */
+  private val ClaimWaitMs = 120000L
+
+  /** The artifact under `(tag, dataDir, inputs, cfgKey)`; on a miss
+    * `build` writes it (parquet, `_SUCCESS` included) to the path it
+    * is given. A hit costs one keyedDir, one `_SUCCESS` check, one
+    * read. */
+  def getOrBuild(spark: SparkSession, tag: String, dataDir: String,
+      inputs: Seq[String], cfgKey: String)(build: String => Unit): DataFrame = {
+    val path = Scratch.keyedDir(tag, dataDir, spark, inputs, cfgKey)
+    val dest = new Path(path)
+    val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(new Path(dest, "_SUCCESS"))) publish(fs, dest, build)
+    spark.read.parquet(path)
+  }
+
+  private def publish(fs: FileSystem, dest: Path, build: String => Unit): Unit = {
+    val done = new Path(dest, "_SUCCESS")
+    val stage = new Path(dest.getParent,
+      s"_${dest.getName}_${java.util.UUID.randomUUID.toString.take(8)}")
+    val claim = new Path(dest.getParent, s"_${dest.getName}.claim")
+    try {
+      build(stage.toString)
+      require(fs.exists(new Path(stage, "_SUCCESS")),
+        s"artifact build left no _SUCCESS in $stage")
+      val deadline = System.currentTimeMillis + ClaimWaitMs
+      while (!fs.exists(done) &&
+          !VersionChain.claimRename(fs, claim, stage, dest, release = true) {
+            val fresh = !fs.exists(done)
+            if (fresh && fs.exists(dest))
+              require(fs.delete(dest, true), s"cannot clear unpublished $dest")
+            fresh
+          }) {
+        require(System.currentTimeMillis < deadline,
+          s"$claim held for ${ClaimWaitMs / 1000} s and $dest never published: " +
+            "its writer died mid-publish; delete the claim file if no writer is running")
+        Thread.sleep(20)
+      }
+    } finally if (fs.exists(stage)) fs.delete(stage, true)
   }
 }

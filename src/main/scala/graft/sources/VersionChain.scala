@@ -13,8 +13,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *   root/v00001.commit  zero-byte commit marker, created ATOMICALLY
   * }}}
   *
-  * The MARKER is the atomic step: `FileSystem.createNewFile` is an
-  * exclusive create (HDFS namenode-atomic; local fs O_EXCL), so of two
+  * The MARKER is the atomic step: an exclusive create (HDFS
+  * namenode-atomic; local fs O_EXCL, see [[createExclusive]]), so of two
   * writers racing the same next version exactly ONE wins — a
   * compare-and-swap on the chain head. Each writer stages its data in
   * its OWN attempt directory (two losers must never interleave bytes
@@ -61,13 +61,37 @@ private[graft] object VersionChain {
     * its attempt (and must rebase before retrying). */
   def commit(fs: FileSystem, root: String, v: Int, attemptDir: String): Boolean = {
     fs.mkdirs(new Path(root))
-    val won =
-      try fs.createNewFile(marker(root, v))
-      catch { case _: java.io.IOException => false }
+    claimRename(fs, marker(root, v), new Path(attemptDir), new Path(dataPath(root, v)),
+      release = false)(true)
+  }
+
+  /** The exclusive claim + publish rename both the chain and
+    * [[Artifact]] publish through: an exclusive create of `marker`
+    * decides the one winner, which renames `from` to `to` when `ready` (evaluated
+    * under the claim) says so. `release` deletes the marker afterwards
+    * — for a lock, not for a chain's permanent commit record. Returns
+    * whether this caller won the claim. */
+  private[sources] def claimRename(fs: FileSystem, marker: Path, from: Path, to: Path,
+      release: Boolean)(ready: => Boolean): Boolean = {
+    val won = createExclusive(fs, marker)
     if (won) {
-      require(fs.rename(new Path(attemptDir), new Path(dataPath(root, v))),
-        s"winner's publish rename failed for $root v$v")
+      try {
+        if (ready) require(fs.rename(from, to), s"winner's publish rename failed: $from -> $to")
+      } finally if (release) fs.delete(marker, false)
     }
     won
   }
+
+  /** Exclusive create: HDFS's `create(overwrite = false)` is
+    * namenode-atomic, but the local filesystem's is check-then-create,
+    * so two threads can both "create" one file; there the claim uses
+    * an O_EXCL create instead. */
+  private def createExclusive(fs: FileSystem, marker: Path): Boolean =
+    try {
+      if (fs.getScheme != "file") fs.createNewFile(marker)
+      else {
+        java.nio.file.Files.createFile(java.nio.file.Paths.get(fs.makeQualified(marker).toUri))
+        true
+      }
+    } catch { case _: java.io.IOException => false }
 }

@@ -168,6 +168,27 @@ class CdcStreamSpec extends GraftSpec {
     assert(graft.sources.VersionChain.latest(fs, root).contains(2))
   }
 
+  test("VersionChain: two threads committing one version at the same instant — exactly one wins") {
+    import java.util.concurrent.{Callable, CyclicBarrier, Executors, TimeUnit}
+    val base = java.nio.file.Files.createTempDirectory("vrace").toString
+    val fs = new org.apache.hadoop.fs.Path(base)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val pool = Executors.newFixedThreadPool(2)
+    try (1 to 100).foreach { round =>
+      val root = s"$base/chain$round"
+      val attempts = Seq("_a", "_b").map { a =>
+        val d = new org.apache.hadoop.fs.Path(root, a)
+        fs.create(new org.apache.hadoop.fs.Path(d, "part-0")).close()
+        d.toString
+      }
+      val start = new CyclicBarrier(2)
+      val won = attempts.map(att => pool.submit(new Callable[Boolean] {
+        def call(): Boolean = { start.await(); graft.sources.VersionChain.commit(fs, root, 1, att) }
+      })).map(_.get(1, TimeUnit.MINUTES))
+      assert(won.count(identity) == 1, s"round $round: winners $won — the commit marker is not exclusive")
+    } finally pool.shutdown()
+  }
+
   test("q333 vacuum-vs-read-as-of: the pin gates the vacuum; vacuumed and uncommitted reads fail with the named errors") {
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("vasof").toString + "/chain"

@@ -37,6 +37,23 @@ class DedupSpec extends GraftSpec {
     val ref = rows.select(size(array_intersect($"sa", $"sb")).cast("long"))
       .as[Long].collect().toSeq
     assert(got == ref, s"got=$got ref=$ref")
+    // NULL elements: array_intersect keeps one NULL when both sides
+    // hold one and never matches NULL against the empty string
+    val withNulls = Seq(
+      (Seq(null, "a"), Seq("", "a")),
+      (Seq(null, "a"), Seq(null, "b")),
+      (Seq(null, null, "abcdefghij"), Seq("abcdefghij", null)),
+      (Seq(null, "abcdefghij"), Seq("x"))
+    ).toDF("sa", "sb")
+    val gotN = withNulls.select(expr("inter_count(sa, sb)")).as[Long].collect().toSeq
+    val refN = withNulls.select(size(array_intersect($"sa", $"sb")).cast("long"))
+      .as[Long].collect().toSeq
+    assert(gotN == refN && refN == Seq(1L, 1L, 2L, 0L), s"got=$gotN ref=$refN")
+    // a foldable call with a NULL element is evaluated at constant folding
+    val folded = spark.sql(
+      "SELECT inter_count(array(CAST(NULL AS STRING), 'abcdefghij'), array('x'))," +
+        " inter_count(array(NULL, 'a'), array('', 'a'))").collect()(0)
+    assert(folded.getLong(0) == 0L && folded.getLong(1) == 1L)
     // and over the real corpus' shingle arrays: all pairs agree
     val arr = Dedup.shingleArrays(spark, sf).limit(60)
     val diff = arr.as("x").crossJoin(arr.as("y"))

@@ -54,6 +54,19 @@ class ShingleSetSpec extends GraftSpec {
     }
   }
 
+  test("registered builders reject a wrong argument count with WRONG_NUM_ARGS") {
+    graft.plans.GraftExtensions.ensureRegistered(spark)
+    val one = Seq(("abc", 1)).toDF("t", "tag")
+    Seq("inter_count(t)" -> "inter_count", "minhash_sig(t, t)" -> "minhash_sig",
+        "sign_bands_long(t)" -> "sign_bands_long").foreach { case (bad, fn) =>
+      val e = intercept[org.apache.spark.sql.AnalysisException] {
+        one.select(expr(bad)).collect()
+      }
+      assert(e.getCondition == "WRONG_NUM_ARGS.WITHOUT_SUGGESTION", s"$bad -> ${e.getMessage}")
+      assert(e.getMessage.contains(fn), s"$bad -> ${e.getMessage}")
+    }
+  }
+
   test("minhash_sig: null for empty arrays, null elements skipped") {
     graft.plans.GraftExtensions.ensureRegistered(spark)
     val r = spark.sql(
