@@ -2,10 +2,10 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 
-/** The one checkpoint helper every fixpoint kernel and stage chain
-  * goes through: eager localCheckpoint on a single JVM, reliable
-  * checkpoint when `cfg.reliableStageCheckpoints` (executor loss
-  * mid-loop cannot drop a round on a cluster) — ALWAYS followed by
+/** The checkpoint helper for the round loops and stage chains: eager
+  * localCheckpoint on a single JVM, reliable checkpoint when
+  * `cfg.reliableStageCheckpoints` (executor loss mid-loop cannot drop a
+  * round on a cluster) — ALWAYS followed by
   * [[org.apache.spark.sql.graft.StatsBarrier]], which strips the
   * origin statistics the checkpoint would otherwise carry into its
   * leaf. Without the barrier, iterated checkpoint→join→checkpoint
@@ -13,7 +13,13 @@ import org.apache.spark.sql.DataFrame
   * and Catalyst's size-only estimator ends up multiplying BigIntegers
   * with millions of digits — q187 at sf0.01 spent ~125 of its 134
   * seconds inside `BigInteger.multiply` on 7-row plans (see the
-  * barrier's scaladoc for the full mechanism). */
+  * barrier's scaladoc for the full mechanism).
+  *
+  * Every [[Fixpoint]] round cuts through here. Fourteen straight-line,
+  * compute-once cuts outside the round loops still call
+  * `localCheckpoint` directly (Scratch, Dedup, GraphOps' bubble pop,
+  * Similarity, CdcStream, EventStream); `CkSpec` pins that list so no
+  * round loop can bypass this object again. */
 object Ck {
 
   /** Eager stage cut (the shared stageCk discipline). */
@@ -59,7 +65,37 @@ object Ck {
     val parts = math.max(1L, math.min(maxParts.toLong,
       (n + cfg.stageRowsPerPartition - 1) / cfg.stageRowsPerPartition)).toInt
     val keyed = stage(raw.repartition(parts, col(key)), cfg)
-    raw.unpersist(false)
+    release(raw)
     (keyed, n)
+  }
+
+  /** Right-size a just-COUNTED, materialized stage table's partitioning.
+    *
+    * Stage outputs inherit the parallelism of the corpus-sized scan/join
+    * plans that built them (64+ thin partitions for a 26k-row edge set at
+    * sf0.1), and every fixpoint round downstream then pays task scheduling
+    * and AQE stage latency PER PARTITION — measured ~3× of a cleaning
+    * round's cost, with identical results. One extra narrow re-cut at
+    * phase entry buys every round after it (round outputs inherit the
+    * sized partitioning through narrow broadcast joins).
+    *
+    * rows→partitions ratio is cfg.stageRowsPerPartition: 26k edges → 1
+    * partition locally; 10B edges at corpus scale → ~10k partitions on a
+    * cluster — the bytes-per-task discipline AQE applies to shuffles,
+    * extended to checkpoint scans AQE cannot re-plan. Only ever shrinks
+    * (and only on a ≥2× gap, so a well-sized table passes through). */
+  def sized(df: DataFrame, rows: Long, cfg: GraftConfig): DataFrame = {
+    val want = math.max(1L, (rows + cfg.stageRowsPerPartition - 1) / cfg.stageRowsPerPartition)
+    if (want * 2 <= df.rdd.getNumPartitions) stage(df.coalesce(want.toInt), cfg) else df
+  }
+
+  /** Free a cut (or a cache-managed persist) once nothing reads it
+    * again. `Dataset.unpersist` alone leaves a checkpoint's blocks in
+    * place: they belong to the RDD under the checkpoint's `LogicalRDD`
+    * leaf, which the cache manager never sees. */
+  def release(df: DataFrame): Unit = df.queryExecution.analyzed match {
+    case l: org.apache.spark.sql.execution.LogicalRDD =>
+      org.apache.spark.sql.graft.StatsBarrier.freeBlocks(l.rdd)
+    case _ => df.unpersist(blocking = false)
   }
 }

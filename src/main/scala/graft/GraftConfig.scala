@@ -47,17 +47,6 @@ case class GraftConfig(
     asmPopRounds: Int = 2,
     asmPostLowcovTipRounds: Int = 3,
     asmRepeatRounds: Int = 2,
-    // detect-round fusion for the CHEAP-detect assembly fixpoints (main
-    // tip loop, repeat-boundary loop): how many detect rounds share one
-    // materialize+count job. Fusing trades ~1.5× the (post-shrink, small)
-    // detect aggregate's compute for one fewer driver-synchronized
-    // barrier per extra round — the right trade when per-round job
-    // latency dominates round data (measured ~80% of the sf0.1 assembly
-    // tail; on a 1000-executor cluster a barrier is a full-cluster sync).
-    // Set 1 where detect compute dominates barrier cost. Loops whose
-    // detect is expensive (bubble pop) or that converge in round 1
-    // (post-lowcov tips) stay unfused regardless.
-    asmFusedRounds: Int = 2,
     // stage handoffs in the assembly composition: false = eager
     // localCheckpoint (in-memory, right for single-JVM/local). On a
     // multi-executor cluster set true — stage cuts become reliable
@@ -689,11 +678,6 @@ object GraftConfig {
       .get("graft.reliableStageCheckpoints")
       .orElse(sys.env.get("GRAFT_RELIABLE_STAGE_CHECKPOINTS"))
       .exists(_.trim.equalsIgnoreCase("true")),
-    // runtime-settable like the durability knob (barrier-vs-compute
-    // trade is a deployment property, not a source property)
-    asmFusedRounds = sys.props.get("graft.asmFusedRounds")
-      .orElse(sys.env.get("GRAFT_ASM_FUSED_ROUNDS"))
-      .map(_.trim.toInt).getOrElse(2),
     scratchDir = sys.props.get("graft.scratchDir")
       .orElse(sys.env.get("GRAFT_SCRATCH_DIR"))
       .getOrElse(System.getProperty("java.io.tmpdir")))

@@ -269,25 +269,8 @@ class GraphOpsLib(val cfg: GraftConfig) {
   private[graft] def keyedCk(df: DataFrame, key: String): (DataFrame, Long) =
     graft.Ck.keyedStage(df, key, cfg)
 
-  /** Right-size a just-COUNTED, materialized stage table's partitioning.
-    *
-    * Stage outputs inherit the parallelism of the corpus-sized scan/join
-    * plans that built them (64+ thin partitions for a 26k-row edge set at
-    * sf0.1), and every fixpoint round downstream then pays task scheduling
-    * and AQE stage latency PER PARTITION — measured ~3× of a cleaning
-    * round's cost, with identical results. One extra narrow re-cut at
-    * phase entry buys every round after it (round outputs inherit the
-    * sized partitioning through narrow broadcast joins).
-    *
-    * rows→partitions ratio is cfg.stageRowsPerPartition: 26k edges → 1
-    * partition locally; 10B edges at corpus scale → ~10k partitions on a
-    * cluster — the bytes-per-task discipline AQE applies to shuffles,
-    * extended to checkpoint scans AQE cannot re-plan. Only ever shrinks
-    * (and only on a ≥2× gap, so a well-sized table passes through). */
-  private[operators] def sizedCk(e: DataFrame, n: Long): DataFrame = {
-    val want = math.max(1L, (n + cfg.stageRowsPerPartition - 1) / cfg.stageRowsPerPartition)
-    if (want * 2 <= e.rdd.getNumPartitions) stageCk(e.coalesce(want.toInt)) else e
-  }
+  /** Right-size a just-counted stage table (see [[graft.Ck.sized]]). */
+  private[operators] def sizedCk(e: DataFrame, n: Long): DataFrame = graft.Ck.sized(e, n, cfg)
 
   /** q22: transitive reduction on the coarse graph — drop a→b when some
     * 2-path a→x→b exists. Mid-class arithmetic instead of a path
@@ -437,12 +420,12 @@ class GraphOpsLib(val cfg: GraftConfig) {
     *   'moved' flag (the pointer advances by 2^k mod L forever) and
     *   previously burned a fixed 60 rounds; now they stop at the cap and
     *   are excluded by the root check below;
-    * - rounds persist at MEMORY_AND_DISK (the map covers chain interiors
-    *   only, so it fits storage and spills gracefully) with a stageCk cut
-    *   every 4th round to truncate lineage; stageCk is localCheckpoint
-    *   locally and a reliable checkpoint under
-    *   cfg.reliableStageCheckpoints — executor-local blocks die with any
-    *   executor, so clusters flip the knob. */
+    * - rounds run on [[graft.Fixpoint]]'s Cadence cut: MEMORY_AND_DISK
+    *   persists (the map covers chain interiors only, so it fits storage
+    *   and spills gracefully) with an eager Ck cut every 4th round to
+    *   truncate lineage — localCheckpoint locally and a reliable
+    *   checkpoint under cfg.reliableStageCheckpoints (executor-local
+    *   blocks die with any executor, so clusters flip the knob). */
   private def traced[T](tag: String)(f: => T): T = graft.Trace(tag)(f)
 
   /** Edit-rate gate lev(a,b) ≤ rate·maxLen via THRESHOLDED levenshtein:
@@ -460,7 +443,6 @@ class GraphOpsLib(val cfg: GraftConfig) {
   def resolveChainsFrom(
       spark: SparkSession, nodes: DataFrame, edges: DataFrame, withDepth: Boolean,
       inChainPre: DataFrame = null): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     graft.GraftSession.ensureCheckpointDir(spark)
     // one parent-map derivation per call: the old formulation left-joined
     // nodes to the compressible rows and split self/non-self AFTER — the
@@ -486,77 +468,49 @@ class GraphOpsLib(val cfg: GraftConfig) {
     val maxRounds =
       if (n <= 1) 1 else math.ceil(math.log((n + 1).toDouble) / math.log(2.0)).toInt + 1
     graft.Trace.log(s"chain.n=$n maxRounds=$maxRounds")
-    var p = inChain
-    var pending = List.empty[org.apache.spark.sql.DataFrame]
-    var converged = n == 0
-    var rounds = 0
-    var prevMovers = -1L
-    while (!converged && rounds < maxRounds) {
+    // Cadence cut: EAGER every 4th round, MEMORY_AND_DISK persists in
+    // between (the round map is (node, parent, depth) over chain
+    // INTERIORS only — a small fraction of the corpus — so it fits
+    // storage memory and spills gracefully; pure DISK_ONLY paid a
+    // write+read round trip on every tiny round). A lazy cut+conv-count
+    // fusion was tried here in r18 and REVERTED: it measured q82 10.4 →
+    // 13.3 s at sf0.1 (subset-bench A/B, 3-run min, hot box) — q82's
+    // 8-phase namespaced union keeps 3 persisted round maps alive UNDER
+    // the fused count (they are the lazy cut's lineage until it
+    // materializes), and the storage pressure cost more than the saved
+    // barrier. q62/q28/q28b were flat either way; Cc/Scc keep their
+    // fused cut+count, where the round state is a single small table
+    // and the A/B favors it.
+    //
+    // Short chains dominate: the convergence count starts at round 3
+    // (they almost never converge before covering length 8). Exit on 0
+    // movers OR a mover-count plateau: genuine chain nodes strictly
+    // decrease the count every round (each unresolved node's root
+    // distance shrinks, and chain distances are contiguous, so every
+    // doubling band resolves someone) — a plateau means only cycle/rho
+    // components remain, whose pointers circulate forever; the root
+    // check below excludes exactly those, so further rounds cannot
+    // change the output. Without this, one cycle anywhere in the graph
+    // forced the full log2(n) round cap (measured: 12 rounds instead of
+    // ~7 on the cleaned sf0.1 graph). A last round that only persisted
+    // is cut by the driver, so no round map outlives the call.
+    val p = graft.Fixpoint.run("chain", inChain, n, maxRounds,
+        graft.Fixpoint.Cadence(col("moved")), cfg) { r =>
+      val p = r.state.drop("moved")
       // hop through the CURRENT map (p ∘ p): doubles resolved path length
       // per round, O(log chain-length) rounds total
       val hop =
         if (withDepth) p.select(col("node").as("pnode"), col("parent").as("pparent"), col("d").as("pd"))
         else p.select(col("node").as("pnode"), col("parent").as("pparent"))
       val joined = p.join(hop, p("parent") === hop("pnode"), "left")
-      val stepped =
-        if (withDepth) joined.select(col("node"),
-          coalesce(col("pparent"), col("parent")).as("parent"),
-          (col("d") + coalesce(col("pd"), lit(0L))).as("d"),
-          (col("pparent").isNotNull && col("pparent") =!= col("parent")).as("moved"))
-        else joined.select(col("node"),
-          coalesce(col("pparent"), col("parent")).as("parent"),
-          (col("pparent").isNotNull && col("pparent") =!= col("parent")).as("moved"))
-      rounds += 1
-      val mat =
-        if (rounds % 4 == 0) {
-          // EAGER cut every 4th round. A lazy cut+conv-count fusion was
-          // tried here in r18 and REVERTED: it measured q82 10.4 →
-          // 13.3 s at sf0.1 (subset-bench A/B, 3-run min, hot box) —
-          // q82's 8-phase namespaced union keeps 3 persisted round maps
-          // alive UNDER the fused count (they are the lazy cut's
-          // lineage until it materializes), and the storage pressure
-          // cost more than the saved barrier. q62/q28/q28b were flat
-          // either way; Cc/Scc keep their fused cut+count, where the
-          // round state is a single small table and the A/B favors it.
-          val c = traced(s"chain.round$rounds.ck")(stageCk(stepped)) // lineage truncated →
-          pending.foreach(_.unpersist(false)) // earlier rounds droppable
-          pending = Nil
-          c
-        } else {
-          // MEMORY_AND_DISK: the round map is (node, parent, depth) over
-          // chain INTERIORS only — a small fraction of the corpus — so it
-          // fits storage memory and spills gracefully; pure DISK_ONLY
-          // paid a write+read round trip on every tiny round
-          val c = stepped.persist(StorageLevel.MEMORY_AND_DISK)
-          pending ::= c
-          c
-        }
-      // short chains dominate: skip the convergence action for the first
-      // rounds (they almost never converge before covering length 8).
-      // Exit on 0 movers OR a mover-count plateau: genuine chain nodes
-      // strictly decrease the count every round (each unresolved node's
-      // root distance shrinks, and chain distances are contiguous, so
-      // every doubling band resolves someone) — a plateau means only
-      // cycle/rho components remain, whose pointers circulate forever;
-      // the root check below excludes exactly those, so further rounds
-      // cannot change the output. Without this, one cycle anywhere in
-      // the graph forced the full log2(n) round cap (measured: 12
-      // rounds instead of ~7 on the cleaned sf0.1 graph).
-      if (rounds >= 3) {
-        val movers = traced(s"chain.round$rounds.conv")(mat.filter(col("moved")).count())
-        converged = movers == 0 || movers == prevMovers
-        prevMovers = movers
-      }
-      p = mat.drop("moved")
-    }
-    // drain round persistence: checkpoint the final map so the rounds
-    // still registered in `pending` can be unpersisted instead of
-    // leaking DISK_ONLY blocks for the session lifetime
-    if (pending.nonEmpty) {
-      p = stageCk(p)
-      pending.foreach(_.unpersist(false))
-      pending = Nil
-    }
+      if (withDepth) joined.select(col("node"),
+        coalesce(col("pparent"), col("parent")).as("parent"),
+        (col("d") + coalesce(col("pd"), lit(0L))).as("d"),
+        (col("pparent").isNotNull && col("pparent") =!= col("parent")).as("moved"))
+      else joined.select(col("node"),
+        coalesce(col("pparent"), col("parent")).as("parent"),
+        (col("pparent").isNotNull && col("pparent") =!= col("parent")).as("moved"))
+    }.drop("moved")
     // exclude cycles: resolved parent must be a genuine root (not interior)
     val resolved = p.join(inChain.select(col("node").as("pn")), p("parent") === col("pn"), "left_anti")
     val renamed =
@@ -1010,49 +964,18 @@ class GraphOpsLib(val cfg: GraftConfig) {
               (col("keep_src").isNull || col("src") === col("keep_src")))
       .select("src", "dst")
 
-  /** Repeat-boundary adjustment fixpoint with detect-round fusion (the
-    * [[nodeRemovalLoopFrom]] discipline applied to keep MAPS instead of
-    * removal node lists): up to `roundsPerJob` repeatKeeps rounds share
-    * ONE materialize+count job via a step marker, converging when the
-    * last fused step finds no boundary (an empty keep map's apply is a
-    * structural no-op, so a fused trailing converged round is idempotent
-    * and bounded-round oracles unroll identically). After the job, the
-    * edge state is rebuilt by applying the MATERIALIZED per-step slices
-    * in order — later phases never re-evaluate a lazy detect. */
+  /** Repeat-boundary adjustment fixpoint with detect-round fusion: the
+    * [[fusedStepsFrom]] path applied to keep MAPS instead of removal
+    * node lists. Keep maps apply in step order (an empty keep map's
+    * apply is a structural no-op, so a fused trailing converged round
+    * is idempotent and bounded-round oracles unroll identically), and
+    * every later phase reads the MATERIALIZED per-step maps — never a
+    * lazy detect. */
   private[graft] def repeatAdjustLoopFrom(spark: SparkSession, e0: DataFrame,
       maxRounds: Int, tag: String, roundsPerJob: Int = 1): DataFrame = {
     graft.GraftSession.ensureCheckpointDir(spark)
-    var cur = stageCk(e0.select("src", "dst"))
-    var budget = maxRounds
-    var job = 0
-    var done = false
-    while (budget > 0 && !done) {
-      val k = math.min(math.max(1, roundsPerJob), budget)
-      // lazy persist on intermediate keep maps: referenced in both apply
-      // broadcast arms + the union (see nodeRemovalLoopFrom)
-      val cachedSteps = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-      var acc: DataFrame = null
-      var curL = cur
-      for (j <- 1 to k) {
-        var rj = repeatKeeps(curL)
-          .select(col("node"), col("keep_dst"), col("keep_src"), lit(j).as("step"))
-        if (j < k) {
-          rj = rj.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          cachedSteps += rj
-          curL = applyRepeatKeeps(curL, rj.drop("step"))
-        }
-        acc = if (acc == null) rj else acc.unionAll(rj)
-      }
-      job += 1
-      val (mat, nLast) = graft.Trace(s"$tag.j$job(x$k)")(ckCountLastStep(acc, k))
-      cachedSteps.foreach(_.unpersist(false))
-      done = nLast == 0
-      budget -= k
-      cur = (1 to k).foldLeft(cur)((c, j) =>
-        applyRepeatKeeps(c, mat.filter(col("step") === j).drop("step")))
-    }
-    graft.Convergence.check(tag, maxRounds, done)
-    cur
+    fusedStepsFrom(stageCk(e0.select("src", "dst")), maxRounds, tag, roundsPerJob,
+      ordered = true)(repeatKeeps, applyRepeatKeeps)
   }
 
   private[operators] def repeatCutRoundSql(eIn: String, p: String): String =
@@ -1083,33 +1006,23 @@ class GraphOpsLib(val cfg: GraftConfig) {
   def q63RepeatAdjust(spark: SparkSession, dir: String): DataFrame = {
     graft.GraftSession.ensureCheckpointDir(spark)
     // cut before round 1: every round's detect pass re-scans the edge
-    // blocks through the lazy broadcast-filter chain below; sized so the
-    // per-round aggregation passes don't pay the build plan's task count
-    val e0 = graft.Trace("q63.edges") {
-      val (c, n) = ckCount(edges2(spark, dir).select("src", "dst"))
-      sizedCk(c, n)
-    }
+    // blocks through the lazy broadcast-filter chain below; sized (in
+    // shrinkFrom) so the per-round aggregation passes don't pay the
+    // build plan's task count
+    val (e0, n) = graft.Trace("q63.edges")(ckCount(edges2(spark, dir).select("src", "dst")))
     // Two jobs per round: (1) materialize the SMALL boundary keep map,
     // (2) apply it as broadcast map-side filters and fuse the tip
-    // detect+remove+materialize+count of the shrunk remainder into one
-    // ckCount. Materializing rep first matters: an unmaterialized rep
-    // inside the round job gets its aggregation re-evaluated once per
-    // broadcast arm. Early exit when a round removes nothing —
+    // detect+remove+materialize+count of the shrunk remainder into the
+    // round's cut. Materializing rep first matters: an unmaterialized
+    // rep inside the round job gets its aggregation re-evaluated once
+    // per broadcast arm. Early exit when a round removes nothing —
     // converged rounds are idempotent no-ops, so the unrolled oracle
     // stays exact.
-    var cur: DataFrame = e0
-    var n = -1L
-    var done = false
-    for (i <- 1 to cfg.asmRepeatRounds if !done) {
-      val (rep, nRep) = graft.Trace(s"q63.keeps$i")(ckCount(repeatKeeps(cur)))
-      val cutApplied = if (nRep > 0) applyRepeatKeeps(cur, rep) else cur
-      val (next, m) = graft.Trace(s"q63.tips$i")(ckCount(removeTips(cutApplied)))
-      done = m == n
-      n = m
-      cur = next
+    shrinkFrom("q63.repeat", e0, n, cfg.asmRepeatRounds) { r =>
+      val (rep, nRep) = ckCount(repeatKeeps(r.state))
+      r.own(rep)
+      removeTips(if (nRep > 0) applyRepeatKeeps(r.state, rep) else r.state)
     }
-    graft.Convergence.check("q63.repeat", cfg.asmRepeatRounds, done)
-    cur
   }
 
   def q63Sql: String = {
@@ -1399,9 +1312,7 @@ class GraphOpsLib(val cfg: GraftConfig) {
     * round costs one aggregation pass over its lazily-filtered blocks
     * plus a tiny removal-list job; the accumulated removal set is a
     * small fraction of the corpus by the same argument as q39's
-    * broadcast anti-joins. Round removal lists are cut+counted in one
-    * job (ckCount) and superseded lists are released as they are
-    * replaced — the q57/chain-loop drain discipline. */
+    * broadcast anti-joins. Rounds run on [[fusedStepsFrom]]. */
   private[graft] def nodeRemovalLoopFrom(spark: SparkSession, e0: DataFrame,
       maxRounds: Int, tag: String, cutEntry: Boolean = true,
       detectsPerJob: Int = 1)(
@@ -1416,70 +1327,64 @@ class GraphOpsLib(val cfg: GraftConfig) {
       val base = if (cutEntry) stageCk(e0.select("src", "dst")) else e0.select("src", "dst")
       if (base.rdd.getNumPartitions <= 2) base else sizedCk(base, base.count())
     }
-    def minus(remSet: DataFrame): DataFrame =
-      e.join(broadcast(remSet.select(col("node").as("src"))), Seq("src"), "left_anti")
-        .join(broadcast(remSet.select(col("node").as("dst"))), Seq("dst"), "left_anti")
-    var cur: DataFrame = e
-    var rem: DataFrame = null // materialized accumulated (node, step) list
-    var budget = maxRounds
-    var job = 0
-    var converged = false
-    while (budget > 0 && !converged) {
-      // Fuse up to detectsPerJob detect rounds into ONE materialize+count
-      // job: each fused round's list carries a step marker, so one
-      // aggregate action yields both the new accumulated list and the
-      // LAST step's row count — and |t_last| = 0 is exactly the old
-      // converged-round observation (detect is deterministic and removal
-      // is monotone, so an empty detect stays empty). The budget counts
-      // DETECT APPLICATIONS, never jobs, so a bounded-round oracle still
-      // unrolls identically: a fused trailing no-op round is idempotent.
-      // Trade-off (why this is a knob, not always-on): the intermediate
-      // step's list is evaluated lazily ~3× inside the fused job (two
-      // anti-join broadcast arms + the union), so fusion buys one fewer
-      // driver-synchronized barrier per extra step at ~1.5× the detect
-      // compute of that step — right for cheap detects on post-shrink
-      // graphs (tips), wrong for expensive detects (bubble popping) or
-      // loops that usually converge in round 1.
-      val k = math.min(detectsPerJob, budget)
-      // intermediate steps' lists are referenced 3× inside the fused job
-      // (two anti-join broadcast arms + the union) — a LAZY persist makes
-      // the first reference compute and the rest read cache, all within
-      // the job's own stages (no extra action)
-      val cachedSteps = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-      var acc: DataFrame = if (rem == null) null else rem.select(col("node"), lit(0).as("step"))
-      var curL = cur
-      for (j <- 1 to k) {
-        var tj = detect(curL).select(col("node"), lit(j).as("step"))
-        if (j < k) {
-          tj = tj.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          cachedSteps += tj
-          curL = curL
-            .join(broadcast(tj.select(col("node").as("src"))), Seq("src"), "left_anti")
-            .join(broadcast(tj.select(col("node").as("dst"))), Seq("dst"), "left_anti")
-        }
-        acc = if (acc == null) tj else acc.unionAll(tj)
-      }
-      job += 1
-      val (remNext, nLast) = graft.Trace(s"$tag.j$job(x$k)")(ckCountLastStep(acc, k))
-      cachedSteps.foreach(_.unpersist(false))
-      converged = nLast == 0
-      budget -= k
-      if (rem != null) rem.unpersist(false)
-      rem = remNext
-      cur = minus(rem)
-    }
-    graft.Convergence.check(tag, maxRounds, converged)
-    cur
+    // node removal is monotone, so the accumulated lists apply at once
+    fusedStepsFrom(e, maxRounds, tag, detectsPerJob, ordered = false)(
+      detect(_).select("node"),
+      (cur, rem) =>
+        cur.join(broadcast(rem.select(col("node").as("src"))), Seq("src"), "left_anti")
+          .join(broadcast(rem.select(col("node").as("dst"))), Seq("dst"), "left_anti"))
   }
 
-  /** Cut + "rows in the final fused step" in ONE job (the fused-round
-    * twin of [[ckCount]]): lazy localCheckpoint materializes during the
-    * aggregate action. sum(null) on an empty list reads as 0 new rows. */
-  private def ckCountLastStep(df: DataFrame, lastStep: Int): (DataFrame, Long) = {
-    val c = if (cfg.reliableStageCheckpoints) df.checkpoint(true)
-            else df.localCheckpoint(false)
-    val r = c.agg(sum(when(col("step") === lastStep, 1L).otherwise(0L))).collect()(0)
-    (c, if (r.isNullAt(0)) 0L else r.getLong(0))
+  /** The fused-step path shared by [[nodeRemovalLoopFrom]] and
+    * [[repeatAdjustLoopFrom]]: `detect` reads an edge set and returns
+    * the (small) rows that `remove` applies to it. The loop state is
+    * the materialized table of every step's rows so far, each tagged
+    * with its global step number; the edge set is `e` with those rows
+    * applied (`ordered`: step by step in order, else all at once).
+    *
+    * Fuse up to `perJob` detect steps into ONE materialize+count job:
+    * each fused step's rows carry their step marker, so one aggregate
+    * action over the job's lazy cut ([[graft.Fixpoint.Steps]]) yields
+    * both the new accumulated table and the LAST step's row count —
+    * and |t_last| = 0 is exactly the old converged-round observation
+    * (detect is deterministic and removal is monotone, so an empty
+    * detect stays empty). The budget counts DETECT APPLICATIONS, never
+    * jobs, so a bounded-round oracle still unrolls identically: a fused
+    * trailing no-op step is idempotent. Trade-off (why callers choose
+    * `perJob`): the intermediate step's rows are evaluated inside the
+    * fused job, so fusion buys one fewer driver-synchronized barrier
+    * per extra step at ~1.5× the detect compute of that step — right
+    * for cheap detects on post-shrink graphs (tips, repeat keeps),
+    * wrong for expensive detects (bubble popping) or loops that usually
+    * converge in round 1. Each job re-cuts the carried rows with the new
+    * ones, so the superseded table is released as it is replaced. */
+  private def fusedStepsFrom(e: DataFrame, maxRounds: Int, tag: String, perJob: Int,
+      ordered: Boolean)(detect: DataFrame => DataFrame,
+      remove: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    def applied(acc: DataFrame, steps: Int): DataFrame =
+      if (acc == null) e
+      else if (!ordered) remove(e, acc.drop("step"))
+      else (1 to steps).foldLeft(e)((cur, j) =>
+        remove(cur, acc.filter(col("step") === j).drop("step")))
+    var stepsDone = 0
+    val acc = graft.Fixpoint.run(tag, null, -1L, maxRounds, graft.Fixpoint.Steps(perJob), cfg) { r =>
+      var cur = applied(r.state, stepsDone)
+      var out = r.state
+      for (j <- r.steps) {
+        var t = detect(cur).withColumn("step", lit(j))
+        if (j < r.steps.last) {
+          // referenced by both remove arms and the union inside the
+          // fused job — a LAZY persist makes the first reference compute
+          // and the rest read cache, all within the job's own stages
+          t = r.own(t.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          cur = remove(cur, t.drop("step"))
+        }
+        out = if (out == null) t else out.unionAll(t)
+      }
+      stepsDone = r.steps.last
+      out
+    }
+    applied(acc, stepsDone)
   }
 
   val TipRounds: Int = cfg.tipRounds
@@ -1492,25 +1397,35 @@ class GraphOpsLib(val cfg: GraftConfig) {
     * Per-round reliable checkpoints: removeTips references its input
     * ~13×, so an unchecked 3-round lazy plan is 13³ copies of the edge
     * subtree and Catalyst analysis alone dominates the runtime. */
-  def q43TipsIterative(spark: SparkSession, dir: String): DataFrame = {
-    graft.GraftSession.ensureCheckpointDir(spark)
-    // one fused job per round (detect+remove+materialize+count) with an
-    // early exit on an unchanged edge count — converged rounds are
-    // idempotent no-ops, so the bounded-round oracle unrolls identically
-    var (e, n) = ckCount(edges2(spark, dir).select("src", "dst"))
-    e = sizedCk(e, n) // rounds inherit the sized partitioning
-    var rounds = 0
-    var converged = n == 0
-    while (!converged && rounds < TipRounds) {
-      val (next, m) = graft.Trace(s"q43.tips.${rounds + 1}")(ckCount(removeTips(e)))
-      rounds += 1
-      converged = m == n
-      n = m
-      e = next
-    }
-    graft.Convergence.check("q43.tips", TipRounds, converged)
-    e
+  def q43TipsIterative(spark: SparkSession, dir: String): DataFrame =
+    tipsToConvergence(edges2(spark, dir), TipRounds, "q43.tips")
+
+  /** Tip rounds until no tip remains or `maxRounds` — the kernel of q43
+    * and Pipeline.cleanToConvergence. One job per round: the lazy cut
+    * fuses the round's detect+remove with its materialization and
+    * convergence count. The checkpointed edge set shrinks
+    * monotonically, so only round 1 writes anything corpus-sized —
+    * measured faster at sf0.1 than the accumulated-removal shape
+    * (nodeRemovalLoopFrom), whose every round re-scans the FULL entry
+    * edge set: here the big shrink happens in round 1 and later rounds
+    * fly over the small materialized remainder. */
+  private[graft] def tipsToConvergence(e0: DataFrame, maxRounds: Int, tag: String): DataFrame = {
+    graft.GraftSession.ensureCheckpointDir(e0.sparkSession)
+    val (e, n) = ckCount(e0.select("src", "dst"))
+    shrinkFrom(tag, e, n, maxRounds)(r => removeTips(r.state))
   }
+
+  /** A shrink fixpoint ([[graft.Fixpoint.Shrink]]) over a materialized
+    * edge set `e` of `n` rows: right-sized once so every round inherits
+    * the sized partitioning, then `round` until a round leaves the edge
+    * count unchanged — the reference's own `remaining > 0` exit
+    * [BrushAssembler.java:411,577,633]. Sound because every step is
+    * removal-only (count unchanged ⇔ the round removed nothing ⇔
+    * converged), and EXACT against fully unrolled oracles because
+    * converged rounds are idempotent no-ops. */
+  private[graft] def shrinkFrom(tag: String, e: DataFrame, n: Long, maxRounds: Int)(
+      round: graft.Fixpoint.Round => DataFrame): DataFrame =
+    graft.Fixpoint.run(tag, sizedCk(e, n), n, maxRounds, graft.Fixpoint.Shrink(), cfg)(round)
 
   /** MATERIALIZED: each round references its input ~4× and rounds
     * chain — inlined CTEs would fan out 4^rounds scans (the exact DuckDB
@@ -1892,22 +1807,17 @@ class GraphOpsLib(val cfg: GraftConfig) {
     * SYMMETRIC edge set (both directions present, no self loops). */
   private[graft] def kcoreFrom(und: DataFrame): DataFrame = {
     val K = cfg.kcoreK
-    var (ed, n) = ckCount(und)
-    ed = sizedCk(ed, n)
-    var rounds = 0
-    var converged = n == 0L
-    while (!converged && rounds < cfg.kcoreRounds) {
-      val keep = ed.groupBy("u").agg(count(lit(1)).as("deg"))
+    val (ed0, n) = ckCount(und)
+    // resize: the shuffled-hash restrictions hand each round the
+    // shuffle's partition count, so every round re-sizes its output
+    val ed = graft.Fixpoint.run("q159.kcore", sizedCk(ed0, n), n, cfg.kcoreRounds,
+        graft.Fixpoint.Shrink(resize = true), cfg) { r =>
+      val keep = r.state.groupBy("u").agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= K).select("u")
-      val (next, m) = graft.Trace(s"q159.kcore.${rounds + 1}")(ckCount(
-        ed.join(keep.hint("shuffle_hash"), Seq("u"))
-          .join(keep.select(col("u").as("v")).hint("shuffle_hash"), Seq("v"))
-          .select("u", "v")))
-      converged = m == n
-      ed = sizedCk(next, m); n = m
-      rounds += 1
+      r.state.join(keep.hint("shuffle_hash"), Seq("u"))
+        .join(keep.select(col("u").as("v")).hint("shuffle_hash"), Seq("v"))
+        .select("u", "v")
     }
-    graft.Convergence.check("q159.kcore", cfg.kcoreRounds, converged || n == 0L)
     ed.groupBy("u").agg(count(lit(1)).as("degree"))
       .select(col("u").as("doc_id"), col("degree"))
   }
@@ -1983,8 +1893,12 @@ class GraphOpsLib(val cfg: GraftConfig) {
   }
 
   /** The min-plus kernel behind q208 (and, with unit weights, q170's
-    * BFS): `wedges` = (u, v, w BIGINT), `seeds` = (u, d=0). Returns
-    * (u, d).
+    * BFS and q218's eccentricity): `wedges` = (u, v, w BIGINT), `seeds`
+    * = (u, d=0), or (s, u, d=0) for PER-SOURCE distances — the state is
+    * then keyed by (source, node), distances from EACH seed separately
+    * instead of the min over the seed set; its size is Σ per-seed
+    * reach, the price of per-source answers, so callers bound it with a
+    * SAMPLED seed set and a hop budget. Returns (u, d) or (s, u, d).
     *
     * Frontier messaging (the round-10 Cc/Scc discipline): relaxations
     * come only from nodes whose distance CHANGED last round (an
@@ -1998,76 +1912,32 @@ class GraphOpsLib(val cfg: GraftConfig) {
     * messages (new nodes enter with a -1 prev sentinel; distances are
     * ≥ 0 so the sentinel can never collide), and convergence IS the
     * empty frontier — exactly "no row changed", with no separate
-    * count+sum probe. */
+    * count+sum probe. Each round takes an eager cut, then counts its
+    * frontier. */
   private[graft] def ssspFrom(wedges: DataFrame, seeds: DataFrame,
       maxRounds: Int, tag: String): DataFrame = {
+    val key = if (seeds.columns.contains("s")) Seq("s", "u") else Seq("u")
+    val keyCols = key.map(col)
     val (edP, ne) = keyedCk(wedges.select("u", "v", "w"), "u")
-    var dist = stageCk(seeds.select(col("u"), lit(-1L).as("prev"), col("d")))
-    var frontierN = dist.count()
-    var rounds = 0
-    var converged = ne == 0L || frontierN == 0L
-    while (!converged && rounds < maxRounds) {
-      val delta = dist.filter(col("d") =!= col("prev"))
-        .select(col("u"), col("d").as("fd"))
+    val dist0 = stageCk(seeds.select(keyCols ++ Seq(lit(-1L).as("prev"), col("d")): _*))
+    val n0 = dist0.count()
+    val dist = graft.Fixpoint.run(tag, dist0, if (ne == 0L) 0L else n0, maxRounds,
+        graft.Fixpoint.Frontier(col("d") =!= col("prev"), eager = true), cfg,
+        releaseInit = true) { r =>
+      val delta = r.state.filter(col("d") =!= col("prev"))
+        .select(keyCols :+ col("d").as("fd"): _*)
       val deltaJ =
-        if (frontierN >= 0 && frontierN <= Scc.deltaBroadcastRows) broadcast(delta)
+        if (r.last <= Cc.deltaBroadcastRows) broadcast(delta)
         else delta.hint("shuffle_hash")
       val msg = edP.join(deltaJ, "u")
-        .groupBy(col("v").as("u")).agg(min(col("fd") + col("w")).as("nd"))
-      val next = graft.Trace(s"$tag.${rounds + 1}")(stageCk(
-        dist.select(col("u"), col("d"))
-          .join(msg.hint("shuffle_hash"), Seq("u"), "full_outer")
-          .select(col("u"), coalesce(col("d"), lit(-1L)).as("prev"),
-            least(coalesce(col("d"), col("nd")),
-              coalesce(col("nd"), col("d"))).as("d"))))
-      rounds += 1
-      frontierN = next.filter(col("d") =!= col("prev")).count()
-      converged = frontierN == 0
-      dist.unpersist(false)
-      dist = next
+        .groupBy(keyCols.init :+ col("v").as("u"): _*).agg(min(col("fd") + col("w")).as("nd"))
+      r.state.select(keyCols :+ col("d"): _*)
+        .join(msg.hint("shuffle_hash"), key, "full_outer")
+        .select(keyCols ++ Seq(coalesce(col("d"), lit(-1L)).as("prev"),
+          least(coalesce(col("d"), col("nd")), coalesce(col("nd"), col("d"))).as("d")): _*)
     }
-    graft.Convergence.check(tag, maxRounds, converged)
-    edP.unpersist(false)
-    dist.select(col("u"), col("d"))
-  }
-
-  /** PER-SOURCE min-plus kernel: [[ssspFrom]] with the state keyed by
-    * (source, node) — distances from EACH seed separately instead of
-    * the min over the seed set. Same frontier-messaging discipline
-    * (relaxations only from last-round-changed rows, key-partitioned
-    * never-re-exchanged edge table, empty-frontier convergence);
-    * state size is Σ per-seed reach, the price of per-source answers
-    * — callers bound it with a SAMPLED seed set and a hop budget. */
-  private[graft] def ssspPerSourceFrom(wedges: DataFrame, seeds: DataFrame,
-      maxRounds: Int, tag: String): DataFrame = {
-    val (edP, ne) = keyedCk(wedges.select("u", "v", "w"), "u")
-    var dist = stageCk(seeds.select(col("s"), col("u"), lit(-1L).as("prev"), col("d")))
-    var frontierN = dist.count()
-    var rounds = 0
-    var converged = ne == 0L || frontierN == 0L
-    while (!converged && rounds < maxRounds) {
-      val delta = dist.filter(col("d") =!= col("prev"))
-        .select(col("s"), col("u"), col("d").as("fd"))
-      val deltaJ =
-        if (frontierN >= 0 && frontierN <= Scc.deltaBroadcastRows) broadcast(delta)
-        else delta.hint("shuffle_hash")
-      val msg = edP.join(deltaJ, "u")
-        .groupBy(col("s"), col("v").as("u")).agg(min(col("fd") + col("w")).as("nd"))
-      val next = graft.Trace(s"$tag.${rounds + 1}")(stageCk(
-        dist.select(col("s"), col("u"), col("d"))
-          .join(msg.hint("shuffle_hash"), Seq("s", "u"), "full_outer")
-          .select(col("s"), col("u"), coalesce(col("d"), lit(-1L)).as("prev"),
-            least(coalesce(col("d"), col("nd")),
-              coalesce(col("nd"), col("d"))).as("d"))))
-      rounds += 1
-      frontierN = next.filter(col("d") =!= col("prev")).count()
-      converged = frontierN == 0
-      dist.unpersist(false)
-      dist = next
-    }
-    graft.Convergence.check(tag, maxRounds, converged)
-    edP.unpersist(false)
-    dist.select(col("s"), col("u"), col("d"))
+    graft.Ck.release(edP)
+    dist.select(keyCols :+ col("d"): _*)
   }
 
   /** q218: sampled ECCENTRICITY / diameter estimate — per-seed BFS out
@@ -2090,7 +1960,7 @@ class GraphOpsLib(val cfg: GraftConfig) {
     val seeds = Tables.documents(spark, dir)
       .filter(col("doc_id") % cfg.bfsSeedMod === 0)
       .select(col("doc_id").as("s"), col("doc_id").as("u"), lit(0L).as("d"))
-    ssspPerSourceFrom(und, seeds, cfg.bfsRounds, "q218.ecc")
+    ssspFrom(und, seeds, cfg.bfsRounds, "q218.ecc")
       .groupBy(col("s").as("seed"))
       .agg(count(lit(1)).as("n_reached"), max(col("d")).as("ecc"))
   }

@@ -11,9 +11,9 @@ import graft.sources.Tables
   *
   * The reference iterates graph cleaning to convergence (tips→compress
   * loop at BrushAssembler.java:588-614, find→pop bubbles at :622-660);
-  * here each fixpoint is a driver loop whose rounds take eager
-  * checkpoints (see cleanToConvergence for why lineage must be cut every
-  * round) and converge on an edge-count fixpoint. At 100 TB each round
+  * here each fixpoint is a [[graft.Fixpoint]] loop whose rounds cut
+  * lineage every round (removeTips references its input ~13×) and
+  * converge on an edge-count fixpoint. At 100 TB each round
   * is two broadcast anti-joins (the removal set is small) over the
   * partitioned edge list — no driver-side data, no all-pairs work.
   */
@@ -21,41 +21,22 @@ object Pipeline {
 
   private val cfg = graft.GraftConfig.default
 
-  /** Stage cut + row count in ONE job: a LAZY localCheckpoint stores its
-    * blocks during the count() action, so each fixpoint round costs one
-    * Spark job instead of materialize-then-count's two — at sf0.1 the
-    * assembly compositions spend more in per-round job overhead than in
-    * data. Reliable mode keeps the eager cut (a lazy reliable checkpoint
-    * recomputes the RDD once more for the checkpoint write); its count
-    * over materialized blocks is cheap. */
-  private def cutAndCount(df: DataFrame): (DataFrame, Long) =
-    graft.Ck.sizedStage(df, cfg)
+  /** Detect steps per job in the CHEAP-detect assembly fixpoints (main
+    * tip loop, repeat-boundary loop). Fusing trades ~1.5× the
+    * (post-shrink, small) detect aggregate's compute for one fewer
+    * driver-synchronized barrier per extra step — the right trade when
+    * per-round job latency dominates round data (measured ~80% of the
+    * sf0.1 assembly tail; on a 1000-executor cluster a barrier is a
+    * full-cluster sync). 4 was measured slower than 2 (q62 7.58 →
+    * 15.34 s). Loops whose detect is expensive (bubble pop) or that
+    * converge in round 1 (post-lowcov tips) stay unfused. */
+  private val FusedDetects = 2
 
-  /** Iterate tip detect+remove until no tip remains (or maxRounds).
-    *
-    * One job per round: cutAndCount fuses the round's detect+remove
-    * with its materialization and convergence count. The checkpointed
-    * edge set shrinks monotonically, so only round 1 writes anything
-    * corpus-sized — measured faster at sf0.1 than the accumulated-
-    * removal shape (nodeRemovalLoopFrom), whose every round re-scans
-    * the FULL entry edge set: here the big shrink happens in round 1
-    * and later rounds fly over the small materialized remainder. */
-  def cleanToConvergence(spark: SparkSession, edges0: DataFrame, maxRounds: Int = 25): DataFrame = {
-    graft.GraftSession.ensureCheckpointDir(spark)
-    var (e, n) = cutAndCount(edges0.select("src", "dst"))
-    e = GraphOps.sizedCk(e, n) // rounds inherit the sized partitioning
-    var rounds = 0
-    var converged = n == 0
-    while (!converged && rounds < maxRounds) {
-      val (next, m) = graft.Trace(s"clean.tips.${rounds + 1}")(cutAndCount(GraphOps.removeTips(e)))
-      rounds += 1
-      converged = m == n // no edge removed → no tip existed
-      n = m
-      e = next
-    }
-    graft.Convergence.check("clean.tips", maxRounds, converged)
-    e
-  }
+  /** Iterate tip detect+remove until no tip remains (or maxRounds):
+    * [[GraphOpsLib.tipsToConvergence]], one fused cut+count job per
+    * round. */
+  def cleanToConvergence(spark: SparkSession, edges0: DataFrame, maxRounds: Int = 25): DataFrame =
+    GraphOps.tipsToConvergence(edges0, maxRounds, "clean.tips")
 
   /** Full assembly: overlap edges → tip cleaning to convergence → chain
     * compression on the cleaned graph → ordered consensus per chain.
@@ -146,43 +127,24 @@ object Pipeline {
     // if any phase before the lowcov await fails, kill the background
     // jobs instead of leaving them running with their failure swallowed
     try {
-    // Round loops exit early on an unchanged edge count — the reference's
-    // own `remaining > 0` loop exits [BrushAssembler.java:411,577,633].
-    // Sound because every stage is removal-only (count unchanged ⇔ the
-    // round removed nothing ⇔ converged), and EXACT against the fully
-    // unrolled oracle because converged rounds are idempotent no-ops.
-    // cutAndCount: lazy localCheckpoint + count share ONE job per round
-    // (reliable mode stays eager inside cutAndCount)
-    def rounds(tag: String, e0: DataFrame, maxRounds: Int)(round: DataFrame => DataFrame): DataFrame = {
-      var e = e0
-      var n = e.count()
-      // size the phase entry once; every round (and every later phase,
-      // whose loops inherit this partitioning) stops paying the build
-      // plan's task count per round
-      e = GraphOps.sizedCk(e, n)
-      var i = 0
-      var stop = false
-      while (i < maxRounds && !stop) {
-        val (next, m) = graft.Trace(s"asm.$tag.${i + 1}")(cutAndCount(round(e)))
-        stop = m == n
-        n = m; e = next; i += 1
-      }
-      graft.Convergence.check(s"asm.$tag", maxRounds, stop)
-      e
-    }
     // build string graph: chimeric-cut rounds on the variable-length
-    // overlap graph, then transitive reduction
-    val oe = rounds("chimeric", graft.Trace("asm.q17")(ck(GraphOps.q17BestOverlap(spark, dir))),
-      cfg.asmChimericRounds)(GraphOps.reciprocalBestFrom)
+    // overlap graph (a shrink loop: lazy cut + count in ONE job per
+    // round, early exit on an unchanged edge count — the reference's own
+    // `remaining > 0` exit; the phase entry is sized once, so every round
+    // and every later phase stops paying the build plan's task count),
+    // then transitive reduction
+    val q17 = graft.Trace("asm.q17")(ck(GraphOps.q17BestOverlap(spark, dir)))
+    val oe = GraphOps.shrinkFrom("asm.chimeric", q17, q17.count(), cfg.asmChimericRounds)(
+      r => GraphOps.reciprocalBestFrom(r.state))
     phaseStats("chimeric", oe)
     var e = graft.Trace("asm.transred")(ck(GraphOps.transReduceFrom(oe.select("src", "dst"))))
     phaseStats("transred", e)
     // tip rounds, bubble pop rounds — node-removal fixpoints: each
     // phase checkpoints the edge set ONCE and per round materializes
-    // only the small removal list (GraphOps.nodeRemovalLoopFrom); the
-    // old per-round cutAndCount rewrote the full edge set every round
+    // only the small removal list (GraphOps.nodeRemovalLoopFrom) instead
+    // of rewriting the full edge set every round
     e = GraphOps.nodeRemovalLoopFrom(spark, e, cfg.asmTipRounds, "asm.tips",
-      cutEntry = false, detectsPerJob = cfg.asmFusedRounds)(GraphOps.tipNodesFrom)
+      cutEntry = false, detectsPerJob = FusedDetects)(GraphOps.tipNodesFrom)
     phaseStats("tips", e)
     e = GraphOps.nodeRemovalLoopFrom(spark, e, cfg.asmPopRounds, "asm.pop")(
       GraphOps.poppedMidsFrom(_, docs))
@@ -199,12 +161,12 @@ object Pipeline {
       cutEntry = false)(GraphOps.tipNodesFrom)
     phaseStats("tips2", e)
     // repeat-boundary edge adjustment rounds: keep maps are small, so a
-    // round is a ckCount of the boundary table plus two broadcast joins
+    // round is a cut of the boundary table plus two broadcast joins
     // stacked on the phase entry checkpoint; rounds fuse pairwise
-    // (cfg.asmFusedRounds) so the usual productive-then-converged pair
-    // costs one driver barrier, not two
+    // (FusedDetects) so the usual productive-then-converged pair costs
+    // one driver barrier, not two
     e = GraphOps.repeatAdjustLoopFrom(spark, e, cfg.asmRepeatRounds, "asm.repeat",
-      roundsPerJob = cfg.asmFusedRounds)
+      roundsPerJob = FusedDetects)
     phaseStats("repeat", e)
     e
     } catch { case t: Throwable => lowF.cancelJobs(); throw t }

@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.GraftConfig
+import graft.{Ck, Fixpoint, GraftConfig}
 
 /** Strongly-connected-components kernel — the DIRECTED twin of [[Cc]]
   * for the string graph's repeat tangles (the directed cycles
@@ -36,102 +36,60 @@ import graft.GraftConfig
   */
 private[graft] object Scc {
 
-  /** Diagnostic round logging (-Dgraft.graphTrace=true): outer-round /
-    * propagation-round counters for adjudicating fixed-cost-per-round
-    * behavior on small graphs (shared with [[Cc]]). */
-  private[operators] val graphTrace = sys.props.get("graft.graphTrace").contains("true")
-
   /** (node, scc_id) for every node of a NON-trivial assignment or
     * self-assigned class minimum; callers coalesce absent nodes to
     * themselves. Edges as (u, v) directed. */
   def labels(edges0: DataFrame, cfg: GraftConfig): DataFrame = {
     val spark = edges0.sparkSession
     graft.GraftSession.ensureCheckpointDir(spark)
-    def stageCk(df: DataFrame): DataFrame = graft.Ck.stage(df, cfg)
-    // lazy cut + count fused into one job (r18, the cutAndCount discipline)
-    var (e, nE) = graft.Ck.sizedStage(edges0.select(col("u"), col("v")), cfg)
-    val empty = e.select(col("u").as("node"), col("u").as("scc_id")).limit(0)
+    // lazy cut + count fused into one job (r18)
+    val (e0, nE) = Ck.sizedStage(edges0.select(col("u"), col("v")), cfg)
+    val empty = e0.select(col("u").as("node"), col("u").as("scc_id")).limit(0)
     if (nE == 0) return empty
     val cap = math.max(1L,
-      e.select(col("u").as("n")).unionAll(e.select(col("v").as("n"))).distinct().count()).toInt
+      e0.select(col("u").as("n")).unionAll(e0.select(col("v").as("n"))).distinct().count()).toInt
     var assigned: DataFrame = null
-    var outer = 0
-    while (nE > 0 && outer < cap) {
-      val tOuter = System.nanoTime()
-      val nodes = stageCk(
-        e.select(col("u").as("node")).unionAll(e.select(col("v").as("node"))).distinct())
-      if (graphTrace) println(f"GRAPHTRACE scc nodesCk t=${(System.nanoTime() - tOuter) / 1e9}%.2f")
+    // every remaining edge is frontier: a round prunes, the loop ends
+    // when no edge is left (lazy cut + edge count in ONE job, r18); the
+    // last edge state is not part of the answer
+    Ck.release(Fixpoint.run("scc", e0, nE, cap, Fixpoint.Frontier(lit(true)), cfg,
+        releaseInit = true) { r =>
+      val e = r.state
+      val nodes = r.own(Ck.stage(
+        e.select(col("u").as("node")).unionAll(e.select(col("v").as("node"))).distinct(), cfg))
       // forward and backward propagations are independent — overlap them
       // on a second driver thread (the lowcov/graft.Par pattern)
-      val bF = graft.Par.async(spark, s"graft-scc-bwd-$outer")(
-        dirMinLabels(spark, nodes, e.select(col("v").as("u"), col("u").as("v")), cfg))
-      val f = dirMinLabels(spark, nodes, e, cfg)
-      val tFb = System.nanoTime()
+      val bF = graft.Par.async(spark, s"graft-scc-bwd-${r.n - 1}")(
+        minLabels(nodes, e.select(col("v").as("u"), col("u").as("v")), cfg, "scc.bwd"))
+      val f = r.own(minLabels(nodes, e, cfg, "scc.fwd"))
       // LAZY cut: fb's blocks materialize inside the `assigned` stage cut
       // job just below (the first action over fb), so the f/b join pays
       // no standalone materialization job; um/vm then read cached blocks
-      val fb = try bF() match { case b =>
-        graft.Ck.lazyStage(f.select(col("node"), col("lbl").as("f"))
-          .join(b.select(col("node"), col("lbl").as("b")), "node"), cfg)
+      val fb = try { val b = r.own(bF())
+        r.own(Ck.lazyStage(f.select(col("node"), col("lbl").as("f"))
+          .join(b.select(col("node"), col("lbl").as("b")), "node"), cfg))
       } catch { case t: Throwable => bF.cancelJobs(); throw t }
-      if (graphTrace) println(f"GRAPHTRACE scc fbJoin t=${(System.nanoTime() - tFb) / 1e9}%.2f")
       val newA = fb.filter(col("f") === col("b"))
         .select(col("node"), col("f").as("scc_id"))
-      assigned =
-        if (assigned == null) stageCk(newA)
-        else {
-          val nx = stageCk(assigned.unionAll(newA)); assigned.unpersist(false); nx
-        }
+      val prev = assigned
+      assigned = Ck.stage(if (prev == null) newA else prev.unionAll(newA), cfg)
+      if (prev != null) Ck.release(prev)
       val um = fb.select(col("node").as("u"), col("f").as("uf"), col("b").as("ub"))
       val vm = fb.select(col("node").as("v"), col("f").as("vf"), col("b").as("vb"))
-      val pruned = e.join(um.hint("shuffle_hash"), "u").join(vm.hint("shuffle_hash"), "v")
+      e.join(um.hint("shuffle_hash"), "u").join(vm.hint("shuffle_hash"), "v")
         .filter(col("uf") === col("vf") && col("ub") === col("vb") &&
                 col("uf") =!= col("ub")) // f=b endpoints are assigned — drop their edges
         .select("u", "v")
-      // lazy cut + edge count in ONE job (r18)
-      val next = graft.Ck.lazyStage(pruned, cfg)
-      val m = next.count()
-      e.unpersist(false); nodes.unpersist(false); fb.unpersist(false)
-      e = next
-      if (graphTrace) println(s"GRAPHTRACE scc outer=$outer nE=$nE -> $m")
-      nE = m
-      outer += 1
-    }
-    graft.Convergence.check("scc", cap, nE == 0)
-    if (assigned == null) empty else assigned
+    })
+    assigned
   }
 
-  /** Frontier size below which the per-round delta broadcasts instead
-    * of shuffling (shared with [[Cc.labels]]). */
-  private[operators] val deltaBroadcastRows = 500000L
-
-  /** One directed min-label propagation: lbl(u) = min node reachable
-    * from u along edge direction, including u — [[Cc.labels]] without
-    * the symmetrization, with the same per-round lineage cuts and hop;
-    * `nodes` must cover every edge endpoint (sink nodes hold their own
-    * label for the neighbor join).
-    *
-    * Round-10 rework (frontier messaging, Pregel's vote-to-halt in
-    * DataFrame form):
-    *   - MESSAGES COME ONLY FROM THE FRONTIER. A label update at u can
-    *     only originate from an out-neighbor v whose label CHANGED last
-    *     round (an unchanged lbl(v) was already folded into lbl(u) the
-    *     round v last changed; round 0's frontier is the nodes whose
-    *     seed already beats their id — plain neighbor ids are baked
-    *     into the seed itself). The message join therefore streams the
-    *     edge table against a delta that SHRINKS every round instead of
-    *     the full N-row label table — at 100 TB this is the difference
-    *     between O(frontier) and O(E) bytes shuffled per round.
-    *   - THE EDGE TABLE IS HASH-PARTITIONED ON ITS JOIN KEY ONCE per
-    *     call (checkpoint preserves outputPartitioning), so no round
-    *     re-exchanges the E-row side; while the frontier is large the
-    *     delta exchanges to match (shuffled-hash, build = delta), and
-    *     once it drops under [[deltaBroadcastRows]] it BROADCASTS —
-    *     zero exchange on either side for the tail rounds.
-    *   - CONVERGENCE IS THE FRONTIER COUNT — the delta needed for next
-    *     round's messages doubles as the probe, replacing the old
-    *     every-2-rounds join-and-count with a cheap filter-count over
-    *     blocks the checkpoint just materialized.
+  /** One directed min-label pass: lbl(u) = min node reachable from u
+    * along edge direction, including u — [[Cc.propagate]] over the
+    * unsymmetrized edges, whose seed folds in each node's out-neighbor
+    * ids; `nodes` must cover every edge endpoint (sink nodes hold their
+    * own label for the neighbor join). Returns Cc.propagate's final
+    * (node, prev, lbl) checkpoint.
     *
     * Why NOT warm-start from the previous OUTER round's labels (the
     * round-9 verdict's suggested lever): pruning only ever REMOVES
@@ -146,58 +104,16 @@ private[graft] object Scc {
     * trips the convergence guard. Seeds would have to satisfy
     * exact_new(w) ≤ seed(w) ≤ w for exactness, and old labels sit on
     * the wrong side of that window. */
-  private def dirMinLabels(spark: SparkSession, nodes: DataFrame, e: DataFrame,
-      cfg: GraftConfig): DataFrame = {
-    def stageCk(df: DataFrame): DataFrame = graft.Ck.stage(df, cfg)
+  private def minLabels(nodes: DataFrame, e: DataFrame, cfg: GraftConfig,
+      tag: String): DataFrame = {
     // one shuffle up front buys an exchange-free edge side in EVERY
     // round; keyedStage = explicit, row-count-sized hash partitioning
     // (see Ck.keyedStage for why explicit AND sized)
-    val (eP, _) = graft.Ck.keyedStage(e, "v", cfg)
-    val lbl0 = nodes
+    val (eP, _) = Ck.keyedStage(e, "v", cfg)
+    val seed = nodes
       .join(e.groupBy(col("u").as("node")).agg(min(col("v")).as("m")), Seq("node"), "left")
       .select(col("node"), col("node").as("prev"),
         least(col("node"), coalesce(col("m"), col("node"))).as("lbl"))
-    // lbl carries (node, prev, lbl): prev = label at round start, so the
-    // frontier is a filter over the just-checkpointed blocks, not a join.
-    // Lazy cut + count fused into one job (r18, the cutAndCount
-    // discipline — reliable mode stays eager inside lazyStage).
-    var lbl = graft.Ck.lazyStage(lbl0, cfg)
-    val n = lbl.count()
-    val maxRounds = math.max(1L, n).toInt
-    var frontierN = -1L // unknown until first counted
-    var rounds = 0
-    var converged = n == 0
-    while (!converged && rounds < maxRounds) {
-      val tR = System.nanoTime()
-      val delta = lbl.filter(col("lbl") =!= col("prev"))
-        .select(col("node").as("v"), col("lbl").as("vl"))
-      val deltaJ =
-        if (frontierN >= 0 && frontierN <= deltaBroadcastRows) broadcast(delta)
-        else delta.hint("shuffle_hash")
-      val nbrMin = eP.join(deltaJ, "v")
-        .groupBy(col("u").as("node")).agg(min(col("vl")).as("nl"))
-      val prop = lbl.select(col("node"), col("lbl"))
-        .join(nbrMin.hint("shuffle_hash"), Seq("node"), "left")
-        .select(col("node"), col("lbl").as("prev"),
-          least(col("lbl"), coalesce(col("nl"), col("lbl"))).as("lbl"))
-      // pointer-jump hop (path halving); only rows whose label beats
-      // their id can improve a pointer — identity rows are dead weight
-      val hop = prop.filter(col("lbl") < col("node"))
-        .select(col("node").as("hn"), col("lbl").as("hl"))
-      // lazy cut + frontier count in ONE job per round (r18)
-      val next = graft.Ck.lazyStage(
-        prop.join(hop, prop("lbl") === hop("hn"), "left")
-          .select(col("node"), col("prev"),
-            least(col("lbl"), coalesce(col("hl"), col("lbl"))).as("lbl")), cfg)
-      rounds += 1
-      frontierN = next.filter(col("lbl") =!= col("prev")).count()
-      converged = frontierN == 0
-      lbl.unpersist(false)
-      lbl = next
-      if (graphTrace) println(f"GRAPHTRACE dir round=$rounds frontier=$frontierN t=${(System.nanoTime() - tR) / 1e9}%.2f")
-    }
-    eP.unpersist(false) // final lbl is itself checkpointed — no lineage back to eP
-    if (graphTrace) println(s"GRAPHTRACE dirMinLabels n=$n rounds=$rounds")
-    lbl.select(col("node"), col("lbl"))
+    Cc.propagate(eP, seed, cfg, tag)
   }
 }

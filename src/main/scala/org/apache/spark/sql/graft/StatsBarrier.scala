@@ -56,6 +56,12 @@ object StatsBarrier {
       case _ => ck
     }
 
+  /** Drop a checkpoint RDD's blocks. `RDD.unpersist` would log a
+    * lineage-truncation warning for every local checkpoint, and the
+    * round loops release one per round on purpose. */
+  def freeBlocks(rdd: org.apache.spark.rdd.RDD[_]): Unit =
+    rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
+
   /** The origin's FINAL physical partitioning, if the adaptive plan
     * has materialized and its partitioning expressions resolve against
     * the checkpoint leaf's output; the leaf's own (pre-repair) value

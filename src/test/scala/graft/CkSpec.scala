@@ -1,6 +1,8 @@
 package graft
 
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** The checkpoint stats barrier (round-11 finding): without it,
   * iterated checkpoint→join→checkpoint generations carry origin
@@ -61,5 +63,33 @@ class CkSpec extends GraftSpec {
     }
     assert(joins(5) == joins(9),
       "LPA plan depth must reset at each stage cut, not grow with the round budget")
+  }
+
+  test("round loops cut through Ck: raw checkpoints stay at the straight-line sites") {
+    // compute-once cuts outside any round loop; rerouting them through
+    // Ck adds the stats barrier to curate-path plans, which needs its
+    // own measured change. Probe programs under graft/tools are not
+    // library code.
+    val allowed = Map(
+      "graft/sources/Scratch.scala" -> 1,
+      "graft/operators/Dedup.scala" -> 4,
+      "graft/operators/GraphOps.scala" -> 2, // popBubblesFrom
+      "graft/operators/Similarity.scala" -> 4,
+      "graft/streaming/CdcStream.scala" -> 2,
+      "graft/streaming/EventStream.scala" -> 1)
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repository root: ${root.toAbsolutePath}")
+    val raw = """\.(localCheckpoint|checkpoint)\(""".r
+    val found = Files.walk(root).iterator.asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => root.relativize(p).toString.replace('\\', '/'))
+      .filterNot(p => p == "graft/Ck.scala" || p.startsWith("graft/tools/"))
+      .map { p =>
+        val code = Files.readAllLines(root.resolve(p)).asScala.map(_.trim)
+          .filterNot(l => l.startsWith("*") || l.startsWith("//") || l.startsWith("/*"))
+        p -> code.map(raw.findAllMatchIn(_).size).sum
+      }
+      .filter(_._2 > 0).toMap
+    assert(found == allowed, "raw checkpoint calls outside Ck")
   }
 }

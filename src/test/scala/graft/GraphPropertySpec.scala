@@ -145,7 +145,7 @@ class GraphPropertySpec extends GraftSpec {
         .map { case (u, v) => (u, v, 1L + rnd.nextInt(9).toLong) }
       val seeds = (0L until n.toLong).filter(_ => rnd.nextBoolean()).toSet + 0L
       val rounds = 40
-      val got = graft.operators.GraphOps.ssspPerSourceFrom(edges.toDF("u", "v", "w"),
+      val got = graft.operators.GraphOps.ssspFrom(edges.toDF("u", "v", "w"),
           seeds.toSeq.map(s => (s, s, 0L)).toDF("s", "u", "d"), rounds, "spec.persrc")
         .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2))).toMap
       val want = seeds.toSeq.flatMap { s =>

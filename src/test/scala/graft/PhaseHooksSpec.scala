@@ -3,7 +3,7 @@ package graft
 import graft.operators.Pipeline
 import org.apache.spark.sql.DataFrame
 
-class PhaseHooksSpec extends GraftSpec {
+class PhaseHooksSpec extends GraftSpec with FixpointFixture {
 
   test("assembleFull emits one q28-shaped stats row after every phase") {
     val seen = scala.collection.mutable.ArrayBuffer.empty[(String, DataFrame)]
@@ -42,21 +42,42 @@ class PhaseHooksSpec extends GraftSpec {
   }
 
   test("bounded loops warn when the round budget is exhausted mid-cleaning") {
-    import spark.implicits._
+    import graft.operators.{GraphOps, GraphOpsLib}
     val warns = scala.collection.mutable.ArrayBuffer.empty[String]
     val old = Convergence.onWarn
     Convergence.onWarn = msg => warns += msg
+    // every config- or argument-bounded kernel on the Fixpoint driver:
+    // (tag, a budget below what the input needs, an ample budget).
+    // Cc, Scc and chain resolution are bounded by their data instead.
+    val table: Seq[(String, () => DataFrame, () => DataFrame)] = Seq(
+      // the fixture's tips peel a 7-node path, one node per round
+      ("clean.tips", () => Pipeline.cleanToConvergence(spark, edges, maxRounds = 1),
+        () => Pipeline.cleanToConvergence(spark, edges)),
+      ("q43.tips", () => new GraphOpsLib(GraftConfig(tipRounds = 1)).q43TipsIterative(spark, sf),
+        () => new GraphOpsLib(GraftConfig(tipRounds = 10)).q43TipsIterative(spark, sf)),
+      ("q63.repeat", () => new GraphOpsLib(GraftConfig(asmRepeatRounds = 1)).q63RepeatAdjust(spark, sf),
+        () => new GraphOpsLib(GraftConfig(asmRepeatRounds = 10)).q63RepeatAdjust(spark, sf)),
+      ("q159.kcore", () => new GraphOpsLib(GraftConfig(kcoreRounds = 1)).kcoreFrom(und),
+        () => new GraphOpsLib(GraftConfig(kcoreRounds = 10)).kcoreFrom(und)),
+      ("spec.sssp", () => GraphOps.ssspFrom(wedges, seeds, 1, "spec.sssp"),
+        () => GraphOps.ssspFrom(wedges, seeds, 30, "spec.sssp")),
+      ("spec.ecc", () => GraphOps.ssspFrom(wedges, sourceSeeds, 1, "spec.ecc"),
+        () => GraphOps.ssspFrom(wedges, sourceSeeds, 30, "spec.ecc")),
+      ("spec.tips", () => GraphOps.nodeRemovalLoopFrom(spark, edges, 1, "spec.tips")(GraphOps.tipNodesFrom),
+        () => GraphOps.nodeRemovalLoopFrom(spark, edges, 20, "spec.tips",
+          detectsPerJob = 2)(GraphOps.tipNodesFrom)),
+      ("spec.repeat", () => GraphOps.repeatAdjustLoopFrom(spark, edges, 1, "spec.repeat"),
+        () => GraphOps.repeatAdjustLoopFrom(spark, edges, 4, "spec.repeat", roundsPerJob = 2)))
     try {
-      // a 7-node path needs 3 tip rounds; with maxRounds=1 the single
-      // round still removes edges, so the guard must fire
-      val path = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L), (6L, 7L))
-        .toDF("src", "dst")
-      Pipeline.cleanToConvergence(spark, path, maxRounds = 1).count()
-      assert(warns.exists(_.startsWith("clean.tips")), warns)
-      // and a converging run stays silent
-      warns.clear()
-      Pipeline.cleanToConvergence(spark, path, maxRounds = 10).count()
-      assert(warns.isEmpty, warns)
+      for ((tag, capped, ample) <- table) {
+        warns.clear()
+        capped().count()
+        assert(warns.size == 1 && warns.head.startsWith(s"$tag: round bound 1 exhausted") &&
+          warns.head.contains("(the last round "), s"$tag: $warns")
+        warns.clear()
+        ample().count()
+        assert(warns.isEmpty, s"$tag: $warns")
+      }
     } finally Convergence.onWarn = old
   }
 }
