@@ -1,4 +1,7 @@
 package graft
+
+import scala.util.control.NonFatal
+
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -72,6 +75,15 @@ object Bench {
       }
     }
 
+    // a failed run's cause per query (the latest failure wins): it goes
+    // into that query's BENCH_DETAIL entry beside the -1 it reports.
+    // Fatal errors (OOM, interrupts) are not caught — they end the run.
+    val errors = scala.collection.mutable.Map.empty[String, String]
+    def failure(name: String, e: Throwable): Double = {
+      errors(name) = s"${e.getClass.getName}: ${e.getMessage}"
+      -1.0
+    }
+
     val both = order.map { name =>
       val fn = SparkEntry.queries(name)
       // per-query box state at measurement time — the self-adjudication
@@ -83,7 +95,7 @@ object Bench {
           // noop sink: evaluates every projected column (count() would let
           // Catalyst prune map-only expressions out of the measurement)
           try { fn(spark, sfDir).write.format("noop").mode("overwrite").save() }
-          catch { case _: Throwable => return -1.0 }
+          catch { case NonFatal(e) => return failure(name, e) }
           (System.nanoTime() - t0) / 1e9
         }
         // Cross-run hygiene inside the context: drop cached blocks and
@@ -138,7 +150,7 @@ object Bench {
           try {
             fn(spark, sfDir).write.format("noop").mode("overwrite").save()
             (System.nanoTime() - t0) / 1e9
-          } catch { case _: Throwable => -1.0 }
+          } catch { case NonFatal(e) => failure(k, e) }
         }
       }.toMap
     val results = both.map { case (k, (r1, r2, r3, _, _)) =>
@@ -161,7 +173,8 @@ object Bench {
         else ",\"stages\":" + stages.map { case (t, s) =>
           "[\"" + t + "\"," + f(s) + "]" }.mkString("[", ",", "]")
       val runs = (Seq(r1, r2) ++ r3 ++ thirdRuns.get(k)).map(f).mkString(",")
-      s"\"" + k + "\":{\"runs\":[" + runs + "],\"load1\":" + f(qLoad) + st + "}"
+      val err = errors.get(k).map(e => ",\"error\":" + Verify.jsonString(e)).getOrElse("")
+      s"\"" + k + "\":{\"runs\":[" + runs + "],\"load1\":" + f(qLoad) + st + err + "}"
     }.mkString("{", ",", "}")
     val orderJson = order.map("\"" + _ + "\"").mkString("[", ",", "]")
     // archive the full per-query detail PER ROUND (round-10 verdict item
@@ -186,7 +199,7 @@ object Bench {
       mx + 1
     } catch { case _: Throwable => 0 })
     val detailJson =
-      s"""{"runs":"{runs:[run1,run2(,run3 on a hot box)], load1 at query start, stages:[[tag,sec]...] of run2} per query; reported=min(runs); fresh SparkContext per query","hot_box":$hotBox,"order":$orderJson,"queries":$detail,"sf":"$sfDir"}
+      s"""{"runs":"{runs:[run1,run2(,run3 on a hot box)], load1 at query start, stages:[[tag,sec]...] of run2, error: the last failed run's exception} per query; reported=min(runs); fresh SparkContext per query","hot_box":$hotBox,"order":$orderJson,"queries":$detail,"sf":"$sfDir"}
 """
     try {
       java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_DETAIL.json"),

@@ -21,6 +21,14 @@ import org.apache.spark.sql.DataFrame
   * Similarity, CdcStream, EventStream); `CkSpec` pins that list so no
   * round loop can bypass this object again. */
 object Ck {
+  // partition sizing for stage-checkpointed graph tables (GraphOps.
+  // sizedCk): target rows per partition when re-cutting a counted
+  // stage output. Fixpoint rounds pay task scheduling + AQE stage
+  // latency PER PARTITION, so a small stage table must not carry the
+  // corpus-sized parallelism of the scan/join plan that built it;
+  // 1M edge rows ≈ tens of MB per task, the same bytes-per-task
+  // discipline AQE applies to shuffle outputs.
+  val StageRowsPerPartition: Long = 1L << 20
 
   /** Eager stage cut (the shared stageCk discipline). */
   def stage(df: DataFrame, cfg: GraftConfig): DataFrame =
@@ -49,7 +57,7 @@ object Ck {
   /** Materialize an iterative loop's re-joined side KEY-PARTITIONED and
     * row-count-SIZED: one lazy cut+count evaluates the (possibly heavy)
     * build plan once, then the counted rows re-cut through an EXPLICIT
-    * hash repartition sized by cfg.stageRowsPerPartition. Explicit,
+    * hash repartition sized by StageRowsPerPartition. Explicit,
     * because the stats barrier can only lift partitioning from a FINAL
     * adaptive plan (a lazy cut never has one) and a column-only
     * repartition gets AQE-coalesced out of co-location; sized, because
@@ -63,7 +71,7 @@ object Ck {
     val (raw, n) = sizedStage(df, cfg)
     val maxParts = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     val parts = math.max(1L, math.min(maxParts.toLong,
-      (n + cfg.stageRowsPerPartition - 1) / cfg.stageRowsPerPartition)).toInt
+      (n + StageRowsPerPartition - 1) / StageRowsPerPartition)).toInt
     val keyed = stage(raw.repartition(parts, col(key)), cfg)
     release(raw)
     (keyed, n)
@@ -79,13 +87,13 @@ object Ck {
     * phase entry buys every round after it (round outputs inherit the
     * sized partitioning through narrow broadcast joins).
     *
-    * rows→partitions ratio is cfg.stageRowsPerPartition: 26k edges → 1
+    * rows→partitions ratio is StageRowsPerPartition: 26k edges → 1
     * partition locally; 10B edges at corpus scale → ~10k partitions on a
     * cluster — the bytes-per-task discipline AQE applies to shuffles,
     * extended to checkpoint scans AQE cannot re-plan. Only ever shrinks
     * (and only on a ≥2× gap, so a well-sized table passes through). */
   def sized(df: DataFrame, rows: Long, cfg: GraftConfig): DataFrame = {
-    val want = math.max(1L, (rows + cfg.stageRowsPerPartition - 1) / cfg.stageRowsPerPartition)
+    val want = math.max(1L, (rows + StageRowsPerPartition - 1) / StageRowsPerPartition)
     if (want * 2 <= df.rdd.getNumPartitions) stage(df.coalesce(want.toInt), cfg) else df
   }
 

@@ -13,9 +13,20 @@ import graft.sources.Tables
   * nearest-rank definition and a fixed-point rank (SCALE ≙ 1.0, integer
   * floor division) are the portable exact forms. */
 class AnalyticsOps(val cfg: GraftConfig) {
-  val Levels: Seq[Int] = cfg.percentileLevels
+  val Levels: Seq[Int] = GraftConfig.percentileLevels
   val PrIters: Int = cfg.pagerankIters
-  val PrScale: Long = cfg.pagerankScale
+  // q91's coarse-bucket width for the two-phase exact quantile: phase-1
+  // histogram rows = value-range / width per class (bounded by the
+  // price domain, NOT corpus size); phase 2 ranks only inside the
+  // <= |classes|·|levels| selected buckets
+  val PercentileBucketWidth: Double = 4096.0
+  // PageRank's fixed-point scale (integer ranks = SCALE ≙ 1.0, so
+  // every engine agrees bit-for-bit; keep iters × log10(n × scale ×
+  // 85) under long range)
+  val PrScale: Long = 1000000000000L
+  // link prediction (q235): emit candidate links sharing at least
+  // this many common neighbors
+  val LinkMinCommon: Int = 2
 
   /** q91: exact nearest-rank percentiles of order value per priority
     * class — value at 1-based rank ⌈p·n/100⌉ = (n·p + 99) div 100, the
@@ -28,7 +39,7 @@ class AnalyticsOps(val cfg: GraftConfig) {
     * (o_totalprice is near-unique, so a value histogram doesn't
     * compress and its O(H²) cumulative join explodes). Phase 1 builds a
     * COARSE bucket histogram (rows bounded by price-range /
-    * ${cfg.percentileBucketWidth} per class, independent of corpus
+    * ${PercentileBucketWidth} per class, independent of corpus
     * size), takes cumulative counts with the q28/q105 broadcast
     * triangular join, and locates each level's cut bucket + residual
     * rank. Phase 2 re-scans only rows landing in the <= classes·levels
@@ -40,7 +51,7 @@ class AnalyticsOps(val cfg: GraftConfig) {
   def q91Percentiles(spark: SparkSession, dir: String): DataFrame = {
     val o = Tables.orders(spark, dir)
       .select(col("o_orderpriority").as("cls"), col("o_totalprice").as("v"),
-        floor(col("o_totalprice") / cfg.percentileBucketWidth).cast("long").as("bk"))
+        floor(col("o_totalprice") / PercentileBucketWidth).cast("long").as("bk"))
     val bh = o.groupBy("cls", "bk").agg(count(lit(1)).as("cnt"))
     val bcum = bh.as("a")
       .join(broadcast(bh.as("b")),
@@ -157,7 +168,7 @@ class AnalyticsOps(val cfg: GraftConfig) {
   }
 
   /** q213: PERSONALIZED PageRank — q92's restart vector concentrated
-    * on the q170/q208 seed set (doc_id ≡ 0 mod ${cfg.bfsSeedMod}):
+    * on the q170/q208 seed set (doc_id ≡ 0 mod ${GraftConfig.bfsSeedMod}):
     * rank restarts ONLY to seeds (base mass (15·SCALE) div 100 at
     * seeds, 0 elsewhere; r₀ = SCALE at seeds, 0 elsewhere), so the
     * stationary ranks measure graph PROXIMITY TO THE SEEDS — the
@@ -175,13 +186,13 @@ class AnalyticsOps(val cfg: GraftConfig) {
     val e = GraphOps.q20OverlapEdges(spark, dir).select("src", "dst")
     val seedBase = lit(15L * PrScale / 100)
     prLoop(docs, e,
-      n => when(n % cfg.bfsSeedMod === 0, seedBase).otherwise(lit(0L)),
-      n => when(n % cfg.bfsSeedMod === 0, lit(PrScale)).otherwise(lit(0L)))
+      n => when(n % GraftConfig.bfsSeedMod === 0, seedBase).otherwise(lit(0L)),
+      n => when(n % GraftConfig.bfsSeedMod === 0, lit(PrScale)).otherwise(lit(0L)))
       .select(col("node").as("doc_id"), col("pr").as("ppr"))
   }
 
   def q213Sql: String = {
-    val seed = s"node % ${cfg.bfsSeedMod} = 0"
+    val seed = s"node % ${GraftConfig.bfsSeedMod} = 0"
     val iters = (1 to PrIters).map { i =>
       s"""c$i AS (SELECT eo.dst AS node, CAST(SUM(r${i - 1}.pr // eo.od) AS BIGINT) AS s
          |  FROM eo JOIN r${i - 1} ON r${i - 1}.node = eo.src GROUP BY 1),
@@ -195,7 +206,7 @@ class AnalyticsOps(val cfg: GraftConfig) {
        |od AS (SELECT src, count(*) AS od FROM edges GROUP BY 1),
        |eo AS (SELECT e.src, e.dst, od.od FROM edges e JOIN od USING (src)),
        |r0 AS (SELECT doc_id AS node,
-       |    CASE WHEN doc_id % ${cfg.bfsSeedMod} = 0
+       |    CASE WHEN doc_id % ${GraftConfig.bfsSeedMod} = 0
        |      THEN CAST($PrScale AS BIGINT) ELSE CAST(0 AS BIGINT) END AS pr
        |  FROM documents),
        |$iters
@@ -743,14 +754,14 @@ class AnalyticsOps(val cfg: GraftConfig) {
         greatest(lit(1L), col("nc") - length(col("okey")).cast("long")).as("w"))
     val seedBase = lit(15L * PrScale / 100)
     prLoop(docs, we,
-      n => when(n % cfg.bfsSeedMod === 0, seedBase).otherwise(lit(0L)),
-      n => when(n % cfg.bfsSeedMod === 0, lit(PrScale)).otherwise(lit(0L)),
+      n => when(n % GraftConfig.bfsSeedMod === 0, seedBase).otherwise(lit(0L)),
+      n => when(n % GraftConfig.bfsSeedMod === 0, lit(PrScale)).otherwise(lit(0L)),
       Some("w"))
       .select(col("node").as("doc_id"), col("pr").as("wppr"))
   }
 
   def q260Sql: String = {
-    val seed = s"node % ${cfg.bfsSeedMod} = 0"
+    val seed = s"node % ${GraftConfig.bfsSeedMod} = 0"
     val iters = (1 to PrIters).map { i =>
       s"""c$i AS (SELECT eo.dst AS node,
          |    CAST(SUM((r${i - 1}.pr * eo.w) // eo.od) AS BIGINT) AS s
@@ -767,7 +778,7 @@ class AnalyticsOps(val cfg: GraftConfig) {
        |od AS (SELECT src, CAST(SUM(w) AS BIGINT) AS od FROM we GROUP BY 1),
        |eo AS (SELECT we.src, we.dst, we.w, od.od FROM we JOIN od USING (src)),
        |r0 AS (SELECT doc_id AS node,
-       |    CASE WHEN doc_id % ${cfg.bfsSeedMod} = 0 THEN CAST($PrScale AS BIGINT)
+       |    CASE WHEN doc_id % ${GraftConfig.bfsSeedMod} = 0 THEN CAST($PrScale AS BIGINT)
        |         ELSE CAST(0 AS BIGINT) END AS pr
        |  FROM documents),
        |$iters
@@ -826,7 +837,7 @@ class AnalyticsOps(val cfg: GraftConfig) {
 
   /** q235: LINK PREDICTION on the overlap graph — candidate edges the
     * graph does NOT have, ranked by common-neighbor count: for every
-    * non-adjacent pair (u, v) sharing ≥ ${cfg.linkMinCommon} neighbors,
+    * non-adjacent pair (u, v) sharing ≥ ${LinkMinCommon} neighbors,
     * emit the pair and its count. The graph-ML companion to q140's
     * embedding kNN: "these two documents touch the same neighborhoods
     * but never each other" — a retrieval-expansion and
@@ -861,7 +872,7 @@ class AnalyticsOps(val cfg: GraftConfig) {
       .groupBy(col("x").as("u"), col("y").as("v"))
       .agg(count(lit(1)).as("common_nbrs"))
     pairs.join(und, Seq("u", "v"), "left_anti")
-      .filter(col("common_nbrs") >= cfg.linkMinCommon)
+      .filter(col("common_nbrs") >= LinkMinCommon)
   }
 
   def q235Sql: String =
@@ -877,7 +888,7 @@ class AnalyticsOps(val cfg: GraftConfig) {
        |  FROM sm a JOIN sm b ON a.ctr = b.ctr AND a.nb < b.nb
        |  GROUP BY 1, 2)
        |SELECT u, v, common_nbrs FROM p
-       |WHERE common_nbrs >= ${cfg.linkMinCommon}
+       |WHERE common_nbrs >= ${LinkMinCommon}
        |  AND NOT EXISTS (SELECT 1 FROM und WHERE und.u = p.u AND und.v = p.v)""".stripMargin
 
   /** q233: SKYLINE (Pareto front) — parts no other part beats on BOTH

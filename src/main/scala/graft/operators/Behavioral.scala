@@ -19,7 +19,15 @@ import graft.sources.{Artifact, Tables}
   * exchange), and the final aggregates are map-side combinable.
   */
 class BehavioralOps(val cfg: GraftConfig) {
-  private val Stages = cfg.funnelStages
+  // ordered funnel stages (q117), first-hit-in-order semantics
+  val Stages: Seq[String] = Seq("view", "click", "purchase")
+  // burst hours (q130): z² of the integer z-test (9 ≙ 3σ)
+  val BurstZSq: Long = 9L
+  // trending (q145): event types kept per day
+  val TrendTopK: Int = 3
+  // seasonal anomaly (q239): squared z threshold of the integer
+  // hour-of-day burst test (9 = three standard deviations)
+  val SeasonalZSq: Long = 9L
   private val DayMs = 86400000L
   private val HourMs = 3600000L
 
@@ -144,7 +152,7 @@ class BehavioralOps(val cfg: GraftConfig) {
     val dev = col("n_cells") * col("cnt") - col("sum_cnt")
     filled.join(broadcast(stats), Seq("event_type", "hod"))
       .filter(dev > 0 && dev * dev >
-        lit(cfg.seasonalZSq) * (col("n_cells") * col("q") - col("sum_cnt") * col("sum_cnt")))
+        lit(SeasonalZSq) * (col("n_cells") * col("q") - col("sum_cnt") * col("sum_cnt")))
       .select("event_type", "day", "hod", "cnt", "n_cells", "sum_cnt")
   }
 
@@ -166,7 +174,7 @@ class BehavioralOps(val cfg: GraftConfig) {
        |FROM filled f JOIN st USING (event_type, hod)
        |WHERE st.n_cells * f.cnt - st.sum_cnt > 0
        |  AND (st.n_cells * f.cnt - st.sum_cnt) * (st.n_cells * f.cnt - st.sum_cnt)
-       |    > ${cfg.seasonalZSq} * (st.n_cells * st.q - st.sum_cnt * st.sum_cnt)""".stripMargin
+       |    > ${SeasonalZSq} * (st.n_cells * st.q - st.sum_cnt * st.sum_cnt)""".stripMargin
 
   def q116Sql: String =
     s"""WITH ev AS (SELECT user_id, event_id, epoch_ms(ts) AS ms, event_type FROM events),
@@ -269,7 +277,7 @@ class BehavioralOps(val cfg: GraftConfig) {
   def q130BurstHours(spark: SparkSession, dir: String): DataFrame = {
     val HourMs = 3600000L
     val MinHours = cfg.burstMinHours
-    val ZSq = cfg.burstZSq
+    val ZSq = BurstZSq
     val h = ev(spark, dir)
       .select(col("user_id"), (expr(s"ms div $HourMs") * HourMs).as("hr_ms"))
       .groupBy("user_id", "hr_ms").agg(count(lit(1)).as("cnt"))
@@ -285,7 +293,7 @@ class BehavioralOps(val cfg: GraftConfig) {
         col("n_hours"), col("s").as("total_events"))
   }
 
-  /** q145: TRENDING — the top-${cfg.trendTopK} event types per day by
+  /** q145: TRENDING — the top-${TrendTopK} event types per day by
     * count, with a total tie order (count desc, type asc): the
     * "what's hot today" rollup of every activity dashboard. The daily
     * counts are one map-combinable aggregate; the per-day rank filter
@@ -299,7 +307,7 @@ class BehavioralOps(val cfg: GraftConfig) {
       .select(expr(s"ms div $DayMs").as("day"), col("event_type"))
       .groupBy("day", "event_type").agg(count(lit(1)).as("cnt"))
       .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= cfg.trendTopK)
+      .filter(col("rk") <= TrendTopK)
   }
 
   def q145Sql: String =
@@ -308,7 +316,7 @@ class BehavioralOps(val cfg: GraftConfig) {
        |SELECT day, event_type, cnt, CAST(rk AS INT) AS rk FROM (
        |  SELECT day, event_type, cnt,
        |    row_number() OVER (PARTITION BY day ORDER BY cnt DESC, event_type) AS rk
-       |  FROM c) WHERE rk <= ${cfg.trendTopK}""".stripMargin
+       |  FROM c) WHERE rk <= ${TrendTopK}""".stripMargin
 
   /** q175: session PATH MINING — the top-${cfg.pathTopK} most
     * common 3-step event-type sequences within a session (gap =
@@ -421,7 +429,7 @@ class BehavioralOps(val cfg: GraftConfig) {
        |FROM h JOIN st USING (user_id)
        |WHERE n_hours >= ${cfg.burstMinHours}
        |  AND n_hours*cnt - s > 0
-       |  AND (n_hours*cnt - s)*(n_hours*cnt - s) > ${cfg.burstZSq}*(n_hours*q - s*s)""".stripMargin
+       |  AND (n_hours*cnt - s)*(n_hours*cnt - s) > ${BurstZSq}*(n_hours*q - s*s)""".stripMargin
 
   /** q219: SEMI-STRUCTURED extraction — the event feed's `props` JSON
     * payload parsed with an EXPLICIT schema (`from_json(props,

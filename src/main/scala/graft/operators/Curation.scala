@@ -21,9 +21,43 @@ import graft.sources.Tables
 class CurationOps(val cfg: GraftConfig) {
   private val N = cfg.contamNgramWords
   private val MaxTrainDf = cfg.contamMaxTrainDf
-  private val EvalMod = cfg.contamEvalMod
   private val TopK = cfg.vocabTopK
   private val MinPair = cfg.bigramMinCount
+  // train/eval contamination: the deterministic split modulus
+  // (doc_id % mod ≥ mod-2 → eval)
+  val EvalMod: Int = 10
+  // deterministic sampling: first-4-hex-chars md5 bucket upper bound
+  // ('3333' ≈ 0x3333/0x10000 = 20%), hash keyed by (source, doc_id)
+  val SampleHexUpper: String = "3333"
+  // stratified sampling (q81): per-language doc cap, md5-ordered
+  val StratifiedCap: Int = 50
+  // sequence packing (q83): context-window token budget per packed
+  // bin, and the md5-hex prefix length that defines packing shards
+  // (16^len shards; each shard's window sorts on one task, so the
+  // shard count must scale with the corpus — 2 hex = 256 shards for
+  // local testing, 4 hex = 65k shards ≈ 1.5 GB/shard at 100 TB)
+  val PackCtxTokens: Long = 2048L
+  val PackShardHexLen: Int = 2
+  // global length binning (q105): nearest-rank percentile cut levels
+  // computed from a value histogram (no global sort)
+  val LengthBinPcts: Seq[Int] = 10 to 90 by 10
+  // doc LM score (q154): fixed-point scale for the add-1-smoothed
+  // bigram probability (SCALE ≙ 1.0); per-bigram scores are < SCALE,
+  // so per-doc sums stay far under long range
+  val LmScoreScale: Long = 1000000L
+  // sketch-backed split-drift gate (q214): per-bucket chi-square above
+  // which a bucket counts as drifted (6.635 = the 1-df p<0.01 cut)
+  val Chi2DriftThreshold: Double = 6.635
+  // greedy coverage selection (q237): target vocabulary size (top
+  // bigrams by corpus count) and selection rounds — both bound the
+  // driver loop and the per-round broadcast state
+  val CoverageVocab: Int = 300
+  val CoverageRounds: Int = 3
+  // q320/q321 (DSIR importance weights + resample): the target
+  // distribution is docs in this language, and features are word
+  // unigrams hashed into this many buckets
+  val DsirTargetLang: String = "en"
+  val DsirBuckets: Int = 256
 
   /** Distinct word `N`-grams per doc (1-based start offsets, so the
     * Spark `slice` and DuckDB's 1-based list slicing line up). */
@@ -79,7 +113,7 @@ class CurationOps(val cfg: GraftConfig) {
 
   /** Deterministic md5 split bucket: the first two hex chars of
     * md5(doc_id). Comparing the HEX STRING against fixed-width bounds
-    * ('${cfg.splitTrainUpper}'/'${cfg.splitValUpper}') is numeric
+    * ('${cfg.splitTrainUpper}'/'${GraftConfig.splitValUpper}') is numeric
     * comparison (fixed width, lowercase both engines), so no hex→int
     * conversion is needed and the bucketing runs identically in Spark
     * and DuckDB. ~80/10/10. Content-stable: the split of a doc never
@@ -88,7 +122,7 @@ class CurationOps(val cfg: GraftConfig) {
   private def splitCol: Column = {
     val b = substring(md5(col("doc_id").cast("string")), 1, 2)
     when(b < cfg.splitTrainUpper, "train")
-      .when(b < cfg.splitValUpper, "val").otherwise("test")
+      .when(b < GraftConfig.splitValUpper, "val").otherwise("test")
   }
 
   /** q68: per-split corpus stats — one scan, one 3-group aggregate.
@@ -110,7 +144,7 @@ class CurationOps(val cfg: GraftConfig) {
        |  CAST(SUM(CAST(n_chars AS DECIMAL(25,6))) AS DOUBLE) AS total_chars,
        |  CAST(SUM(CAST(n_chars AS DECIMAL(25,6))) AS DOUBLE) / count(*) AS avg_chars
        |FROM (SELECT *, CASE WHEN substr(md5(doc_id::VARCHAR), 1, 2) < '${cfg.splitTrainUpper}' THEN 'train'
-       |  WHEN substr(md5(doc_id::VARCHAR), 1, 2) < '${cfg.splitValUpper}' THEN 'val'
+       |  WHEN substr(md5(doc_id::VARCHAR), 1, 2) < '${GraftConfig.splitValUpper}' THEN 'val'
        |  ELSE 'test' END AS split FROM documents)
        |GROUP BY split""".stripMargin
 
@@ -229,7 +263,7 @@ class CurationOps(val cfg: GraftConfig) {
     * dropped — featurization must keep every row. */
   def q78Features(spark: SparkSession, dir: String): DataFrame = {
     graft.plans.GraftExtensions.ensureRegistered(spark)
-    val stopList = cfg.stopwords.map(w => s"'$w'").mkString("(", ", ", ")")
+    val stopList = GraftConfig.stopwords.map(w => s"'$w'").mkString("(", ", ", ")")
     Tables.documents(spark, dir)
       .select(col("doc_id"), col("n_chars"),
         size(split(col("text"), " ")).cast("long").as("ws_tokens"),
@@ -248,7 +282,7 @@ class CurationOps(val cfg: GraftConfig) {
 
   def q78Sql: String = {
     val K = cfg.repShingleK
-    val stopList = cfg.stopwords.map(w => s"'$w'").mkString("(", ", ", ")")
+    val stopList = GraftConfig.stopwords.map(w => s"'$w'").mkString("(", ", ", ")")
     s"""WITH w AS (
        |  SELECT doc_id, substr(text, g, $K) AS s
        |  FROM documents, LATERAL (SELECT unnest(generate_series(1, len(text)-${K - 1})) AS g) t
@@ -265,13 +299,13 @@ class CurationOps(val cfg: GraftConfig) {
        |  CAST(st.max_freq AS DOUBLE) / st.n_windows AS rep_frac,
        |  md5(trim(regexp_replace(d.text, ' +', ' ', 'g'))) AS fp,
        |  CASE WHEN substr(md5(d.doc_id::VARCHAR), 1, 2) < '${cfg.splitTrainUpper}' THEN 'train'
-       |    WHEN substr(md5(d.doc_id::VARCHAR), 1, 2) < '${cfg.splitValUpper}' THEN 'val'
+       |    WHEN substr(md5(d.doc_id::VARCHAR), 1, 2) < '${GraftConfig.splitValUpper}' THEN 'val'
        |    ELSE 'test' END AS split
        |FROM documents d LEFT JOIN st ON st.doc_id = d.doc_id""".stripMargin
   }
 
   /** q75: deterministic sampling — keep a doc iff the first 4 hex chars
-    * of md5(source:doc_id) fall under '${cfg.sampleHexUpper}' (≈20%).
+    * of md5(source:doc_id) fall under '${SampleHexUpper}' (≈20%).
     * Content-stable like the q68 split: membership never depends on
     * corpus size, row order, or partitioning, so re-running the
     * pipeline (or running it shard-by-shard at 100 TB) reproduces the
@@ -281,12 +315,12 @@ class CurationOps(val cfg: GraftConfig) {
   def q75Sample(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
       .filter(substring(md5(concat(col("source"), lit(":"), col("doc_id").cast("string"))), 1, 4)
-        < cfg.sampleHexUpper)
+        < SampleHexUpper)
       .select("doc_id", "lang", "source", "n_chars")
 
   def q75Sql: String =
     s"""SELECT doc_id, lang, source, n_chars FROM documents
-       |WHERE substr(md5(source || ':' || doc_id::VARCHAR), 1, 4) < '${cfg.sampleHexUpper}'""".stripMargin
+       |WHERE substr(md5(source || ':' || doc_id::VARCHAR), 1, 4) < '${SampleHexUpper}'""".stripMargin
 
   def q71Sql: String =
     s"""WITH pairs AS (
@@ -342,7 +376,7 @@ class CurationOps(val cfg: GraftConfig) {
        |FROM dp LEFT JOIN lm l USING (w1, w2) GROUP BY doc_id""".stripMargin
 
   /** q81: deterministic STRATIFIED sampling — at most
-    * ${cfg.stratifiedCap} docs per language, chosen by md5 order (the
+    * ${StratifiedCap} docs per language, chosen by md5 order (the
     * per-stratum twin of q75's global md5-bucket sample; every engine
     * ranks the same docs the same way, no RNG). The rank≤k filter over
     * a per-stratum window is Spark 4's WindowGroupLimit shape: the
@@ -355,7 +389,7 @@ class CurationOps(val cfg: GraftConfig) {
     Tables.documents(spark, dir)
       .select(col("doc_id"), col("lang"), md5(col("doc_id").cast("string")).as("h"))
       .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= cfg.stratifiedCap)
+      .filter(col("rk") <= StratifiedCap)
       .select(col("doc_id"), col("lang"), col("rk").cast("long").as("rk"))
   }
 
@@ -363,10 +397,10 @@ class CurationOps(val cfg: GraftConfig) {
     s"""SELECT doc_id, lang,
        |  CAST(row_number() OVER (PARTITION BY lang ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS BIGINT) AS rk
        |FROM documents
-       |QUALIFY rk <= ${cfg.stratifiedCap}""".stripMargin
+       |QUALIFY rk <= ${StratifiedCap}""".stripMargin
 
   /** q83: deterministic sequence PACKING — assign every doc to a packed
-    * training bin of ≤ ~${cfg.packCtxTokens} tokens: docs are sharded by
+    * training bin of ≤ ~${PackCtxTokens} tokens: docs are sharded by
     * an md5-hex prefix of the q75 content key, ordered within the shard
     * by the full hash, and a running token cumsum divides into
     * fixed-budget bins (the batch-construction step of an LM data
@@ -374,7 +408,7 @@ class CurationOps(val cfg: GraftConfig) {
     *
     * Scale shape: ONE window per shard (never a global window — an
     * unsharded cumsum funnels the corpus into a single task), shard
-    * count from cfg.packShardHexLen so it grows with the corpus, and
+    * count from PackShardHexLen so it grows with the corpus, and
     * membership is content-stable: like q75/q68, re-runs and
     * shard-by-shard runs reproduce identical bins — no RNG, no
     * row-order dependence. */
@@ -386,10 +420,10 @@ class CurationOps(val cfg: GraftConfig) {
       .select(col("doc_id"),
         md5(concat(col("source"), lit(":"), col("doc_id").cast("string"))).as("h"),
         size(split(col("text"), " ")).cast("long").as("n_toks"))
-      .withColumn("shard", substring(col("h"), 1, cfg.packShardHexLen))
+      .withColumn("shard", substring(col("h"), 1, PackShardHexLen))
       .withColumn("cum_before", coalesce(sum(col("n_toks")).over(w), lit(0L)))
       .select(col("doc_id"), col("shard"), col("n_toks"),
-        expr(s"cum_before div ${cfg.packCtxTokens}").as("bin_id"))
+        expr(s"cum_before div ${PackCtxTokens}").as("bin_id"))
   }
 
   def q83Sql: String =
@@ -397,11 +431,11 @@ class CurationOps(val cfg: GraftConfig) {
        |  SELECT doc_id, md5(source || ':' || CAST(doc_id AS VARCHAR)) AS h,
        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_toks
        |  FROM documents)
-       |SELECT doc_id, substr(h, 1, ${cfg.packShardHexLen}) AS shard, n_toks,
+       |SELECT doc_id, substr(h, 1, ${PackShardHexLen}) AS shard, n_toks,
        |  CAST(COALESCE(SUM(n_toks) OVER (
-       |    PARTITION BY substr(h, 1, ${cfg.packShardHexLen})
+       |    PARTITION BY substr(h, 1, ${PackShardHexLen})
        |    ORDER BY h, doc_id
-       |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) // ${cfg.packCtxTokens} AS BIGINT) AS bin_id
+       |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) // ${PackCtxTokens} AS BIGINT) AS bin_id
        |FROM t""".stripMargin
 
   /** q84: stopword SCRUB — the normalization pass a dedup/fingerprint
@@ -412,8 +446,8 @@ class CurationOps(val cfg: GraftConfig) {
     * the removed words via the same filter-on-split the q78 featurizer
     * uses, so the count and the regex agree on what a stopword is. */
   def q84StopwordScrub(spark: SparkSession, dir: String): DataFrame = {
-    val stopList = cfg.stopwords.map(w => s"'$w'").mkString("(", ", ", ")")
-    val pat = cfg.stopwords.mkString("\\b(?:", "|", ")\\b")
+    val stopList = GraftConfig.stopwords.map(w => s"'$w'").mkString("(", ", ", ")")
+    val pat = GraftConfig.stopwords.mkString("\\b(?:", "|", ")\\b")
     Tables.documents(spark, dir)
       .select(col("doc_id"),
         size(expr(s"filter(split(text, ' '), w -> w IN $stopList)")).cast("long").as("n_stop"),
@@ -424,8 +458,8 @@ class CurationOps(val cfg: GraftConfig) {
   }
 
   def q84Sql: String = {
-    val stopList = cfg.stopwords.map(w => s"'$w'").mkString("(", ", ", ")")
-    val pat = cfg.stopwords.mkString("\\b(?:", "|", ")\\b")
+    val stopList = GraftConfig.stopwords.map(w => s"'$w'").mkString("(", ", ", ")")
+    val pat = GraftConfig.stopwords.mkString("\\b(?:", "|", ")\\b")
     s"""SELECT doc_id,
        |  CAST(len(list_filter(string_split(text, ' '), w -> w IN $stopList)) AS BIGINT) AS n_stop,
        |  CAST(len(trim(regexp_replace(regexp_replace(text, '$pat', '', 'g'), ' +', ' ', 'g'))) AS BIGINT) AS scrub_chars,
@@ -538,7 +572,7 @@ class CurationOps(val cfg: GraftConfig) {
     * take bin = #cutpoints strictly below their length via one
     * broadcast array — a pure scan. */
   def q105LengthBins(spark: SparkSession, dir: String): DataFrame = {
-    val pcts = cfg.lengthBinPcts
+    val pcts = LengthBinPcts
     val docs = Tables.documents(spark, dir)
     val hist = docs.groupBy("n_chars").agg(count(lit(1)).as("cnt"))
     val csum = hist.as("a").join(broadcast(hist.as("b")),
@@ -555,7 +589,7 @@ class CurationOps(val cfg: GraftConfig) {
   }
 
   def q105Sql: String = {
-    val pcts = cfg.lengthBinPcts
+    val pcts = LengthBinPcts
     val cutCols = pcts.map(p =>
       s"max(CASE WHEN rn = (n * $p + 99) // 100 THEN n_chars END) AS c$p")
       .mkString(",\n|    ")
@@ -892,7 +926,7 @@ class CurationOps(val cfg: GraftConfig) {
   /** q180: PACKING EFFICIENCY eval — q83's companion number (the
     * approximation-ships-with-its-eval rule): per (shard, bin), the
     * doc count, token total, and fill fraction against the
-    * ${cfg.packCtxTokens}-token context budget. Prefix-sum packing
+    * ${PackCtxTokens}-token context budget. Prefix-sum packing
     * assigns a doc to the bin its RUNNING total starts in, so interior
     * bins fill to ≈ 1 (straddling docs push the excess forward) and
     * each shard's LAST bin holds the remainder — the fill histogram is
@@ -904,13 +938,13 @@ class CurationOps(val cfg: GraftConfig) {
       .groupBy("shard", "bin_id")
       .agg(count(lit(1)).as("n_docs"), sum(col("n_toks")).as("tok_sum"))
       .withColumn("fill",
-        col("tok_sum").cast("double") / lit(cfg.packCtxTokens.toDouble))
+        col("tok_sum").cast("double") / lit(PackCtxTokens.toDouble))
 
   def q180Sql: String =
     s"""WITH p AS ($q83Sql)
        |SELECT shard, bin_id, count(*) AS n_docs,
        |  CAST(SUM(n_toks) AS BIGINT) AS tok_sum,
-       |  CAST(CAST(SUM(n_toks) AS BIGINT) AS DOUBLE) / ${cfg.packCtxTokens}.0 AS fill
+       |  CAST(CAST(SUM(n_toks) AS BIGINT) AS DOUBLE) / ${PackCtxTokens}.0 AS fill
        |FROM p GROUP BY 1, 2""".stripMargin
 
   /** q176: the CURATION PIPELINE end-to-end — the LLM-side composition
@@ -1151,7 +1185,7 @@ class CurationOps(val cfg: GraftConfig) {
     * today's shard sketches — bounded rows — and never re-bins the
     * corpus. Per-bucket χ² uses q163's exact fixed double chain over
     * integer counts; `drifted` flags buckets past
-    * ${cfg.chi2DriftThreshold} (1-df p<0.01), and the spec pins that
+    * ${Chi2DriftThreshold} (1-df p<0.01), and the spec pins that
     * the sketch path and q163's exact linear-bin path agree on the
     * corpus-level verdict (no drift under the unbiased md5 split). */
   def q214SketchSplitDrift(spark: SparkSession, dir: String): DataFrame = {
@@ -1185,12 +1219,12 @@ class CurationOps(val cfg: GraftConfig) {
         // only when BOTH expected counts reach 5 — the 1-df cut is
         // meaningless on a 3-count bucket (log-linear buckets are much
         // finer than q163's linear bins, so sparse tails are routine)
-        (col("chi2_bin") > lit(cfg.chi2DriftThreshold) &&
+        (col("chi2_bin") > lit(Chi2DriftThreshold) &&
           col("e_train") >= lit(5.0) && col("e_other") >= lit(5.0)).as("drifted"))
   }
 
   def q214Sql: String = {
-    val k = cfg.quantileSketchBits
+    val k = GraftConfig.quantileSketchBits
     s"""WITH vals AS (SELECT doc_id,
        |    CASE WHEN substr(md5(doc_id::VARCHAR), 1, 2) < '${cfg.splitTrainUpper}'
        |      THEN 'train' ELSE 'other' END AS cls,
@@ -1218,7 +1252,7 @@ class CurationOps(val cfg: GraftConfig) {
        |  ((CAST(n_train AS DOUBLE) - e_train) * (CAST(n_train AS DOUBLE) - e_train)
        |    / e_train +
        |  (CAST(n_other AS DOUBLE) - e_other) * (CAST(n_other AS DOUBLE) - e_other)
-       |    / e_other > ${cfg.chi2DriftThreshold}
+       |    / e_other > ${Chi2DriftThreshold}
        |   AND e_train >= 5.0 AND e_other >= 5.0) AS drifted
        |FROM (SELECT lo, hi, n_train, n_other,
        |    (CAST(n_train AS DOUBLE) + CAST(n_other AS DOUBLE)) * CAST(nt AS DOUBLE)
@@ -1233,7 +1267,7 @@ class CurationOps(val cfg: GraftConfig) {
     * engine-portable reduction of a CCNet-style perplexity gate: each
     * adjacent word pair scores its add-1-smoothed corpus bigram
     * probability p = (c(w1,w2)+1)/(c(w1)+V) in fixed point
-    * (floor((c12+1)·SCALE / (c1+V)) with SCALE = ${cfg.lmScoreScale}),
+    * (floor((c12+1)·SCALE / (c1+V)) with SCALE = ${LmScoreScale}),
     * and a doc's score is the floor-mean over its pairs. All BIGINT —
     * a log-based perplexity would diverge between libm and the JVM in
     * final ulps; the fixed-point mean ranks docs identically for the
@@ -1249,7 +1283,7 @@ class CurationOps(val cfg: GraftConfig) {
     * Docs with fewer than two tokens have no pairs and are absent —
     * a fluency score over zero evidence is undefined, not zero. */
   def q154LmScore(spark: SparkSession, dir: String): DataFrame = {
-    val S = cfg.lmScoreScale
+    val S = LmScoreScale
     val toks = Tables.documents(spark, dir)
       .select(explode(split(col("text"), " ")).as("w"))
     val uni = toks.groupBy("w").agg(count(lit(1)).as("c1"))
@@ -1279,13 +1313,13 @@ class CurationOps(val cfg: GraftConfig) {
        |v AS (SELECT CAST(count(DISTINCT w) AS BIGINT) AS v FROM toks),
        |bi AS (SELECT w1, w2, CAST(count(*) AS BIGINT) AS c12 FROM dp GROUP BY 1, 2)
        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-       |  CAST(SUM((c12 + 1) * ${cfg.lmScoreScale} // (c1 + v)) // count(*) AS BIGINT)
+       |  CAST(SUM((c12 + 1) * ${LmScoreScale} // (c1 + v)) // count(*) AS BIGINT)
        |    AS lm_score_micro
        |FROM dp JOIN bi USING (w1, w2) JOIN uni USING (w1) CROSS JOIN v
        |GROUP BY doc_id""".stripMargin
-  /** q237: GREEDY COVERAGE SELECTION — pick ${cfg.coverageRounds}
+  /** q237: GREEDY COVERAGE SELECTION — pick ${CoverageRounds}
     * documents that together maximize coverage of the top-
-    * ${cfg.coverageVocab} bigram vocabulary, the classic (1−1/e)-
+    * ${CoverageVocab} bigram vocabulary, the classic (1−1/e)-
     * approximate set-cover greedy: each round selects the document with
     * the most not-yet-covered vocabulary bigrams (ties → doc_id asc;
     * already-selected docs excluded; rounds stop when no positive gain
@@ -1313,13 +1347,13 @@ class CurationOps(val cfg: GraftConfig) {
     val vocab = docBigrams(spark, dir)
       .select(concat(col("w1"), lit(" "), col("w2")).as("bg"))
       .groupBy("bg").agg(count(lit(1)).as("n"))
-      .orderBy(col("n").desc, col("bg")).limit(cfg.coverageVocab)
+      .orderBy(col("n").desc, col("bg")).limit(CoverageVocab)
       .select("bg").collect().map(_.getString(0)).toSet
     var covered = Set.empty[String]
     var chosen = Set.empty[Long]
     val out = Vector.newBuilder[(Long, Long, Long, Long)]
     var done = false
-    for (r <- 1 to cfg.coverageRounds if !done) {
+    for (r <- 1 to CoverageRounds if !done) {
       val unc = broadcast((vocab -- covered).toSeq.toDF("bg"))
       val cand0 = dv.join(unc, "bg")
       val cand = if (chosen.isEmpty) cand0
@@ -1348,8 +1382,8 @@ class CurationOps(val cfg: GraftConfig) {
          |  WHERE len(ws) >= 2),
          |dv AS (SELECT DISTINCT doc_id, bg FROM dp),
          |vocab AS (SELECT bg FROM (SELECT bg, count(*) AS n FROM dp
-         |  GROUP BY 1 ORDER BY n DESC, bg LIMIT ${cfg.coverageVocab}))""".stripMargin
-    val rounds = (1 to cfg.coverageRounds).map { r =>
+         |  GROUP BY 1 ORDER BY n DESC, bg LIMIT ${CoverageVocab}))""".stripMargin
+    val rounds = (1 to CoverageRounds).map { r =>
       val notCovered = if (r == 1) ""
         else s"WHERE dv.bg NOT IN (SELECT bg FROM c${r - 1})"
       val notChosen = (1 until r)
@@ -1363,7 +1397,7 @@ class CurationOps(val cfg: GraftConfig) {
          |c$r AS ($cPrev
          |  SELECT DISTINCT dv.bg FROM dv JOIN s$r USING (doc_id) JOIN vocab USING (bg))""".stripMargin
     }.mkString
-    val sel = (1 to cfg.coverageRounds).map { r =>
+    val sel = (1 to CoverageRounds).map { r =>
       s"""SELECT CAST($r AS BIGINT) AS round, doc_id, gain,
          |  (SELECT CAST(count(*) AS BIGINT) FROM c$r) AS covered_total FROM s$r""".stripMargin
     }.mkString("\n", "\nUNION ALL\n", "")
@@ -1386,7 +1420,7 @@ class CurationOps(val cfg: GraftConfig) {
     *
     * Scale: the offset column is ONE per-shard window prefix-sum
     * (q83's rule: never a global cumsum) and blobs assemble per shard
-    * with shard count growing with the corpus (packShardHexLen) —
+    * with shard count growing with the corpus (PackShardHexLen) —
     * shard blob size is the bounded unit a loader maps anyway. */
   /** q267: TOKEN-BUDGET RECIPE SELECTION — build a training mixture to
     * a budget specified in TOKENS (how data recipes are actually
@@ -1444,7 +1478,7 @@ class CurationOps(val cfg: GraftConfig) {
       .select(col("doc_id"), col("text"),
         md5(concat(col("source"), lit(":"), col("doc_id").cast("string"))).as("h"),
         expr("CAST(octet_length(text) AS BIGINT)").as("len"))
-      .withColumn("shard", substring(col("h"), 1, cfg.packShardHexLen))
+      .withColumn("shard", substring(col("h"), 1, PackShardHexLen))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("shard").orderBy(col("h"), col("doc_id"))
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
@@ -1465,7 +1499,7 @@ class CurationOps(val cfg: GraftConfig) {
        |    md5(source || ':' || CAST(doc_id AS VARCHAR)) AS h,
        |    CAST(strlen(text) AS BIGINT) AS l
        |  FROM documents),
-       |s AS (SELECT *, substr(h, 1, ${cfg.packShardHexLen}) AS shard FROM t),
+       |s AS (SELECT *, substr(h, 1, ${PackShardHexLen}) AS shard FROM t),
        |man AS (SELECT doc_id, shard, text, l, h,
        |    CAST(COALESCE(SUM(l + 1) OVER (PARTITION BY shard ORDER BY h, doc_id
        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS "offset"
@@ -1477,7 +1511,7 @@ class CurationOps(val cfg: GraftConfig) {
        |    = hex(encode(m.text)) AS ok
        |FROM man m JOIN blobs b USING (shard)""".stripMargin
 
-  /** q240: DETERMINISTIC NEGATIVE SAMPLING — ${cfg.negSlots} hash-drawn
+  /** q240: DETERMINISTIC NEGATIVE SAMPLING — ${GraftConfig.negSlots} hash-drawn
     * negative documents per query document, the contrastive-pair
     * builder behind retrieval/embedding training data: negatives must
     * be (a) reproducible run to run (a random() sample re-labels the
@@ -1503,7 +1537,7 @@ class CurationOps(val cfg: GraftConfig) {
         array_join(slice(split(col("text"), " "), 1, cfg.dedupKeyWords), " ").as("ckey"))
     val maxId = docs.agg(max(col("doc_id")).as("mx"))
     val cand = docs.crossJoin(broadcast(maxId))
-      .withColumn("slot", explode(sequence(lit(1L), lit(cfg.negSlots.toLong))))
+      .withColumn("slot", explode(sequence(lit(1L), lit(GraftConfig.negSlots.toLong))))
       .withColumn("neg_id",
         conv(substring(md5(concat(col("doc_id").cast("string"), lit(":"),
           col("slot").cast("string"))), 1, 8), 16, 10).cast("long") % (col("mx") + 1L))
@@ -1525,7 +1559,7 @@ class CurationOps(val cfg: GraftConfig) {
        |      % (mx.mx + 1) AS neg_id,
        |    d.ckey AS qkey
        |  FROM d, mx,
-       |    LATERAL (SELECT unnest(generate_series(1, ${cfg.negSlots})) AS slot) s)
+       |    LATERAL (SELECT unnest(generate_series(1, ${GraftConfig.negSlots})) AS slot) s)
        |SELECT c.query_id, c.slot, c.neg_id
        |FROM cand c JOIN d n ON n.doc_id = c.neg_id
        |WHERE c.neg_id <> c.query_id AND c.qkey <> n.ckey""".stripMargin
@@ -1535,29 +1569,29 @@ class CurationOps(val cfg: GraftConfig) {
   // ---------------------------------------------------------------
 
   /** Per-doc token stream with the hashed feature bucket — the DSIR
-    * feature map: word unigrams hashed by md5 into ${cfg.dsirBuckets}
+    * feature map: word unigrams hashed by md5 into ${DsirBuckets}
     * buckets (md5 hex is identical cross-engine, the q129/q240
     * uniform discipline). */
   private def dsirTokens(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
       .select(col("doc_id"), col("lang"), explode(split(col("text"), " ")).as("w"))
       .withColumn("b",
-        conv(substring(md5(col("w")), 1, 8), 16, 10).cast("long") % cfg.dsirBuckets)
+        conv(substring(md5(col("w")), 1, 8), 16, 10).cast("long") % DsirBuckets)
 
   private def dsirTokensSql: String =
     s"""tok AS (SELECT doc_id, lang, unnest(string_split(text, ' ')) AS w FROM documents),
        |tb AS (SELECT doc_id, lang,
-       |    CAST('0x' || substr(md5(w), 1, 8) AS BIGINT) % ${cfg.dsirBuckets} AS b
+       |    CAST('0x' || substr(md5(w), 1, 8) AS BIGINT) % ${DsirBuckets} AS b
        |  FROM tok)""".stripMargin
 
   /** The q320 weight chain as shared oracle CTEs, ending at
     * `ds(doc_id, n_toks, dsir_sum_micro, dsir_avg_micro)`. */
   private def dsirWeightCtes: String = {
-    val S = cfg.dsirScale
+    val S = GraftConfig.dsirScale
     s"""$dsirTokensSql,
        |braw AS (SELECT b, CAST(count(*) AS BIGINT) AS cr FROM tb GROUP BY b),
        |btgt AS (SELECT b, CAST(count(*) AS BIGINT) AS ct FROM tb
-       |  WHERE lang = '${cfg.dsirTargetLang}' GROUP BY b),
+       |  WHERE lang = '${DsirTargetLang}' GROUP BY b),
        |br AS (SELECT braw.b, ($S * (coalesce(ct, 0) + 1)) // (cr + 1) AS rm
        |  FROM braw LEFT JOIN btgt USING (b)),
        |ds AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_toks,
@@ -1569,11 +1603,11 @@ class CurationOps(val cfg: GraftConfig) {
   /** q320: DSIR IMPORTANCE WEIGHTS — Data Selection via Importance
     * Resampling's scoring pass (hashed n-gram importance weights,
     * Xie et al. 2023) re-expressed Spark-first: word unigrams hash
-    * into ${cfg.dsirBuckets} buckets, the TARGET distribution is the
-    * '${cfg.dsirTargetLang}'-language slice (the "high-quality
+    * into ${DsirBuckets} buckets, the TARGET distribution is the
+    * '${DsirTargetLang}'-language slice (the "high-quality
     * domain" stand-in), the RAW distribution is the whole corpus, and
     * each doc scores the frequency-weighted sum of per-bucket
-    * add-1-smoothed likelihood RATIOS in ${cfg.dsirScale}-scale
+    * add-1-smoothed likelihood RATIOS in ${GraftConfig.dsirScale}-scale
     * integer fixed point. Deliberate divergence from the paper: the
     * paper sums per-feature LOG ratios; this sums the ratios
     * themselves, because `ln` is not correctly-rounded IEEE and the
@@ -1588,12 +1622,12 @@ class CurationOps(val cfg: GraftConfig) {
     * doc, is dropped for the same reason overflow headroom matters
     * more than an affine constant.
     *
-    * Scale: one explode→groupBy for the ${cfg.dsirBuckets}-row bucket
+    * Scale: one explode→groupBy for the ${DsirBuckets}-row bucket
     * table (map-combinable), broadcast back onto the token stream,
     * per-doc sum — a two-scan pipeline with a broadcast-tiny join, no
     * corpus shuffle beyond the doc_id aggregate. */
   def q320DsirWeights(spark: SparkSession, dir: String): DataFrame = {
-    val S = cfg.dsirScale
+    val S = GraftConfig.dsirScale
     val tok = dsirTokens(spark, dir)
     // raw and target counts in ONE map-combinable pass (a conditional
     // sum, not a second corpus scan); target ⊆ raw per bucket, so
@@ -1601,7 +1635,7 @@ class CurationOps(val cfg: GraftConfig) {
     // per-doc sum by S · n_toks — no overflow path at any corpus size
     val ratio = tok.groupBy("b")
       .agg(count(lit(1)).as("cr"),
-        sum(when(col("lang") === cfg.dsirTargetLang, 1L).otherwise(0L)).as("ct0"))
+        sum(when(col("lang") === DsirTargetLang, 1L).otherwise(0L)).as("ct0"))
       .select(col("b"), expr(s"($S * (ct0 + 1)) div (cr + 1)").as("rm"))
     tok.join(broadcast(ratio), "b")
       .groupBy("doc_id")
@@ -1661,7 +1695,7 @@ class CurationOps(val cfg: GraftConfig) {
     * the CONTINUATION unigram — "how many contexts does w2 complete" —
     * not raw frequency, so boilerplate tokens that always follow the
     * same word stop inflating fluency). Per seen bigram, in exact
-    * ${cfg.dsirScale}-scale integer fixed point (D = 3/4 is exact in
+    * ${GraftConfig.dsirScale}-scale integer fixed point (D = 3/4 is exact in
     * quarters — ×4 scaling, zero floats, the q154/PMI ulp discipline):
     *
     *   p_kn = (4·c12 − 3)·S div (4·c1)  +  3·n1p·cont(w2)·S div (4·c1·N··)
@@ -1676,7 +1710,7 @@ class CurationOps(val cfg: GraftConfig) {
     * aggregate is map-combinable. Integer headroom: 3·n1p·cont·S needs
     * n1p·cont < 3·10¹² — safe through multi-million-word vocabularies. */
   def q323KnBigram(spark: SparkSession, dir: String): DataFrame = {
-    val S = cfg.dsirScale
+    val S = GraftConfig.dsirScale
     val dp = docBigrams(spark, dir)
     val bi = dp.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
     val ctx = bi.groupBy("w1").agg(sum("c12").as("c1"), count(lit(1)).as("n1p"))
@@ -1695,7 +1729,7 @@ class CurationOps(val cfg: GraftConfig) {
   }
 
   def q323Sql: String = {
-    val S = cfg.dsirScale
+    val S = GraftConfig.dsirScale
     s"""WITH dp AS (
        |  SELECT doc_id, ws[g] AS w1, ws[g+1] AS w2
        |  FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
@@ -1737,7 +1771,7 @@ class CurationOps(val cfg: GraftConfig) {
     * one of five copies carries a fifth of its quality mass into the
     * draw, so the recipe cannot fill the budget with a viral family).
     * Per stage: docs in, kept, dropped, and the EFFECTIVE token mass
-    * (Σ n_toks·w in ${GraftConfig.default.dsirScale}-scale micro) —
+    * (Σ n_toks·w in ${GraftConfig.dsirScale}-scale micro) —
     * every number an exact integer, the audit a data recipe needs to
     * be reproducible and reviewable before a token is spent on
     * training.
@@ -1750,7 +1784,7 @@ class CurationOps(val cfg: GraftConfig) {
     * re-derivation. */
   def q334SelectionRecipe(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val S = cfg.dsirScale
+    val S = GraftConfig.dsirScale
     val K = cfg.dsirSampleK
     // the scrub and soft-dedup stages run under THIS instance's cfg
     // (not the default companion's) so a knob-tuned CurationOps
@@ -1795,7 +1829,7 @@ class CurationOps(val cfg: GraftConfig) {
     * (quote verdicts, soft-dedup weights via the recursive family
     * closure, DSIR weights) — the same audit arithmetic end to end. */
   def q334Sql: String = {
-    val S = cfg.dsirScale
+    val S = GraftConfig.dsirScale
     s"""WITH RECURSIVE
        |${recipeDedup.quoteFlagCtes},
        |${recipeDedup.softDedupWeightCtes},

@@ -30,13 +30,46 @@ class DedupOps(val cfg: GraftConfig) {
     * semantics, and losing one recomputes a non-iterative subtree. */
   private def stageCk(df: DataFrame): DataFrame = graft.Ck.stage(df, cfg)
 
-  val ShingleK: Int = cfg.shingleK
-  val MinhashJ: Double = cfg.minhashJaccard
-  val JaccardJ: Double = cfg.jaccardThreshold
-  val RareDf: Int = cfg.rareDf
+  // dedup family
+  val ShingleK: Int = 5
+  val JaccardJ: Double = 0.35
+  val RareDf: Int = 20
+  val SignBands: Int = 8
+  val SignBandBits: Int = 8
+  // complete prefix-filtered similarity join (q131) + LSH eval (q132):
+  // the Jaccard threshold as an integer fraction tNum/tDen so the
+  // accept test is an exact cross-multiply. MinhashJ derives from the
+  // pair, so q132's recall measures q31's configuration (3.0/5 is the
+  // same double as 0.6)
+  val SimJoinTNum: Int = 3
+  val SimJoinTDen: Int = 5
+  val MinhashJ: Double = SimJoinTNum.toDouble / SimJoinTDen
+  // q131's similarity unit: word n-gram width. Tokens, not char
+  // shingles — prefix filtering is only as good as its rarest units,
+  // and char-5 grams over a small vocabulary are shared by everything
+  // (measured: median df 291 and 6.5M candidates for 256 true pairs
+  // at sf0.1, vs median df 1 and candidates == truth with word grams)
+  val SimJoinWords: Int = 5
+  // simhash hamming pairing: 16 fingerprint bits split into bands ×
+  // bits; pigeonhole-sound for hamming ≤ bands − 1
+  val SimhashBands: Int = 4
+  val SimhashBandBits: Int = 4
+  val SimhashMaxHamming: Int = 3
+  // persisted-family split (q204): the arriving delta batch is the
+  // doc_id % mod == rem slice of the corpus (deterministic stand-in
+  // for today's crawl)
+  val DeltaBatchMod: Long = 20L
+  val DeltaBatchRem: Long = 3L
+  // q200 dedup threshold curve: swept Jaccard percents — must all be
+  // ≥ the q131 base threshold (SimJoinTNum/SimJoinTDen), whose pair table
+  // the sweep reads
+  val DedupCurvePcts: Seq[Int] = Seq(60, 65, 70, 75, 80, 85, 90, 95)
+  // q324 (containment join): directional threshold |A∩B|/|A| ≥
+  // ContTNum/ContTDen — higher than the symmetric q131 threshold
+  // because containment flags near-complete quotes, not near-dups
+  val ContTNum: Int = 9
+  val ContTDen: Int = 10
   val NearDupCos: Double = cfg.nearDupCos
-  val SignBands: Int = cfg.signBands
-  val SignBandBits: Int = cfg.signBandBits
 
   /** Per-doc DISTINCT shingle array, computed entirely inside the row
     * by the native codegen'd shingle_set expression
@@ -336,9 +369,9 @@ class DedupOps(val cfg: GraftConfig) {
     // hamming verify happens INSIDE the band join and failed candidates
     // die before the dedup shuffle — no per-doc signature re-join
     val bands = sig.select(col("doc_id"), col("simhash"),
-      posexplode(array((0 until cfg.simhashBands).map(b =>
-        shiftright(col("simhash"), b * cfg.simhashBandBits)
-          .bitwiseAND(lit((1 << cfg.simhashBandBits) - 1))): _*)).as(Seq("b", "bk")))
+      posexplode(array((0 until SimhashBands).map(b =>
+        shiftright(col("simhash"), b * SimhashBandBits)
+          .bitwiseAND(lit((1 << SimhashBandBits) - 1))): _*)).as(Seq("b", "bk")))
     // pin the join parallelism: the band table is tiny in BYTES, so AQE
     // coalesces the self-join to one partition — but with 4-bit band keys
     // the join OUTPUT is bucket-quadratic CPU (measured 5.6 s single-task
@@ -350,20 +383,20 @@ class DedupOps(val cfg: GraftConfig) {
           col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"),
         bit_count(col("x.simhash").bitwiseXOR(col("y.simhash"))).cast("long").as("hamming"))
-      .filter(col("hamming") <= cfg.simhashMaxHamming)
+      .filter(col("hamming") <= SimhashMaxHamming)
       .distinct()
   }
 
   def q58Sql: String =
     s"""WITH sig AS (${q32Sql}),
        |bands AS (SELECT doc_id, b,
-       |    (simhash >> (b * ${cfg.simhashBandBits})) & ${(1 << cfg.simhashBandBits) - 1} AS bk
-       |  FROM sig, LATERAL (SELECT unnest(generate_series(0, ${cfg.simhashBands - 1})) AS b) t),
+       |    (simhash >> (b * ${SimhashBandBits})) & ${(1 << SimhashBandBits) - 1} AS bk
+       |  FROM sig, LATERAL (SELECT unnest(generate_series(0, ${SimhashBands - 1})) AS b) t),
        |cand AS (SELECT DISTINCT x.doc_id AS id_a, y.doc_id AS id_b
        |  FROM bands x JOIN bands y ON x.b = y.b AND x.bk = y.bk AND x.doc_id < y.doc_id)
        |SELECT id_a, id_b, CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
        |FROM cand JOIN sig a ON a.doc_id = id_a JOIN sig b ON b.doc_id = id_b
-       |WHERE bit_count(xor(a.simhash, b.simhash)) <= ${cfg.simhashMaxHamming}""".stripMargin
+       |WHERE bit_count(xor(a.simhash, b.simhash)) <= ${SimhashMaxHamming}""".stripMargin
 
   /** Near-dup pair edges from BOTH text-space generators in one pass:
     * MinHash-LSH band candidates (verified at ≥ $MinhashJ) ∪ rare-shingle
@@ -529,7 +562,7 @@ class DedupOps(val cfg: GraftConfig) {
     * state — the q249 motivation applied to the dedup artifact): the
     * near-dup pair table and the family labels persist as content-keyed
     * nightly artifacts; retracting the deterministic md5 band ≥
-    * ${cfg.docRetractLower} removes those docs and their incident
+    * ${GraftConfig.docRetractLower} removes those docs and their incident
     * pairs from the ARTIFACT (a retracted doc's influence on other
     * pairs' corpus statistics — rare-shingle df — dissipates at the
     * next full rebuild, the same deliberate measured debt q285 ships).
@@ -557,7 +590,7 @@ class DedupOps(val cfg: GraftConfig) {
     * labels(doc_id, lbl)). */
   private[graft] def persistedFamilyArtifacts(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
     graft.GraftSession.ensureCheckpointDir(spark)
-    val ckey = s"k=${cfg.shingleK},rdf=$RareDf,mh=$MinhashJ,j=$JaccardJ"
+    val ckey = s"k=${ShingleK},rdf=$RareDf,mh=$MinhashJ,j=$JaccardJ"
     val pairs = Artifact.getOrBuild(spark, "ndpairs_full", dir, Seq("documents.parquet"),
         ckey) { p =>
       val (edges, arr) = nearDupEdgesScratch(spark, dir)
@@ -575,8 +608,8 @@ class DedupOps(val cfg: GraftConfig) {
     val (pairs, storedLbl) = persistedFamilyArtifacts(spark, dir)
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("n_chars"))
       .withColumn("b", substring(md5(col("doc_id").cast("string")), 1, 2))
-    val surviving = docs.filter(col("b") < cfg.docRetractLower).drop("b")
-    val retracted = docs.filter(col("b") >= cfg.docRetractLower).select("doc_id")
+    val surviving = docs.filter(col("b") < GraftConfig.docRetractLower).drop("b")
+    val retracted = docs.filter(col("b") >= GraftConfig.docRetractLower).select("doc_id")
     // touched families: the stored label of every retracted doc
     // (absent from the label table = a singleton — its removal leaves
     // no surviving member to relabel)
@@ -617,7 +650,7 @@ class DedupOps(val cfg: GraftConfig) {
     s"""WITH RECURSIVE
        |$nearDupEdgesSql,
        |surv AS MATERIALIZED (SELECT doc_id, n_chars FROM documents
-       |  WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < '${cfg.docRetractLower}'),
+       |  WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < '${GraftConfig.docRetractLower}'),
        |spairs AS MATERIALIZED (SELECT p.id_a, p.id_b FROM pairs p
        |  JOIN surv sa ON sa.doc_id = p.id_a
        |  JOIN surv sb ON sb.doc_id = p.id_b),
@@ -646,7 +679,7 @@ class DedupOps(val cfg: GraftConfig) {
     * hard choice of which copy). Per doc: the q57 family label (from
     * the persisted [[persistedFamilyArtifacts]] label table —
     * build-if-absent, shared with q296), the family size, the weight
-    * 1/family_size in ${cfg.dsirScale}-scale integer fixed point
+    * 1/family_size in ${GraftConfig.dsirScale}-scale integer fixed point
     * (div-truncated — exact cross-engine, the q320 discipline), and
     * the doc's EFFECTIVE chars n_chars·w — what a token-budget
     * planner (q267) should count this doc as. A singleton keeps
@@ -656,7 +689,7 @@ class DedupOps(val cfg: GraftConfig) {
     * join — no pair or shingle work at serve time; the heavy lifting
     * lives in the nightly artifact exactly like q296/q204. */
   def q322SoftDedup(spark: SparkSession, dir: String): DataFrame = {
-    val S = cfg.dsirScale
+    val S = GraftConfig.dsirScale
     val (_, storedLbl) = persistedFamilyArtifacts(spark, dir)
     val docs = Tables.documents(spark, dir).select("doc_id", "n_chars")
     val fam = docs.join(storedLbl, Seq("doc_id"), "left")
@@ -683,8 +716,8 @@ class DedupOps(val cfg: GraftConfig) {
        |fsz AS (SELECT family_id, CAST(count(*) AS BIGINT) AS family_size
        |  FROM fam GROUP BY family_id)
        |SELECT f.doc_id, f.family_id, s.family_size,
-       |  ${cfg.dsirScale} // s.family_size AS w_micro,
-       |  f.n_chars * (${cfg.dsirScale} // s.family_size) AS eff_chars_micro
+       |  ${GraftConfig.dsirScale} // s.family_size AS w_micro,
+       |  f.n_chars * (${GraftConfig.dsirScale} // s.family_size) AS eff_chars_micro
        |FROM fam f JOIN fsz s USING (family_id)""".stripMargin
 
   /** q197: FAMILY-CONSISTENT train/val/test split — the leakage-proof
@@ -705,7 +738,7 @@ class DedupOps(val cfg: GraftConfig) {
     def splitOf(c: Column): Column = {
       val b = substring(md5(c.cast("string")), 1, 2)
       when(b < cfg.splitTrainUpper, "train")
-        .when(b < cfg.splitValUpper, "val").otherwise("test")
+        .when(b < GraftConfig.splitValUpper, "val").otherwise("test")
     }
     q57DedupFamilies(spark, dir)
       .select(col("doc_id"), col("family_id"))
@@ -717,7 +750,7 @@ class DedupOps(val cfg: GraftConfig) {
   def q197Sql: String = {
     def splitOf(c: String): String =
       s"""CASE WHEN substr(md5($c::VARCHAR), 1, 2) < '${cfg.splitTrainUpper}' THEN 'train'
-         |  WHEN substr(md5($c::VARCHAR), 1, 2) < '${cfg.splitValUpper}' THEN 'val'
+         |  WHEN substr(md5($c::VARCHAR), 1, 2) < '${GraftConfig.splitValUpper}' THEN 'val'
          |  ELSE 'test' END""".stripMargin
     s"""WITH RECURSIVE
        |$nearDupEdgesSql,
@@ -755,7 +788,7 @@ class DedupOps(val cfg: GraftConfig) {
     def splitOf(c: Column): Column = {
       val b = substring(md5(c.cast("string")), 1, 2)
       when(b < cfg.splitTrainUpper, "train")
-        .when(b < cfg.splitValUpper, "val").otherwise("test")
+        .when(b < GraftConfig.splitValUpper, "val").otherwise("test")
     }
     val fams = q57DedupFamilies(spark, dir).select("doc_id", "family_id")
     // the warehouse LOCATION outlives the session-local metastore (the
@@ -769,7 +802,7 @@ class DedupOps(val cfg: GraftConfig) {
     val famT = spark.table("graft_q204_families")
       .select(col("doc_id").as("f_doc"), col("family_id"))
     val delta = Tables.documents(spark, dir)
-      .filter(col("doc_id") % cfg.deltaBatchMod === cfg.deltaBatchRem)
+      .filter(col("doc_id") % DeltaBatchMod === DeltaBatchRem)
       .select("doc_id")
     famT.hint("merge")
       .join(delta, col("f_doc") === col("doc_id"), "right_outer")
@@ -783,7 +816,7 @@ class DedupOps(val cfg: GraftConfig) {
   def q204Sql: String = {
     def splitOf(c: String): String =
       s"""CASE WHEN substr(md5($c::VARCHAR), 1, 2) < '${cfg.splitTrainUpper}' THEN 'train'
-         |  WHEN substr(md5($c::VARCHAR), 1, 2) < '${cfg.splitValUpper}' THEN 'val'
+         |  WHEN substr(md5($c::VARCHAR), 1, 2) < '${GraftConfig.splitValUpper}' THEN 'val'
          |  ELSE 'test' END""".stripMargin
     s"""WITH RECURSIVE
        |$nearDupEdgesSql,
@@ -793,7 +826,7 @@ class DedupOps(val cfg: GraftConfig) {
        |  UNION SELECT r.u, e.v FROM reach r JOIN und e ON r.v = e.u AND e.v <> r.u),
        |lbl AS (SELECT u AS doc_id, least(u, min(v)) AS family_id FROM reach GROUP BY u),
        |delta AS (SELECT doc_id FROM documents
-       |  WHERE doc_id % ${cfg.deltaBatchMod} = ${cfg.deltaBatchRem}),
+       |  WHERE doc_id % ${DeltaBatchMod} = ${DeltaBatchRem}),
        |fam AS (SELECT d.doc_id, coalesce(l.family_id, d.doc_id) AS family_id
        |  FROM delta d LEFT JOIN lbl l USING (doc_id))
        |SELECT doc_id, family_id,
@@ -825,26 +858,23 @@ class DedupOps(val cfg: GraftConfig) {
        |WHERE CAST(dot AS DOUBLE)/(sqrt(CAST(na AS DOUBLE))*sqrt(CAST(nb AS DOUBLE))) >= $NearDupCos""".stripMargin
   }
 
-  private val TNum: Int = cfg.simJoinTNum
-  private val TDen: Int = cfg.simJoinTDen
-  private val SimW: Int = cfg.simJoinWords
 
-  /** Distinct word $SimW-grams per doc, one row per (doc, gram) — the
+  /** Distinct word $SimJoinWords-grams per doc, one row per (doc, gram) — the
     * TOKEN-level similarity unit of the PPJoin literature, and the
     * measured reason q131 uses words, not the char shingles of
     * q30-q33: char-$ShingleK-grams over a small vocabulary are shared
     * by everything (median df ≈ 291 at sf0.1 → 6.5M prefix candidates
     * for 256 true pairs, and the positional filter recovers only 30%),
-    * while word $SimW-grams are near-unique (median df = 1 → candidates
+    * while word $SimJoinWords-grams are near-unique (median df = 1 → candidates
     * EQUAL the true pairs). Discriminative units are what makes prefix
     * filtering effective; hashing can't fix an undiscriminative
     * tokenization. */
   private[graft] def wordGrams(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
       .select(col("doc_id"), split(col("text"), " ").as("ws"))
-      .filter(size(col("ws")) >= SimW)
-      .withColumn("g", explode(sequence(lit(1), size(col("ws")) - (SimW - 1))))
-      .select(col("doc_id"), concat_ws(" ", slice(col("ws"), col("g"), lit(SimW))).as("s"))
+      .filter(size(col("ws")) >= SimJoinWords)
+      .withColumn("g", explode(sequence(lit(1), size(col("ws")) - (SimJoinWords - 1))))
+      .select(col("doc_id"), concat_ws(" ", slice(col("ws"), col("g"), lit(SimJoinWords))).as("s"))
       .distinct()
 
   /** In-row per-doc distinct word-gram ARRAY (the verification view of
@@ -864,21 +894,21 @@ class DedupOps(val cfg: GraftConfig) {
       base.join(broadcast(ids.select("doc_id").distinct()), Seq("doc_id"), "left_semi"))
     pruned
       .select(col("doc_id"), split(col("text"), " ").as("ws"))
-      .filter(size(col("ws")) >= SimW)
+      .filter(size(col("ws")) >= SimJoinWords)
       .select(col("doc_id"), expr(
         s"""array_distinct(transform(
-           |  sequence(1, size(ws) - ${SimW - 1}),
-           |  g -> concat_ws(' ', slice(ws, g, $SimW))))""".stripMargin).as("ss"))
+           |  sequence(1, size(ws) - ${SimJoinWords - 1}),
+           |  g -> concat_ws(' ', slice(ws, g, $SimJoinWords))))""".stripMargin).as("ss"))
   }
 
   private def wordGramsSql: String =
-    s"""SELECT DISTINCT doc_id, array_to_string(ws[g:g+${SimW - 1}], ' ') AS s
+    s"""SELECT DISTINCT doc_id, array_to_string(ws[g:g+${SimJoinWords - 1}], ' ') AS s
        |FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-       |  LATERAL (SELECT unnest(generate_series(1, len(ws)-${SimW - 1})) AS g) t
-       |WHERE len(ws) >= $SimW""".stripMargin
+       |  LATERAL (SELECT unnest(generate_series(1, len(ws)-${SimJoinWords - 1})) AS g) t
+       |WHERE len(ws) >= $SimJoinWords""".stripMargin
 
   /** q131: COMPLETE exact Jaccard similarity self-join at threshold
-    * t = $TNum/$TDen over word-$SimW-gram sets, via df-ordered prefix
+    * t = $SimJoinTNum/$SimJoinTDen over word-$SimJoinWords-gram sets, via df-ordered prefix
     * filtering (the PPJoin family, Xiao et al.) — unlike q31 (LSH,
     * probabilistic recall) and q33 (rare-shingle index, drops pairs
     * with no rare shingle), this finds EVERY pair with J ≥ t: a pair
@@ -889,9 +919,9 @@ class DedupOps(val cfg: GraftConfig) {
     * the index join's per-key fanout small at scale — the frequent
     * grams that would create quadratic buckets are exactly the ones
     * the order pushes out of every prefix. A size filter
-    * ($TNum·max ≤ $TDen·min) prunes incompatible-length pairs inside
+    * ($SimJoinTNum·max ≤ $SimJoinTDen·min) prunes incompatible-length pairs inside
     * the candidate join, and the threshold test is the integer
-    * cross-multiply $TDen·|A∩B| ≥ $TNum·|A∪B| — no float at the
+    * cross-multiply $SimJoinTDen·|A∩B| ≥ $SimJoinTNum·|A∪B| — no float at the
     * decision boundary.
     *
     * Scale: df is a map-combinable aggregate joined back 1:1 (unique
@@ -908,13 +938,13 @@ class DedupOps(val cfg: GraftConfig) {
       .withColumn("rk", row_number().over(
         Window.partitionBy("doc_id").orderBy(col("df"), col("s"))))
       .withColumn("n", count(lit(1)).over(Window.partitionBy("doc_id")))
-    // prefix length: n − ⌈t·n⌉ + 1, integer form ⌈t·n⌉ = (TNum·n + TDen − 1) div TDen
+    // prefix length: n − ⌈t·n⌉ + 1, integer form ⌈t·n⌉ = (SimJoinTNum·n + SimJoinTDen − 1) div SimJoinTDen
     val prefix = ranked
-      .filter(col("rk") <= col("n") - expr(s"(${TNum} * n + ${TDen - 1}) div $TDen") + 1)
+      .filter(col("rk") <= col("n") - expr(s"(${SimJoinTNum} * n + ${SimJoinTDen - 1}) div $SimJoinTDen") + 1)
       .select(col("s"), col("doc_id"), col("n"))
     val cand = prefix.as("x").join(prefix.as("y"),
         col("x.s") === col("y.s") && col("x.doc_id") < col("y.doc_id") &&
-        lit(TNum) * greatest(col("x.n"), col("y.n")) <= lit(TDen) * least(col("x.n"), col("y.n")))
+        lit(SimJoinTNum) * greatest(col("x.n"), col("y.n")) <= lit(SimJoinTDen) * least(col("x.n"), col("y.n")))
       .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"))
       .distinct()
     val docArr = wordGramArrays(spark, dir)
@@ -928,7 +958,7 @@ class DedupOps(val cfg: GraftConfig) {
       // intersection array — the per-candidate constant this verify
       // pays millions of times when LSH buckets degenerate (hero lane)
       .withColumn("i", expr("inter_count(sa, sb)"))
-      .filter(lit(TDen.toLong) * col("i") >= lit(TNum.toLong) * (col("na") + col("nb") - col("i")))
+      .filter(lit(SimJoinTDen.toLong) * col("i") >= lit(SimJoinTNum.toLong) * (col("na") + col("nb") - col("i")))
       .select(col("id_a"), col("id_b"),
         (col("i").cast("double") / (col("na") + col("nb") - col("i"))).as("jaccard"))
   }
@@ -936,7 +966,7 @@ class DedupOps(val cfg: GraftConfig) {
   /** q324: CONTAINMENT JOIN — the DIRECTIONAL sibling of q131's
     * symmetric Jaccard join: find every ordered pair where doc A is
     * (near-)CONTAINED in doc B, c(A→B) = |A∩B|/|A| ≥
-    * ${cfg.contTNum}/${cfg.contTDen} over word-$SimW-gram sets. This
+    * ${ContTNum}/${ContTDen} over word-$SimJoinWords-gram sets. This
     * is the quote/excerpt detector near-dup dedup cannot see: a short
     * doc quoted whole inside a long one has LOW Jaccard (the union is
     * dominated by the container) but containment ≈ 1 — exactly the
@@ -951,10 +981,10 @@ class DedupOps(val cfg: GraftConfig) {
     * just a prefix, which is what makes the join directional. The
     * global order is q131's df-ascending one, so the indexed prefixes
     * hold each doc's RAREST grams and the per-key fanout of the
-    * candidate join stays small; a size filter (${cfg.contTDen}·n_B ≥
-    * ${cfg.contTNum}·n_A — a container can't be shorter than the
+    * candidate join stays small; a size filter (${ContTDen}·n_B ≥
+    * ${ContTNum}·n_A — a container can't be shorter than the
     * quoted mass) prunes inside the join. Verify is the exact integer
-    * cross-multiply ${cfg.contTDen}·|A∩B| ≥ ${cfg.contTNum}·n_A — no
+    * cross-multiply ${ContTDen}·|A∩B| ≥ ${ContTNum}·n_A — no
     * float at the boundary. Completeness is the same theorem as q131
     * (spec-pinned against the naive all-shared-gram join).
     *
@@ -973,10 +1003,8 @@ class DedupOps(val cfg: GraftConfig) {
     * scratch every Verify round, re-proving artifact ≡ recompute. */
   private[graft] def persistedContainmentPairs(spark: SparkSession, dir: String): DataFrame =
     Artifact.getOrBuild(spark, "contain_pairs", dir, Seq("documents.parquet"),
-        s"w=$SimW,t=${cfg.contTNum}/${cfg.contTDen}") { p =>
+        s"w=$SimJoinWords,t=${ContTNum}/${ContTDen}") { p =>
       import org.apache.spark.sql.expressions.Window
-      val CNum = cfg.contTNum
-      val CDen = cfg.contTDen
       val sh = wordGrams(spark, dir)
       val df = sh.groupBy("s").agg(count(lit(1)).as("df"))
       val ranked = sh.join(df, "s")
@@ -984,12 +1012,12 @@ class DedupOps(val cfg: GraftConfig) {
           Window.partitionBy("doc_id").orderBy(col("df"), col("s"))))
         .withColumn("n", count(lit(1)).over(Window.partitionBy("doc_id")))
       val prefix = ranked
-        .filter(col("rk") <= col("n") - expr(s"($CNum * n + ${CDen - 1}) div $CDen") + 1)
+        .filter(col("rk") <= col("n") - expr(s"($ContTNum * n + ${ContTDen - 1}) div $ContTDen") + 1)
         .select(col("s"), col("doc_id").as("src_id"), col("n").as("nsrc"))
       val grams = ranked.select(col("s"), col("doc_id").as("dst_id"), col("n").as("ndst"))
       val cand = prefix.join(grams,
           prefix("s") === grams("s") && col("src_id") =!= col("dst_id") &&
-          lit(CDen) * col("ndst") >= lit(CNum) * col("nsrc"))
+          lit(ContTDen) * col("ndst") >= lit(ContTNum) * col("nsrc"))
         .select("src_id", "dst_id")
         .distinct()
       containmentVerify(spark, dir, cand).write.parquet(p)
@@ -1001,8 +1029,6 @@ class DedupOps(val cfg: GraftConfig) {
   private def containmentVerify(spark: SparkSession, dir: String,
       cand0: DataFrame): DataFrame = {
     graft.plans.GraftExtensions.ensureRegistered(spark)
-    val CNum = cfg.contTNum
-    val CDen = cfg.contTDen
     // stage the candidates once: the endpoint id set below re-reads
     // them, and candidate generation must not run twice
     val cand = graft.Ck.lazyStage(cand0, cfg)
@@ -1019,7 +1045,7 @@ class DedupOps(val cfg: GraftConfig) {
       // intersection array — the per-candidate constant this verify
       // pays millions of times when LSH buckets degenerate (hero lane)
       .withColumn("i", expr("inter_count(sa, sb)"))
-      .filter(lit(CDen.toLong) * col("i") >= lit(CNum.toLong) * col("na"))
+      .filter(lit(ContTDen.toLong) * col("i") >= lit(ContTNum.toLong) * col("na"))
       .select(col("src_id"), col("dst_id"),
         (col("i").cast("double") / col("na")).as("containment"))
   }
@@ -1034,7 +1060,7 @@ class DedupOps(val cfg: GraftConfig) {
        |  GROUP BY 1, 2)
        |SELECT src_id, dst_id, CAST(i AS DOUBLE)/na.n AS containment
        |FROM inter JOIN sz na ON src_id = na.doc_id
-       |WHERE ${cfg.contTDen}*i >= ${cfg.contTNum}*na.n""".stripMargin
+       |WHERE ${ContTDen}*i >= ${ContTNum}*na.n""".stripMargin
 
   /** q329: QUOTE SCRUB — the doc-level consumer of q324's pair table
     * (the q57→q13 relationship on the containment axis): a doc is a
@@ -1075,7 +1101,7 @@ class DedupOps(val cfg: GraftConfig) {
        |  GROUP BY 1, 2),
        |cont AS (SELECT src_id, dst_id FROM inter
        |  JOIN sz na ON src_id = na.doc_id
-       |  WHERE ${cfg.contTDen}*i >= ${cfg.contTNum}*na.n),
+       |  WHERE ${ContTDen}*i >= ${ContTNum}*na.n),
        |q AS (SELECT c.src_id AS doc_id, CAST(count(*) AS BIGINT) AS n_containers
        |  FROM cont c
        |  JOIN sz ns ON ns.doc_id = c.src_id
@@ -1096,11 +1122,9 @@ class DedupOps(val cfg: GraftConfig) {
   private[graft] def containmentBaseArtifacts(spark: SparkSession,
       dir: String): (DataFrame, DataFrame, DataFrame) = {
     import org.apache.spark.sql.expressions.Window
-    val CNum = cfg.contTNum
-    val CDen = cfg.contTDen
     def artifact(tag: String)(build: String => Unit): DataFrame =
       Artifact.getOrBuild(spark, tag, dir, Seq("documents.parquet"),
-        s"w=$SimW,t=$CNum/$CDen,u=${cfg.splitTrainUpper}")(build)
+        s"w=$SimJoinWords,t=$ContTNum/$ContTDen,u=${cfg.splitTrainUpper}")(build)
     def bsh = wordGrams(spark, dir)
       .filter(substring(md5(col("doc_id").cast("string")), 1, 2) < cfg.splitTrainUpper)
     val bdf = artifact("cont_base_df")(
@@ -1111,7 +1135,7 @@ class DedupOps(val cfg: GraftConfig) {
           Window.partitionBy("doc_id").orderBy(col("df"), col("s"))))
         .withColumn("n", count(lit(1)).over(Window.partitionBy("doc_id")))
         .select(col("s"), col("doc_id"), col("n"),
-          (col("rk") <= col("n") - expr(s"($CNum * n + ${CDen - 1}) div $CDen") + 1).as("pfx"))
+          (col("rk") <= col("n") - expr(s"($ContTNum * n + ${ContTDen - 1}) div $ContTDen") + 1).as("pfx"))
         .write.parquet(p)
     }
     val pairs = artifact("cont_base_pairs") { p =>
@@ -1120,7 +1144,7 @@ class DedupOps(val cfg: GraftConfig) {
       val grams = idx.select(col("s"), col("doc_id").as("dst_id"), col("n").as("ndst"))
       val cand = prefix.join(grams,
           prefix("s") === grams("s") && col("src_id") =!= col("dst_id") &&
-          lit(CDen) * col("ndst") >= lit(CNum) * col("nsrc"))
+          lit(ContTDen) * col("ndst") >= lit(ContTNum) * col("nsrc"))
         .select("src_id", "dst_id")
         .distinct()
       containmentVerify(spark, dir, cand).write.parquet(p)
@@ -1156,8 +1180,6 @@ class DedupOps(val cfg: GraftConfig) {
     * maintains. */
   def q332ContainmentDelta(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val CNum = cfg.contTNum
-    val CDen = cfg.contTDen
     val (bdf, bidx, bpairs) = containmentBaseArtifacts(spark, dir)
     val dsh = wordGrams(spark, dir)
       .filter(substring(md5(col("doc_id").cast("string")), 1, 2) >= cfg.splitTrainUpper)
@@ -1179,15 +1201,15 @@ class DedupOps(val cfg: GraftConfig) {
         .withColumn("rk", row_number().over(
           Window.partitionBy("doc_id").orderBy(col("df"), col("s"))))
         .select(col("s"), col("doc_id"), col("n"),
-          (col("rk") <= col("n") - expr(s"($CNum * n + ${CDen - 1}) div $CDen") + 1)
+          (col("rk") <= col("n") - expr(s"($ContTNum * n + ${ContTDen - 1}) div $ContTDen") + 1)
             .as("pfx")), cfg)
     val db = dAll.select(col("s"), col("doc_id").as("d_id"),
       col("n").as("dn"), col("pfx").as("d_pfx"))
     val bs = bidx.select(col("s"), col("doc_id"), col("n"), col("pfx"))
     val j = bs.join(broadcast(db), bs("s") === db("s") && (col("d_pfx") || col("pfx")))
-    val roleA = when(col("d_pfx") && lit(CDen) * col("n") >= lit(CNum) * col("dn"),
+    val roleA = when(col("d_pfx") && lit(ContTDen) * col("n") >= lit(ContTNum) * col("dn"),
       struct(col("d_id").as("src_id"), col("doc_id").as("dst_id")))
-    val roleB = when(col("pfx") && lit(CDen) * col("dn") >= lit(CNum) * col("n"),
+    val roleB = when(col("pfx") && lit(ContTDen) * col("dn") >= lit(ContTNum) * col("n"),
       struct(col("doc_id").as("src_id"), col("d_id").as("dst_id")))
     val candStore = j
       .select(explode(filter(array(roleA, roleB), x => x.isNotNull)).as("p"))
@@ -1197,7 +1219,7 @@ class DedupOps(val cfg: GraftConfig) {
     val dDst = dAll.select(col("s"), col("doc_id").as("dst_id"), col("n").as("ndst"))
     val candDelta = dSrc.join(dDst,
         dSrc("s") === dDst("s") && col("src_id") =!= col("dst_id") &&
-        lit(CDen) * col("ndst") >= lit(CNum) * col("nsrc"))
+        lit(ContTDen) * col("ndst") >= lit(ContTNum) * col("nsrc"))
       .select("src_id", "dst_id")
     bpairs.unionByName(
       containmentVerify(spark, dir, candStore.unionByName(candDelta).distinct()))
@@ -1238,7 +1260,7 @@ class DedupOps(val cfg: GraftConfig) {
       .select("src_id", "dst_id")
     val docs = Tables.documents(spark, dir).select("doc_id")
       .withColumn("b", substring(md5(col("doc_id").cast("string")), 1, 2))
-    val surv = docs.filter(col("b") < cfg.docRetractLower).drop("b")
+    val surv = docs.filter(col("b") < GraftConfig.docRetractLower).drop("b")
     val qold = qualified.groupBy(col("src_id").as("doc_id"))
       .agg(count(lit(1)).as("n_old"))
     val qnew = qualified
@@ -1263,7 +1285,7 @@ class DedupOps(val cfg: GraftConfig) {
        |  JOIN gsz nd ON nd.doc_id = c.dst_id
        |  WHERE nd.n > ns.n OR (nd.n = ns.n AND c.dst_id < c.src_id)),
        |surv AS (SELECT doc_id FROM documents
-       |  WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < '${cfg.docRetractLower}'),
+       |  WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < '${GraftConfig.docRetractLower}'),
        |qold AS (SELECT src_id AS doc_id, CAST(count(*) AS BIGINT) AS n FROM qual GROUP BY 1),
        |qnew AS (SELECT q.src_id AS doc_id, CAST(count(*) AS BIGINT) AS n FROM qual q
        |  JOIN surv sa ON sa.doc_id = q.src_id
@@ -1339,7 +1361,7 @@ class DedupOps(val cfg: GraftConfig) {
     // takedown feed: the q296/q340 retract band, two arrival waves
     val docs = Tables.documents(spark, dir).select("doc_id")
     val takedowns = docs
-      .filter(substring(md5(col("doc_id").cast("string")), 1, 2) >= cfg.docRetractLower)
+      .filter(substring(md5(col("doc_id").cast("string")), 1, 2) >= GraftConfig.docRetractLower)
     val fs = new org.apache.hadoop.fs.Path(landing).getFileSystem(conf)
     Seq(takedowns.filter(col("doc_id") % 2 === 0),
         takedowns.filter(col("doc_id") % 2 === 1))
@@ -1438,8 +1460,6 @@ class DedupOps(val cfg: GraftConfig) {
     * (the q325 rule) and dropped after the drain. */
   def q335StreamContainment(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val CNum = cfg.contTNum
-    val CDen = cfg.contTDen
     val (bdf, bidx, bpairs) = containmentBaseArtifacts(spark, dir)
     val conf = spark.sparkContext.hadoopConfiguration
     val run = java.util.UUID.randomUUID.toString.take(8)
@@ -1483,10 +1503,10 @@ class DedupOps(val cfg: GraftConfig) {
           if (!b.isEmpty) {
             val bsh = b
               .select(col("doc_id"), split(col("text"), " ").as("ws"))
-              .filter(size(col("ws")) >= SimW)
-              .withColumn("g", explode(sequence(lit(1), size(col("ws")) - (SimW - 1))))
+              .filter(size(col("ws")) >= SimJoinWords)
+              .withColumn("g", explode(sequence(lit(1), size(col("ws")) - (SimJoinWords - 1))))
               .select(col("doc_id"),
-                concat_ws(" ", slice(col("ws"), col("g"), lit(SimW))).as("s"))
+                concat_ws(" ", slice(col("ws"), col("g"), lit(SimJoinWords))).as("s"))
               .distinct()
             val bn = bsh.groupBy("doc_id").agg(count(lit(1)).as("n"))
             // ONE batch-sized lazy cut carrying the pfx flag (r18): the
@@ -1499,7 +1519,7 @@ class DedupOps(val cfg: GraftConfig) {
                 .withColumn("rk", row_number().over(
                   Window.partitionBy("doc_id").orderBy(col("df"), col("s"))))
                 .select(col("s"), col("doc_id"), col("n"),
-                  (col("rk") <= col("n") - expr(s"($CNum * n + ${CDen - 1}) div $CDen") + 1)
+                  (col("rk") <= col("n") - expr(s"($ContTNum * n + ${ContTDen - 1}) div $ContTDen") + 1)
                     .as("pfx")), cfg)
             // empty-state fallback built from the SCHEMA, not limit(0)
             // over the lazily-cut batch (r17 advice: executing that
@@ -1522,9 +1542,9 @@ class DedupOps(val cfg: GraftConfig) {
               col("n").as("bn"), col("pfx").as("b_pfx"))
             val j = store.join(broadcast(bb),
               store("s") === bb("s") && (col("b_pfx") || col("pfx")))
-            val roleA = when(col("b_pfx") && lit(CDen) * col("n") >= lit(CNum) * col("bn"),
+            val roleA = when(col("b_pfx") && lit(ContTDen) * col("n") >= lit(ContTNum) * col("bn"),
               struct(col("b_id").as("src_id"), col("doc_id").as("dst_id")))
-            val roleB = when(col("pfx") && lit(CDen) * col("bn") >= lit(CNum) * col("n"),
+            val roleB = when(col("pfx") && lit(ContTDen) * col("bn") >= lit(ContTNum) * col("n"),
               struct(col("doc_id").as("src_id"), col("b_id").as("dst_id")))
             val candStore = j
               .select(explode(filter(array(roleA, roleB), x => x.isNotNull)).as("p"))
@@ -1535,7 +1555,7 @@ class DedupOps(val cfg: GraftConfig) {
             val bDst = bAll.select(col("s"), col("doc_id").as("dst_id"), col("n").as("ndst"))
             val candBatch = bSrc.join(bDst,
                 bSrc("s") === bDst("s") && col("src_id") =!= col("dst_id") &&
-                lit(CDen) * col("ndst") >= lit(CNum) * col("nsrc"))
+                lit(ContTDen) * col("ndst") >= lit(ContTNum) * col("nsrc"))
               .select("src_id", "dst_id")
             containmentVerify(spark, dir,
                 candStore.unionByName(candBatch).distinct())
@@ -1579,7 +1599,7 @@ class DedupOps(val cfg: GraftConfig) {
        |  GROUP BY 1, 2),
        |gcont AS (SELECT src_id, dst_id FROM ginter
        |  JOIN gsz na ON src_id = na.doc_id
-       |  WHERE ${cfg.contTDen}*i >= ${cfg.contTNum}*na.n),
+       |  WHERE ${ContTDen}*i >= ${ContTNum}*na.n),
        |gquotes AS (SELECT DISTINCT c.src_id AS doc_id FROM gcont c
        |  JOIN gsz ns ON ns.doc_id = c.src_id
        |  JOIN gsz nd ON nd.doc_id = c.dst_id
@@ -1599,7 +1619,7 @@ class DedupOps(val cfg: GraftConfig) {
        |  FROM documents d LEFT JOIN flbl l USING (doc_id)),
        |ffsz AS (SELECT family_id, CAST(count(*) AS BIGINT) AS family_size
        |  FROM ffam GROUP BY family_id),
-       |sdw AS (SELECT f.doc_id, ${cfg.dsirScale} // s.family_size AS w_micro
+       |sdw AS (SELECT f.doc_id, ${GraftConfig.dsirScale} // s.family_size AS w_micro
        |  FROM ffam f JOIN ffsz s USING (family_id))""".stripMargin
 
   /** Oracle: the naive COMPLETE join — every pair sharing ≥1 gram,
@@ -1614,13 +1634,13 @@ class DedupOps(val cfg: GraftConfig) {
        |  GROUP BY 1, 2)
        |SELECT id_a, id_b, CAST(i AS DOUBLE)/(na.n + nb.n - i) AS jaccard
        |FROM inter JOIN sz na ON id_a = na.doc_id JOIN sz nb ON id_b = nb.doc_id
-       |WHERE $TDen*i >= $TNum*(na.n + nb.n - i)""".stripMargin
+       |WHERE $SimJoinTDen*i >= $SimJoinTNum*(na.n + nb.n - i)""".stripMargin
 
   /** q200: dedup THRESHOLD CURVE — the tuning sweep for the dedup
     * knob itself: for every candidate Jaccard threshold (percents ≥
     * the q131 base), how many near-dup pairs survive and how many
     * docs they touch. The curve is what actually sets
-    * `simJoinTNum/TDen` in production — a threshold is a data-loss
+    * `SimJoinTNum/SimJoinTDen` in production — a threshold is a data-loss
     * dial, and without the curve it gets set blind (the eval family:
     * q123 recall, q132 LSH, q183 balance, q196 cohesion — this one
     * grades the THRESHOLD). All sweep points read the ONE exact q131
@@ -1633,8 +1653,8 @@ class DedupOps(val cfg: GraftConfig) {
     * integers and pct/100.0 parses to the same double on both
     * engines. */
   def q200DedupCurve(spark: SparkSession, dir: String): DataFrame = {
-    val pcts = cfg.dedupCurvePcts
-    require(pcts.forall(p => p * TDen >= 100 * TNum),
+    val pcts = DedupCurvePcts
+    require(pcts.forall(p => p * SimJoinTDen >= 100 * SimJoinTNum),
       "every sweep percent must be >= the q131 base threshold")
     val pairs = q131SimJoin(spark, dir).select("id_a", "id_b", "jaccard")
     pairs
@@ -1649,14 +1669,14 @@ class DedupOps(val cfg: GraftConfig) {
   def q200Sql: String =
     s"""WITH base AS ($q131Sql),
        |sw AS (SELECT pct, unnest([id_a, id_b]) AS doc
-       |  FROM base, (SELECT unnest([${cfg.dedupCurvePcts.mkString(", ")}]) AS pct) p
+       |  FROM base, (SELECT unnest([${DedupCurvePcts.mkString(", ")}]) AS pct) p
        |  WHERE jaccard >= CAST(pct AS DOUBLE) / 100.0)
        |SELECT pct, count(*) // 2 AS n_pairs, count(DISTINCT doc) AS n_docs
        |FROM sw GROUP BY pct""".stripMargin
 
   /** q132: LSH TUNING EVAL — precision/recall of q31's MinHash band
     * candidate set against q131's complete truth at the same threshold
-    * (t = $TNum/$TDen ≙ cfg.minhashJaccard). The truth lives in
+    * (t = $SimJoinTNum/$SimJoinTDen ≙ MinhashJ). The truth lives in
     * q131's word-gram space while the bands hash char shingles — the
     * deliberate eval framing: the exact token-level near-dup spec is
     * the ground truth a production (char-MinHash) config is graded
@@ -1705,7 +1725,7 @@ class DedupOps(val cfg: GraftConfig) {
        |  GROUP BY 1, 2),
        |truth AS (SELECT id_a, id_b
        |  FROM inter JOIN sz na ON id_a = na.doc_id JOIN sz nb ON id_b = nb.doc_id
-       |  WHERE $TDen*i >= $TNum*(na.n + nb.n - i)),
+       |  WHERE $SimJoinTDen*i >= $SimJoinTNum*(na.n + nb.n - i)),
        |m AS (SELECT
        |    (SELECT count(*) FROM truth) AS n_truth,
        |    (SELECT count(*) FROM cand) AS n_cand,
@@ -1726,7 +1746,7 @@ class DedupOps(val cfg: GraftConfig) {
     * the q68 md5 train bucket (content-stable, so the base/delta split
     * reproduces across runs); candidates come from the MinHash band
     * join restricted to delta×base; verified matches (exact Jaccard ≥
-    * cfg.minhashJaccard) blame the LOWEST matching base id. EVERY
+    * MinhashJ) blame the LOWEST matching base id. EVERY
     * delta doc appears — kept rows with is_dup=false and null blame —
     * because a dedup step must account for every input (the q100
     * contract), including docs too short to shingle.

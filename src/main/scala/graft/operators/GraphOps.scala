@@ -25,7 +25,16 @@ import graft.sources.{Artifact, Tables}
   * MapReduce self-join here; the contraction is the Spark-first rethink.
   */
 class GraphOpsLib(val cfg: GraftConfig) {
-  val LowCovThreshold: Double = cfg.lowCovThreshold
+  // graph cleaning [CloudBrush: LowCovThreshold, tip/bubble params]
+  val LowCovThreshold: Double = 70.0
+  // graph stats [CloudBrush: Stats cutoffs array + min contig length]
+  val StatsMinLen: Long = 100L
+  // bubble popping [FindBubbles.java:207 BUBBLEEDITRATE]
+  val BubbleEditRate: Double = 0.05
+  // decremental CC (q281): edges whose md5 bucket is ≥ this bound
+  // form the deterministic DELETE batch (0xd0-0xff ≈ 18.75% of
+  // edges) retracted against the persisted full-graph labels
+  val CcDeleteLower: String = "d0"
   private val seqOps = new SequenceOps(cfg)
 
   /** First m words of `text`, single-space delimited — WITHOUT splitting
@@ -235,12 +244,6 @@ class GraphOpsLib(val cfg: GraftConfig) {
   private def classCounts(spark: SparkSession, dir: String): DataFrame =
     docsKeyed(spark, dir).groupBy(col("fw"), col("lw")).agg(count(lit(1)).as("cnt"))
 
-  /** Quotient-class tables are ≤|vocab|² rows and broadcast by default;
-    * cfg.broadcastQuotientClasses=false falls back to a shuffle join for
-    * corpora with unbounded boundary-word vocabularies. */
-  private def quotient(df: DataFrame): DataFrame =
-    if (cfg.broadcastQuotientClasses) broadcast(df) else df
-
   /** Stage/round lineage cut: eager localCheckpoint locally, reliable
     * checkpoint on clusters (cfg.reliableStageCheckpoints) — one knob for
     * every iterative loop's durability, same contract as
@@ -257,7 +260,7 @@ class GraphOpsLib(val cfg: GraftConfig) {
   /** Materialize an iterative loop's EDGE-SIDE table key-partitioned
     * and row-count-sized: one lazy cut+count evaluates the (possibly
     * heavy) build plan once, then the counted rows re-cut through an
-    * EXPLICIT hash repartition sized by cfg.stageRowsPerPartition —
+    * EXPLICIT hash repartition sized by Ck.StageRowsPerPartition —
     * explicit because the stats barrier can only lift partitioning
     * from a FINAL adaptive plan (a lazy cut never has one) and a
     * column-only repartition gets AQE-coalesced out of co-location,
@@ -279,7 +282,7 @@ class GraphOpsLib(val cfg: GraftConfig) {
     * One broadcast hash join + codegen arithmetic — linear in |E|. */
   def q22TransitiveReduction(spark: SparkSession, dir: String): DataFrame = {
     val e = edges1(spark, dir)
-    val mids = quotient(classCounts(spark, dir)
+    val mids = broadcast(classCounts(spark, dir)
       .filter(col("fw") === col("lw"))
       .select(col("fw").as("src_lw"), col("cnt")))
     e.join(mids, Seq("src_lw"), "left")
@@ -361,7 +364,7 @@ class GraphOpsLib(val cfg: GraftConfig) {
     val d = docsKeyed(spark, dir)
     val cc = classCounts(spark, dir)
     // class pairs that can possibly host >= 2 mids (corrections subtract at most 2)
-    val hot = quotient(cc.filter(col("cnt") >= 2)
+    val hot = broadcast(cc.filter(col("cnt") >= 2)
       .select(col("fw").as("mid_fw"), col("lw").as("mid_lw"), col("cnt")))
     val as_ = d.select(col("doc_id").as("src"), col("fw").as("src_fw"), col("lw").as("mid_fw"))
     val bs = d.select(col("doc_id").as("dst"), col("lw").as("dst_lw"), col("fw").as("mid_lw"))
@@ -438,7 +441,7 @@ class GraphOpsLib(val cfg: GraftConfig) {
     * 2-arg form and hash-matches. */
   private def editGate(a: Column, b: Column, maxLen: Column): Column =
     call_function("levenshtein", a, b,
-      floor(lit(cfg.bubbleEditRate) * maxLen).cast("int")) >= 0
+      floor(lit(BubbleEditRate) * maxLen).cast("int")) >= 0
 
   def resolveChainsFrom(
       spark: SparkSession, nodes: DataFrame, edges: DataFrame, withDepth: Boolean,
@@ -664,14 +667,14 @@ class GraphOpsLib(val cfg: GraftConfig) {
     * length]. Same histogram machinery as q28 — one triangular
     * broadcast join over |distinct lengths| rows serves every cutoff, so
     * adding cutoffs is free — with the reference's min-length filter
-    * ($statsMinLen) applied before any statistic. The cutoff fractions
+    * ($StatsMinLen) applied before any statistic. The cutoff fractions
     * 0.25/0.50/0.75 are exact binary fractions, so threshold arithmetic
     * is bit-identical across engines. */
   def q28bStatsMulti(spark: SparkSession, dir: String): DataFrame = {
     val chains = q27ChainCompress(spark, dir)
     val lens = chains.join(Tables.documents(spark, dir).select(col("doc_id").as("node"), col("n_chars")), "node")
       .groupBy("head").agg(sum(col("n_chars")).as("clen"))
-      .filter(col("clen") >= cfg.statsMinLen)
+      .filter(col("clen") >= StatsMinLen)
     val tot = lens.agg(count(lit(1)).as("n_contigs"), sum(col("clen")).as("total_len"),
                        max(col("clen")).as("max_len"))
     val hist = lens.groupBy("clen").agg(count(lit(1)).as("n"))
@@ -690,7 +693,7 @@ class GraphOpsLib(val cfg: GraftConfig) {
     s""",
        |lens AS (SELECT head, CAST(SUM(n_chars) AS BIGINT) AS clen
        |  FROM heads JOIN documents ON doc_id = node GROUP BY head
-       |  HAVING CAST(SUM(n_chars) AS BIGINT) >= ${cfg.statsMinLen}),
+       |  HAVING CAST(SUM(n_chars) AS BIGINT) >= ${StatsMinLen}),
        |tot AS (SELECT count(*) AS n_contigs, CAST(SUM(clen) AS BIGINT) AS total_len,
        |  max(clen) AS max_len FROM lens),
        |ord AS (SELECT clen, CAST(SUM(clen) OVER (ORDER BY clen DESC, head) AS BIGINT) AS csum FROM lens)
@@ -724,7 +727,7 @@ class GraphOpsLib(val cfg: GraftConfig) {
     * quotient-class arithmetic as q22, opposite filter, plus the count. */
   def q36Braids(spark: SparkSession, dir: String): DataFrame = {
     val e = edges1(spark, dir)
-    val mids = quotient(classCounts(spark, dir)
+    val mids = broadcast(classCounts(spark, dir)
       .filter(col("fw") === col("lw"))
       .select(col("fw").as("src_lw"), col("cnt")))
     e.join(mids, Seq("src_lw"), "left")
@@ -924,7 +927,7 @@ class GraphOpsLib(val cfg: GraftConfig) {
        |${p}_pop AS MATERIALIZED (SELECT DISTINCT r.mid AS nid
        |  FROM ${p}_rk r JOIN ${p}_rk k ON k.src = r.src AND k.dst = r.dst AND k.rk = 1
        |  WHERE r.rk > 1 AND k.n_mids >= 2
-       |    AND levenshtein(k.text, r.text) <= ${cfg.bubbleEditRate} * greatest(k.n_chars, r.n_chars)),
+       |    AND levenshtein(k.text, r.text) <= ${BubbleEditRate} * greatest(k.n_chars, r.n_chars)),
        |${p}_out AS MATERIALIZED (SELECT src, dst FROM $eIn
        |  WHERE src NOT IN (SELECT nid FROM ${p}_pop)
        |    AND dst NOT IN (SELECT nid FROM ${p}_pop))""".stripMargin
@@ -1134,7 +1137,7 @@ class GraphOpsLib(val cfg: GraftConfig) {
     * mids get popped. A mid is poppable only when its text is genuinely
     * similar to the kept path [FindBubbles.java:207-212: BUBBLEEDITRATE
     * = 0.05 edit-distance gate between the two path sequences]:
-    * levenshtein(kept, mid) ≤ $bubbleEditRate × max(len) — without the
+    * levenshtein(kept, mid) ≤ $BubbleEditRate × max(len) — without the
     * gate, popping would merge genuinely distinct content.
     *
     * Same quotient-class contraction as q25, with the edit gate computed
@@ -1205,7 +1208,7 @@ class GraphOpsLib(val cfg: GraftConfig) {
     // The per-output-row work is then one CASE chain of long equality
     // checks inside one codegen stage — no post-join stages at all.
     val nOk = levOk.groupBy("cand_id").agg(count(lit(1)).as("n_ok"))
-    val hot = quotient(classTop.filter(col("cnt") >= 2)
+    val hot = broadcast(classTop.filter(col("cnt") >= 2)
       .select(col("fw").as("mid_fw"), col("lw").as("mid_lw"), col("cnt"),
         posexplode(col("top3")).as(Seq("p", "c")))
       .select(col("mid_fw"), col("mid_lw"), col("cnt"), col("p"), col("c.doc_id").as("cand_id"))
@@ -1271,7 +1274,7 @@ class GraphOpsLib(val cfg: GraftConfig) {
        |  FROM ranked WHERE rk = 1 AND n_mids >= 2),
        |pop AS (SELECT k.src, k.dst, count(*) AS n_popped
        |  FROM kept k JOIN ranked r ON r.src = k.src AND r.dst = k.dst AND r.rk > 1
-       |  WHERE levenshtein(k.ktext, r.text) <= ${cfg.bubbleEditRate} * greatest(k.klen, r.n_chars)
+       |  WHERE levenshtein(k.ktext, r.text) <= ${BubbleEditRate} * greatest(k.klen, r.n_chars)
        |  GROUP BY k.src, k.dst)
        |SELECT k.src, k.dst, k.kept_mid, coalesce(p.n_popped, 0) AS n_popped
        |FROM kept k LEFT JOIN pop p ON p.src = k.src AND p.dst = k.dst""".stripMargin
@@ -1698,7 +1701,7 @@ class GraphOpsLib(val cfg: GraftConfig) {
     * q242's scaladoc documented as the standard caveat ("deletions need
     * per-component recompute"), now implemented instead of deferred:
     * the persisted FULL-graph base labels absorb an edge DELETE batch
-    * (the md5 band ≥ ${cfg.ccDeleteLower} — a deterministic stand-in
+    * (the md5 band ≥ ${CcDeleteLower} — a deterministic stand-in
     * for a day's retractions) by TOUCHED-COMPONENT recompute. Deletion
     * can only SPLIT components, never merge them, and every edge lives
     * inside one base component — so components fall in two classes:
@@ -1730,8 +1733,8 @@ class GraphOpsLib(val cfg: GraftConfig) {
     // keyed on the one edge-shaping knob
     val baseLbl = Artifact.getOrBuild(spark, "ccfull", dir, Seq("documents.parquet"),
       s"maxOverlapKeyDf=${cfg.maxOverlapKeyDf}")(Cc.labels(e.select("u", "v"), cfg).write.parquet(_))
-    val deleted = e.filter(col("b") >= cfg.ccDeleteLower)
-    val kept = e.filter(col("b") < cfg.ccDeleteLower).select("u", "v")
+    val deleted = e.filter(col("b") >= CcDeleteLower)
+    val kept = e.filter(col("b") < CcDeleteLower).select("u", "v")
     // touched components: every base label adjacent to a deleted edge
     // (E-edge endpoints always carry a base label)
     val touched = deleted.select(col("u").as("node"))
@@ -1768,7 +1771,7 @@ class GraphOpsLib(val cfg: GraftConfig) {
     s"""WITH RECURSIVE
        |eds AS MATERIALIZED (SELECT src, dst FROM ($edges2Sql)
        |  WHERE substr(md5(CAST(src AS VARCHAR) || ':' || CAST(dst AS VARCHAR)), 1, 2)
-       |    < '${cfg.ccDeleteLower}'),
+       |    < '${CcDeleteLower}'),
        |und AS MATERIALIZED (SELECT src AS u, dst AS v FROM eds
        |  UNION SELECT dst, src FROM eds),
        |reach(u, v) AS (SELECT u, v FROM und
@@ -1823,7 +1826,7 @@ class GraphOpsLib(val cfg: GraftConfig) {
   }
 
   /** q170: multi-source BFS hop distances — every node's minimum hop
-    * count from the seed set (doc_id ≡ 0 mod ${cfg.bfsSeedMod}) on the
+    * count from the seed set (doc_id ≡ 0 mod ${GraftConfig.bfsSeedMod}) on the
     * undirected overlap graph, out to ${cfg.bfsRounds} hops: the
     * reachability/radius primitive under contamination spread analysis
     * ("how far does this bad batch's neighborhood extend") and seed-
@@ -1841,7 +1844,7 @@ class GraphOpsLib(val cfg: GraftConfig) {
     graft.GraftSession.ensureCheckpointDir(spark)
     val e = edges2(spark, dir).select(col("src").as("u"), col("dst").as("v"))
     val seeds = Tables.documents(spark, dir)
-      .filter(col("doc_id") % cfg.bfsSeedMod === 0)
+      .filter(col("doc_id") % GraftConfig.bfsSeedMod === 0)
       .select(col("doc_id").as("u"), lit(0L).as("h"))
     bfsFrom(e.unionAll(e.select(col("v").as("u"), col("u").as("v"))).distinct(), seeds)
   }
@@ -1886,7 +1889,7 @@ class GraphOpsLib(val cfg: GraftConfig) {
       .select(col("src").as("u"), col("dst").as("v"),
         greatest(lit(1L), col("nc") - length(col("okey")).cast("long")).as("w"))
     val seeds = docs
-      .filter(col("doc_id") % cfg.bfsSeedMod === 0)
+      .filter(col("doc_id") % GraftConfig.bfsSeedMod === 0)
       .select(col("doc_id").as("u"), lit(0L).as("d"))
     ssspFrom(we, seeds, cfg.ssspRounds, "q208.sssp")
       .select(col("u").as("doc_id"), col("d").as("dist"))
@@ -1958,7 +1961,7 @@ class GraphOpsLib(val cfg: GraftConfig) {
     val und = e.unionAll(e.select(col("v").as("u"), col("u").as("v"))).distinct()
       .withColumn("w", lit(1L))
     val seeds = Tables.documents(spark, dir)
-      .filter(col("doc_id") % cfg.bfsSeedMod === 0)
+      .filter(col("doc_id") % GraftConfig.bfsSeedMod === 0)
       .select(col("doc_id").as("s"), col("doc_id").as("u"), lit(0L).as("d"))
     ssspFrom(und, seeds, cfg.bfsRounds, "q218.ecc")
       .groupBy(col("s").as("seed"))
@@ -1977,7 +1980,7 @@ class GraphOpsLib(val cfg: GraftConfig) {
        |und AS MATERIALIZED (SELECT DISTINCT u, v FROM
        |  (SELECT src AS u, dst AS v FROM eds UNION SELECT dst, src FROM eds)),
        |d0 AS (SELECT doc_id AS s, doc_id AS u, CAST(0 AS BIGINT) AS d FROM documents
-       |  WHERE doc_id % ${cfg.bfsSeedMod} = 0),
+       |  WHERE doc_id % ${GraftConfig.bfsSeedMod} = 0),
        |$rounds
        |SELECT s AS seed, CAST(count(*) AS BIGINT) AS n_reached,
        |  CAST(max(d) AS BIGINT) AS ecc
@@ -1996,7 +1999,7 @@ class GraphOpsLib(val cfg: GraftConfig) {
        |    CAST(greatest(1, d.n_chars - len(e.okey)) AS BIGINT) AS w
        |  FROM ($edges2Sql) e JOIN documents d ON e.dst = d.doc_id),
        |d0 AS (SELECT doc_id AS u, CAST(0 AS BIGINT) AS d FROM documents
-       |  WHERE doc_id % ${cfg.bfsSeedMod} = 0),
+       |  WHERE doc_id % ${GraftConfig.bfsSeedMod} = 0),
        |$rounds
        |SELECT u AS doc_id, d AS dist FROM d${cfg.ssspRounds}""".stripMargin
   }
@@ -2013,7 +2016,7 @@ class GraphOpsLib(val cfg: GraftConfig) {
        |und AS MATERIALIZED (SELECT DISTINCT u, v FROM
        |  (SELECT src AS u, dst AS v FROM eds UNION SELECT dst, src FROM eds)),
        |d0 AS (SELECT doc_id AS u, CAST(0 AS BIGINT) AS h FROM documents
-       |  WHERE doc_id % ${cfg.bfsSeedMod} = 0),
+       |  WHERE doc_id % ${GraftConfig.bfsSeedMod} = 0),
        |$rounds
        |SELECT u AS doc_id, h AS hops FROM d${cfg.bfsRounds}""".stripMargin
   }

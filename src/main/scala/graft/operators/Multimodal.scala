@@ -18,6 +18,32 @@ import graft.sources.Tables
   * for a real codec changes only the function body.
   */
 object Multimodal {
+  // PCM decimation (q276): boxcar downsample factor (16 kHz -> 4 kHz
+  // would be 4; synthetic clips hold 32 samples -> 8 output blocks)
+  val PcmDecimate: Int = 4
+  // image near-dup (q302): candidate pairs must share the quantized
+  // pooled-thumbnail key (each pooled byte >> 4); buckets above the
+  // df cap are dropped from candidate generation (the maxOverlapKeyDf
+  // hot-key discipline — a monochrome-heavy corpus would otherwise
+  // collapse into one O(n²) bucket) and survivors verify by exact
+  // integer squared L2 distance between pooled thumbnails, kept at
+  // ≤ maxD2 (≈ RMSE 8 per pooled byte on a 12-dim descriptor)
+  val ImageNeardupMaxD2: Long = 768L
+  val ImageDupKeyMaxDf: Int = 1000
+  // audio near-dup (q308): candidates share the quantized frame-energy
+  // key (each frame energy >> 28); hot buckets above the df cap drop
+  // (the maxOverlapKeyDf discipline — a silence-heavy corpus would
+  // collapse into one bucket); survivors verify by exact integer L1
+  // over frame energies, kept at ≤ maxL1 (tighter than the key's own
+  // bin width, so the verify does real work)
+  val AudioNeardupMaxL1: Long = 100000000L
+  val AudioDupKeyMaxDf: Int = 1000
+  // q315 (video near-dup): blocking-bucket df cap and the exact
+  // integer squared-L2 verify bound over the temporal fingerprint —
+  // tighter than the key's 16-wide bins by design (measured at
+  // sf0.01: 58 candidates → 40 kept)
+  val VideoDupKeyMaxDf: Int = 1000
+  val VideoNeardupMaxD2: Long = 256L
 
   case class MediaRow(doc_id: Long, payload: Array[Byte], width: Int, height: Int, format: String)
   case class MediaFeatures(doc_id: Long, width: Int, height: Int, n_bytes: Int,
@@ -431,7 +457,7 @@ object Multimodal {
                       v_out: Double)
 
   /** q276: PCM DECIMATION — boxcar-averaged downsample by
-    * ${GraftConfig.default.pcmDecimate}× (16 kHz speech corpora ship to
+    * ${PcmDecimate}× (16 kHz speech corpora ship to
     * 8 kHz ASR front-ends through exactly this: average k consecutive
     * samples, emit one): per output sample its input count, the EXACT
     * integer input sum, and the mean. The boxcar is the crudest
@@ -445,7 +471,7 @@ object Multimodal {
     * in-row pass over the samples; output is n/k rows per clip, zero
     * shuffles at any corpus size. */
   def q276PcmDecimate(spark: SparkSession, dir: String): DataFrame =
-    decodePcmDecimate(wavTable(spark, dir), GraftConfig.default.pcmDecimate)
+    decodePcmDecimate(wavTable(spark, dir), PcmDecimate)
 
   private[graft] def decodePcmDecimate(ds: Dataset[(Long, Array[Byte])],
       k: Int): DataFrame = {
@@ -469,7 +495,7 @@ object Multimodal {
   }
 
   def q276Sql: String = {
-    val k = GraftConfig.default.pcmDecimate
+    val k = PcmDecimate
     s"""WITH h4 AS (SELECT doc_id,
        |    md5(text) || md5(text || '1') || md5(text || '2') || md5(text || '3') AS hx
        |  FROM documents),
@@ -682,13 +708,13 @@ object Multimodal {
     * external embeddings, q283 on text-derived vectors; this one on
     * decoded pixels): candidates are pairs sharing the quantized
     * descriptor key — an EQUI-JOIN, never all-pairs — with buckets
-    * above ${GraftConfig.default.imageDupKeyMaxDf} docs dropped from
+    * above ${ImageDupKeyMaxDf} docs dropped from
     * candidate generation (the maxOverlapKeyDf hot-key guard: a
     * monochrome-heavy corpus would otherwise collapse into one O(n²)
     * bucket); survivors verify by exact integer squared L2 between
     * pooled thumbnails (d² = na + nb − 2·dot, all `vec_dot_long`
     * BIGINTs — the boundary test has NO floats at all), kept at ≤
-    * ${GraftConfig.default.imageNeardupMaxD2}.
+    * ${ImageNeardupMaxD2}.
     *
     * Scale: descriptor extraction is a zero-shuffle scan; blocking is
     * one map-combinable key-frequency aggregate + a broadcast
@@ -699,7 +725,7 @@ object Multimodal {
     * path, the q283/q287 lesson. */
   def q302ImageNeardup(spark: SparkSession, dir: String): DataFrame =
     imageNeardupWith(spark, dir,
-      GraftConfig.default.imageDupKeyMaxDf, GraftConfig.default.imageNeardupMaxD2)
+      ImageDupKeyMaxDf, ImageNeardupMaxD2)
 
   private[graft] def imageNeardupWith(spark: SparkSession, dir: String,
       cap: Int, maxD2: Long): DataFrame = {
@@ -720,8 +746,8 @@ object Multimodal {
   }
 
   def q302Sql: String = {
-    val cap = GraftConfig.default.imageDupKeyMaxDf
-    val maxD2 = GraftConfig.default.imageNeardupMaxD2
+    val cap = ImageDupKeyMaxDf
+    val maxD2 = ImageNeardupMaxD2
     s"""WITH $imgElemsCtes,
        |keys AS (SELECT doc_id,
        |    string_agg(substr('0123456789abcdef', CAST(v // 16 AS INT) + 1, 1), '' ORDER BY idx) AS dkey
@@ -837,10 +863,10 @@ object Multimodal {
     * discipline on the AUDIO modality, completing the symmetry
     * (text q30-q34/q283, image q302, audio HERE): candidates share
     * the quantized frame-energy key (equi-join, never all-pairs) with
-    * buckets above ${GraftConfig.default.audioDupKeyMaxDf} dropped
+    * buckets above ${AudioDupKeyMaxDf} dropped
     * (the hot-key guard — a silence-heavy corpus would collapse into
     * one O(n²) bucket); survivors verify by exact integer L1 over
-    * frame energies at ≤ ${GraftConfig.default.audioNeardupMaxL1} —
+    * frame energies at ≤ ${AudioNeardupMaxL1} —
     * deliberately TIGHTER than the key's own 2^28 bin width, so the
     * verify prunes real candidates (an all-integer boundary, the q302
     * discipline). Recall trade of the quantized key is the documented
@@ -851,7 +877,7 @@ object Multimodal {
     * one equi-join with df-capped buckets — candidates ≤ cap·n/2. */
   def q308AudioNeardup(spark: SparkSession, dir: String): DataFrame =
     audioNeardupWith(spark, dir,
-      GraftConfig.default.audioDupKeyMaxDf, GraftConfig.default.audioNeardupMaxL1)
+      AudioDupKeyMaxDf, AudioNeardupMaxL1)
 
   private[graft] def audioNeardupWith(spark: SparkSession, dir: String,
       cap: Int, maxL1: Long): DataFrame = {
@@ -870,8 +896,8 @@ object Multimodal {
   }
 
   def q308Sql: String = {
-    val cap = GraftConfig.default.audioDupKeyMaxDf
-    val maxL1 = GraftConfig.default.audioNeardupMaxL1
+    val cap = AudioDupKeyMaxDf
+    val maxL1 = AudioNeardupMaxL1
     s"""WITH $audElemsCtes,
        |keys AS (SELECT doc_id,
        |    string_agg(CAST(e // 268435456 AS VARCHAR), ',' ORDER BY frame) AS akey
@@ -1068,11 +1094,11 @@ object Multimodal {
     * discipline on the VIDEO modality, completing the symmetry (text
     * q30-q34/q283, image q302, audio q308, video HERE): candidates
     * share the temporal-aligned quantized key (equi-join, never
-    * all-pairs) with buckets above ${GraftConfig.default.videoDupKeyMaxDf}
+    * all-pairs) with buckets above ${VideoDupKeyMaxDf}
     * dropped (the hot-key guard — a still-frame-heavy corpus would
     * collapse into one O(n²) bucket); survivors verify by exact
     * integer squared L2 over the temporal fingerprints at ≤
-    * ${GraftConfig.default.videoNeardupMaxD2} — deliberately TIGHTER
+    * ${VideoNeardupMaxD2} — deliberately TIGHTER
     * than the key's own 16-wide bins, so the verify prunes real
     * candidates (measured at sf0.01: 58 candidates → 40 kept; an
     * all-integer boundary, the q302 discipline).
@@ -1083,7 +1109,7 @@ object Multimodal {
     * O(n). */
   def q315VideoNeardup(spark: SparkSession, dir: String): DataFrame =
     videoNeardupWith(spark, dir,
-      GraftConfig.default.videoDupKeyMaxDf, GraftConfig.default.videoNeardupMaxD2)
+      VideoDupKeyMaxDf, VideoNeardupMaxD2)
 
   private[graft] def videoNeardupWith(spark: SparkSession, dir: String,
       cap: Int, maxD2: Long): DataFrame = {
@@ -1104,8 +1130,8 @@ object Multimodal {
   }
 
   def q315Sql: String = {
-    val cap = GraftConfig.default.videoDupKeyMaxDf
-    val maxD2 = GraftConfig.default.videoNeardupMaxD2
+    val cap = VideoDupKeyMaxDf
+    val maxD2 = VideoNeardupMaxD2
     s"""WITH $vidElemsCtes,
        |keys AS (SELECT doc_id,
        |    string_agg(substr('0123456789abcdef', CAST(v // 16 AS INT) + 1, 1), '' ORDER BY idx) AS vkey

@@ -18,6 +18,15 @@ import graft.sources.Tables
   * partitioned edge list — no driver-side data, no all-pairs work.
   */
 object Pipeline {
+  // full-assembly composition round bounds [BrushAssembler phase loops:
+  // chimeric ≤2 (BrushAssembler.java:347 `round < 2`), the other loops
+  // run to convergence there — bounded here so the oracle can unroll
+  // the same counts; each stage is idempotent once converged, so any
+  // bound ≥ the data's convergence round count is exact]
+  val AsmChimericRounds: Int = 2
+  val AsmTipRounds: Int = 4
+  val AsmPopRounds: Int = 2
+  val AsmPostLowcovTipRounds: Int = 3
 
   private val cfg = graft.GraftConfig.default
 
@@ -134,7 +143,7 @@ object Pipeline {
     // and every later phase stops paying the build plan's task count),
     // then transitive reduction
     val q17 = graft.Trace("asm.q17")(ck(GraphOps.q17BestOverlap(spark, dir)))
-    val oe = GraphOps.shrinkFrom("asm.chimeric", q17, q17.count(), cfg.asmChimericRounds)(
+    val oe = GraphOps.shrinkFrom("asm.chimeric", q17, q17.count(), AsmChimericRounds)(
       r => GraphOps.reciprocalBestFrom(r.state))
     phaseStats("chimeric", oe)
     var e = graft.Trace("asm.transred")(ck(GraphOps.transReduceFrom(oe.select("src", "dst"))))
@@ -143,10 +152,10 @@ object Pipeline {
     // phase checkpoints the edge set ONCE and per round materializes
     // only the small removal list (GraphOps.nodeRemovalLoopFrom) instead
     // of rewriting the full edge set every round
-    e = GraphOps.nodeRemovalLoopFrom(spark, e, cfg.asmTipRounds, "asm.tips",
+    e = GraphOps.nodeRemovalLoopFrom(spark, e, AsmTipRounds, "asm.tips",
       cutEntry = false, detectsPerJob = FusedDetects)(GraphOps.tipNodesFrom)
     phaseStats("tips", e)
-    e = GraphOps.nodeRemovalLoopFrom(spark, e, cfg.asmPopRounds, "asm.pop")(
+    e = GraphOps.nodeRemovalLoopFrom(spark, e, AsmPopRounds, "asm.pop")(
       GraphOps.poppedMidsFrom(_, docs))
     phaseStats("pop", e)
     // low-coverage node removal + post-lowcov tip rounds. The removal
@@ -157,7 +166,7 @@ object Pipeline {
       e.join(broadcast(low.select(col("nid").as("src"))), Seq("src"), "left_anti")
         .join(broadcast(low.select(col("nid").as("dst"))), Seq("dst"), "left_anti")))
     phaseStats("lowcov", e)
-    e = GraphOps.nodeRemovalLoopFrom(spark, e, cfg.asmPostLowcovTipRounds, "asm.tips2",
+    e = GraphOps.nodeRemovalLoopFrom(spark, e, AsmPostLowcovTipRounds, "asm.tips2",
       cutEntry = false)(GraphOps.tipNodesFrom)
     phaseStats("tips2", e)
     // repeat-boundary edge adjustment rounds: keep maps are small, so a
@@ -199,17 +208,17 @@ object Pipeline {
     val marks = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     var cur = "oe0"
     stages += s"oe0 AS MATERIALIZED (${GraphOps.q17SqlFrom})"
-    for (i <- 1 to cfg.asmChimericRounds) {
+    for (i <- 1 to AsmChimericRounds) {
       stages += GraphOps.reciprocalBestSql(cur, s"c$i"); cur = s"c${i}_out"
     }
     marks += ("chimeric" -> cur)
     stages += GraphOps.transReduceSql(cur, "tr"); cur = "tr_out"
     marks += ("transred" -> cur)
-    for (i <- 1 to cfg.asmTipRounds) {
+    for (i <- 1 to AsmTipRounds) {
       stages += GraphOps.tipRoundSqlFrom(cur, s"t$i"); cur = s"t${i}_out"
     }
     marks += ("tips" -> cur)
-    for (i <- 1 to cfg.asmPopRounds) {
+    for (i <- 1 to AsmPopRounds) {
       stages += GraphOps.popRoundSql(cur, s"p$i"); cur = s"p${i}_out"
     }
     marks += ("pop" -> cur)
@@ -219,7 +228,7 @@ object Pipeline {
       |    AND dst NOT IN (SELECT doc_id FROM lc))""".stripMargin
     cur = "lc_out"
     marks += ("lowcov" -> cur)
-    for (i <- 1 to cfg.asmPostLowcovTipRounds) {
+    for (i <- 1 to AsmPostLowcovTipRounds) {
       stages += GraphOps.tipRoundSqlFrom(cur, s"u$i"); cur = s"u${i}_out"
     }
     marks += ("tips2" -> cur)

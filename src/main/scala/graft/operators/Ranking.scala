@@ -17,9 +17,10 @@ import graft.sources.Tables
   * Σdl/N with the sum carried in exact integer arithmetic.
   */
 class RankingOps(val cfg: GraftConfig) {
-  val TfidfTopK: Int = cfg.tfidfTopK
-  val K1: Double = cfg.bm25K1
-  val B: Double = cfg.bm25B
+  // term ranking: per-doc top-k tf-idf terms and the BM25 parameters
+  val TfidfTopK: Int = 3
+  val K1: Double = 1.2
+  val B: Double = 0.75
   val Terms: Seq[String] = cfg.bm25Terms
   private val termList = Terms.map(t => s"'$t'").mkString("(", ", ", ")")
 
@@ -148,9 +149,9 @@ class RankingOps(val cfg: GraftConfig) {
     // vector side: one broadcast query embedding against the corpus scan
     val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
       .withColumn("n2", Vec.norm2N("embedding"))
-    val q = broadcast(e.filter(col("vec_id") === cfg.hybridQueryVec)
+    val q = broadcast(e.filter(col("vec_id") === GraftConfig.hybridQueryVec)
       .select(col("embedding").as("qe"), col("n2").as("qn2")))
-    val vecPool = e.filter(col("vec_id") =!= cfg.hybridQueryVec).crossJoin(q)
+    val vecPool = e.filter(col("vec_id") =!= GraftConfig.hybridQueryVec).crossJoin(q)
       .select(col("vec_id").as("doc_id"),
         Vec.cosineFromParts(Vec.dotN("qe", "embedding"), col("qn2"), col("n2")).as("cosine"))
       .orderBy(col("cosine").desc, col("doc_id")).limit(PoolK)
@@ -161,7 +162,7 @@ class RankingOps(val cfg: GraftConfig) {
 
   /** q110: HYBRID retrieval — reciprocal-rank fusion of the BM25 text
     * ranking (query = $Terms) and the cosine vector ranking (query =
-    * the embedding of vec_id ${cfg.hybridQueryVec}), the standard
+    * the embedding of vec_id ${GraftConfig.hybridQueryVec}), the standard
     * sparse+dense fusion of a modern retrieval stack. RRF works on
     * RANKS, not scores — 1/(k+r) terms from integer ranks, so the fused
     * score is deterministic across engines by construction.
@@ -177,7 +178,7 @@ class RankingOps(val cfg: GraftConfig) {
     * total is a FIXED-ORDER chain of per-term IEEE terms, not a
     * float SUM, so both engines compute bit-identical pool orderings. */
   def q110HybridRrf(spark: SparkSession, dir: String): DataFrame = {
-    val RrfC = cfg.rrfK
+    val RrfC = GraftConfig.rrfK
     val (bmPool, vecPool) = hybridPools(spark, dir)
     // fuse: RRF over the union of the two pools; a missing side adds 0
     val rrf =
@@ -186,7 +187,7 @@ class RankingOps(val cfg: GraftConfig) {
     bmPool.select("doc_id", "brank")
       .join(vecPool.select("doc_id", "vrank"), Seq("doc_id"), "full_outer")
       .select(col("doc_id"), col("brank"), col("vrank"), rrf.as("rrf"))
-      .orderBy(col("rrf").desc, col("doc_id")).limit(cfg.rrfTopK)
+      .orderBy(col("rrf").desc, col("doc_id")).limit(GraftConfig.rrfTopK)
   }
 
   /** q277: MIN-MAX SCORE FUSION — the OTHER standard hybrid-retrieval
@@ -217,7 +218,7 @@ class RankingOps(val cfg: GraftConfig) {
       .select(col("doc_id"), col("bm25"), col("cosine"),
         (norm(col("bm25"), col("bmin"), col("bmax"))
           + norm(col("cosine"), col("vmin"), col("vmax"))).as("fused"))
-      .orderBy(col("fused").desc, col("doc_id")).limit(cfg.rrfTopK)
+      .orderBy(col("fused").desc, col("doc_id")).limit(GraftConfig.rrfTopK)
   }
 
   def q277Sql: String = {
@@ -241,9 +242,9 @@ class RankingOps(val cfg: GraftConfig) {
        |bmpool AS (SELECT doc_id, bm25
        |  FROM (SELECT * FROM bmtot WHERE bm25 > 0.0
        |        ORDER BY bm25 DESC, doc_id LIMIT $PoolK)),
-       |q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = ${cfg.hybridQueryVec}),
+       |q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = ${GraftConfig.hybridQueryVec}),
        |pairs AS (SELECT vec_id AS doc_id, qe, embedding AS ve FROM embeddings, q
-       |  WHERE vec_id <> ${cfg.hybridQueryVec}),
+       |  WHERE vec_id <> ${GraftConfig.hybridQueryVec}),
        |ex AS (SELECT doc_id, unnest(qe) AS a, unnest(ve) AS b FROM pairs),
        |dots AS (SELECT doc_id,
        |    ${graft.functions.Vec.dotDecSqlDuck("a", "b")} AS dot,
@@ -266,12 +267,12 @@ class RankingOps(val cfg: GraftConfig) {
        |          ELSE (v.cosine - vmin) / (vmax - vmin) END) AS fused
        |FROM bmpool b FULL OUTER JOIN vecpool v ON b.doc_id = v.doc_id
        |CROSS JOIN bstats CROSS JOIN vstats
-       |ORDER BY fused DESC, doc_id LIMIT ${cfg.rrfTopK}""".stripMargin
+       |ORDER BY fused DESC, doc_id LIMIT ${GraftConfig.rrfTopK}""".stripMargin
   }
 
   def q110Sql: String = {
     val PoolK = cfg.rrfPoolK
-    val RrfC = cfg.rrfK
+    val RrfC = GraftConfig.rrfK
     val tfConds = Terms.zipWithIndex.map { case (t, i) =>
       s"CAST(SUM(CASE WHEN token = '$t' THEN 1 ELSE 0 END) AS BIGINT) AS tf$i"
     }.mkString(",\n|    ")
@@ -292,9 +293,9 @@ class RankingOps(val cfg: GraftConfig) {
        |    CAST(row_number() OVER (ORDER BY bm25 DESC, doc_id) AS BIGINT) AS brank
        |  FROM (SELECT * FROM bmtot WHERE bm25 > 0.0
        |        ORDER BY bm25 DESC, doc_id LIMIT $PoolK)),
-       |q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = ${cfg.hybridQueryVec}),
+       |q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = ${GraftConfig.hybridQueryVec}),
        |pairs AS (SELECT vec_id AS doc_id, qe, embedding AS ve FROM embeddings, q
-       |  WHERE vec_id <> ${cfg.hybridQueryVec}),
+       |  WHERE vec_id <> ${GraftConfig.hybridQueryVec}),
        |ex AS (SELECT doc_id, unnest(qe) AS a, unnest(ve) AS b FROM pairs),
        |dots AS (SELECT doc_id,
        |    ${graft.functions.Vec.dotDecSqlDuck("a", "b")} AS dot,
@@ -309,7 +310,7 @@ class RankingOps(val cfg: GraftConfig) {
        |  (CASE WHEN b.brank IS NOT NULL THEN 1.0 / ($RrfC + b.brank) ELSE 0.0 END)
        |  + (CASE WHEN v.vrank IS NOT NULL THEN 1.0 / ($RrfC + v.vrank) ELSE 0.0 END) AS rrf
        |FROM bmpool b FULL OUTER JOIN vecpool v ON b.doc_id = v.doc_id
-       |ORDER BY rrf DESC, doc_id LIMIT ${cfg.rrfTopK}""".stripMargin
+       |ORDER BY rrf DESC, doc_id LIMIT ${GraftConfig.rrfTopK}""".stripMargin
   }
 
   /** The micro-quantized per-(doc, term) BM25 score for a given term

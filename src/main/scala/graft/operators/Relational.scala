@@ -17,7 +17,85 @@ import graft.sources.Tables
   */
 class RelationalOps(val cfg: GraftConfig) {
   private val SessionGapMs: Long = cfg.sessionGapMs
-  private val HighValueOrder: Double = cfg.highValueOrder
+  // high-value order threshold
+  val HighValueOrder: Double = 200000.0
+  // classic decision-support parameters (q106/q107, TPC-H Q3/Q5
+  // shapes): market segment + cutoff date + report size for shipping
+  // priority; region + order year for local supplier volume
+  val ShipPrioritySegment: String = "BUILDING"
+  val ShipPriorityDate: String = "1996-06-30 00:00:00"
+  val ShipPriorityTopK: Int = 10
+  val LocalVolumeRegion: String = "ASIA"
+  val LocalVolumeYear: Int = 1997
+  // late-order priority count (q152, TPC-H Q4 shape): order year and
+  // the ship-lag (days past order date) beyond which a line is late
+  val WaitYear: Int = 1996
+  val LateShipDays: Int = 30
+  // sketch-tuned salted join (q265): target fact rows per (key, salt)
+  // slice — saltFactor derives as ceil(estimated hottest-key
+  // multiplicity / this); test-scale default like the other knobs
+  // (a production run would set task-sized millions)
+  val SaltTargetRows: Long = 32L
+  // sole-blame suppliers (q162, TPC-H Q21 shape): report size
+  val SoleBlameTopK: Int = 20
+  // TPC-H canon shapes, round 9. q189 (Q13 custdist): the priority
+  // class excluded from order counting (the reference query's
+  // comment NOT LIKE filter, on a column this schema has)
+  val CustDistExcludePriority: String = "5-LOW"
+  // q190 (Q17 small-quantity revenue): the audited brand
+  val SmallQtyBrand: String = "Brand#12"
+  // q191 (Q22 global customers): the nation-key set standing in for
+  // Q22's phone country codes, and the dormancy cutoff — on this
+  // synthetic corpus EVERY customer has at least one order, so Q22's
+  // literal "no orders at all" is structurally vacuous; "no orders
+  // at or after the cutoff" keeps the anti-join shape non-vacuous
+  // and is the more realistic churn question anyway
+  val GlobalNationKeys: Seq[Int] = Seq(1, 3, 5, 7, 9, 11, 13)
+  val GlobalDormantSince: String = "2000-01-01"
+  // q193 (Q7 volume shipping): the audited nation pair
+  val VolumeNationA: String = "NATION_1"
+  val VolumeNationB: String = "NATION_2"
+  // min-cost supplier (q202, the Q2 shape): the region whose suppliers
+  // compete and the part type audited
+  val MinCostRegion: String = "EUROPE"
+  val MinCostPartType: String = "STANDARD"
+  // part-value concentration (q203, the Q11 shape): the nation whose
+  // supply value is profiled, and the share denominator — a part is
+  // kept when value * denom > total (exact decimal cross-multiply).
+  // NATION_3 is the smallest nation key with suppliers at EVERY
+  // test SF (NATION_7 has none at sf0.001 — the query would be
+  // vacuously empty at spec scale)
+  val ValueNation: String = "NATION_3"
+  val ValueShareDenom: Int = 1000
+  // q199 (Q8 market share): the supplier nation whose share is
+  // measured, within customers of this region
+  val MarketShareNation: String = "NATION_3"
+  val MarketShareRegion: String = "AFRICA"
+  // supplier diversity (q166, TPC-H Q16 shape): suppliers with
+  // account balance below this are excluded (the complaint filter)
+  val SuppExcludeBelowAcctbal: Double = 0.0
+  // out-of-fold target encoding (q244): deterministic fold count
+  val TargetFolds: Int = 4
+  // q311 (Q9 profit roll-up): parts whose name contains this token;
+  // unit supply cost is proxied by the part's retail price (this
+  // schema has no partsupp table)
+  val ProfitPartToken: String = "widget"
+  // q312 (Q15 top supplier): revenue-view window start and length
+  val TopSupplierFrom: String = "1997-01-01"
+  val TopSupplierDays: Int = 90
+  // q313 (Q20 nested semijoin): part-name prefix, audited ship year,
+  // per-(supplier, part) moved-quantity threshold, and the audited
+  // nation — NATION_19 has qualifying suppliers at every test SF
+  val PendingPartPrefix: String = "c"
+  val PendingShipYear: Int = 1998
+  val PendingQtyMin: Double = 50.0
+  val PendingNation: String = "NATION_19"
+  // q347 (Q10 returned-item customers): rows surviving the ordered
+  // limit before the dim join-backs
+  val ReturnedTopK: Int = 20
+  // q348 (Q12 ship-band priority): a line is 'FAST' when it shipped
+  // within this many days of its order (exact epoch-ms comparison)
+  val ShipBandFastDays: Int = 30
 
   /** SUM(CAST(c AS DECIMAL(p,s))) :: DOUBLE — order-insensitive exact sum. */
   def dsum(c: Column, p: Int = 18, s: Int = 2): Column =
@@ -401,7 +479,7 @@ class RelationalOps(val cfg: GraftConfig) {
       |  ORDER BY o_totalprice, o_orderkey)""".stripMargin
 
   /** q106: shipping priority — the TPC-H Q3 shape: revenue of undelivered
-    * orders for one market segment, top ${cfg.shipPriorityTopK} by
+    * orders for one market segment, top ${ShipPriorityTopK} by
     * revenue. The canonical selective-multiway-join plan: the segment-
     * filtered customer dim BROADCASTS into the orders scan (filter
     * pushed to the date predicate), the surviving orders shuffle-join
@@ -411,9 +489,9 @@ class RelationalOps(val cfg: GraftConfig) {
     * the double compares in the ordering are bit-identical across
     * engines; ties break on the order key. */
   def q106ShipPriority(spark: SparkSession, dir: String): DataFrame = {
-    val cut = s"TIMESTAMP'${cfg.shipPriorityDate}'"
+    val cut = s"TIMESTAMP'${ShipPriorityDate}'"
     val cust = Tables.customer(spark, dir)
-      .filter(col("c_mktsegment") === cfg.shipPrioritySegment)
+      .filter(col("c_mktsegment") === ShipPrioritySegment)
       .select("c_custkey")
     val ord = Tables.orders(spark, dir)
       .filter(expr(s"o_orderdate < $cut"))
@@ -429,7 +507,7 @@ class RelationalOps(val cfg: GraftConfig) {
         col("o_orderpriority"))
       .agg(dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount")), 24, 6).as("revenue"))
       .orderBy(col("revenue").desc, col("o_orderdate_ms"), col("l_orderkey"))
-      .limit(cfg.shipPriorityTopK)
+      .limit(ShipPriorityTopK)
   }
 
   def q106Sql: String =
@@ -438,12 +516,12 @@ class RelationalOps(val cfg: GraftConfig) {
        |FROM lineitem
        |JOIN orders ON l_orderkey = o_orderkey
        |JOIN customer ON o_custkey = c_custkey
-       |WHERE c_mktsegment = '${cfg.shipPrioritySegment}'
-       |  AND o_orderdate < TIMESTAMP '${cfg.shipPriorityDate}'
-       |  AND l_shipdate > TIMESTAMP '${cfg.shipPriorityDate}'
+       |WHERE c_mktsegment = '${ShipPrioritySegment}'
+       |  AND o_orderdate < TIMESTAMP '${ShipPriorityDate}'
+       |  AND l_shipdate > TIMESTAMP '${ShipPriorityDate}'
        |GROUP BY 1, 2, 3
        |ORDER BY revenue DESC, o_orderdate_ms, l_orderkey
-       |LIMIT ${cfg.shipPriorityTopK}""".stripMargin
+       |LIMIT ${ShipPriorityTopK}""".stripMargin
 
   /** q107: local supplier volume — the TPC-H Q5 shape: revenue by
     * nation for one region and order year, counting only lineitems
@@ -457,11 +535,11 @@ class RelationalOps(val cfg: GraftConfig) {
   def q107LocalVolume(spark: SparkSession, dir: String): DataFrame = {
     val custNat = Tables.customer(spark, dir)
       .join(Tables.nation(spark, dir), col("c_nationkey") === col("n_nationkey"))
-      .join(Tables.region(spark, dir).filter(col("r_name") === cfg.localVolumeRegion),
+      .join(Tables.region(spark, dir).filter(col("r_name") === LocalVolumeRegion),
         col("n_regionkey") === col("r_regionkey"))
       .select(col("c_custkey"), col("c_nationkey"), col("n_name"))
     val ord = Tables.orders(spark, dir)
-      .filter(year(col("o_orderdate")) === cfg.localVolumeYear)
+      .filter(year(col("o_orderdate")) === LocalVolumeYear)
       .join(broadcast(custNat), col("o_custkey") === col("c_custkey"))
       .select("o_orderkey", "c_nationkey", "n_name")
     Tables.lineitem(spark, dir)
@@ -501,7 +579,7 @@ class RelationalOps(val cfg: GraftConfig) {
   }
 
   /** The q265 salt choice: ceil(CMS hottest-key upper bound /
-    * cfg.saltTargetRows), floored at 1 and capped by cfg.saltFactor·4
+    * SaltTargetRows), floored at 1 and capped by cfg.saltFactor·4
     * (replication cost guard). Exposed for the spec.
     *
     * NOTE (documented per the round-12 advice): this runs the sketch
@@ -516,14 +594,14 @@ class RelationalOps(val cfg: GraftConfig) {
   private[graft] def sketchSaltFactor(keys: DataFrame): Int = {
     val est = Option(Sketch.cmsMaxFreq(keys).collect().head
       .getAs[java.lang.Long]("max_freq_est")).map(_.longValue).getOrElse(0L)
-    val raw = (est + cfg.saltTargetRows - 1) / cfg.saltTargetRows
+    val raw = (est + SaltTargetRows - 1) / SaltTargetRows
     math.max(1L, math.min(raw, cfg.saltFactor.toLong * 4)).toInt
   }
 
   /** q265: SKETCH-TUNED salted join — the round-11 verdict's #6: q124
     * diagnoses skew and q153 salts with a fixed hand-set factor; this
     * query derives the factor FROM the sketch at plan-build time —
-    * salt = ceil(est_max_freq / $saltTargetRows) where est_max_freq is
+    * salt = ceil(est_max_freq / $SaltTargetRows) where est_max_freq is
     * the CMS upper bound on the hottest key's multiplicity
     * ([[SketchOps.cmsMaxFreq]]) — turning the two diagnostics into one
     * self-tuning join. The sketch pass is one map-combinable aggregate
@@ -609,7 +687,7 @@ class RelationalOps(val cfg: GraftConfig) {
 
   /** q152: late-order priority count — the TPC-H Q4 shape: how many
     * orders per priority class (one year's window) had at least one
-    * lineitem shipped more than ${cfg.lateShipDays} days after the
+    * lineitem shipped more than ${LateShipDays} days after the
     * order date. EXISTS compiles to a LEFT SEMI join with the ship-lag
     * riding the join condition (each order emits at most once no
     * matter how many late lines it has); both sides shuffle on the
@@ -618,9 +696,9 @@ class RelationalOps(val cfg: GraftConfig) {
     * filtered orders side. Timestamps compare in epoch ms (the q8 /
     * Temporal idiom) so both engines evaluate the lag identically. */
   def q152LateOrders(spark: SparkSession, dir: String): DataFrame = {
-    val lagMs = cfg.lateShipDays.toLong * 86400000L
+    val lagMs = LateShipDays.toLong * 86400000L
     val ord = Tables.orders(spark, dir)
-      .filter(year(col("o_orderdate")) === cfg.waitYear)
+      .filter(year(col("o_orderdate")) === WaitYear)
       .select(col("o_orderkey"), col("o_orderpriority"),
         unix_millis(col("o_orderdate").cast("timestamp")).as("odate_ms"))
     val li = Tables.lineitem(spark, dir)
@@ -636,11 +714,11 @@ class RelationalOps(val cfg: GraftConfig) {
   def q152Sql: String =
     s"""SELECT o_orderpriority, count(*) AS n_orders
        |FROM orders o
-       |WHERE year(o_orderdate) = ${cfg.waitYear}
+       |WHERE year(o_orderdate) = ${WaitYear}
        |  AND EXISTS (SELECT 1 FROM lineitem l
        |    WHERE l.l_orderkey = o.o_orderkey
        |      AND epoch_ms(l_shipdate) >
-       |          epoch_ms(o_orderdate) + CAST(${cfg.lateShipDays} AS BIGINT) * 86400000)
+       |          epoch_ms(o_orderdate) + CAST(${LateShipDays} AS BIGINT) * 86400000)
        |GROUP BY o_orderpriority""".stripMargin
 
   /** q177: explicit GROUPING SETS — the general grouping-lattice form
@@ -748,7 +826,7 @@ class RelationalOps(val cfg: GraftConfig) {
   /** q166: supplier diversity per part group — the TPC-H Q16 shape:
     * how many DISTINCT suppliers ship each (brand, size) family,
     * excluding suppliers in bad standing (acctbal <
-    * ${cfg.suppExcludeBelowAcctbal} — Q16's complaint filter, as a
+    * ${SuppExcludeBelowAcctbal} — Q16's complaint filter, as a
     * broadcast ANTI join so exclusion never post-filters a wider
     * product). The (part, supplier) pairs come pre-distinct off
     * lineitem on its natural keys; the distinct count plans as
@@ -757,7 +835,7 @@ class RelationalOps(val cfg: GraftConfig) {
     * Output is bounded by the brand × size domain. */
   def q166SupplierDiversity(spark: SparkSession, dir: String): DataFrame = {
     val bad = Tables.supplier(spark, dir)
-      .filter(col("s_acctbal") < cfg.suppExcludeBelowAcctbal)
+      .filter(col("s_acctbal") < SuppExcludeBelowAcctbal)
       .select("s_suppkey")
     val ps = Tables.lineitem(spark, dir)
       .select("l_partkey", "l_suppkey").distinct()
@@ -774,7 +852,7 @@ class RelationalOps(val cfg: GraftConfig) {
        |JOIN part ON l_partkey = p_partkey
        |WHERE l_suppkey NOT IN (
        |  SELECT s_suppkey FROM supplier
-       |  WHERE s_acctbal < ${cfg.suppExcludeBelowAcctbal})
+       |  WHERE s_acctbal < ${SuppExcludeBelowAcctbal})
        |GROUP BY 1, 2""".stripMargin
 
   /** q162: sole-blame suppliers — the TPC-H Q21 shape ("suppliers who
@@ -785,12 +863,12 @@ class RelationalOps(val cfg: GraftConfig) {
     * exactly 1. One distinct + one aggregate on the natural order key
     * replaces two correlated subquery joins over lineitem; min = max =
     * the blamed supplier when the count is 1. Late = shipped more than
-    * ${cfg.lateShipDays} days past the order date (the q152
-    * predicate), F-status orders only. Top-${cfg.soleBlameTopK} by
+    * ${LateShipDays} days past the order date (the q152
+    * predicate), F-status orders only. Top-${SoleBlameTopK} by
     * blame count plans as TakeOrderedAndProject; supplier names ride a
     * broadcast dim. */
   def q162SoleBlame(spark: SparkSession, dir: String): DataFrame = {
-    val lagMs = cfg.lateShipDays.toLong * 86400000L
+    val lagMs = LateShipDays.toLong * 86400000L
     val ord = Tables.orders(spark, dir)
       .filter(col("o_orderstatus") === "F")
       .select(col("o_orderkey"),
@@ -808,7 +886,7 @@ class RelationalOps(val cfg: GraftConfig) {
       .join(broadcast(Tables.supplier(spark, dir).select("s_suppkey", "s_name")),
         Seq("s_suppkey"))
       .orderBy(col("n_orders").desc, col("s_name"))
-      .limit(cfg.soleBlameTopK)
+      .limit(SoleBlameTopK)
   }
 
   def q162Sql: String =
@@ -817,7 +895,7 @@ class RelationalOps(val cfg: GraftConfig) {
        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
        |  WHERE o_orderstatus = 'F'
        |    AND epoch_ms(l_shipdate) >
-       |        epoch_ms(o_orderdate) + CAST(${cfg.lateShipDays} AS BIGINT) * 86400000),
+       |        epoch_ms(o_orderdate) + CAST(${LateShipDays} AS BIGINT) * 86400000),
        |blame AS (
        |  SELECT o_orderkey, min(l_suppkey) AS s_suppkey
        |  FROM late GROUP BY 1 HAVING count(*) = 1)
@@ -825,7 +903,7 @@ class RelationalOps(val cfg: GraftConfig) {
        |FROM blame b JOIN supplier s USING (s_suppkey)
        |GROUP BY 1, 3
        |ORDER BY n_orders DESC, s_name
-       |LIMIT ${cfg.soleBlameTopK}""".stripMargin
+       |LIMIT ${SoleBlameTopK}""".stripMargin
 
   def q107Sql: String =
     s"""SELECT n_name,
@@ -837,8 +915,8 @@ class RelationalOps(val cfg: GraftConfig) {
        |JOIN supplier ON l_suppkey = s_suppkey AND s_nationkey = c_nationkey
        |JOIN nation ON c_nationkey = n_nationkey
        |JOIN region ON n_regionkey = r_regionkey
-       |WHERE r_name = '${cfg.localVolumeRegion}'
-       |  AND year(o_orderdate) = ${cfg.localVolumeYear}
+       |WHERE r_name = '${LocalVolumeRegion}'
+       |  AND year(o_orderdate) = ${LocalVolumeYear}
        |GROUP BY n_name""".stripMargin
 
   /** q189: customer order-count DISTRIBUTION — the TPC-H Q13 shape
@@ -854,7 +932,7 @@ class RelationalOps(val cfg: GraftConfig) {
     * the left join's null → coalesce 0. */
   def q189CustDist(spark: SparkSession, dir: String): DataFrame = {
     val oc = Tables.orders(spark, dir)
-      .filter(col("o_orderpriority") =!= cfg.custDistExcludePriority)
+      .filter(col("o_orderpriority") =!= CustDistExcludePriority)
       .groupBy("o_custkey").agg(count(lit(1)).as("oc"))
     Tables.customer(spark, dir).select("c_custkey")
       .join(oc, col("c_custkey") === col("o_custkey"), "left")
@@ -864,7 +942,7 @@ class RelationalOps(val cfg: GraftConfig) {
 
   def q189Sql: String =
     s"""WITH oc AS (SELECT o_custkey, count(*) AS oc FROM orders
-       |  WHERE o_orderpriority <> '${cfg.custDistExcludePriority}' GROUP BY 1)
+       |  WHERE o_orderpriority <> '${CustDistExcludePriority}' GROUP BY 1)
        |SELECT c_count, count(*) AS custdist FROM (
        |  SELECT coalesce(oc, 0) AS c_count
        |  FROM customer LEFT JOIN oc ON c_custkey = o_custkey)
@@ -883,7 +961,7 @@ class RelationalOps(val cfg: GraftConfig) {
     * matter the corpus. One fixed /7.0 division at the end. */
   def q190SmallQtyRevenue(spark: SparkSession, dir: String): DataFrame = {
     val pk = Tables.part(spark, dir)
-      .filter(col("p_brand") === cfg.smallQtyBrand).select("p_partkey")
+      .filter(col("p_brand") === SmallQtyBrand).select("p_partkey")
     val li = Tables.lineitem(spark, dir)
       .join(broadcast(pk), col("l_partkey") === col("p_partkey"))
       .select(col("l_partkey"),
@@ -900,7 +978,7 @@ class RelationalOps(val cfg: GraftConfig) {
     s"""WITH li AS (SELECT l_partkey,
        |    CAST(floor(l_quantity * 100) AS BIGINT) AS q100, l_extendedprice
        |  FROM lineitem JOIN part ON l_partkey = p_partkey
-       |  WHERE p_brand = '${cfg.smallQtyBrand}'),
+       |  WHERE p_brand = '${SmallQtyBrand}'),
        |st AS (SELECT l_partkey, CAST(SUM(q100) AS BIGINT) AS s100,
        |    count(*) AS n FROM li GROUP BY 1)
        |SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(24,6))) AS DOUBLE) / 7.0
@@ -911,7 +989,7 @@ class RelationalOps(val cfg: GraftConfig) {
   /** q191: untapped customers — the TPC-H Q22 shape ("global sales
     * opportunity"): per selected nation (standing in for Q22's phone
     * country codes), DORMANT customers — none of their orders at or
-    * after ${cfg.globalDormantSince} (on this corpus every customer
+    * after ${GlobalDormantSince} (on this corpus every customer
     * has SOME order, so Q22's literal no-orders test is structurally
     * vacuous; dormancy keeps the anti-join shape non-vacuous and is
     * the realistic churn question) — whose balance beats the selected
@@ -923,7 +1001,7 @@ class RelationalOps(val cfg: GraftConfig) {
     * orders scan. totacctbal is the exact integer sum with ONE final
     * /100.0. */
   def q191GlobalCustomers(spark: SparkSession, dir: String): DataFrame = {
-    val ks = cfg.globalNationKeys.map(Int.box)
+    val ks = GlobalNationKeys.map(Int.box)
     val sel = Tables.customer(spark, dir)
       .filter(col("c_nationkey").isin(ks: _*))
       .select(col("c_custkey"), col("c_nationkey"),
@@ -931,7 +1009,7 @@ class RelationalOps(val cfg: GraftConfig) {
     val thr = sel.filter(col("bal100") > 0)
       .agg(sum(col("bal100")).as("s100"), count(lit(1)).as("n"))
     val recent = Tables.orders(spark, dir)
-      .filter(expr(s"o_orderdate >= TIMESTAMP'${cfg.globalDormantSince}'"))
+      .filter(expr(s"o_orderdate >= TIMESTAMP'${GlobalDormantSince}'"))
       .select(col("o_custkey"))
     sel
       .join(recent, col("c_custkey") === col("o_custkey"), "left_anti")
@@ -946,7 +1024,7 @@ class RelationalOps(val cfg: GraftConfig) {
     s"""WITH sel AS (SELECT c_custkey, c_nationkey,
        |    CAST(floor(c_acctbal * 100) AS BIGINT) AS bal100
        |  FROM customer
-       |  WHERE c_nationkey IN (${cfg.globalNationKeys.mkString(", ")})),
+       |  WHERE c_nationkey IN (${GlobalNationKeys.mkString(", ")})),
        |thr AS (SELECT CAST(SUM(bal100) AS BIGINT) AS s100, count(*) AS n
        |  FROM sel WHERE bal100 > 0)
        |SELECT c_nationkey, count(*) AS numcust,
@@ -954,7 +1032,7 @@ class RelationalOps(val cfg: GraftConfig) {
        |FROM sel, thr
        |WHERE bal100 * n > s100
        |  AND NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey
-       |    AND o_orderdate >= TIMESTAMP '${cfg.globalDormantSince}')
+       |    AND o_orderdate >= TIMESTAMP '${GlobalDormantSince}')
        |GROUP BY c_nationkey""".stripMargin
 
   /** q192: discounted revenue under DISJUNCTIVE bands — the TPC-H Q19
@@ -1014,7 +1092,7 @@ class RelationalOps(val cfg: GraftConfig) {
   def q199MarketShare(spark: SparkSession, dir: String): DataFrame = {
     val regNations = Tables.nation(spark, dir)
       .join(Tables.region(spark, dir)
-        .filter(col("r_name") === cfg.marketShareRegion).select("r_regionkey"),
+        .filter(col("r_name") === MarketShareRegion).select("r_regionkey"),
         col("n_regionkey") === col("r_regionkey"))
       .select(col("n_nationkey"))
     val cust = broadcast(Tables.customer(spark, dir)
@@ -1023,7 +1101,7 @@ class RelationalOps(val cfg: GraftConfig) {
     val supp = broadcast(Tables.supplier(spark, dir)
       .join(Tables.nation(spark, dir).select("n_nationkey", "n_name"),
         col("s_nationkey") === col("n_nationkey"))
-      .select(col("s_suppkey"), (col("n_name") === cfg.marketShareNation).as("is_target")))
+      .select(col("s_suppkey"), (col("n_name") === MarketShareNation).as("is_target")))
     val ord = Tables.orders(spark, dir).select("o_orderkey", "o_custkey", "o_orderdate")
       .join(cust, col("o_custkey") === col("c_custkey"))
       .select(col("o_orderkey"), year(col("o_orderdate")).cast("long").as("o_year"))
@@ -1045,7 +1123,7 @@ class RelationalOps(val cfg: GraftConfig) {
     s"""WITH rows_ AS (
        |  SELECT year(o_orderdate) AS o_year,
        |    l_extendedprice * (1.0 - l_discount) AS volume,
-       |    ns.n_name = '${cfg.marketShareNation}' AS is_target
+       |    ns.n_name = '${MarketShareNation}' AS is_target
        |  FROM lineitem
        |  JOIN orders ON l_orderkey = o_orderkey
        |  JOIN customer ON o_custkey = c_custkey
@@ -1053,7 +1131,7 @@ class RelationalOps(val cfg: GraftConfig) {
        |  JOIN region ON nc.n_regionkey = r_regionkey
        |  JOIN supplier ON l_suppkey = s_suppkey
        |  JOIN nation ns ON s_nationkey = ns.n_nationkey
-       |  WHERE r_name = '${cfg.marketShareRegion}')
+       |  WHERE r_name = '${MarketShareRegion}')
        |SELECT o_year,
        |  CAST(SUM(CAST(CASE WHEN is_target THEN volume ELSE 0.0 END
        |    AS DECIMAL(24,6))) AS DOUBLE) AS nation_revenue,
@@ -1074,7 +1152,7 @@ class RelationalOps(val cfg: GraftConfig) {
     * broadcast joins — never post-filtering a wider product. Output is
     * bounded by 2 directions × years. */
   def q193VolumeShipping(spark: SparkSession, dir: String): DataFrame = {
-    val (na, nb) = (cfg.volumeNationA, cfg.volumeNationB)
+    val (na, nb) = (VolumeNationA, VolumeNationB)
     val nat = Tables.nation(spark, dir).select("n_nationkey", "n_name")
       .filter(col("n_name").isin(na, nb))
     val supp = broadcast(Tables.supplier(spark, dir)
@@ -1111,8 +1189,8 @@ class RelationalOps(val cfg: GraftConfig) {
        |  JOIN customer ON o_custkey = c_custkey
        |  JOIN nation ns ON s_nationkey = ns.n_nationkey
        |  JOIN nation nc ON c_nationkey = nc.n_nationkey
-       |  WHERE (ns.n_name = '${cfg.volumeNationA}' AND nc.n_name = '${cfg.volumeNationB}')
-       |     OR (ns.n_name = '${cfg.volumeNationB}' AND nc.n_name = '${cfg.volumeNationA}'))
+       |  WHERE (ns.n_name = '${VolumeNationA}' AND nc.n_name = '${VolumeNationB}')
+       |     OR (ns.n_name = '${VolumeNationB}' AND nc.n_name = '${VolumeNationA}'))
        |GROUP BY 1, 2, 3""".stripMargin
 
   /** q202: min-cost supplier per part — the TPC-H Q2 shape, the last
@@ -1135,13 +1213,13 @@ class RelationalOps(val cfg: GraftConfig) {
     val rs = broadcast(Tables.supplier(spark, dir)
       .join(Tables.nation(spark, dir)
         .join(Tables.region(spark, dir)
-          .filter(col("r_name") === cfg.minCostRegion).select("r_regionkey"),
+          .filter(col("r_name") === MinCostRegion).select("r_regionkey"),
           col("n_regionkey") === col("r_regionkey"))
         .select("n_nationkey", "n_name"),
         col("s_nationkey") === col("n_nationkey"))
       .select(col("s_suppkey"), col("s_name"), col("s_acctbal"), col("n_name")))
     val pf = broadcast(Tables.part(spark, dir)
-      .filter(col("p_type") === cfg.minCostPartType)
+      .filter(col("p_type") === MinCostPartType)
       .select("p_partkey", "p_brand"))
     val offers = Tables.lineitem(spark, dir)
       .select("l_partkey", "l_suppkey", "l_quantity", "l_extendedprice")
@@ -1166,9 +1244,9 @@ class RelationalOps(val cfg: GraftConfig) {
     s"""WITH rs AS (SELECT s_suppkey, s_name, s_acctbal, n_name
        |  FROM supplier JOIN nation ON s_nationkey = n_nationkey
        |  JOIN region ON n_regionkey = r_regionkey
-       |  WHERE r_name = '${cfg.minCostRegion}'),
+       |  WHERE r_name = '${MinCostRegion}'),
        |pf AS (SELECT p_partkey, p_brand FROM part
-       |  WHERE p_type = '${cfg.minCostPartType}'),
+       |  WHERE p_type = '${MinCostPartType}'),
        |offers AS (SELECT l_partkey, l_suppkey,
        |    min(CAST(floor(l_extendedprice / l_quantity * 100) AS BIGINT)) AS cost100
        |  FROM lineitem JOIN rs ON l_suppkey = s_suppkey
@@ -1198,7 +1276,7 @@ class RelationalOps(val cfg: GraftConfig) {
   def q203ValueConcentration(spark: SparkSession, dir: String): DataFrame = {
     val supp = broadcast(Tables.supplier(spark, dir)
       .join(Tables.nation(spark, dir)
-        .filter(col("n_name") === cfg.valueNation).select("n_nationkey"),
+        .filter(col("n_name") === ValueNation).select("n_nationkey"),
         col("s_nationkey") === col("n_nationkey"))
       .select("s_suppkey"))
     val perPart = Tables.lineitem(spark, dir)
@@ -1209,7 +1287,7 @@ class RelationalOps(val cfg: GraftConfig) {
         .cast("decimal(24,6)")).as("vdec"))
     val total = perPart.agg(sum(col("vdec")).as("tdec"))
     perPart.crossJoin(broadcast(total))
-      .filter(col("vdec") * lit(cfg.valueShareDenom) > col("tdec"))
+      .filter(col("vdec") * lit(ValueShareDenom) > col("tdec"))
       .select(col("l_partkey").as("p_partkey"),
         col("vdec").cast("double").as("part_value"))
   }
@@ -1219,12 +1297,12 @@ class RelationalOps(val cfg: GraftConfig) {
        |    SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(24,6))) AS vdec
        |  FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
        |  JOIN nation ON s_nationkey = n_nationkey
-       |  WHERE n_name = '${cfg.valueNation}'
+       |  WHERE n_name = '${ValueNation}'
        |  GROUP BY 1),
        |tot AS (SELECT SUM(vdec) AS tdec FROM pv)
        |SELECT l_partkey AS p_partkey, CAST(vdec AS DOUBLE) AS part_value
        |FROM pv, tot
-       |WHERE vdec * ${cfg.valueShareDenom} > tdec""".stripMargin
+       |WHERE vdec * ${ValueShareDenom} > tdec""".stripMargin
 
   /** q254: TIME-DECAYED SCORES, integer-exact — recency-weighted
     * customer value (the leaderboard/churn-risk ranking signal) with
@@ -1273,7 +1351,7 @@ class RelationalOps(val cfg: GraftConfig) {
     * categorical encoder every tabular-ML pipeline needs: replace
     * `c_mktsegment` with the mean order value of the segment, computed
     * for each customer WITHOUT the orders of the customer's own fold
-    * (folds = custkey mod ${cfg.targetFolds}, deterministic — a random
+    * (folds = custkey mod ${TargetFolds}, deterministic — a random
     * fold re-labels training data every rebuild). In-fold means leak
     * the target into the feature (the classic self-fulfilling encode);
     * the out-of-fold form is exact hold-out hygiene, computed here
@@ -1289,7 +1367,7 @@ class RelationalOps(val cfg: GraftConfig) {
     * broadcast back onto customers. The division is one fixed
     * double op over exact decimal sums (engine-identical). */
   def q244TargetEncode(spark: SparkSession, dir: String): DataFrame = {
-    val K = cfg.targetFolds
+    val K = TargetFolds
     val c = Tables.customer(spark, dir)
       .select(col("c_custkey"), col("c_mktsegment"),
         (col("c_custkey") % K).as("fold"))
@@ -1317,7 +1395,7 @@ class RelationalOps(val cfg: GraftConfig) {
 
   def q244Sql: String =
     s"""WITH c AS (SELECT c_custkey, c_mktsegment,
-       |    c_custkey % ${cfg.targetFolds} AS fold FROM customer),
+       |    c_custkey % ${TargetFolds} AS fold FROM customer),
        |sf AS (SELECT c_mktsegment, fold,
        |    SUM(CAST(o_totalprice AS DECIMAL(25,6))) AS s, count(*) AS n
        |  FROM orders JOIN c ON o_custkey = c_custkey
@@ -1423,7 +1501,7 @@ class RelationalOps(val cfg: GraftConfig) {
     * map-combinable hash aggregate over nations × years. */
   def q311ProfitRollup(spark: SparkSession, dir: String): DataFrame = {
     val pf = broadcast(Tables.part(spark, dir)
-      .filter(col("p_name").contains(cfg.profitPartToken))
+      .filter(col("p_name").contains(ProfitPartToken))
       .select("p_partkey", "p_retailprice"))
     val supp = broadcast(Tables.supplier(spark, dir)
       .join(Tables.nation(spark, dir).select("n_nationkey", "n_name"),
@@ -1453,11 +1531,11 @@ class RelationalOps(val cfg: GraftConfig) {
        |  JOIN supplier ON l_suppkey = s_suppkey
        |  JOIN orders ON l_orderkey = o_orderkey
        |  JOIN nation ON s_nationkey = n_nationkey
-       |  WHERE contains(p_name, '${cfg.profitPartToken}'))
+       |  WHERE contains(p_name, '${ProfitPartToken}'))
        |GROUP BY 1, 2""".stripMargin
 
   /** q312: TOP SUPPLIER — the TPC-H Q15 shape (max-of-aggregate view
-    * join-back): per-supplier revenue over a fixed ${cfg.topSupplierDays}-day
+    * join-back): per-supplier revenue over a fixed ${TopSupplierDays}-day
     * ship window, then exactly the suppliers achieving the maximum.
     * The view's revenue is an exact DECIMAL sum and the max and its
     * equality join-back compare those exact decimals — no float sits
@@ -1469,8 +1547,8 @@ class RelationalOps(val cfg: GraftConfig) {
     * re-aggregates it and rides a broadcast cross-join back — the
     * q203 global-scalar discipline; no window function anywhere. */
   def q312TopSupplier(spark: SparkSession, dir: String): DataFrame = {
-    val from = to_timestamp(lit(cfg.topSupplierFrom))
-    val until = from + expr(s"INTERVAL ${cfg.topSupplierDays} DAYS")
+    val from = to_timestamp(lit(TopSupplierFrom))
+    val until = from + expr(s"INTERVAL ${TopSupplierDays} DAYS")
     val rev = Tables.lineitem(spark, dir)
       .filter(col("l_shipdate") >= from && col("l_shipdate") < until)
       .groupBy("l_suppkey")
@@ -1489,9 +1567,9 @@ class RelationalOps(val cfg: GraftConfig) {
     s"""WITH rev AS (SELECT l_suppkey,
        |    SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(24,6))) AS rdec
        |  FROM lineitem
-       |  WHERE l_shipdate >= TIMESTAMP '${cfg.topSupplierFrom}'
-       |    AND l_shipdate < TIMESTAMP '${cfg.topSupplierFrom}'
-       |      + INTERVAL ${cfg.topSupplierDays} DAY
+       |  WHERE l_shipdate >= TIMESTAMP '${TopSupplierFrom}'
+       |    AND l_shipdate < TIMESTAMP '${TopSupplierFrom}'
+       |      + INTERVAL ${TopSupplierDays} DAY
        |  GROUP BY 1),
        |m AS (SELECT MAX(rdec) AS m FROM rev)
        |SELECT s_suppkey, s_name, CAST(rdec AS DOUBLE) AS total_revenue
@@ -1502,9 +1580,9 @@ class RelationalOps(val cfg: GraftConfig) {
 
   /** q313: CAPACITY SEMIJOIN — the TPC-H Q20 shape (nested semijoin
     * chain), the last distinct decorrelation plan in the canon tail:
-    * the ${cfg.pendingNation} suppliers who moved more than
-    * ${cfg.pendingQtyMin} units of any '${cfg.pendingPartPrefix}%'-named
-    * part in ${cfg.pendingShipYear} — supplier ⋉ (grouped lineitem ⋉
+    * the ${PendingNation} suppliers who moved more than
+    * ${PendingQtyMin} units of any '${PendingPartPrefix}%'-named
+    * part in ${PendingShipYear} — supplier ⋉ (grouped lineitem ⋉
     * LIKE-filtered part). Quantities are integral doubles, so the
     * HAVING sum and its threshold compare exactly on both engines.
     *
@@ -1515,19 +1593,19 @@ class RelationalOps(val cfg: GraftConfig) {
     * the nation filter rides the broadcast nation dim. */
   def q313CapacitySemijoin(spark: SparkSession, dir: String): DataFrame = {
     val pf = broadcast(Tables.part(spark, dir)
-      .filter(col("p_name").startsWith(cfg.pendingPartPrefix))
+      .filter(col("p_name").startsWith(PendingPartPrefix))
       .select("p_partkey"))
     val movers = Tables.lineitem(spark, dir)
-      .filter(year(col("l_shipdate")) === cfg.pendingShipYear)
+      .filter(year(col("l_shipdate")) === PendingShipYear)
       .select("l_partkey", "l_suppkey", "l_quantity")
       .join(pf, col("l_partkey") === col("p_partkey"))
       .groupBy("l_suppkey", "l_partkey")
       .agg(sum(col("l_quantity")).as("qty"))
-      .filter(col("qty") > cfg.pendingQtyMin)
+      .filter(col("qty") > PendingQtyMin)
       .select("l_suppkey")
     Tables.supplier(spark, dir)
       .join(broadcast(Tables.nation(spark, dir)
-        .filter(col("n_name") === cfg.pendingNation).select("n_nationkey")),
+        .filter(col("n_name") === PendingNation).select("n_nationkey")),
         col("s_nationkey") === col("n_nationkey"))
       .join(movers, col("s_suppkey") === col("l_suppkey"), "left_semi")
       .select("s_suppkey", "s_name", "s_acctbal")
@@ -1537,14 +1615,14 @@ class RelationalOps(val cfg: GraftConfig) {
     s"""SELECT s_suppkey, s_name, s_acctbal
        |FROM supplier
        |JOIN nation ON s_nationkey = n_nationkey
-       |WHERE n_name = '${cfg.pendingNation}'
+       |WHERE n_name = '${PendingNation}'
        |  AND s_suppkey IN (
        |    SELECT l_suppkey FROM lineitem
        |    JOIN part ON l_partkey = p_partkey
-       |    WHERE p_name LIKE '${cfg.pendingPartPrefix}%'
-       |      AND year(l_shipdate) = ${cfg.pendingShipYear}
+       |    WHERE p_name LIKE '${PendingPartPrefix}%'
+       |      AND year(l_shipdate) = ${PendingShipYear}
        |    GROUP BY l_suppkey, l_partkey
-       |    HAVING SUM(l_quantity) > ${cfg.pendingQtyMin})""".stripMargin
+       |    HAVING SUM(l_quantity) > ${PendingQtyMin})""".stripMargin
 
   /** q336: PROMO REVENUE SHARE — the TPC-H Q14 shape (conditional
     * share of a windowed fact aggregate): over one full calendar
@@ -1735,7 +1813,7 @@ class RelationalOps(val cfg: GraftConfig) {
     * enrich classic, planned scale-right: returned-line revenue
     * aggregates per CUSTOMER KEY first (map-combinable over the
     * quarter-windowed orders⋈returned-lines join), the top
-    * ${cfg.returnedTopK} plan as TakeOrderedAndProject on (revenue
+    * ${ReturnedTopK} plan as TakeOrderedAndProject on (revenue
     * desc, custkey) — k rows leave the aggregate, and only THEN do
     * the customer and nation dims join back (broadcast onto k rows;
     * the canon's group-by-all-customer-columns form drags name/
@@ -1760,7 +1838,7 @@ class RelationalOps(val cfg: GraftConfig) {
       .agg(dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount")), 24, 6)
         .as("revenue"))
       .orderBy(col("revenue").desc, col("o_custkey"))
-      .limit(cfg.returnedTopK)
+      .limit(ReturnedTopK)
     top
       .join(broadcast(Tables.customer(spark, dir)
         .select("c_custkey", "c_name", "c_acctbal", "c_nationkey")),
@@ -1780,7 +1858,7 @@ class RelationalOps(val cfg: GraftConfig) {
        |    AND o_orderdate >= TIMESTAMP '1996-10-01'
        |    AND o_orderdate < TIMESTAMP '1997-01-01'
        |  GROUP BY o_custkey
-       |  ORDER BY revenue DESC, o_custkey LIMIT ${cfg.returnedTopK})
+       |  ORDER BY revenue DESC, o_custkey LIMIT ${ReturnedTopK})
        |SELECT c_custkey, c_name, revenue, c_acctbal, n_name
        |FROM top JOIN customer ON o_custkey = c_custkey
        |JOIN nation ON c_nationkey = n_nationkey""".stripMargin
@@ -1790,7 +1868,7 @@ class RelationalOps(val cfg: GraftConfig) {
     * year) on this schema: no shipmode/commitdate/receiptdate columns
     * exist (documented divergence, the q337 rule), so the mode is the
     * SHIP-LAG BAND — 'FAST' when the line shipped within
-    * ${cfg.shipBandFastDays} days of its order, 'SLOW' otherwise — an
+    * ${ShipBandFastDays} days of its order, 'SLOW' otherwise — an
     * exact integer epoch-MS comparison with NO division (q152's
     * discipline; a day-floor would hit the Spark-div-vs-DuckDB-floor
     * divergence on negative lags). Per band, BOTH priority counts
@@ -1802,7 +1880,7 @@ class RelationalOps(val cfg: GraftConfig) {
     * big-big on the natural order key (orders pre-projected to key +
     * priority); two counts × two bands cross the exchange. */
   def q348ShipBandPriority(spark: SparkSession, dir: String): DataFrame = {
-    val fastMs = cfg.shipBandFastDays * 86400000L
+    val fastMs = ShipBandFastDays * 86400000L
     val lagMs = unix_millis(col("l_shipdate").cast("timestamp")) -
       unix_millis(col("o_orderdate").cast("timestamp"))
     val hi = col("o_orderpriority").isin("1-URGENT", "2-HIGH")
@@ -1822,7 +1900,7 @@ class RelationalOps(val cfg: GraftConfig) {
 
   def q348Sql: String =
     s"""SELECT CASE WHEN epoch_ms(l_shipdate) - epoch_ms(o_orderdate)
-       |         <= ${cfg.shipBandFastDays * 86400000L} THEN 'FAST' ELSE 'SLOW' END AS ship_band,
+       |         <= ${ShipBandFastDays * 86400000L} THEN 'FAST' ELSE 'SLOW' END AS ship_band,
        |  CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 1 ELSE 0 END) AS BIGINT)
        |    AS high_line_count,
        |  CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 0 ELSE 1 END) AS BIGINT)

@@ -30,7 +30,11 @@ import graft.sources.Tables
 class SequenceOps(val cfg: GraftConfig) {
   val K: Int = cfg.k
   val HighFreq: Int = cfg.highFreq
-  val TrustMinFreq: Int = cfg.trustMinFreq
+  val TrustMinFreq: Int = 2
+  val ContainPrefixLen: Int = 16
+  // correction votes [PreCorrect]: a substitution is voted only when
+  // the corrected k-mer reaches this global frequency
+  val VoteStrongFreq: Int = 3
   val DedupKeyWords: Int = cfg.dedupKeyWords
 
   /** (doc_id, kmer) — one row per k-mer occurrence. Docs shorter than k
@@ -138,7 +142,7 @@ class SequenceOps(val cfg: GraftConfig) {
     * MatchPrefix.java:60-200). Only the few kmer-colliding pairs reach the
     * contains() verify. */
   def q14NonContained(spark: SparkSession, dir: String): DataFrame = {
-    val pk = cfg.containPrefixLen
+    val pk = ContainPrefixLen
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"), col("n_chars"))
     // candidate generation stays skinny: only (id, key) pairs flow through
     // the explode and the join; texts are re-attached for the few
@@ -279,7 +283,7 @@ class SequenceOps(val cfg: GraftConfig) {
       .select(col("doc_id"), col("g"), expr(s"substring(text, g, $k)").as("kmer"))
     val freq = km.groupBy("kmer").agg(count(lit(1)).as("f"))
     val weak = km.join(freq.filter(col("f") === 1).hint("shuffle_hash"), "kmer")
-    val strong = freq.filter(col("f") >= cfg.voteStrongFreq).select("kmer")
+    val strong = freq.filter(col("f") >= VoteStrongFreq).select("kmer")
     val wa = weak
       .withColumn("mi", explode(sequence(lit(1), lit(k))))
       .select(col("doc_id"), (col("g") + col("mi") - 1).cast("long").as("pos"), col("mi"),
@@ -307,7 +311,7 @@ class SequenceOps(val cfg: GraftConfig) {
        |freq AS (SELECT kmer, count(*) AS f FROM km GROUP BY kmer),
        |weak AS (SELECT km.doc_id, km.g, km.kmer FROM km
        |  JOIN freq USING (kmer) WHERE f = 1),
-       |strong AS (SELECT kmer FROM freq WHERE f >= ${cfg.voteStrongFreq}),
+       |strong AS (SELECT kmer FROM freq WHERE f >= ${VoteStrongFreq}),
        |wa AS (SELECT doc_id, CAST(g + i - 1 AS BIGINT) AS pos, i AS mi,
        |    substr(kmer, 1, i - 1) || substr(kmer, i + 1, $K - i) AS mk,
        |    substr(kmer, i, 1) AS from_char

@@ -34,7 +34,46 @@ class SimilarityOps(val cfg: GraftConfig) {
   val IvfTopK: Int = cfg.ivfTopK
   val KmeansIters: Int = cfg.kmeansIters
   val TrainMod: Int = cfg.ivfTrainMod
-  val SemCos: Double = cfg.semDedupCos
+  // top-principal-component projection (q150): fixed power-iteration
+  // count (fixed, not convergence-tested — determinism over adaptivity)
+  val PcaIters: Int = 16
+  // semantic dedup (q94): within-cell cosine threshold above which
+  // the higher-id vector is dropped
+  val SemCos: Double = 0.42
+  // IVF probe curve (q306): sweep nprobe from 1 to this bound — past
+  // the serving default so the curve shows where recall saturates
+  val ProbeCurveMax: Int = 4
+  // per-label embedding outliers (q164): vectors reported per label
+  val OutlierTopK: Int = 10
+  // cluster-aware curation over the trained IVF cells (round 9):
+  // q194 per-cell sample cap, q195 discriminative-term report size +
+  // minimum in-cell count
+  val ClusterSampleCap: Int = 5
+  val ClusterTermsTopK: Int = 5
+  val ClusterTermsMinCount: Int = 3
+  // robust embedding scaler (q172): phase-1 bucket width over
+  // 1e6-scaled elements (bounded by the VALUE DOMAIN, not n), and
+  // the non-negativity shift (exact while |x| < shift/1e6)
+  val RobustBucketWidth: Long = 65536L
+  val RobustShift: Long = 1000000000L
+  // the within-cell pair-space sizing rule (q94/q196, see
+  // SimilarityOps.cellsFor): centroid count must grow ∝ corpus so
+  // expected cell size stays at most this — the Σ|cell|²
+  // sub-quadratic contract
+  val SemTargetCellSize: Int = 256
+  // q317 (hierarchical entry ladder): the coarse layer is centroids
+  // with cent_id % mod == 0, and a query descends through this many
+  // coarse branches before ranking their cells
+  val LadderCoarseMod: Int = 4
+  val LadderCoarseProbe: Int = 2
+  // q325 (streaming drift monitor): retrain fires when cumulative
+  // delta arrivals reach DriftTNum/DriftTDen of the base corpus
+  val DriftTNum: Int = 1
+  val DriftTDen: Int = 4
+  // q326/q327 (attribute-filtered ANN): serve only vectors carrying
+  // this label — ~10% selectivity on the test corpora, enough for
+  // the pre-vs-post-filter gap to be measurable
+  val AnnFilterLabel: Int = 3
 
   /** The CELL-COUNT SIZING RULE for the within-cell pair spaces
     * (q94 SemDeDup, q196 cohesion): their pair work is Σ|cell|², which
@@ -43,7 +82,7 @@ class SimilarityOps(val cfg: GraftConfig) {
     * is the standard SemDeDup contract (Abbas et al. '23 size k ∝ n);
     * a deployment that scales the corpus 100× while keeping `ivfCells`
     * fixed silently goes quadratic inside cells. The rule:
-    * cells = max(configured, ⌈n / semTargetCellSize⌉), which caps
+    * cells = max(configured, ⌈n / SemTargetCellSize⌉), which caps
     * EXPECTED pair work at n·target/2; REALIZED balance (skewed cells)
     * is the thing q183's balance eval watches and q196's
     * cohesionPairCap hard-bounds. The test corpora all sit below the
@@ -52,7 +91,7 @@ class SimilarityOps(val cfg: GraftConfig) {
     * facts. */
   def cellsFor(n: Long): Int =
     math.max(NumCentroids,
-      ((n + cfg.semTargetCellSize - 1) / cfg.semTargetCellSize).toInt)
+      ((n + SemTargetCellSize - 1) / SemTargetCellSize).toInt)
 
   private def emb(spark: SparkSession, dir: String): DataFrame =
     Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
@@ -365,7 +404,7 @@ class SimilarityOps(val cfg: GraftConfig) {
     * the pair space is Σ|cell|² instead of n², and each cell's
     * comparisons are one partition's work after the cell-key shuffle.
     * At 100 TB: the centroid count MUST follow [[cellsFor]] (grow ∝ n
-    * so expected cell size stays ≤ semTargetCellSize) — a fixed cell
+    * so expected cell size stays ≤ SemTargetCellSize) — a fixed cell
     * count under a growing corpus silently re-quadratizes the pair
     * space; realized skew is q183's watch. The test corpora sit below
     * the knee, so the configured count IS cellsFor(n) here
@@ -473,9 +512,9 @@ class SimilarityOps(val cfg: GraftConfig) {
 
   /** q250: HARD/EASY NEGATIVE SAMPLING — q240's contrastive-pair
     * builder upgraded with the structure retrieval training actually
-    * needs: per query vector, ${cfg.negSlots} EASY negatives
+    * needs: per query vector, ${GraftConfig.negSlots} EASY negatives
     * (hash-drawn corpus-wide, rejected if they land in the query's own
-    * IVF cell — an easy negative must be far) and ${cfg.negSlots} HARD
+    * IVF cell — an easy negative must be far) and ${GraftConfig.negSlots} HARD
     * negatives (hash-drawn from INSIDE the query's cell by member
     * rank — close enough to confuse the model, the pairs that carry
     * the gradient signal). Both draws are md5-deterministic (the q240
@@ -497,7 +536,7 @@ class SimilarityOps(val cfg: GraftConfig) {
     val members = af
       .withColumn("idx", row_number().over(wc).cast("long") - 1L)
       .withColumn("csz", count(lit(1)).over(Window.partitionBy("cell")))
-    val slots = (1 to cfg.negSlots)
+    val slots = (1 to GraftConfig.negSlots)
     def draw(tag: String, mod: Column): Column =
       conv(substring(md5(concat(col("vec_id").cast("string"), lit(s":$tag:"),
         col("slot").cast("string"))), 1, 8), 16, 10).cast("long") % mod
@@ -527,7 +566,7 @@ class SimilarityOps(val cfg: GraftConfig) {
        |    CAST(row_number() OVER (PARTITION BY cell ORDER BY vec_id) AS BIGINT) - 1 AS idx,
        |    CAST(count(*) OVER (PARTITION BY cell) AS BIGINT) AS csz
        |  FROM af),
-       |slots AS (SELECT CAST(unnest(generate_series(1, ${cfg.negSlots})) AS BIGINT) AS slot),
+       |slots AS (SELECT CAST(unnest(generate_series(1, ${GraftConfig.negSlots})) AS BIGINT) AS slot),
        |easy AS (SELECT q.vec_id AS query_id, q.cell, s.slot,
        |    CAST(('0x' || substr(md5(q.vec_id || ':e:' || s.slot), 1, 8)) AS BIGINT)
        |      % (mx.mx + 1) AS neg_id
@@ -605,7 +644,7 @@ class SimilarityOps(val cfg: GraftConfig) {
     * covariance: the d×d matrix is corpus-independent BY CONSTRUCTION
     * (the hllEstimate argument — finishing a d²-row artifact on the
     * driver is the contract, not a scale violation), so
-    * ${cfg.pcaIters} power iterations run as a driver loop in plain
+    * ${PcaIters} power iterations run as a driver loop in plain
     * doubles with FIXED fold order: each matvec entry sums j-ascending,
     * the norm sums i-ascending, v₀ = 1/√d. The DuckDB oracle replays
     * the identical iteration with `list_sum(list(… ORDER BY …))` —
@@ -627,7 +666,7 @@ class SimilarityOps(val cfg: GraftConfig) {
     var v = Array.fill(d)(1.0 / math.sqrt(d.toDouble))
     var lambda = 0.0
     var t = 0
-    while (t < cfg.pcaIters) {
+    while (t < PcaIters) {
       val w = new Array[Double](d)
       var i = 1
       while (i <= d) {
@@ -656,7 +695,7 @@ class SimilarityOps(val cfg: GraftConfig) {
     // every CTE is MATERIALIZED: DuckDB inlines plain CTEs, and v_t
     // referencing w_t twice would double the expansion per iteration —
     // 2^iters copies of the covariance subquery
-    val steps = (1 to cfg.pcaIters).map { t =>
+    val steps = (1 to PcaIters).map { t =>
       s"""w$t AS MATERIALIZED (SELECT cm.i, list_sum(list(cm.cov * v${t - 1}.val ORDER BY cm.j)) AS val
          |  FROM cm JOIN v${t - 1} ON cm.j = v${t - 1}.i GROUP BY cm.i),
          |n$t AS MATERIALIZED (SELECT sqrt(list_sum(list(val * val ORDER BY i))) AS nrm FROM w$t),
@@ -673,8 +712,8 @@ class SimilarityOps(val cfg: GraftConfig) {
        |  FROM embeddings, LATERAL (SELECT unnest(generate_series(1, len(embedding))) AS g) t)
        |SELECT ex.vec_id,
        |  list_sum(list(ex.x * u.val ORDER BY ex.j)) AS score,
-       |  (SELECT nrm FROM n${cfg.pcaIters}) AS eigenvalue
-       |FROM ex JOIN v${cfg.pcaIters} u ON u.i = ex.j
+       |  (SELECT nrm FROM n${PcaIters}) AS eigenvalue
+       |FROM ex JOIN v${PcaIters} u ON u.i = ex.j
        |GROUP BY ex.vec_id""".stripMargin
   }
 
@@ -701,7 +740,7 @@ class SimilarityOps(val cfg: GraftConfig) {
     * per-component iteration with `list_sum(list(… ORDER BY …))`
     * (verified a sequential left fold) and the identical deflation
     * expression, so eigenvectors, eigenvalues, scores, and whitened
-    * coordinates all hash-match bitwise through k·pcaIters float
+    * coordinates all hash-match bitwise through k·PcaIters float
     * iterations.
     *
     * Scale: training is O(k·iters·d²) driver flops on the d²-row
@@ -748,7 +787,7 @@ class SimilarityOps(val cfg: GraftConfig) {
       var v = Array.fill(d)(1.0 / math.sqrt(d.toDouble))
       var lambda = 0.0
       var t = 0
-      while (t < cfg.pcaIters) {
+      while (t < PcaIters) {
         val w = new Array[Double](d)
         var i = 1
         while (i <= d) {
@@ -782,7 +821,7 @@ class SimilarityOps(val cfg: GraftConfig) {
     * power loops v{m}_iters / n{m}_iters, deflations, and the exploded
     * `ex` element table) — shared by the q211 and q215 oracles. */
   private def pcaSqlCtes: String = {
-    val iters = cfg.pcaIters
+    val iters = PcaIters
     // per component m: the q150 power loop on cm$m, then the deflated
     // cm${m+1}; every CTE MATERIALIZED (DuckDB would otherwise inline —
     // exponential expansion across k·iters references)
@@ -815,7 +854,7 @@ class SimilarityOps(val cfg: GraftConfig) {
   }
 
   def q211Sql: String = {
-    val iters = cfg.pcaIters
+    val iters = PcaIters
     val arms = (1 to cfg.pcaTopK).map { cm =>
       s"""SELECT vec_id, CAST($cm AS BIGINT) AS comp, score,
          |  (SELECT nrm FROM n${cm}_$iters) AS eigenvalue,
@@ -897,7 +936,7 @@ class SimilarityOps(val cfg: GraftConfig) {
   }
 
   def q215Sql: String = {
-    val iters = cfg.pcaIters
+    val iters = PcaIters
     val ks = 1 to cfg.pcaTopK
     val wctes = ks.map { m =>
       s"""s$m AS MATERIALIZED (SELECT ex.vec_id,
@@ -1001,7 +1040,7 @@ class SimilarityOps(val cfg: GraftConfig) {
       |FROM gram JOIN dims di ON gram.i = di.d JOIN dims dj ON gram.j = dj.d""".stripMargin
 
   /** q164: per-label embedding OUTLIERS — each label's
-    * top-${cfg.outlierTopK} vectors by squared distance to the label
+    * top-${OutlierTopK} vectors by squared distance to the label
     * CENTROID: the mislabeled-example / contamination detector every
     * labeled embedding set gets audited with (and the per-cluster
     * variance primitive under it). Integer-exact throughout: elements
@@ -1025,7 +1064,7 @@ class SimilarityOps(val cfg: GraftConfig) {
     * corpus shuffles zero vector rows; the per-label top-k plans as
     * WindowGroupLimit (partial top-k map-side). */
   def q164LabelOutliers(spark: SparkSession, dir: String): DataFrame = {
-    val K = cfg.outlierTopK
+    val K = OutlierTopK
     val emb = Tables.embeddings(spark, dir)
     val cells = emb
       .select(col("label"), col("vec_id"),
@@ -1169,7 +1208,7 @@ class SimilarityOps(val cfg: GraftConfig) {
   /** q194: cluster-capped DIVERSITY SAMPLE — "cluster then sample", the
     * semantic-coverage selection step (SemDeDup's sampling cousin):
     * every vector assigns to its trained IVF cell and each cell keeps
-    * at most ${cfg.clusterSampleCap} vectors by content-stable md5
+    * at most ${ClusterSampleCap} vectors by content-stable md5
     * order — a sample that covers the embedding space's modes instead
     * of its density (uniform sampling over-picks the dominant cluster;
     * q81 stratifies on a LABEL, this stratifies on LEARNED structure).
@@ -1186,7 +1225,7 @@ class SimilarityOps(val cfg: GraftConfig) {
         md5(concat(lit("cs:"), col("vec_id").cast("string"))).as("h"))
     val w = Window.partitionBy("cell").orderBy(col("h"), col("vec_id"))
     assigned.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= cfg.clusterSampleCap)
+      .filter(col("rk") <= ClusterSampleCap)
       .select("vec_id", "cell", "rk")
   }
 
@@ -1196,10 +1235,10 @@ class SimilarityOps(val cfg: GraftConfig) {
        |  SELECT vec_id, cell, row_number() OVER (PARTITION BY cell
        |    ORDER BY md5('cs:' || CAST(vec_id AS VARCHAR)), vec_id) AS rk
        |  FROM af)
-       |WHERE rk <= ${cfg.clusterSampleCap}""".stripMargin
+       |WHERE rk <= ${ClusterSampleCap}""".stripMargin
 
   /** q195: per-cluster DISCRIMINATIVE TERMS — each trained IVF cell's
-    * top-${cfg.clusterTermsTopK} tokens by lift (in-cell rate vs
+    * top-${ClusterTermsTopK} tokens by lift (in-cell rate vs
     * corpus rate over the embedded docs): the "what is this cluster
     * about" naming table that turns an unsupervised index into an
     * auditable one (the q155 collocation-lift discipline applied to
@@ -1222,7 +1261,7 @@ class SimilarityOps(val cfg: GraftConfig) {
     val ct = cw.groupBy("cell").agg(sum(col("c_cw")).as("t_c"))
     val gw = cw.groupBy("w").agg(sum(col("c_cw")).as("g_w"))
     val n = ct.agg(sum(col("t_c")).as("n_tok"))
-    val scored = cw.filter(col("c_cw") >= cfg.clusterTermsMinCount)
+    val scored = cw.filter(col("c_cw") >= ClusterTermsMinCount)
       .join(ct.hint("shuffle_hash"), "cell")
       .join(gw.hint("shuffle_hash"), "w")
       .crossJoin(broadcast(n))
@@ -1231,7 +1270,7 @@ class SimilarityOps(val cfg: GraftConfig) {
           / (col("t_c").cast("double") * col("g_w").cast("double")))
     val w2 = Window.partitionBy("cell").orderBy(col("lift").desc, col("w"))
     scored.withColumn("rk", row_number().over(w2))
-      .filter(col("rk") <= cfg.clusterTermsTopK)
+      .filter(col("rk") <= ClusterTermsTopK)
       .select(col("cell"), col("w").as("term"), col("c_cw"), col("lift"), col("rk"))
   }
 
@@ -1247,12 +1286,12 @@ class SimilarityOps(val cfg: GraftConfig) {
        |    CAST(cw.c_cw AS DOUBLE) * CAST(n.n_tok AS DOUBLE)
        |      / (CAST(ct.t_c AS DOUBLE) * CAST(gw.g_w AS DOUBLE)) AS lift
        |  FROM cw JOIN ct USING (cell) JOIN gw USING (w), n
-       |  WHERE cw.c_cw >= ${cfg.clusterTermsMinCount})
+       |  WHERE cw.c_cw >= ${ClusterTermsMinCount})
        |SELECT cell, w AS term, c_cw, lift, rk FROM (
        |  SELECT cell, w, c_cw, lift,
        |    row_number() OVER (PARTITION BY cell ORDER BY lift DESC, w) AS rk
        |  FROM scored)
-       |WHERE rk <= ${cfg.clusterTermsTopK}""".stripMargin
+       |WHERE rk <= ${ClusterTermsTopK}""".stripMargin
 
   /** q196: cluster COHESION eval — the q183/q123 eval family applied to
     * cluster QUALITY: per trained IVF cell, member count, within-cell
@@ -1405,7 +1444,7 @@ class SimilarityOps(val cfg: GraftConfig) {
     * the per-dim spread audit beside q127's covariance. Elements fix
     * to BIGINT at 1e6; quantiles are EXACT two-phase (the q91 shape,
     * which is what makes this scale): a phase-1 histogram over
-    * ${cfg.robustBucketWidth}-wide buckets (bounded by the VALUE
+    * ${RobustBucketWidth}-wide buckets (bounded by the VALUE
     * DOMAIN, not n), broadcast triangular cumulative to find each
     * rank's bucket, then a ranked pass over ONLY the selected buckets
     * — never a per-dim corpus sort. Negative elements: BOTH engines
@@ -1413,19 +1452,19 @@ class SimilarityOps(val cfg: GraftConfig) {
     * `//` agree: -7 div 2 = -3), but truncation makes the bucket
     * straddling zero DOUBLE-width — every v in (-W, W) lands in
     * bucket 0 — which would break the equal-width histogram the rank
-    * search assumes; shifting by ${cfg.robustShift} first (exact
-    * while |x| < ${cfg.robustShift / 1000000}) keeps the dividend
+    * search assumes; shifting by ${RobustShift} first (exact
+    * while |x| < ${RobustShift / 1000000}) keeps the dividend
     * non-negative, where truncation and floor coincide and every
     * bucket is exactly W wide. Ranks break ties by value only, so
     * the quantile VALUES are tie-order-free. */
   def q172RobustScale(spark: SparkSession, dir: String): DataFrame = {
-    val W = cfg.robustBucketWidth
+    val W = RobustBucketWidth
     val Levels = Seq(25, 50, 75)
     val cells = Tables.embeddings(spark, dir)
       .select(posexplode(col("embedding")).as(Seq("dim", "x")))
       .select(col("dim"),
         expr("CAST(floor(CAST(x AS DOUBLE) * 1e6) AS BIGINT)").as("v"))
-      .withColumn("bk", expr(s"(v + ${cfg.robustShift}) div $W"))
+      .withColumn("bk", expr(s"(v + ${RobustShift}) div $W"))
     val bh = cells.groupBy("dim", "bk").agg(count(lit(1)).as("cnt"))
     val bcum = bh.as("a")
       .join(broadcast(bh.as("b")),
@@ -1491,12 +1530,16 @@ class SimilarityOps(val cfg: GraftConfig) {
        |FROM (SELECT label, vec_id, dist2,
        |    row_number() OVER (PARTITION BY label ORDER BY dist2 DESC, vec_id) AS rk
        |  FROM dist)
-       |WHERE rk <= ${cfg.outlierTopK}""".stripMargin
+       |WHERE rk <= ${OutlierTopK}""".stripMargin
 
   // ---------- Product quantization (q222/q223) ----------
 
+  // product quantization (q222/q223): subspace count (must divide the
+  // embedding dim), codewords per subspace, Lloyd iterations. 4×8 on
+  // 64-dim = 16 doubles/vector → 4 small ints — the compression a
+  // serving index actually ships; recall is MEASURED by q223
   val PqM: Int = cfg.pqSubspaces
-  val PqK: Int = cfg.pqCodewords
+  val PqK: Int = 8
   val PqIters: Int = cfg.pqIters
 
   /** Subspace s (1-based) of a vector column: the s-th of $PqM equal
@@ -2303,7 +2346,7 @@ class SimilarityOps(val cfg: GraftConfig) {
     * reached nodes by exact cosine against the unquantized query, and
     * re-beams; the answer is the top-$TopK of everything visited. Hop
     * count is FIXED, not convergence-tested (determinism over
-    * adaptivity — the pcaIters discipline), and every ranking ties to
+    * adaptivity — the PcaIters discipline), and every ranking ties to
     * vec_id, so both engines walk the identical frontier.
     *
     * Scale: the candidate set is entries + hops·beam·k per query —
@@ -2464,7 +2507,7 @@ class SimilarityOps(val cfg: GraftConfig) {
     * l{coarse,cc_x,cc_d,br,qg,cand,rank} and `$name`. */
   private def ladderEntSql(name: String): String =
     s"""lcoarse AS (SELECT cent_id, ce FROM c$KmeansIters
-       |  WHERE cent_id % ${cfg.ladderCoarseMod} = 0),
+       |  WHERE cent_id % ${LadderCoarseMod} = 0),
        |lcc_x AS (SELECT c.cent_id, g.cent_id AS gid, unnest(c.ce) AS a, unnest(g.ce) AS b
        |  FROM c$KmeansIters c, lcoarse g),
        |lcc_d AS (SELECT cent_id, gid,
@@ -2479,8 +2522,8 @@ class SimilarityOps(val cfg: GraftConfig) {
        |lqg AS (SELECT ia AS query_id, ib AS gid FROM (
        |    SELECT ia, ib, row_number() OVER (PARTITION BY ia ORDER BY
        |      CAST(dot AS DOUBLE)/(sqrt(CAST(na AS DOUBLE))*sqrt(CAST(nb AS DOUBLE))) DESC, ib) AS rk
-       |    FROM af_dots WHERE ia < $NumQueries AND ib % ${cfg.ladderCoarseMod} = 0)
-       |  WHERE rk <= ${cfg.ladderCoarseProbe}),
+       |    FROM af_dots WHERE ia < $NumQueries AND ib % ${LadderCoarseMod} = 0)
+       |  WHERE rk <= ${LadderCoarseProbe}),
        |lcand AS (SELECT DISTINCT q.query_id, b.cent_id
        |  FROM lqg q JOIN lbr b ON b.gid = q.gid),
        |lrank AS (SELECT query_id, cent_id, row_number() OVER (PARTITION BY query_id
@@ -3217,10 +3260,10 @@ class SimilarityOps(val cfg: GraftConfig) {
 
   /** TWO-LAYER (HNSW-style) entry descent — q317's ladder arm: the
     * coarse layer is a deterministic SUBSET of the trained centroids
-    * (cent_id % ladderCoarseMod — HNSW's upper layer is literally a
+    * (cent_id % LadderCoarseMod — HNSW's upper layer is literally a
     * node subset), each centroid hangs off its nearest coarse node,
     * and a query descends: rank the coarse layer (|coarse| dots), take
-    * ${cfg.ladderCoarseProbe} branches, rank ONLY those branches'
+    * ${LadderCoarseProbe} branches, rank ONLY those branches'
     * centroids, probe ${cfg.ivfNprobe} cells, draw the same
     * ${cfg.beamEntries} entries. At 1M cells the flat guided ranking
     * pays |cells| dots per query; the ladder pays |coarse| + the
@@ -3230,7 +3273,7 @@ class SimilarityOps(val cfg: GraftConfig) {
   private[graft] def ladderEntries(spark: SparkSession, dir: String): DataFrame = {
     graft.plans.GraftExtensions.ensureRegistered(spark)
     val (cents, cells) = persistedKnnQuantizer(spark, dir)
-    val coarse = cents.filter(col("cent_id") % cfg.ladderCoarseMod === 0)
+    val coarse = cents.filter(col("cent_id") % LadderCoarseMod === 0)
     // each centroid → its nearest coarse node (|cents| × |coarse|
     // broadcast-tiny dots; ties to the lower coarse id)
     val wB = Window.partitionBy("cent_id").orderBy(col("gcos").desc, col("gid"))
@@ -3245,7 +3288,7 @@ class SimilarityOps(val cfg: GraftConfig) {
     val e = emb(spark, dir).withColumn("n2", Vec.norm2N("embedding"))
     val qv = e.filter(col("vec_id") < NumQueries)
     // layer 1: query → its nearest coarse nodes
-    val qCoarse = probeCellsRanked(qv, coarse, cfg.ladderCoarseProbe)
+    val qCoarse = probeCellsRanked(qv, coarse, LadderCoarseProbe)
       .select(col("vec_id").as("query_id"), col("cell").as("gid"))
     // layer 0: rank only the chosen branches' centroids
     val wC = Window.partitionBy("query_id").orderBy(col("ccos").desc, col("cent_id"))
@@ -3760,7 +3803,7 @@ class SimilarityOps(val cfg: GraftConfig) {
   /** q306: the RECALL-vs-NPROBE CURVE — the tuning table every IVF
     * deployment reads before picking its serving knob (the q200
     * measured-curve discipline applied to the index): nprobe sweeps
-    * 1..${cfg.probeCurveMax} (past the serving default, so the curve
+    * 1..${ProbeCurveMax} (past the serving default, so the curve
     * shows where recall saturates against the probed-cells cost),
     * each point serving the full query panel through the shared
     * kernel at that nprobe and scoring per query against the
@@ -3782,9 +3825,9 @@ class SimilarityOps(val cfg: GraftConfig) {
     // the corpus cell assignment is independent of nprobe, so it is
     // computed ONCE and stage-cut, and every curve point serves from it
     // (serveAssigned was factored out for exactly this) — re-running
-    // assign per point cost probeCurveMax full-corpus map passes
+    // assign per point cost ProbeCurveMax full-corpus map passes
     val assigned = graft.Ck.lazyStage(assign(e, cents), cfg)
-    (1 to cfg.probeCurveMax).map { np =>
+    (1 to ProbeCurveMax).map { np =>
       val top = serveAssigned(assigned, panel, cents, np)
         .select(col("query_id"), col("vec_id"), lit(1L).as("hit"))
       truth.join(top, Seq("query_id", "vec_id"), "left")
@@ -3809,7 +3852,7 @@ class SimilarityOps(val cfg: GraftConfig) {
     * the drift ledger: per (wave, cell) the in-wave arrivals, the
     * cell's CUMULATIVE delta through that wave, the base occupancy,
     * and the wave's retrain decision — true when cumulative arrivals
-    * reach ${GraftConfig.default.driftTNum}/${GraftConfig.default.driftTDen}
+    * reach ${DriftTNum}/${DriftTDen}
     * of the base corpus (integer cross-multiply, no float at the
     * trigger) — the live dial whose batch consumers are q309's swap
     * and q290's recompaction. Wave identity is the vec_id parity that
@@ -3832,7 +3875,7 @@ class SimilarityOps(val cfg: GraftConfig) {
     val conf = spark.sparkContext.hadoopConfiguration
     Artifact.getOrBuild(spark, "sdrift_ledger", dir, Seq("embeddings.parquet"),
         s"c=$NumCentroids,ki=$KmeansIters,tm=$TrainMod,u=${cfg.splitTrainUpper}," +
-          s"tn=${cfg.driftTNum},td=${cfg.driftTDen}") { ledgerPath =>
+          s"tn=${DriftTNum},td=${DriftTDen}") { ledgerPath =>
       val run = java.util.UUID.randomUUID.toString.take(8)
       val landing = graft.sources.Scratch.dir(s"sdrift_${run}_landing", dir)
       val ckpt = graft.sources.Scratch.dir(s"sdrift_${run}_ckpt", dir)
@@ -3896,8 +3939,8 @@ class SimilarityOps(val cfg: GraftConfig) {
           .crossJoin(nb)
           .select(col("wave"), col("cell"), col("delta_n"), col("delta_cum"),
             coalesce(col("base_n"), lit(0L)).as("base_n"),
-            (lit(cfg.driftTDen.toLong) * col("d_cum_total")
-              >= lit(cfg.driftTNum.toLong) * col("n_base")).as("retrain"))
+            (lit(DriftTDen.toLong) * col("d_cum_total")
+              >= lit(DriftTNum.toLong) * col("n_base")).as("retrain"))
           .write.parquet(ledgerPath)
       } finally Seq(landing, ckpt, out).foreach { d =>
         val p = new org.apache.hadoop.fs.Path(d)
@@ -3908,7 +3951,7 @@ class SimilarityOps(val cfg: GraftConfig) {
   }
 
   /** q326: ATTRIBUTE-FILTERED ANN SEARCH — top-k restricted to
-    * vectors carrying label = ${GraftConfig.default.annFilterLabel},
+    * vectors carrying label = ${AnnFilterLabel},
     * the filtered-vector-search feature every serving stack ends up
     * needing (tenant isolation, language routing, freshness windows):
     * the PRE-FILTER strategy — the label predicate lands at CANDIDATE
@@ -3932,7 +3975,7 @@ class SimilarityOps(val cfg: GraftConfig) {
       .withColumn("n2", Vec.norm2N("embedding"))
     val cents = trainIndex(spark, dir)
     val qv = e.filter(col("vec_id") < NumQueries)
-    serveAssigned(assign(e, cents).filter(col("label") === cfg.annFilterLabel),
+    serveAssigned(assign(e, cents).filter(col("label") === AnnFilterLabel),
       qv, cents, cfg.ivfNprobe)
   }
 
@@ -3948,7 +3991,7 @@ class SimilarityOps(val cfg: GraftConfig) {
        |cellpairs AS (SELECT qv.query_id, av.vec_id, qv.qe, av.embedding AS ve
        |  FROM qv JOIN av USING (cell)
        |  JOIN embeddings lb ON lb.vec_id = av.vec_id
-       |  WHERE av.vec_id <> qv.query_id AND lb.label = ${cfg.annFilterLabel}),
+       |  WHERE av.vec_id <> qv.query_id AND lb.label = ${AnnFilterLabel}),
        |top_ex AS (SELECT query_id AS ia, vec_id AS ib, unnest(qe) AS a, unnest(ve) AS b FROM cellpairs),
        |top_dots AS (SELECT ia, ib,
        |    ${Vec.dotDecSqlDuck("a", "b")} AS dot,
@@ -3985,7 +4028,7 @@ class SimilarityOps(val cfg: GraftConfig) {
     * label-eligible slice (selectivity × corpus). */
   def q327FilteredRecall(spark: SparkSession, dir: String): DataFrame = {
     graft.plans.GraftExtensions.ensureRegistered(spark)
-    val L = cfg.annFilterLabel
+    val L = AnnFilterLabel
     val e = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"), col("label"))
       .withColumn("n2", Vec.norm2N("embedding"))
@@ -4020,7 +4063,7 @@ class SimilarityOps(val cfg: GraftConfig) {
   }
 
   def q327Sql: String = {
-    val L = cfg.annFilterLabel
+    val L = AnnFilterLabel
     def topOf(pairs: String, out: String, filtered: Boolean): String = {
       val f = if (filtered) s"AND lb.label = $L" else ""
       s"""${out}_cp AS (SELECT qv.query_id, av.vec_id, qv.qe, av.embedding AS ve
@@ -4289,12 +4332,12 @@ class SimilarityOps(val cfg: GraftConfig) {
        |nb AS (SELECT CAST(count(*) AS BIGINT) AS n_base FROM e)
        |SELECT c.wave, c.cell, c.delta_n, c.delta_cum,
        |  coalesce(bc.base_n, 0) AS base_n,
-       |  ${cfg.driftTDen} * w.d_cum_total >= ${cfg.driftTNum} * nb.n_base AS retrain
+       |  ${DriftTDen} * w.d_cum_total >= ${DriftTNum} * nb.n_base AS retrain
        |FROM cum c JOIN wc w USING (wave) LEFT JOIN bc USING (cell) CROSS JOIN nb""".stripMargin
   }
 
   def q306Sql: String = {
-    val points = (1 to cfg.probeCurveMax).map { np =>
+    val points = (1 to ProbeCurveMax).map { np =>
       s"""qprobe$np AS (SELECT ia AS query_id, ib AS cell FROM (
          |    SELECT ia, ib, row_number() OVER (PARTITION BY ia ORDER BY
          |      CAST(dot AS DOUBLE)/(sqrt(CAST(na AS DOUBLE))*sqrt(CAST(nb AS DOUBLE))) DESC, ib) AS rk
@@ -4315,7 +4358,7 @@ class SimilarityOps(val cfg: GraftConfig) {
          |      CAST(dot AS DOUBLE)/(sqrt(CAST(na AS DOUBLE))*sqrt(CAST(nb AS DOUBLE))) DESC, ib) AS rk
          |    FROM tdots$np) WHERE rk <= $IvfTopK)""".stripMargin
     }.mkString(",\n")
-    val rows = (1 to cfg.probeCurveMax).map { np =>
+    val rows = (1 to ProbeCurveMax).map { np =>
       s"""SELECT $np AS nprobe, t.query_id, CAST(count(a.ib) AS BIGINT) AS n_hit,
          |  CAST(count(a.ib) AS DOUBLE) / $IvfTopK AS recall
          |FROM truth t LEFT JOIN top$np a
@@ -4610,7 +4653,7 @@ class SimilarityOps(val cfg: GraftConfig) {
     val cents = trainIndex(spark, dir)
     val qv = e.filter(col("vec_id") < NumQueries)
     val pool = serveAssigned(
-        assign(e, cents).filter(col("label") === cfg.annFilterLabel),
+        assign(e, cents).filter(col("label") === AnnFilterLabel),
         qv, cents, cfg.ivfNprobe, k = cfg.mmrPool)
       .join(e.select(col("vec_id"), col("embedding")), "vec_id")
       .select(col("query_id"), col("vec_id"), col("cosine").as("simq"), col("embedding"))
@@ -4629,7 +4672,7 @@ class SimilarityOps(val cfg: GraftConfig) {
        |cellpairs AS (SELECT qv.query_id, av.vec_id, qv.qe, av.embedding AS ve
        |  FROM qv JOIN av USING (cell)
        |  JOIN embeddings lb ON lb.vec_id = av.vec_id
-       |  WHERE av.vec_id <> qv.query_id AND lb.label = ${cfg.annFilterLabel}),
+       |  WHERE av.vec_id <> qv.query_id AND lb.label = ${AnnFilterLabel}),
        |top_ex AS (SELECT query_id AS ia, vec_id AS ib, unnest(qe) AS a, unnest(ve) AS b FROM cellpairs),
        |top_dots AS (SELECT ia, ib,
        |    ${Vec.dotDecSqlDuck("a", "b")} AS dot,
@@ -4649,7 +4692,7 @@ class SimilarityOps(val cfg: GraftConfig) {
     * fed through q328's MMR greedy, the last composition of the
     * serving stack (q339 diversified the FILTERED dense page; this
     * diversifies the HYBRID one — the page a RAG retrieval head
-    * actually returns): the fused top-${GraftConfig.default.rrfTopK}
+    * actually returns): the fused top-${GraftConfig.rrfTopK}
     * pool's RRF scores MIN-MAX NORMALIZE within the pool (q277's
     * order-free-extremes normalization — raw RRF lives on a 1/(k+r)
     * scale that λ=1/2 would drown against cosine redundancy; a
@@ -4669,7 +4712,7 @@ class SimilarityOps(val cfg: GraftConfig) {
     val ex = broadcast(fused.agg(min(col("rrf")).as("lo"), max(col("rrf")).as("hi")))
     val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     val pool = fused.crossJoin(ex)
-      .select(lit(cfg.hybridQueryVec.toLong).as("query_id"),
+      .select(lit(GraftConfig.hybridQueryVec.toLong).as("query_id"),
         col("doc_id").as("vec_id"),
         when(col("hi") === col("lo"), lit(1.0))
           .otherwise((col("rrf") - col("lo")) / (col("hi") - col("lo"))).as("simq"))
@@ -4681,7 +4724,7 @@ class SimilarityOps(val cfg: GraftConfig) {
   def q344Sql: String =
     s"""WITH hf AS (${Ranking.q110Sql}),
        |hext AS (SELECT min(rrf) AS lo, max(rrf) AS hi FROM hf),
-       |hpool AS MATERIALIZED (SELECT CAST(${cfg.hybridQueryVec} AS BIGINT) AS query_id,
+       |hpool AS MATERIALIZED (SELECT CAST(${GraftConfig.hybridQueryVec} AS BIGINT) AS query_id,
        |    doc_id AS vec_id,
        |    CASE WHEN hi = lo THEN 1.0 ELSE (rrf - lo) / (hi - lo) END AS simq
        |  FROM hf, hext),
@@ -4714,8 +4757,8 @@ class SimilarityOps(val cfg: GraftConfig) {
     graft.plans.GraftExtensions.ensureRegistered(spark)
     import graft.functions.Vec
     val PoolK = cfg.rrfPoolK
-    val RrfC = cfg.rrfK
-    val qid = cfg.hybridQueryVec
+    val RrfC = GraftConfig.rrfK
+    val qid = GraftConfig.hybridQueryVec
     // dense text arm: q110's vector pool
     val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
       .withColumn("n2", Vec.norm2N("embedding"))
@@ -4745,7 +4788,7 @@ class SimilarityOps(val cfg: GraftConfig) {
     val fused = textPool.select("doc_id", "trank")
       .join(imgPool.select("doc_id", "irank"), Seq("doc_id"), "full_outer")
       .select(col("doc_id"), rrf.as("rrf"))
-      .orderBy(col("rrf").desc, col("doc_id")).limit(cfg.rrfTopK)
+      .orderBy(col("rrf").desc, col("doc_id")).limit(GraftConfig.rrfTopK)
     // the q344 tail: pool-local min-max, then the fixed-point greedy
     val ex = broadcast(fused.agg(min(col("rrf")).as("lo"), max(col("rrf")).as("hi")))
     val pool = fused.crossJoin(ex)
@@ -4760,8 +4803,8 @@ class SimilarityOps(val cfg: GraftConfig) {
 
   def q351Sql: String = {
     val PoolK = cfg.rrfPoolK
-    val RrfC = cfg.rrfK
-    val qid = cfg.hybridQueryVec
+    val RrfC = GraftConfig.rrfK
+    val qid = GraftConfig.hybridQueryVec
     s"""WITH ${Multimodal.imgElemsCtes},
        |tq AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = $qid),
        |tpairs AS (SELECT vec_id AS doc_id, qe, embedding AS ve FROM embeddings, tq
@@ -4788,7 +4831,7 @@ class SimilarityOps(val cfg: GraftConfig) {
        |    (CASE WHEN t.trank IS NOT NULL THEN 1.0/($RrfC + t.trank) ELSE 0.0 END)
        |  + (CASE WHEN i.irank IS NOT NULL THEN 1.0/($RrfC + i.irank) ELSE 0.0 END) AS rrf
        |  FROM tpool t FULL OUTER JOIN ipool i ON i.doc_id = t.doc_id),
-       |xtop AS (SELECT doc_id, rrf FROM xf ORDER BY rrf DESC, doc_id LIMIT ${cfg.rrfTopK}),
+       |xtop AS (SELECT doc_id, rrf FROM xf ORDER BY rrf DESC, doc_id LIMIT ${GraftConfig.rrfTopK}),
        |xext AS (SELECT min(rrf) AS lo, max(rrf) AS hi FROM xtop),
        |xpool AS MATERIALIZED (SELECT CAST($qid AS BIGINT) AS query_id, doc_id AS vec_id,
        |    CASE WHEN hi = lo THEN 1.0 ELSE (rrf - lo) / (hi - lo) END AS simq
@@ -4801,7 +4844,7 @@ class SimilarityOps(val cfg: GraftConfig) {
     * retraction rule applied to vec_ids — deletes arrive AFTER the
     * index trained, the realistic serving state. */
   private def vecTombstoned: Column =
-    substring(md5(col("vec_id").cast("string")), 1, 2) >= cfg.docRetractLower
+    substring(md5(col("vec_id").cast("string")), 1, 2) >= GraftConfig.docRetractLower
 
   /** q341: TOMBSTONE-AWARE ANN SERVE — vector DELETION without
     * retraining (every production vector index's takedown path: the
@@ -4829,7 +4872,7 @@ class SimilarityOps(val cfg: GraftConfig) {
   }
 
   private def tombSql: String =
-    s"substr(md5(CAST(vec_id AS VARCHAR)), 1, 2) >= '${cfg.docRetractLower}'"
+    s"substr(md5(CAST(vec_id AS VARCHAR)), 1, 2) >= '${GraftConfig.docRetractLower}'"
 
   def q341Sql: String =
     s"""$trainedAssignCtes,
@@ -4837,7 +4880,7 @@ class SimilarityOps(val cfg: GraftConfig) {
        |    SELECT ia, ib, row_number() OVER (PARTITION BY ia ORDER BY
        |      CAST(dot AS DOUBLE)/(sqrt(CAST(na AS DOUBLE))*sqrt(CAST(nb AS DOUBLE))) DESC, ib) AS rk
        |    FROM af_dots WHERE ia < $NumQueries
-       |      AND NOT (substr(md5(CAST(ia AS VARCHAR)), 1, 2) >= '${cfg.docRetractLower}'))
+       |      AND NOT (substr(md5(CAST(ia AS VARCHAR)), 1, 2) >= '${GraftConfig.docRetractLower}'))
        |  WHERE rk <= ${cfg.ivfNprobe}),
        |qv AS (SELECT q.query_id, e.embedding AS qe, q.cell
        |  FROM qprobe q JOIN e ON e.vec_id = q.query_id),
@@ -5108,7 +5151,7 @@ class SimilarityOps(val cfg: GraftConfig) {
        |    SELECT ia, ib, row_number() OVER (PARTITION BY ia ORDER BY
        |      CAST(dot AS DOUBLE)/(sqrt(CAST(na AS DOUBLE))*sqrt(CAST(nb AS DOUBLE))) DESC, ib) AS rk
        |    FROM af_dots WHERE ia < $NumQueries
-       |      AND NOT (substr(md5(CAST(ia AS VARCHAR)), 1, 2) >= '${cfg.docRetractLower}'))
+       |      AND NOT (substr(md5(CAST(ia AS VARCHAR)), 1, 2) >= '${GraftConfig.docRetractLower}'))
        |  WHERE rk <= ${cfg.ivfNprobe}),
        |qv AS (SELECT q.query_id, e.embedding AS qe, q.cell
        |  FROM qprobe q JOIN e ON e.vec_id = q.query_id),

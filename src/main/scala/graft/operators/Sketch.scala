@@ -23,9 +23,19 @@ import graft.sources.{Artifact, Tables}
   * cross-engine hash idiom as the q68/q75 md5 splits, integer counters
   * only, so both engines agree bit-for-bit. */
 class SketchOps(val cfg: GraftConfig) {
-  val CmRows: Int = cfg.cmRows
-  val CmHexChars: Int = cfg.cmHexChars
-  val CmHeavyK: Int = cfg.cmHeavyK
+  // register-ledger compaction (q284): aged daily register rows
+  // merge into super-registers of this many days
+  val LedgerPeriodDays: Int = 28
+  // Count-Min sketch (Sketch.scala): salted hash rows, bucket-id hex
+  // prefix length (16^len buckets per row), heavy-hitter report size
+  val CmRows: Int = 4
+  val CmHexChars: Int = 2
+  val CmHeavyK: Int = 20
+  // Bloom filter (q156/q157): filter width in bits (must be a power
+  // of two so hex-slice hashes reduce by mask, not mod-bias) and
+  // hash count; 8192 bits / 4 hashes ≈ 1% FP at ~850 keys
+  val BloomBits: Int = 8192
+  val BloomHashes: Int = 4
 
   /** The (row, bucket) struct array for one token column. */
   private def bucketStructs(token: Column): Column =
@@ -349,19 +359,19 @@ class SketchOps(val cfg: GraftConfig) {
     else e
   }
 
-  /** The ${cfg.bloomHashes} Bloom bit positions of one text key: the
+  /** The ${BloomHashes} Bloom bit positions of one text key: the
     * md5 digest sliced into disjoint 32-bit words (hash count ≤ 4 by
     * construction — four slices per digest), reduced mod
-    * ${cfg.bloomBits}. Power-of-two width, so the reduction is a mask
+    * ${BloomBits}. Power-of-two width, so the reduction is a mask
     * — no modulo bias; 32-BIT words (pos div 32 / pos mod 32) because
     * bit 63 of a signed shift is unrepresentable on one of the two
     * engines (DuckDB range-errors on 1::BIGINT << 63). */
   private def bloomPositions(text: Column): Seq[Column] =
-    (0 until cfg.bloomHashes).map { j =>
-      conv(substring(md5(text), j * 8 + 1, 8), 16, 10).cast("long") % cfg.bloomBits
+    (0 until BloomHashes).map { j =>
+      conv(substring(md5(text), j * 8 + 1, 8), 16, 10).cast("long") % BloomBits
     }
 
-  /** q156: BLOOM FILTER build — one ${cfg.bloomBits}-bit membership
+  /** q156: BLOOM FILTER build — one ${BloomBits}-bit membership
     * filter per source over exact-content keys (the doc text digest):
     * the third mergeable sketch beside CMS (frequency) and HLL
     * (cardinality), answering "might this content already be in source
@@ -370,7 +380,7 @@ class SketchOps(val cfg: GraftConfig) {
     * ingests, two sources) merge by OR of aligned words, exactly like
     * q96's register max.
     *
-    * Scale: the filter is FIXED SIZE (${cfg.bloomBits / 32} words max
+    * Scale: the filter is FIXED SIZE (${BloomBits / 32} words max
     * per source) regardless of corpus — inserts fold map-side into
     * per-partition partial words and the shuffle carries only
     * sources × words partials, while the exact distinct-content set it
@@ -388,10 +398,10 @@ class SketchOps(val cfg: GraftConfig) {
       .withColumn("n_set", expr("CAST(bit_count(bits) AS INT)"))
 
   def q156Sql: String = {
-    val k = cfg.bloomHashes
+    val k = BloomHashes
     s"""WITH pos AS (
        |  SELECT source,
-       |    CAST('0x' || substr(md5(text), j*8 + 1, 8) AS BIGINT) % ${cfg.bloomBits} AS pos
+       |    CAST('0x' || substr(md5(text), j*8 + 1, 8) AS BIGINT) % ${BloomBits} AS pos
        |  FROM documents, (SELECT unnest(generate_series(0, ${k - 1})) AS j) t)
        |SELECT source, pos // 32 AS word_idx,
        |  bit_or(CAST(1 AS BIGINT) << CAST(pos % 32 AS INT)) AS bits,
@@ -401,7 +411,7 @@ class SketchOps(val cfg: GraftConfig) {
 
   /** q157: BLOOM PROBE — the filter in use: train-split docs (q68's
     * content-stable md5 split) build ONE global filter; every non-train
-    * doc probes its ${cfg.bloomHashes} positions and hits iff ALL are
+    * doc probes its ${BloomHashes} positions and hits iff ALL are
     * set. One summary row: probes, hits, true duplicates (exact text
     * match into train — the ground truth), false positives, and the
     * measured FP rate over the true negatives. The no-false-negative
@@ -410,12 +420,12 @@ class SketchOps(val cfg: GraftConfig) {
     * number that sizes m and k before anyone trusts the filter as a
     * join guard.
     *
-    * Scale: the filter table is ≤ ${cfg.bloomBits / 32} rows —
+    * Scale: the filter table is ≤ ${BloomBits / 32} rows —
     * broadcast onto the probe explode (a pure scan side); the truth
     * check joins 16-byte digests, not texts, and the final aggregate
     * is one row. */
   def q157BloomProbe(spark: SparkSession, dir: String): DataFrame = {
-    val k = cfg.bloomHashes
+    val k = BloomHashes
     val d = Tables.documents(spark, dir)
       .withColumn("b", substring(md5(col("doc_id").cast("string")), 1, 2))
     val train = d.filter(col("b") < cfg.splitTrainUpper)
@@ -442,7 +452,7 @@ class SketchOps(val cfg: GraftConfig) {
             (col("n_probes") - col("n_true")).cast("double")))
   }
 
-  /** Probe each (doc_id, text, key) row's ${cfg.bloomHashes} positions
+  /** Probe each (doc_id, text, key) row's ${BloomHashes} positions
     * against a broadcast (word_idx, bits) filter table: one row per
     * probe with bloom_hit = all positions set. */
   private def bloomProbeHits(probes: DataFrame, filter: DataFrame): DataFrame =
@@ -491,7 +501,7 @@ class SketchOps(val cfg: GraftConfig) {
     * concrete: classifying each delta doc as new-vs-duplicate against
     * the base WITHOUT anti-joining the full delta into the base key
     * set. The base's filter words broadcast onto the delta scan; only
-    * BLOOM-HIT docs (true dups + the measured ~${cfg.bloomBits}-bit FP
+    * BLOOM-HIT docs (true dups + the measured ~${BloomBits}-bit FP
     * tail) proceed to the exact digest semi-join — at 100 TB the
     * expensive join's probe side shrinks from |delta| to
     * |dups| + FP·|delta|, and the filter itself is ≤ m/32 rows however
@@ -527,8 +537,8 @@ class SketchOps(val cfg: GraftConfig) {
        |  FROM documents),
        |base AS (SELECT * FROM d WHERE b < '${cfg.splitTrainUpper}'),
        |fpos AS (SELECT CAST('0x' || substr(md5(text), j*8 + 1, 8) AS BIGINT)
-       |      % ${cfg.bloomBits} AS pos
-       |  FROM base, (SELECT unnest(generate_series(0, ${cfg.bloomHashes - 1})) AS j) t),
+       |      % ${BloomBits} AS pos
+       |  FROM base, (SELECT unnest(generate_series(0, ${BloomHashes - 1})) AS j) t),
        |filter AS (SELECT pos // 32 AS word_idx,
        |    bit_or(CAST(1 AS BIGINT) << CAST(pos % 32 AS INT)) AS bits
        |  FROM fpos GROUP BY 1),
@@ -536,8 +546,8 @@ class SketchOps(val cfg: GraftConfig) {
        |probes AS (SELECT doc_id, text, md5(text) AS key FROM d
        |  WHERE b >= '${cfg.splitTrainUpper}'),
        |pbits AS (SELECT doc_id, key,
-       |    CAST('0x' || substr(md5(text), j*8 + 1, 8) AS BIGINT) % ${cfg.bloomBits} AS pos
-       |  FROM probes, (SELECT unnest(generate_series(0, ${cfg.bloomHashes - 1})) AS j) t),
+       |    CAST('0x' || substr(md5(text), j*8 + 1, 8) AS BIGINT) % ${BloomBits} AS pos
+       |  FROM probes, (SELECT unnest(generate_series(0, ${BloomHashes - 1})) AS j) t),
        |hits AS (SELECT p.doc_id, p.key,
        |    min(coalesce((f.bits & (CAST(1 AS BIGINT) << CAST(p.pos % 32 AS INT)))
        |      <> 0, false)) AS bloom_hit
@@ -548,12 +558,12 @@ class SketchOps(val cfg: GraftConfig) {
        |FROM hits""".stripMargin
 
   def q157Sql: String = {
-    val k = cfg.bloomHashes
+    val k = BloomHashes
     s"""WITH d AS (SELECT doc_id, text, substr(md5(doc_id::VARCHAR), 1, 2) AS b
        |  FROM documents),
        |train AS (SELECT * FROM d WHERE b < '${cfg.splitTrainUpper}'),
        |fpos AS (SELECT CAST('0x' || substr(md5(text), j*8 + 1, 8) AS BIGINT)
-       |      % ${cfg.bloomBits} AS pos
+       |      % ${BloomBits} AS pos
        |  FROM train, (SELECT unnest(generate_series(0, ${k - 1})) AS j) t),
        |filter AS (SELECT pos // 32 AS word_idx,
        |    bit_or(CAST(1 AS BIGINT) << CAST(pos % 32 AS INT)) AS bits
@@ -562,7 +572,7 @@ class SketchOps(val cfg: GraftConfig) {
        |probes AS (SELECT doc_id, text, md5(text) AS key FROM d
        |  WHERE b >= '${cfg.splitTrainUpper}'),
        |pbits AS (SELECT doc_id, key,
-       |    CAST('0x' || substr(md5(text), j*8 + 1, 8) AS BIGINT) % ${cfg.bloomBits} AS pos
+       |    CAST('0x' || substr(md5(text), j*8 + 1, 8) AS BIGINT) % ${BloomBits} AS pos
        |  FROM probes, (SELECT unnest(generate_series(0, ${k - 1})) AS j) t),
        |hits AS (SELECT p.doc_id, p.key,
        |    min(coalesce((f.bits & (CAST(1 AS BIGINT) << CAST(p.pos % 32 AS INT)))
@@ -612,7 +622,7 @@ class SketchOps(val cfg: GraftConfig) {
   // error, plus its exact-eval and streaming twins.
   // ---------------------------------------------------------------------
 
-  private val QsK: Int = cfg.quantileSketchBits
+  private val QsK: Int = GraftConfig.quantileSketchBits
 
   /** The log-linear bucket projection over (cls, v100): e = the value's
     * binary length (computed via base-2 STRING length — conv/bin on
@@ -686,7 +696,7 @@ class SketchOps(val cfg: GraftConfig) {
   def q206QuantileEval(spark: SparkSession, dir: String): DataFrame = {
     val sk = q205QuantileSketch(spark, dir)
       .withColumnRenamed("o_orderpriority", "cls")
-    val levels = cfg.percentileLevels
+    val levels = GraftConfig.percentileLevels
     val ranks = sk.groupBy("cls").agg(sum(col("cnt")).as("n"))
       .select(col("cls"), col("n"),
         explode(array(levels.map(p => struct(lit(p).as("p"),
@@ -717,7 +727,7 @@ class SketchOps(val cfg: GraftConfig) {
   }
 
   def q206Sql: String = {
-    val levels = cfg.percentileLevels
+    val levels = GraftConfig.percentileLevels
     val lvlRows = levels.map(p => s"($p)").mkString(", ")
     val q91 = new AnalyticsOps(cfg).q91Sql
     val unpiv = levels.map(p =>
@@ -929,7 +939,7 @@ class SketchOps(val cfg: GraftConfig) {
     val b = substring(md5(col("doc_id").cast("string")), 1, 2)
     val toks = Tables.documents(spark, dir)
       .select(when(b < cfg.splitTrainUpper, "train")
-          .when(b < cfg.splitValUpper, "val").otherwise("test").as("grp"),
+          .when(b < GraftConfig.splitValUpper, "val").otherwise("test").as("grp"),
         explode(split(col("text"), " ")).as("token"))
       .filter(col("token") =!= "")
     val regs = hllRegisterAgg(toks, Seq("grp"))
@@ -978,7 +988,7 @@ class SketchOps(val cfg: GraftConfig) {
          |$out AS (SELECT $hllEstSqlDuck AS est FROM ${out}_z)""".stripMargin
     s"""WITH toks AS (SELECT
        |    CASE WHEN substr(md5(doc_id::VARCHAR), 1, 2) < '${cfg.splitTrainUpper}' THEN 'train'
-       |      WHEN substr(md5(doc_id::VARCHAR), 1, 2) < '${cfg.splitValUpper}' THEN 'val'
+       |      WHEN substr(md5(doc_id::VARCHAR), 1, 2) < '${GraftConfig.splitValUpper}' THEN 'val'
        |      ELSE 'test' END AS grp, t AS token
        |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS t FROM documents)
        |  WHERE t <> ''),
@@ -1315,7 +1325,7 @@ class SketchOps(val cfg: GraftConfig) {
     * per-day registers forever, so the ledger artifact grows one
     * m-register row-set per day without bound; register-max is
     * ASSOCIATIVE, so aged days compact losslessly into
-    * ${cfg.ledgerPeriodDays}-day SUPER-REGISTERS (daily→period merge ≡
+    * ${LedgerPeriodDays}-day SUPER-REGISTERS (daily→period merge ≡
     * sketching the period directly — the oracle re-proves this bitwise
     * every round by recomputing from raw events). Periods strictly
     * before the one containing the feed's max day are aged: their
@@ -1331,7 +1341,7 @@ class SketchOps(val cfg: GraftConfig) {
     * ships as the eval (the rule).
     *
     * Scale: the ledger stays CALENDAR-BOUNDED — aged periods cost
-    * m registers per ${cfg.ledgerPeriodDays} days instead of per day
+    * m registers per ${LedgerPeriodDays} days instead of per day
     * (a 28× artifact shrink at steady state), the compaction pass is a
     * metadata-sized grouped max over register rows (never a corpus
     * re-scan), and long-horizon distinct queries merge
@@ -1341,7 +1351,7 @@ class SketchOps(val cfg: GraftConfig) {
     * wrong; the spec extends the union-not-sum pin to the mixed
     * ledger. */
   def q284LedgerCompact(spark: SparkSession, dir: String): DataFrame = {
-    val P = cfg.ledgerPeriodDays
+    val P = LedgerPeriodDays
     val ev = rollingEv(spark, dir)
     val maxDayOpt = Option(ev.agg(max(col("day"))).head().getAs[java.lang.Long](0))
     if (maxDayOpt.isEmpty)
@@ -1380,7 +1390,7 @@ class SketchOps(val cfg: GraftConfig) {
     * compacted-mixed ledger must equal it bitwise (register-max
     * associativity is the claim under test). */
   def q284Sql: String = {
-    val P = cfg.ledgerPeriodDays
+    val P = LedgerPeriodDays
     val sfxLen = 32 - CmHexChars
     s"""WITH ev AS (SELECT epoch_ms(ts) // 86400000 AS day,
        |    CAST(user_id AS VARCHAR) AS token FROM events),
@@ -1593,7 +1603,7 @@ class SketchOps(val cfg: GraftConfig) {
     * bucket table per day forever): bucket counts are SUM-mergeable
     * (q205's pinned property — addition plays the role register-max
     * plays for HLL), so days strictly before the current
-    * ${cfg.ledgerPeriodDays}-day period compact LOSSLESSLY into
+    * ${LedgerPeriodDays}-day period compact LOSSLESSLY into
     * per-period super-buckets (content-keyed build-if-absent artifact;
     * daily→period merge ≡ sketching the period directly, which is
     * exactly what the straight-by-period oracle re-proves bitwise).
@@ -1607,13 +1617,13 @@ class SketchOps(val cfg: GraftConfig) {
     * exact per-period percentile must land inside the cut bucket.
     *
     * Scale: the ledger stays CALENDAR-BOUNDED — ≤ 64·2^${QsK + 1}
-    * bucket rows per ${cfg.ledgerPeriodDays} days instead of per day
+    * bucket rows per ${LedgerPeriodDays} days instead of per day
     * (a 28× artifact shrink at steady state); compaction is a
     * metadata-sized grouped SUM over bucket rows, never a re-scan of
     * order history; the per-period cut is a window over one period's
     * bounded bucket set. */
   def q295QuantileCompact(spark: SparkSession, dir: String): DataFrame = {
-    val P = cfg.ledgerPeriodDays
+    val P = LedgerPeriodDays
     val Pc = cfg.rollingQuantileP
     val vals = Tables.orders(spark, dir)
       .select(expr("unix_millis(CAST(o_orderdate AS TIMESTAMP)) div 86400000").as("day"),
@@ -1670,7 +1680,7 @@ class SketchOps(val cfg: GraftConfig) {
     * compacted-mixed ledger must equal it bitwise (bucket-count SUM
     * associativity is the claim under test). */
   def q295Sql: String = {
-    val P = cfg.ledgerPeriodDays
+    val P = LedgerPeriodDays
     val Pc = cfg.rollingQuantileP
     s"""WITH vals AS (SELECT epoch_ms(o_orderdate) // 86400000 AS day,
        |    CAST(floor(o_totalprice * 100) AS BIGINT) AS v FROM orders),

@@ -21,10 +21,16 @@ import graft.sources.Tables
   * by event_id.
   */
 class TemporalOps(val cfg: GraftConfig) {
-  private val LeftType = cfg.asofLeftType
-  private val RightType = cfg.asofRightType
-  private val PointType = cfg.intervalPointType
-  private val BucketMs = cfg.intervalBucketMs
+  // temporal joins (Temporal.scala): as-of event types (left row takes
+  // the latest right row at-or-before it, per user) and the
+  // point-in-interval query's point event type; bucket width for the
+  // interval join's explode-to-buckets equi-join
+  val LeftType: String = "purchase"
+  val RightType: String = "view"
+  // last-touch attribution (q141): qualifying channels
+  val AttributionChannels: Seq[String] = Seq("view", "click")
+  val PointType: String = "error"
+  val BucketMs: Long = 3600000L
   private val DayMs = 86400000L
 
   /** q85: as-of join — for each $LeftType event, the latest $RightType
@@ -275,7 +281,7 @@ class TemporalOps(val cfg: GraftConfig) {
 
   /** q141: LAST-TOUCH ATTRIBUTION — every conversion ($LeftType)
     * attributed to the same user's most recent marketing touch
-    * (${cfg.attributionChannels.mkString("/")}) within the
+    * (${AttributionChannels.mkString("/")}) within the
     * ${cfg.attributionHorizonMs / 86400000L}-day horizon, or to
     * "direct" (nulls) when no touch qualifies: the classic marketing
     * attribution query, and the horizon is what separates it from a
@@ -290,7 +296,7 @@ class TemporalOps(val cfg: GraftConfig) {
     * conversion's exact ms qualifies, max event_id among equal-ms
     * touches wins. */
   def q141Attribution(spark: SparkSession, dir: String): DataFrame = {
-    val chans = cfg.attributionChannels
+    val chans = AttributionChannels
     val H = cfg.attributionHorizonMs
     val e = Tables.events(spark, dir)
       .filter(col("event_type").isin(chans :+ LeftType: _*))
@@ -314,7 +320,7 @@ class TemporalOps(val cfg: GraftConfig) {
   }
 
   def q141Sql: String = {
-    val chans = cfg.attributionChannels.map(c => s"'$c'").mkString("(", ", ", ")")
+    val chans = AttributionChannels.map(c => s"'$c'").mkString("(", ", ", ")")
     val H = cfg.attributionHorizonMs
     s"""WITH t AS (SELECT user_id, event_id, epoch_ms(ts) AS ms, event_type FROM events
        |  WHERE event_type IN $chans),
@@ -351,7 +357,7 @@ class TemporalOps(val cfg: GraftConfig) {
     * on conversion id — bounded by that conversion's touches; the
     * channel rollup is map-combinable. */
   def q257LinearAttribution(spark: SparkSession, dir: String): DataFrame = {
-    val chans = cfg.attributionChannels
+    val chans = AttributionChannels
     val H = cfg.attributionHorizonMs
     val ev = Tables.events(spark, dir)
       .select(col("user_id"), col("event_id"), unix_millis(col("ts")).as("ms"),
@@ -380,7 +386,7 @@ class TemporalOps(val cfg: GraftConfig) {
   }
 
   def q257Sql: String = {
-    val chans = cfg.attributionChannels.map(c => s"'$c'").mkString("(", ", ", ")")
+    val chans = AttributionChannels.map(c => s"'$c'").mkString("(", ", ", ")")
     val H = cfg.attributionHorizonMs
     s"""WITH t AS (SELECT user_id, event_id AS t_id, epoch_ms(ts) AS t_ms,
        |    event_type AS ch FROM events WHERE event_type IN $chans),

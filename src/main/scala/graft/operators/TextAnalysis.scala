@@ -13,11 +13,13 @@ import graft.sources.{Artifact, Tables}
   * executors with zero shuffle (except langid's tiny profile broadcast).
   */
 class TextAnalysisOps(val cfg: GraftConfig) {
-  val Stopwords: Seq[String] = cfg.stopwords
-  val LangIdTrainMod: Int = cfg.langIdTrainMod
-  val LangIdProfileSize: Int = cfg.langIdProfileSize
-  val WinnowK: Int = cfg.winnowK
-  val WinnowWindow: Int = cfg.winnowWindow
+  val Stopwords: Seq[String] = GraftConfig.stopwords
+  // language id (training sample mod, profile size) and winnowing
+  // fingerprints (k-gram width, window)
+  val LangIdTrainMod: Int = 5
+  val LangIdProfileSize: Int = 30
+  val WinnowK: Int = 5
+  val WinnowWindow: Int = 4
   private val stopList = Stopwords.map(w => s"'$w'").mkString("(", ", ", ")")
 
   /** q50: whitespace tokens + regex token count (BPE-ish pre-tokenizer:

@@ -13,6 +13,20 @@ import org.apache.spark.sql.functions._
   * The partition column lives in the directory name, not the files, so
   * the layout also stores one column fewer. */
 object Layout {
+  // q198 dynamic partition pruning: a day is an "incident day" at or
+  // above this many error events (selective but non-vacuous: ~5 of
+  // 30 days at sf0.01)
+  val DppErrorMinCount: Long = 75L
+  // partitioned-layout scan (q146): the language whose partition the
+  // pruned read selects
+  val LayoutScanLang: String = "en"
+  // small-file compaction (q212): bin capacity the FFD packer fills
+  // part files toward, and the fragment count the demo layout is
+  // deliberately shattered into before compacting
+  val CompactTargetBytes: Long = 128L * 1024 * 1024
+  val CompactFragments: Int = 8
+  // zone-map pruning (q230): file count of the range-clustered layout
+  val ZoneMapFiles: Int = 8
 
   /** Write `df` partitioned by `byCol` (Hive-style directories). Pick
     * a LOW-cardinality column: every distinct value is a directory,
@@ -38,18 +52,18 @@ object Layout {
       .select(col("doc_id"), col("text"), col("lang"), col("source"), col("n_chars"))
     writePartitioned(docs, path, "lang")
     spark.read.parquet(path)
-      .filter(col("lang") === graft.GraftConfig.default.layoutScanLang)
+      .filter(col("lang") === LayoutScanLang)
       .select("doc_id", "lang", "source", "n_chars")
   }
 
   def q146Sql: String =
     s"""SELECT doc_id, lang, source, n_chars FROM documents
-       |WHERE lang = '${graft.GraftConfig.default.layoutScanLang}'""".stripMargin
+       |WHERE lang = '${LayoutScanLang}'""".stripMargin
 
   /** q198: DYNAMIC partition pruning — q146's prune comes from a
     * literal the planner sees; here the pruning set exists only at
     * RUNTIME: events lay out day-partitioned, the "incident day" dim
-    * (days with ≥ dppErrorMinCount error events) is computed from
+    * (days with ≥ DppErrorMinCount error events) is computed from
     * data, and Spark injects the broadcast dim's day set into the
     * partitioned scan as a runtime partition filter (DPP) — only
     * incident-day directories are ever read. At 100 TB this is the
@@ -69,7 +83,6 @@ object Layout {
   /** The lazy inner plan (PlanSpec pins the runtime dynamicpruning
     * partition filter on it). */
   private[graft] def q198At(spark: SparkSession, dir: String, path: String): DataFrame = {
-    val cfg = graft.GraftConfig.default
     val ev = Tables.events(spark, dir)
       .select(col("user_id"), col("event_type"),
         concat(lit("d"), expr("unix_millis(ts) div 86400000")).as("day"))
@@ -77,7 +90,7 @@ object Layout {
     val part = spark.read.parquet(path)
     val incidents = ev.filter(col("event_type") === "error")
       .groupBy("day").agg(count(lit(1)).as("n_err"))
-      .filter(col("n_err") >= cfg.dppErrorMinCount)
+      .filter(col("n_err") >= DppErrorMinCount)
     part.join(broadcast(incidents), "day")
       .groupBy("day")
       .agg(count(lit(1)).as("n_events"),
@@ -89,7 +102,7 @@ object Layout {
     s"""WITH ev AS (SELECT user_id, event_type,
        |    'd' || CAST(epoch_ms(ts) // 86400000 AS VARCHAR) AS day FROM events),
        |inc AS (SELECT day FROM ev WHERE event_type = 'error'
-       |  GROUP BY day HAVING count(*) >= ${graft.GraftConfig.default.dppErrorMinCount})
+       |  GROUP BY day HAVING count(*) >= ${DppErrorMinCount})
        |SELECT day, count(*) AS n_events, count(DISTINCT user_id) AS n_users,
        |  CAST(SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS n_errors
        |FROM ev JOIN inc USING (day)
@@ -183,10 +196,10 @@ object Layout {
   }
 
   /** q212: small-file compaction ROUND TRIP + eval — write the
-    * documents table deliberately fragmented (`compactFragments` tasks
+    * documents table deliberately fragmented (`CompactFragments` tasks
     * × lang partitions — the classic small-file pathology this
     * operator exists to heal), compact it with [[compactPartitioned]]
-    * toward `compactTargetBytes`, and emit one eval row per lang:
+    * toward `CompactTargetBytes`, and emit one eval row per lang:
     * content statistics read FROM THE COMPACTED LAYOUT (doc count,
     * char sum, an md5-word content fingerprint — the DuckDB oracle
     * recomputes all three from the flat table, so the hash gate proves
@@ -207,12 +220,11 @@ object Layout {
 
   private[graft] def q212At(spark: SparkSession, dir: String,
       src: String, dst: String): DataFrame = {
-    val cfg = graft.GraftConfig.default
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id"), col("text"), col("lang"), col("source"), col("n_chars"))
-    docs.repartition(cfg.compactFragments)
+    docs.repartition(CompactFragments)
       .write.mode("overwrite").partitionBy("lang").parquet(src)
-    val plans = compactPartitioned(spark, src, dst, cfg.compactTargetBytes)
+    val plans = compactPartitioned(spark, src, dst, CompactTargetBytes)
     val after = listParts(spark, dst).toMap
     import spark.implicits._
     val layoutEval = plans.map { pl =>
@@ -220,7 +232,7 @@ object Layout {
       val afterFiles = after.getOrElse(pl.partition, Seq.empty).size
       (lang,
         afterFiles.toLong == pl.bins.size.toLong,
-        pl.bins.forall(b => b.size == 1 || b.map(_._2).sum <= cfg.compactTargetBytes),
+        pl.bins.forall(b => b.size == 1 || b.map(_._2).sum <= CompactTargetBytes),
         afterFiles <= pl.files.size)
     }.toDF("lang", "plan_respected", "bins_within_target", "files_not_increased")
     def contentAgg(df: DataFrame) = df.groupBy("lang").agg(
@@ -288,7 +300,7 @@ object Layout {
   /** q216: INCREMENTAL compaction round trip — q212's maintenance op
     * with the skip discipline a nightly compactor actually runs: the
     * source layout is a MIX of dirty and clean partitions (the
-    * `layoutScanLang` partition shattered into `compactFragments`
+    * `LayoutScanLang` partition shattered into `CompactFragments`
     * files, every other language already one file), and
     * [[compactIncremental]] must rewrite ONLY the dirty one —
     * compliant partitions byte-copy (spec asserts their files are
@@ -305,7 +317,6 @@ object Layout {
 
   private[graft] def q216At(spark: SparkSession, dir: String,
       src: String, dst: String): DataFrame = {
-    val cfg = graft.GraftConfig.default
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id"), col("text"), col("lang"), col("source"), col("n_chars"))
     val srcRoot = new org.apache.hadoop.fs.Path(src)
@@ -315,13 +326,13 @@ object Layout {
     val langs = docs.select("lang").distinct().collect().map(_.getString(0)).sorted
     langs.foreach { lg =>
       val slice = docs.filter(col("lang") === lg).drop("lang")
-      val frags = if (lg == cfg.layoutScanLang) cfg.compactFragments else 1
+      val frags = if (lg == LayoutScanLang) CompactFragments else 1
       slice.repartition(frags).write.mode("overwrite").parquet(s"$src/lang=$lg")
     }
-    val (plans, skipped) = compactIncremental(spark, src, dst, cfg.compactTargetBytes)
+    val (plans, skipped) = compactIncremental(spark, src, dst, CompactTargetBytes)
     val dirtyOnly = plans.forall { pl =>
       val isClean = skipped.contains(pl.partition)
-      val isDirty = pl.partition == s"lang=${cfg.layoutScanLang}"
+      val isDirty = pl.partition == s"lang=${LayoutScanLang}"
       isClean != isDirty // exactly the fragmented partition rewrites
     }
     def contentAgg(df: DataFrame) = df.groupBy("lang").agg(
@@ -445,9 +456,8 @@ object Layout {
     Scratch.withRunDir(spark, dir, "zonemap")(q230At(spark, dir, _))
 
   private[graft] def q230At(spark: SparkSession, dir: String, path: String): DataFrame = {
-    val cfg = graft.GraftConfig.default
     val li = Tables.lineitem(spark, dir).select("l_orderkey", "l_quantity")
-    li.repartitionByRange(cfg.zoneMapFiles, col("l_orderkey"))
+    li.repartitionByRange(ZoneMapFiles, col("l_orderkey"))
       .write.parquet(path)
     val maxK = li.agg(max("l_orderkey")).head().getLong(0)
     val (loK, hiK) = (maxK * 25 / 100, maxK * 45 / 100)
@@ -749,12 +759,11 @@ object Layout {
   def q255ZoneMapIncremental(spark: SparkSession, dir: String): DataFrame =
     Scratch.withRunDirs(spark, dir, "zminc_data", "zminc_manifest") { ps =>
     val Seq(path, manPath) = ps
-    val cfg = graft.GraftConfig.default
     val li = Tables.lineitem(spark, dir).select("l_orderkey", "l_quantity")
     val conf = spark.sparkContext.hadoopConfiguration
     // day 1: the base corpus lands range-clustered; manifest v1 persists
     li.filter(col("l_orderkey") % 10 =!= 0)
-      .repartitionByRange(cfg.zoneMapFiles, col("l_orderkey"))
+      .repartitionByRange(ZoneMapFiles, col("l_orderkey"))
       .write.parquet(path)
     import spark.implicits._
     zoneMap(spark, path, "l_orderkey").toSeq.toDF("f", "lo", "hi", "n")

@@ -25,6 +25,16 @@ import org.apache.spark.sql.functions._
   * (q258's checkpoint contract) converges to the same bytes.
   */
 object CdcStream {
+  // snapshot retention (q304): how many newest copy-on-write snapshot
+  // versions the vacuum keeps readable (time travel's bound — older
+  // versions' files are reclaimed)
+  val CowRetainVersions: Int = 2
+  // read pin (q333): the lowest version a registered reader still
+  // needs as-of — the vacuum gate keeps every version >= the pin
+  // readable even when the retention window alone would retire it
+  // (with retain=2 on a 4-version chain the window keeps v3/v4; the
+  // pin at 2 is what saves v2, so the gate is exercised, not idle)
+  val CowReadPin: Int = 2
 
   /** Fold one change micro-batch into a snapshot. Snapshot columns:
     * (o_orderkey, o_custkey, o_orderstatus, o_totalprice, seq, alive);
@@ -215,7 +225,7 @@ object CdcStream {
     * v1..v3 one wave each via [[mergeBatch]]), reads EVERY version's
     * live row count (the time-travel audit — old versions answer
     * as-of queries bit-stably because their files never mutate), then
-    * VACUUMS to the newest ${graft.GraftConfig.default.cowRetainVersions}
+    * VACUUMS to the newest ${CowRetainVersions}
     * versions and re-lists, emitting per version (n_alive, kept). The
     * oracle recomputes each version's live count by folding only the
     * waves at-or-below it (last-wins per key) and pins the retention
@@ -245,7 +255,7 @@ object CdcStream {
     val preCounts = (0 until nVersions).map { v =>
       v -> spark.read.parquet(s"$root/v$v").filter(col("alive")).count()
     }.toMap
-    val cutoff = nVersions - graft.GraftConfig.default.cowRetainVersions
+    val cutoff = nVersions - CowRetainVersions
     (0 until cutoff).foreach(v => fs.delete(new org.apache.hadoop.fs.Path(s"$root/v$v"), true))
     (0 until nVersions).map { v =>
       val p = new org.apache.hadoop.fs.Path(s"$root/v$v")
@@ -272,7 +282,7 @@ object CdcStream {
            |      FROM ch WHERE ch.seq <= $v) WHERE rk = 1) l
            |  ON l.k = b.o_orderkey
            |  WHERE l.op IS NULL OR l.op <> 'D')""".stripMargin
-    val retain = graft.GraftConfig.default.cowRetainVersions
+    val retain = CowRetainVersions
     val rows = (0 until 4).map { v =>
       val kept = v >= 4 - retain
       s"SELECT CAST($v AS INT) AS version, (${aliveAt(v)}) AS n_alive, $kept AS kept"
@@ -416,8 +426,8 @@ object CdcStream {
     * CAS commit log ([[graft.sources.VersionChain]] — v1 base, v2..v4
     * one wave each), every version is read AS OF and audited
     * (replaying the fold to v_n is exactly what the oracle does), a
-    * reader PINS v${GraftConfig.default.cowReadPin} and the vacuum
-    * honors min(head − ${GraftConfig.default.cowRetainVersions} + 1,
+    * reader PINS v${CowReadPin} and the vacuum
+    * honors min(head − ${CowRetainVersions} + 1,
     * pin) — so the pinned version SURVIVES a retention window that
     * would otherwise retire it, and a version outside both
     * protections retires. Survivors re-read post-vacuum (intact, not
@@ -459,8 +469,8 @@ object CdcStream {
     val pre = (1 to head).map { v =>
       v -> readAsOf(spark, root, v).filter(col("alive")).count()
     }.toMap
-    val pin = graft.GraftConfig.default.cowReadPin
-    vacuumChain(fs, root, graft.GraftConfig.default.cowRetainVersions, pin)
+    val pin = CowReadPin
+    vacuumChain(fs, root, CowRetainVersions, pin)
     (1 to head).map { v =>
       val readable = fs.exists(
         new org.apache.hadoop.fs.Path(VersionChain.dataPath(root, v)))
@@ -488,8 +498,8 @@ object CdcStream {
            |      FROM ch WHERE ch.seq <= $v) WHERE rk = 1) l
            |  ON l.k = b.o_orderkey
            |  WHERE l.op IS NULL OR l.op <> 'D')""".stripMargin
-    val retain = graft.GraftConfig.default.cowRetainVersions
-    val pin = graft.GraftConfig.default.cowReadPin
+    val retain = CowRetainVersions
+    val pin = CowReadPin
     val cutoff = math.min(4 - retain + 1, pin)
     val rows = (1 to 4).map { v =>
       val readable = v >= cutoff

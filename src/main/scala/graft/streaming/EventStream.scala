@@ -13,6 +13,14 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * append-mode finalized windows.
   */
 object EventStream {
+  // streaming: state-store partition count for the bounded-replay
+  // drives — a stream's shuffle-partition count is pinned at first
+  // start and becomes its state-store count, so it must be sized to
+  // the stream's key cardinality/throughput, not the batch shuffle
+  // default (which exists for scan parallelism). On a production
+  // stream raise it to ≈ peak-keys-in-state / what one store's
+  // commit latency tolerates.
+  val StreamStatePartitions: Int = 8
 
   case class Event(event_id: Long, ts: java.sql.Timestamp, user_id: Long,
                    event_type: String, value: Double)
@@ -60,7 +68,7 @@ object EventStream {
   private[graft] def withStreamParts[T](spark: org.apache.spark.sql.SparkSession)(f: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
-    spark.conf.set(key, graft.GraftConfig.default.streamStatePartitions.toString)
+    spark.conf.set(key, StreamStatePartitions.toString)
     try f finally spark.conf.set(key, prev)
   }
 

@@ -84,7 +84,7 @@ object NdeProbe3 {
       .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"),
         col("x.n").as("na"), col("y.n").as("nb"))
       .groupBy("id_a", "id_b").agg(max("na").as("na"), max("nb").as("nb"))
-    val t = graft.GraftConfig.default.minhashJaccard
+    val t = graft.operators.Dedup.MinhashJ
     println("NDE3 candDistinct=" + cand.count())
     println("NDE3 candSizeGate=" + cand.filter(
       least(col("na"), col("nb")).cast("double") >=

@@ -499,7 +499,7 @@ class AnalyticsSpec extends GraftSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     got.foreach { case (u, v, cn) =>
       assert(u < v, "pairs are emitted id-ordered")
-      assert(cn >= Analytics.cfg.linkMinCommon)
+      assert(cn >= Analytics.LinkMinCommon)
       assert(!und.contains((u, v)), s"($u,$v) is an existing edge")
     }
     // cap = 0 excludes every wedge center → no candidates at all
@@ -533,10 +533,10 @@ class AnalyticsSpec extends GraftSpec {
       .withColumn("w", lit(1L))
     val seedBase = lit(15L * Analytics.PrScale / 100)
     def seeded(c: org.apache.spark.sql.Column) =
-      org.apache.spark.sql.functions.when(c % Analytics.cfg.bfsSeedMod === 0, seedBase)
+      org.apache.spark.sql.functions.when(c % GraftConfig.bfsSeedMod === 0, seedBase)
         .otherwise(lit(0L))
     def start(c: org.apache.spark.sql.Column) =
-      org.apache.spark.sql.functions.when(c % Analytics.cfg.bfsSeedMod === 0,
+      org.apache.spark.sql.functions.when(c % GraftConfig.bfsSeedMod === 0,
         lit(Analytics.PrScale)).otherwise(lit(0L))
     val unit = Analytics.prLoop(docs, e, seeded, start, Some("w"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -546,7 +546,7 @@ class AnalyticsSpec extends GraftSpec {
     val wppr = Analytics.q260WeightedPpr(spark, sf).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(wppr.keySet == plain.keySet)
-    assert(wppr.exists { case (n, p) => n % Analytics.cfg.bfsSeedMod != 0 && p > 0 },
+    assert(wppr.exists { case (n, p) => n % GraftConfig.bfsSeedMod != 0 && p > 0 },
       "mass must flow off the seeds somewhere")
   }
 }

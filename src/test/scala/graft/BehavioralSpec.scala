@@ -20,7 +20,7 @@ class BehavioralSpec extends GraftSpec {
   }
 
   test("q130: spike flags against a long baseline; constant users and short histories never flag") {
-    val ops = new BehavioralOps(GraftConfig(burstMinHours = 5, burstZSq = 9L))
+    val ops = new BehavioralOps(GraftConfig(burstMinHours = 5))
     var id = 0L
     def ev(user: Long, hour: Long, n: Int): Seq[(Long, Long, Long, String)] =
       (0 until n).map { i => id += 1; (id, user, hour * HourMs + i, "view") }
@@ -76,7 +76,7 @@ class BehavioralSpec extends GraftSpec {
     val out = Behavioral.q145Trending(spark, sf).collect()
       .groupBy(_.getLong(0))
     assert(out.nonEmpty)
-    val k = GraftConfig.default.trendTopK
+    val k = Behavioral.TrendTopK
     out.foreach { case (_, rows) =>
       val byRk = rows.sortBy(_.getInt(3))
       assert(byRk.length <= k)

@@ -220,8 +220,8 @@ class CdcStreamSpec extends GraftSpec {
   test("q333 end-to-end: readable flags follow min(head - retain + 1, pin) and survivors re-read intact") {
     val out = CdcStream.q333ReadAsOf(spark, sf).collect()
       .map(r => r.getInt(0) -> ((r.getLong(1), r.getBoolean(2)))).toMap
-    val retain = GraftConfig.default.cowRetainVersions
-    val pin = GraftConfig.default.cowReadPin
+    val retain = graft.streaming.CdcStream.CowRetainVersions
+    val pin = graft.streaming.CdcStream.CowReadPin
     val cutoff = math.min(4 - retain + 1, pin)
     (1 to 4).foreach { v =>
       assert(out(v)._2 == (v >= cutoff), s"v$v readable flag must follow the gate")

@@ -101,11 +101,11 @@ class CompactionSpec extends GraftSpec {
       assert(rows.forall(_.getAs[Boolean](c)), s"gate $c must hold on every lang")
     }
     val rep = Layout.compactionReport(spark, src, dst).collect()
-    val dirty = s"lang=${GraftConfig.default.layoutScanLang}"
+    val dirty = s"lang=${graft.sources.Layout.LayoutScanLang}"
     // dirty partition shrank to its planned bin count (< fragment count)
     val dirtyBefore = rep.filter(r => r.getString(0) == "before" && r.getString(1) == dirty)
     val dirtyAfter = rep.filter(r => r.getString(0) == "after" && r.getString(1) == dirty)
-    assert(dirtyBefore.length == GraftConfig.default.compactFragments)
+    assert(dirtyBefore.length == graft.sources.Layout.CompactFragments)
     assert(dirtyAfter.length < dirtyBefore.length)
     // clean partitions: same file names, same byte sizes — a byte copy,
     // not a decode/re-encode (re-encoding would change sizes)
@@ -128,7 +128,6 @@ class CompactionSpec extends GraftSpec {
       .foreach { c =>
         assert(rows.forall(_.getAs[Boolean](c)), s"gate $c must hold on every lang")
       }
-    val cfgv = GraftConfig.default
     val rep = Layout.compactionReport(spark, csrc, cdst).collect()
     val byPhase = rep.groupBy(_.getString(0)).view.mapValues(_.length).toMap
     assert(byPhase("after") < byPhase("before"),
@@ -136,7 +135,7 @@ class CompactionSpec extends GraftSpec {
     // 128 MB target swallows each tiny lang slice whole: 1 file per lang
     val afterByPart = rep.filter(_.getString(0) == "after").groupBy(_.getString(1))
     assert(afterByPart.values.forall(_.length == 1))
-    assert(cfgv.compactTargetBytes > rep.map(_.getAs[Long]("bytes")).sum)
+    assert(graft.sources.Layout.CompactTargetBytes > rep.map(_.getAs[Long]("bytes")).sum)
   }
 
   test("q238: ledgered ingest totals equal the full recompute; run 2 only new, run 3 no-op") {

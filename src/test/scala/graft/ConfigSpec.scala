@@ -2,6 +2,8 @@ package graft
 
 import graft.operators.{DedupOps, GraphOpsLib, SequenceOps, SimilarityOps}
 import org.apache.spark.sql.functions._
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 class ConfigSpec extends GraftSpec {
 
@@ -62,5 +64,23 @@ class ConfigSpec extends GraftSpec {
     assert(d.q57DedupFamilies(spark, sf).count() > 0)
     val g = new GraphOpsLib(GraftConfig(reliableStageCheckpoints = true))
     assert(g.q63RepeatAdjust(spark, sf).count() > 0)
+  }
+
+  test("every GraftConfig field is set by some caller; unset knobs are constants") {
+    // source-only: a field no operator, tool, test or benchmark assigns
+    // has one value in use, so it belongs beside its query as a named
+    // constant. The deployment settings are set through -Dgraft.* /
+    // GRAFT_* and are exempt.
+    val roots = Seq("src/main/scala", "src/test/scala", "perfbench").map(Paths.get(_))
+    roots.foreach(r => assert(Files.isDirectory(r), s"run from the repository root: ${r.toAbsolutePath}"))
+    val sources = roots.flatMap(r => Files.walk(r).iterator.asScala.toList)
+      .filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != "GraftConfig.scala")
+      .map(p => new String(Files.readAllBytes(p), "UTF-8"))
+    val deployment = Set("reliableStageCheckpoints", "scratchDir")
+    val unset = GraftConfig().productElementNames.filterNot(deployment).filterNot { n =>
+      val assign = s"(?<![\\w.])$n\\s*=(?![=>])".r
+      sources.exists(assign.findFirstIn(_).isDefined)
+    }.toList
+    assert(unset.isEmpty, s"GraftConfig fields no caller sets: ${unset.mkString(", ")}")
   }
 }

@@ -10,7 +10,7 @@ class CurationSpec extends GraftSpec {
   import spark.implicits._
 
   private val ops = new CurationOps(GraftConfig(
-    contamNgramWords = 2, contamMaxTrainDf = 2, contamEvalMod = 10,
+    contamNgramWords = 2, contamMaxTrainDf = 2,
     vocabTopK = 3, bigramMinCount = 1))
 
   private def docs(rows: (Long, String)*) = {
@@ -77,7 +77,7 @@ class CurationSpec extends GraftSpec {
   }
 
   test("q74: eval docs sharing the q13 content key with train are reported") {
-    val leak = new CurationOps(GraftConfig(dedupKeyWords = 2, contamEvalMod = 10))
+    val leak = new CurationOps(GraftConfig(dedupKeyWords = 2))
     // key = first 2 words. eval doc 9 shares "a b" with train docs 0,1;
     // eval doc 8's key "z z" has no train match.
     val dir = docs(0L -> "a b c", 1L -> "a b d", 2L -> "q r",
@@ -190,7 +190,7 @@ class CurationSpec extends GraftSpec {
 
   test("q81 stratified sample: per-language cap respected, ranks dense, deterministic") {
     val df = Curation.q81StratifiedSample(spark, sf)
-    val cap = graft.GraftConfig.default.stratifiedCap
+    val cap = Curation.StratifiedCap
     val perLang = df.groupBy("lang").agg(count(lit(1)).as("n"), max(col("rk")).as("mx"))
     assert(perLang.filter(col("n") > cap).count() == 0)
     // ranks are exactly 1..n within each language (dense, no gaps)
@@ -357,7 +357,7 @@ class CurationSpec extends GraftSpec {
 
   test("q180: fills reconcile with q83's assignment — shard totals conserved, fill = tok/ctx") {
     import org.apache.spark.sql.functions._
-    val ctx = GraftConfig.default.packCtxTokens.toDouble
+    val ctx = Curation.PackCtxTokens.toDouble
     val bins = graft.operators.Curation.q180PackEval(spark, sf).collect()
     bins.foreach { r =>
       assert(r.getDouble(4) == r.getLong(3).toDouble / ctx)
@@ -429,7 +429,7 @@ class CurationSpec extends GraftSpec {
     // corpus-level VERDICT agrees with q163's exact linear-bin path
     // under the same 1-df threshold + the same expected≥5 validity rule
     // (unbiased md5 split → no drift on either binning)
-    val thr = GraftConfig.default.chi2DriftThreshold
+    val thr = Curation.Chi2DriftThreshold
     val sketchVerdict = q214.exists(_.getAs[Boolean]("drifted"))
     val exact = graft.operators.Curation.q163SplitDrift(spark, sf).collect()
     val nt = exact.map(_.getLong(1)).sum.toDouble
@@ -647,7 +647,7 @@ class CurationSpec extends GraftSpec {
       (1L, "alpha alpha alpha alpha", "en", "s"),
       (2L, "beta beta beta beta", "de", "s"),
       (3L, "alpha beta alpha beta", "de", "s"))
-    val ops2 = new CurationOps(GraftConfig(ext = GraftExt(dsirSampleK = 2)))
+    val ops2 = new CurationOps(GraftConfig(dsirSampleK = 2))
     val sel = ops2.q321ImportanceResample(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(3))).toMap
     // recompute every priority in plain Scala: w·2³² div (u32+1)

@@ -327,7 +327,7 @@ class DedupSpec extends GraftSpec {
     val full = Dedup.q57DedupFamilies(spark, sf).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3), r.getBoolean(4)))
       .toMap
-    val retracted = full.keys.filter(bucket(_) >= cfg.docRetractLower).toSet
+    val retracted = full.keys.filter(bucket(_) >= GraftConfig.docRetractLower).toSet
     assert(retracted.nonEmpty, "the retraction band must hit some docs")
     val touchedFams = retracted.map(d => full(d)._1)
     val dec = Dedup.q296DecrementalFamilies(spark, sf).collect()
@@ -364,8 +364,8 @@ class DedupSpec extends GraftSpec {
     // the lowest sweep point IS the base threshold → counts equal q131's table
     val base = Dedup.q131SimJoin(spark, sf).select("id_a", "id_b").collect()
     val basePct = rows.head
-    assert(basePct._1 * GraftConfig.default.simJoinTDen ==
-      100 * GraftConfig.default.simJoinTNum, "lowest sweep point is the base threshold")
+    assert(basePct._1 * Dedup.SimJoinTDen ==
+      100 * Dedup.SimJoinTNum, "lowest sweep point is the base threshold")
     assert(basePct._2 == base.length)
     assert(basePct._3 == base.flatMap(r => Seq(r.getLong(0), r.getLong(1))).distinct.length)
   }
@@ -386,9 +386,8 @@ class DedupSpec extends GraftSpec {
   }
 
   test("q204 persisted split ≡ q197 recomputed split on the delta slice") {
-    val cfgD = GraftConfig.default
     val q197 = Dedup.q197FamilySplit(spark, sf).collect()
-      .filter(r => r.getLong(0) % cfgD.deltaBatchMod == cfgD.deltaBatchRem)
+      .filter(r => r.getLong(0) % Dedup.DeltaBatchMod == Dedup.DeltaBatchRem)
       .map(r => (r.getLong(0), (r.getLong(1), r.getString(2), r.getString(3), r.getBoolean(4))))
       .toMap
     val q204 = Dedup.q204FamilySplitPersisted(spark, sf).collect()
@@ -399,7 +398,7 @@ class DedupSpec extends GraftSpec {
   }
 
   test("q194 cluster sample: per-cell cap respected, deterministic across re-runs") {
-    val cap = GraftConfig.default.clusterSampleCap
+    val cap = Similarity.ClusterSampleCap
     val r1 = Similarity.q194ClusterSample(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
     val r2 = Similarity.q194ClusterSample(spark, sf).collect()
@@ -463,14 +462,13 @@ class DedupSpec extends GraftSpec {
   }
 
   test("q195 cluster terms: ranks dense per cell, support threshold respected") {
-    val cfgD = GraftConfig.default
     val rows = Similarity.q195ClusterTerms(spark, sf).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getInt(4)))
     assert(rows.nonEmpty)
     rows.groupBy(_._1).foreach { case (cell, rs) =>
-      assert(rs.length <= cfgD.clusterTermsTopK)
+      assert(rs.length <= Similarity.ClusterTermsTopK)
       assert(rs.map(_._4).sorted.toSeq == (1 to rs.length), s"cell $cell ranks not dense")
-      rs.foreach { case (_, _, c, _) => assert(c >= cfgD.clusterTermsMinCount) }
+      rs.foreach { case (_, _, c, _) => assert(c >= Similarity.ClusterTermsMinCount) }
     }
   }
 
@@ -484,7 +482,7 @@ class DedupSpec extends GraftSpec {
         col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
       .agg(count(lit(1)).as("i"))
-    val (tn, td) = (GraftConfig.default.simJoinTNum.toLong, GraftConfig.default.simJoinTDen.toLong)
+    val (tn, td) = (Dedup.SimJoinTNum.toLong, Dedup.SimJoinTDen.toLong)
     val naive = inter
       .join(sz.select(col("doc_id").as("id_a"), col("n").as("na")), "id_a")
       .join(sz.select(col("doc_id").as("id_b"), col("n").as("nb")), "id_b")
@@ -532,7 +530,7 @@ class DedupSpec extends GraftSpec {
     val dir = pqDir((0L to 5L).map(i =>
       i -> Seq(i.toFloat, i + 0.5f, 10f - i, 2f * i)): _*)
     val ops = new graft.operators.SimilarityOps(GraftConfig(
-      pqSubspaces = 2, pqCodewords = 8, pqIters = 1,
+      pqSubspaces = 2, pqIters = 1,
       annQueries = 3, annTopK = 2))
     val codes = ops.q222PqEncode(spark, dir).collect()
       .map(r => r.getAs[Long]("vec_id") -> r.getAs[String]("codes")).toMap
@@ -549,7 +547,7 @@ class DedupSpec extends GraftSpec {
     val dir = pqDir((0L to 5L).map(i =>
       i -> Seq(i.toFloat, i + 0.5f, 10f - i, 2f * i)): _*)
     val ops = new graft.operators.SimilarityOps(GraftConfig(
-      pqSubspaces = 2, pqCodewords = 8, pqIters = 1,
+      pqSubspaces = 2, pqIters = 1,
       annQueries = 3, annTopK = 2))
     ops.q222PqEncode(spark, dir).collect() // trains + persists
     // doctor the artifact down to ONE codeword per subspace
@@ -595,7 +593,7 @@ class DedupSpec extends GraftSpec {
     val dir = pqDir((0L to 5L).map(i =>
       i -> Seq(i.toFloat, i + 0.5f, 10f - i, 2f * i)): _*)
     val ops = new graft.operators.SimilarityOps(GraftConfig(
-      pqSubspaces = 2, pqCodewords = 8, pqIters = 1,
+      pqSubspaces = 2, pqIters = 1,
       ivfCentroids = 2, kmeansIters = 1, ivfTrainMod = 1,
       annQueries = 3, annTopK = 2, ivfTopK = 2, ivfNprobe = 2))
     def armRows(df: org.apache.spark.sql.DataFrame, arm: String) =
@@ -624,7 +622,7 @@ class DedupSpec extends GraftSpec {
     val dir = pqDir((0L to 5L).map(i =>
       i -> Seq(i.toFloat, i + 0.5f, 10f - i, 2f * i)): _*)
     val ops = new graft.operators.SimilarityOps(GraftConfig(
-      pqSubspaces = 2, pqCodewords = 8, pqIters = 1,
+      pqSubspaces = 2, pqIters = 1,
       annQueries = 3, annTopK = 2, ivfTopK = 2))
     val before = ops.q223PqRecall(spark, dir).collect()
     assert(before.forall(_.getAs[Double]("recall") == 1.0),
@@ -643,7 +641,7 @@ class DedupSpec extends GraftSpec {
 
   test("q222/q223 real corpus: codes in range, recall bounded") {
     val m = GraftConfig.default.pqSubspaces
-    val k = GraftConfig.default.pqCodewords
+    val k = Similarity.PqK
     val rows = Similarity.q222PqEncode(spark, sf).collect()
     assert(rows.length == spark.read.parquet(s"$sf/embeddings.parquet").count())
     rows.foreach { r =>
@@ -665,7 +663,7 @@ class DedupSpec extends GraftSpec {
     val dir = pqDir((0L to 5L).map(i =>
       i -> Seq(i.toFloat, i + 0.5f, 10f - i, 2f * i)): _*)
     val ops = new graft.operators.SimilarityOps(GraftConfig(
-      pqSubspaces = 2, pqCodewords = 8, pqIters = 1,
+      pqSubspaces = 2, pqIters = 1,
       annQueries = 3, annTopK = 2,
       ivfCentroids = 2, ivfNprobe = 2, ivfTopK = 2, kmeansIters = 1))
     val res = ops.q261IvfPqSearch(spark, dir).collect()
@@ -707,7 +705,7 @@ class DedupSpec extends GraftSpec {
     val dir = pqDir((0L to 5L).map(i =>
       i -> Seq(i.toFloat, i + 0.5f, 10f - i, 2f * i)): _*)
     val ops = new graft.operators.SimilarityOps(GraftConfig(
-      pqSubspaces = 2, pqCodewords = 8, pqIters = 2,
+      pqSubspaces = 2, pqIters = 2,
       annQueries = 3, annTopK = 2,
       ivfCentroids = 1, ivfNprobe = 1, ivfTopK = 2, kmeansIters = 1))
     val res = ops.q271IvfPqResidualSearch(spark, dir).collect()
@@ -1053,7 +1051,7 @@ class DedupSpec extends GraftSpec {
     // tombstoned id — serving needs no anti-join because the index
     // itself no longer holds the deleted vectors
     val tomb = substring(md5(col("vec_id").cast("string")), 1, 2) >=
-      GraftConfig.default.docRetractLower
+      GraftConfig.docRetractLower
     val asg = spark.read.parquet(VersionChain.dataPath(root, 2) + "/assign")
     assert(asg.filter(tomb).count() == 0,
       "a tombstoned id inside the committed assignment means the fold failed")
@@ -1151,7 +1149,7 @@ class DedupSpec extends GraftSpec {
         col("a.s") === col("b.s") && col("a.doc_id") =!= col("b.doc_id"))
       .groupBy(col("a.doc_id").as("src_id"), col("b.doc_id").as("dst_id"))
       .agg(count(lit(1)).as("i"))
-    val (tn, td) = (GraftConfig.default.contTNum.toLong, GraftConfig.default.contTDen.toLong)
+    val (tn, td) = (Dedup.ContTNum.toLong, Dedup.ContTDen.toLong)
     val naive = inter
       .join(sz.select(col("doc_id").as("src_id"), col("n").as("na")), "src_id")
       .filter(lit(td) * col("i") >= lit(tn) * col("na"))
@@ -1193,7 +1191,7 @@ class DedupSpec extends GraftSpec {
     assert(first.map(r => (r.getLong(0), r.getLong(1))).toSet == Set((1L, 2L)))
     val cfg = GraftConfig.default
     val path = graft.sources.Scratch.keyedDir("contain_pairs", dir, spark,
-      Seq("documents.parquet"), s"w=${cfg.simJoinWords},t=${cfg.contTNum}/${cfg.contTDen}")
+      Seq("documents.parquet"), s"w=${Dedup.SimJoinWords},t=${Dedup.ContTNum}/${Dedup.ContTDen}")
     Seq((77L, 99L, 0.5)).toDF("src_id", "dst_id", "containment")
       .write.mode("overwrite").parquet(path)
     val doctored = Dedup.q324ContainmentJoin(spark, dir).collect()
@@ -1221,7 +1219,7 @@ class DedupSpec extends GraftSpec {
     val cfg = GraftConfig.default
     val path = graft.sources.Scratch.keyedDir("cont_base_pairs", dir, spark,
       Seq("documents.parquet"),
-      s"w=${cfg.simJoinWords},t=${cfg.contTNum}/${cfg.contTDen},u=${cfg.splitTrainUpper}")
+      s"w=${Dedup.SimJoinWords},t=${Dedup.ContTNum}/${Dedup.ContTDen},u=${cfg.splitTrainUpper}")
     Seq((777L, 888L, 0.9)).toDF("src_id", "dst_id", "containment")
       .write.mode("overwrite").parquet(path)
     val doctored = Dedup.q332ContainmentDelta(spark, dir).collect()

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.operators.Embed
 
 class EmbedSpec extends GraftSpec {
   import spark.implicits._
@@ -119,7 +120,7 @@ class EmbedSpec extends GraftSpec {
       row.getAs[Long]("cand_pairs"), row.getAs[Long]("hit_pairs"))
     assert(ht <= ex && ht <= cd, "hits are the intersection")
     assert(row.getAs[Long]("n_sample") ==
-      math.min(GraftConfig.default.derivedEvalSample.toLong,
+      math.min(Embed.DerivedEvalSample.toLong,
         spark.read.parquet(s"$sf/documents.parquet").count()))
     val (rec, prec) = (row.getAs[Double]("recall"), row.getAs[Double]("precision"))
     assert(rec >= 0.0 && rec <= 1.0 && prec >= 0.0 && prec <= 1.0)
@@ -158,7 +159,7 @@ class EmbedSpec extends GraftSpec {
     val got = graft.sources.Tables.documents(spark, sf).limit(20)
       .select(col("doc_id"),
         expr(s"sign_bands_long(feat_hash_vec(text, ${cfg.featHashDim}), " +
-          s"${cfg.derivedBands}, ${cfg.derivedBandBits})").as("keys"))
+          s"${Embed.DerivedBands}, ${Embed.DerivedBandBits})").as("keys"))
       .collect()
       .map(r => r.getLong(0) -> r.getSeq[Long](1).toSeq).toMap
     val v = graft.operators.Embed.q282TextEmbed(spark, sf).collect()
@@ -166,7 +167,7 @@ class EmbedSpec extends GraftSpec {
       .map { case (id, rs) => id -> rs.map(r => r.getLong(1) -> r.getLong(2)).toMap }
     got.foreach { case (id, keys) =>
       val expect = refBands(v.getOrElse(id, Map.empty), cfg.featHashDim,
-        cfg.derivedBands, cfg.derivedBandBits).map(_._2)
+        Embed.DerivedBands, Embed.DerivedBandBits).map(_._2)
       assert(keys == expect, s"doc $id band keys diverge from the replication")
     }
   }
@@ -179,7 +180,7 @@ class EmbedSpec extends GraftSpec {
       .groupBy(_.getLong(0))
       .map { case (id, rs) => id -> rs.map(r => r.getLong(1) -> r.getLong(2)).toMap }
     val keys = v.map { case (id, m) =>
-      id -> refBands(m, cfg.featHashDim, cfg.derivedBands, cfg.derivedBandBits).toSet }
+      id -> refBands(m, cfg.featHashDim, Embed.DerivedBands, Embed.DerivedBandBits).toSet }
     val df = keys.values.flatten.groupBy(identity).map { case (k, xs) => k -> xs.size }
     val res = ops.q283DerivedNearDup(spark, sf).collect()
     assert(res.nonEmpty, "sf0.001 corpus must yield at least one 0.9-pair")

@@ -76,12 +76,12 @@ class GraphOpsSpec extends GraftSpec {
     val e = GraphOps.edges2(spark, sf).select(col("src").as("u"), col("dst").as("v"))
       .withColumn("b", substring(md5(concat(col("u").cast("string"), lit(":"),
         col("v").cast("string"))), 1, 2))
-    assert(e.filter(col("b") >= cfg.ccDeleteLower).count() > 0, "delete batch must be non-empty")
-    assert(e.filter(col("b") < cfg.ccDeleteLower).count() > 0, "surviving set must be non-empty")
+    assert(e.filter(col("b") >= GraphOps.CcDeleteLower).count() > 0, "delete batch must be non-empty")
+    assert(e.filter(col("b") < GraphOps.CcDeleteLower).count() > 0, "surviving set must be non-empty")
     // direct recompute through a DIFFERENT code path: the kernel on the
     // kept edges, no base/touched machinery
     val lbl = graft.operators.Cc.labels(
-      e.filter(col("b") < cfg.ccDeleteLower).select("u", "v"), cfg)
+      e.filter(col("b") < GraphOps.CcDeleteLower).select("u", "v"), cfg)
     val docs = graft.sources.Tables.documents(spark, sf).select("doc_id")
     val comp = docs.join(lbl.select(col("node").as("doc_id"), col("lbl")), Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("lbl"), col("doc_id")).as("component_id"))
@@ -106,7 +106,7 @@ class GraphOpsSpec extends GraftSpec {
     val deleted = GraphOps.edges2(spark, sf).select(col("src").as("u"), col("dst").as("v"))
       .withColumn("b", substring(md5(concat(col("u").cast("string"), lit(":"),
         col("v").cast("string"))), 1, 2))
-      .filter(col("b") >= cfg.ccDeleteLower).select("u", "v").collect()
+      .filter(col("b") >= GraphOps.CcDeleteLower).select("u", "v").collect()
     val touched = deleted.flatMap(r => Seq(r.getLong(0), r.getLong(1)))
       .flatMap(base.get).toSet
     assert(touched.nonEmpty && touched.size < base.values.toSet.size,

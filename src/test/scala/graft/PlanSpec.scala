@@ -650,7 +650,7 @@ class PlanSpec extends GraftSpec {
     assert(!p.contains("CartesianProduct"), "no unbounded pair generation in the sweep")
     // per-point work: windows only on the query side (probe rank + final
     // top-k per point) — corpus-keyed windows would be the skew-killer
-    assert(windows(p) <= 2 * GraftConfig.default.probeCurveMax,
+    assert(windows(p) <= 2 * graft.operators.Similarity.ProbeCurveMax,
       "windows must stay on the panel side of every curve point")
   }
 
@@ -658,7 +658,7 @@ class PlanSpec extends GraftSpec {
     val p = plan("q326_filtered_search")
     // pre-filter means the predicate lands on the assignment scan —
     // it must appear as a Filter, not be applied after the top-k
-    assert(p.contains(s"= ${GraftConfig.default.annFilterLabel}"),
+    assert(p.contains(s"= ${graft.operators.Similarity.AnnFilterLabel}"),
       "the label predicate must be in the plan (candidate generation), not post-applied")
     assert(!p.contains("CartesianProduct"), "no unbounded pair generation")
     // windows only on the query side: probe rank + final top-k

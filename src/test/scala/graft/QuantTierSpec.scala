@@ -122,7 +122,7 @@ class QuantTierSpec extends GraftSpec {
     val curve = Similarity.q306IvfProbeCurve(spark, sf).collect()
       .map(r => (r.getInt(0), r.getLong(1)) -> r.getDouble(3)).toMap
     val queries = curve.keys.map(_._2).toSet
-    val maxNp = GraftConfig.default.probeCurveMax
+    val maxNp = Similarity.ProbeCurveMax
     queries.foreach { q =>
       (1 until maxNp).foreach { np =>
         assert(curve((np, q)) <= curve((np + 1, q)) + 1e-12,
@@ -150,7 +150,7 @@ class QuantTierSpec extends GraftSpec {
 
   test("cellsFor pins the Σ|cell|² sub-quadratic contract: cells grow ∝ n; test SFs sit below the knee") {
     val cfg = GraftConfig.default
-    val target = cfg.semTargetCellSize.toLong
+    val target = Similarity.SemTargetCellSize.toLong
     // (1) the rule keeps EXPECTED cell size bounded at every scale —
     // the property that makes q94/q196's pair space O(n·target), not n²
     Seq(100L, 1000L, 10000L, 1000000L, 100000000L).foreach { n =>
@@ -196,7 +196,7 @@ class QuantTierSpec extends GraftSpec {
     }
     // the retrain flag is the integer trigger on the CUMULATIVE total,
     // recomputed independently per wave
-    val (tn, td) = (GraftConfig.default.driftTNum.toLong, GraftConfig.default.driftTDen.toLong)
+    val (tn, td) = (Similarity.DriftTNum.toLong, Similarity.DriftTDen.toLong)
     val waveTotals = rows.groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(2)).sum).toMap
     rows.foreach { r =>
       val cum = waveTotals.filter(_._1 <= r.getLong(0)).values.sum
@@ -211,7 +211,7 @@ class QuantTierSpec extends GraftSpec {
   }
 
   test("q326/q327 filtered ANN: every result carries the label, and pre-filter dominates post-filter") {
-    val L = GraftConfig.default.annFilterLabel
+    val L = Similarity.AnnFilterLabel
     val labels = spark.read.parquet(s"$sf/embeddings.parquet")
       .select("vec_id", "label").collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
@@ -254,7 +254,7 @@ class QuantTierSpec extends GraftSpec {
       .toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     val ops = new graft.operators.SimilarityOps(GraftConfig(annQueries = 1,
-      ext = GraftExt(mmrPool = 4, mmrK = 3)))
+      mmrPool = 4, mmrK = 3))
     val got = ops.q328MmrRerank(spark, dir).collect()
       .map(r => r.getInt(2) -> r.getLong(1)).toMap
     assert(got(1) == 1L, "rank 1 must be the plain cosine argmax (lowest-id clone)")
@@ -310,18 +310,18 @@ class QuantTierSpec extends GraftSpec {
     val e = graft.sources.Tables.embeddings(spark, sf)
       .select(col("vec_id"), col("embedding"))
       .withColumn("n2", Vec.norm2N("embedding"))
-    val tq = e.filter(col("vec_id") === cfg.hybridQueryVec)
+    val tq = e.filter(col("vec_id") === GraftConfig.hybridQueryVec)
       .select(col("embedding").as("qe"), col("n2").as("qn2"))
-    val textPool = e.filter(col("vec_id") =!= cfg.hybridQueryVec).crossJoin(broadcast(tq))
+    val textPool = e.filter(col("vec_id") =!= GraftConfig.hybridQueryVec).crossJoin(broadcast(tq))
       .select(col("vec_id"),
         Vec.cosineFromParts(Vec.dotN("qe", "embedding"), col("qn2"), col("n2")).as("c"))
       .orderBy(col("c").desc, col("vec_id")).limit(cfg.rrfPoolK)
       .collect().map(_.getLong(0)).toSet
     val d = graft.operators.Multimodal.keyedDescriptors(spark, sf)
       .select(col("doc_id"), col("desc"), col("n2"))
-    val iq = d.filter(col("doc_id") === cfg.hybridQueryVec)
+    val iq = d.filter(col("doc_id") === GraftConfig.hybridQueryVec)
       .select(col("desc").as("qd"), col("n2").as("iqn2"))
-    val imgPool = d.filter(col("doc_id") =!= cfg.hybridQueryVec).crossJoin(broadcast(iq))
+    val imgPool = d.filter(col("doc_id") =!= GraftConfig.hybridQueryVec).crossJoin(broadcast(iq))
       .select(col("doc_id"),
         (col("iqn2") + col("n2") - lit(2L) * expr("vec_dot_long(qd, desc)")).as("d2"))
       .orderBy(col("d2"), col("doc_id")).limit(cfg.rrfPoolK)

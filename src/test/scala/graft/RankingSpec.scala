@@ -111,12 +111,12 @@ class RankingSpec extends GraftSpec {
     val rows = Sketch.q206QuantileEval(spark, sf).collect()
     assert(rows.length ==
       spark.read.parquet(s"$sf/orders.parquet").select("o_orderpriority").distinct().count()
-        * GraftConfig.default.percentileLevels.length)
+        * GraftConfig.percentileLevels.length)
     rows.foreach { r =>
       assert(r.getAs[Boolean]("in_bounds"), s"exact value escaped its bucket: $r")
       val lo = r.getAs[Long]("lo100"); val hi = r.getAs[Long]("hi100")
       val width = hi - lo + 1
-      assert(width == 1 || width * (1L << GraftConfig.default.quantileSketchBits) <= lo,
+      assert(width == 1 || width * (1L << GraftConfig.quantileSketchBits) <= lo,
         s"bucket wider than the 2^-k relative guarantee: $r")
     }
   }
@@ -199,7 +199,7 @@ class RankingSpec extends GraftSpec {
         .digest(id.toString.getBytes("UTF-8"))
         .take(1).map("%02x".format(_)).mkString
       if (b < cfg.splitTrainUpper) "train"
-      else if (b < cfg.splitValUpper) "val" else "test"
+      else if (b < GraftConfig.splitValUpper) "val" else "test"
     }
     val ids = (0L until 512L).toList
     val tr = ids.find(grp(_) == "train").get
@@ -269,7 +269,7 @@ class RankingSpec extends GraftSpec {
     val truth = spark.read.parquet(s"$sf/documents.parquet")
       .select(explode(split(col("text"), " ")).as("t"))
       .filter(col("t") =!= "").select("t").distinct().count().toDouble
-    // HLL standard error 1.04/sqrt(m); m = 16^cmHexChars = 256 → 6.5%
+    // HLL standard error 1.04/sqrt(m); m = 16^CmHexChars = 256 → 6.5%
     val m = math.pow(16.0, Sketch.CmHexChars)
     val tol = 3.0 * 1.04 / math.sqrt(m)
     assert(math.abs(est - truth) <= tol * truth,
@@ -351,20 +351,19 @@ class RankingSpec extends GraftSpec {
       .map("%02x".format(_)).mkString
 
   test("q156: every inserted key's positions are set; words are 32-bit; n_set = bit_count") {
-    val cfgd = GraftConfig.default
     val dir = docs(1L -> "alpha beta", 2L -> "gamma delta", 3L -> "alpha beta")
     val bySource = Sketch.q156BloomBuild(spark, dir).collect()
       .map(r => (r.getLong(1), r.getLong(2), r.getInt(3)))
     bySource.foreach { case (wi, bits, nset) =>
-      assert(wi >= 0 && wi < cfgd.bloomBits / 32)
+      assert(wi >= 0 && wi < Sketch.BloomBits / 32)
       assert((bits >>> 32) == 0L, "words must stay within 32 bits")
       assert(java.lang.Long.bitCount(bits) == nset)
     }
     val bitsByWord = bySource.map { case (wi, b, _) => wi -> b }.toMap
     Seq("alpha beta", "gamma delta").foreach { text =>
       val h = md5Hex(text)
-      (0 until cfgd.bloomHashes).foreach { j =>
-        val pos = java.lang.Long.parseLong(h.substring(j * 8, j * 8 + 8), 16) % cfgd.bloomBits
+      (0 until Sketch.BloomHashes).foreach { j =>
+        val pos = java.lang.Long.parseLong(h.substring(j * 8, j * 8 + 8), 16) % Sketch.BloomBits
         val bit = 1L << (pos % 32).toInt
         assert((bitsByWord.getOrElse(pos / 32, 0L) & bit) != 0L,
           s"position $pos of '$text' must be set")
@@ -498,7 +497,7 @@ class RankingSpec extends GraftSpec {
 
   test("q277: min-max fusion is bounded, deterministic, and each pool's argmax normalizes to 1") {
     val rows = Ranking.q277MinmaxFusion(spark, sf).collect()
-    assert(rows.nonEmpty && rows.length <= GraftConfig.default.rrfTopK)
+    assert(rows.nonEmpty && rows.length <= GraftConfig.rrfTopK)
     rows.foreach { r =>
       val f = r.getAs[Double]("fused")
       assert(f >= 0.0 && f <= 2.0, "two [0,1] normalizations sum to at most 2")
@@ -573,7 +572,7 @@ class RankingSpec extends GraftSpec {
   }
 
   test("q284: mixed ledger serves both granularities; union-not-sum holds per period") {
-    val P = GraftConfig.default.ledgerPeriodDays
+    val P = Sketch.LedgerPeriodDays
     val rows = Sketch.q284LedgerCompact(spark, sf).collect()
     assert(rows.nonEmpty)
     val srcs = rows.map(_.getAs[String]("src")).toSet
@@ -599,7 +598,7 @@ class RankingSpec extends GraftSpec {
   }
 
   test("q284: compacted artifact registers equal a straight-by-period resketch bitwise") {
-    val P = GraftConfig.default.ledgerPeriodDays
+    val P = Sketch.LedgerPeriodDays
     val hex = Sketch.CmHexChars
     val sfxLen = 32 - hex
     val ev = graft.sources.Tables.events(spark, sf)
@@ -638,7 +637,7 @@ class RankingSpec extends GraftSpec {
 
   test("q284: reads the persisted super-registers (doctored artifact saturates the aged period)") {
     import spark.implicits._
-    val P = GraftConfig.default.ledgerPeriodDays
+    val P = Sketch.LedgerPeriodDays
     val DayMs = 86400000L
     val dir = java.nio.file.Files.createTempDirectory("hllcompact").toString
     // day 10 → period 0 (aged once day 30 exists: period 1 is current)
@@ -666,7 +665,7 @@ class RankingSpec extends GraftSpec {
     val srcs = rows.map(_.getAs[String]("src")).toSet
     assert(srcs == Set("compact", "daily"),
       s"test corpus must exercise BOTH ledger granularities, got $srcs")
-    val P = GraftConfig.default.ledgerPeriodDays
+    val P = Sketch.LedgerPeriodDays
     val perPeriod = graft.sources.Tables.orders(spark, sf)
       .select(expr(s"(unix_millis(CAST(o_orderdate AS TIMESTAMP)) div 86400000) div $P").as("period"))
       .groupBy("period").agg(count(lit(1)).as("cnt"))
@@ -681,13 +680,13 @@ class RankingSpec extends GraftSpec {
   }
 
   test("q295: compacted artifact buckets equal a straight-by-period sketch bitwise (sum-mergeability)") {
-    val P = GraftConfig.default.ledgerPeriodDays
+    val P = Sketch.LedgerPeriodDays
     val vals = graft.sources.Tables.orders(spark, sf)
       .select(expr("unix_millis(CAST(o_orderdate AS TIMESTAMP)) div 86400000").as("day"),
         expr("CAST(floor(o_totalprice * 100) AS BIGINT)").as("v"))
     val maxDay = vals.agg(max(col("day"))).head().getLong(0)
     val curStart = (maxDay / P) * P
-    val k = GraftConfig.default.quantileSketchBits
+    val k = GraftConfig.quantileSketchBits
     // independent reference: one sketch built straight over each aged
     // period (never through the daily ledger)
     val expected = vals.filter(col("day") < curStart)
@@ -716,7 +715,7 @@ class RankingSpec extends GraftSpec {
 
   test("q295: reads the persisted super-buckets (doctored artifact shifts the aged period's total)") {
     import spark.implicits._
-    val P = GraftConfig.default.ledgerPeriodDays
+    val P = Sketch.LedgerPeriodDays
     val DayMs = 86400000L
     val dir = java.nio.file.Files.createTempDirectory("qscompact").toString
     // days 10/11 → period 0 (aged once day 30 makes period 1 current)
@@ -726,7 +725,7 @@ class RankingSpec extends GraftSpec {
       .write.mode("overwrite").parquet(s"$dir/orders.parquet")
     val before = Sketch.q295QuantileCompact(spark, dir).collect()
       .map(r => r.getLong(0) -> r.getAs[Long]("n")).toMap
-    val k = GraftConfig.default.quantileSketchBits
+    val k = GraftConfig.quantileSketchBits
     val path = graft.sources.Scratch.keyedDir("qsperiod_base", dir, spark,
       Seq("orders.parquet"), s"qsk=$k,p=$P,cs=${(30L / P) * P}")
     // doctor: one absurd-count bucket replaces the aged period's table

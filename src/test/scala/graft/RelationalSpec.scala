@@ -109,8 +109,7 @@ class RelationalSpec extends GraftSpec {
 
   test("q265: sketch-derived salt scales with the hot key and respects the cap") {
     import spark.implicits._
-    val ops = new graft.operators.RelationalOps(GraftConfig(
-      saltFactor = 8, saltTargetRows = 32L))
+    val ops = new graft.operators.RelationalOps(GraftConfig(saltFactor = 8))
     // 1000 copies of one key: CMS upper bound ≥ 1000 → raw factor ≥ 32,
     // capped at saltFactor·4 = 32 → exactly 32
     val hot = (1 to 1000).map(_ => "hot").toDF("k")
@@ -166,7 +165,7 @@ class RelationalSpec extends GraftSpec {
 
   test("q166: excluded suppliers never count; repeat lineitems count a supplier once") {
     import spark.implicits._
-    val ops = new graft.operators.RelationalOps(GraftConfig(suppExcludeBelowAcctbal = 0.0))
+    val ops = new graft.operators.RelationalOps(GraftConfig())
     val dir = java.nio.file.Files.createTempDirectory("q166").toString
     // part 1 (brand B, size 1): suppliers 10 (twice), 20 (bad) → count 1
     // part 2 (brand B, size 2): suppliers 10, 30 → count 2
@@ -184,7 +183,7 @@ class RelationalSpec extends GraftSpec {
   test("q162: blame only when exactly one supplier is late; non-F orders excluded") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val ops = new graft.operators.RelationalOps(GraftConfig(lateShipDays = 30))
+    val ops = new graft.operators.RelationalOps(GraftConfig())
     val dir = java.nio.file.Files.createTempDirectory("q162").toString
     val day = 86400000L
     val base = java.sql.Timestamp.valueOf("1996-03-01 00:00:00").getTime
@@ -211,7 +210,7 @@ class RelationalSpec extends GraftSpec {
   test("q152: one late line counts an order once; on-time and out-of-year orders never count") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val ops = new graft.operators.RelationalOps(GraftConfig(waitYear = 1996, lateShipDays = 30))
+    val ops = new graft.operators.RelationalOps(GraftConfig())
     val dir = java.nio.file.Files.createTempDirectory("q152").toString
     val day = 86400000L
     val base = java.sql.Timestamp.valueOf("1996-03-01 00:00:00").getTime
@@ -238,7 +237,7 @@ class RelationalSpec extends GraftSpec {
       .map(r => (r.getLong(0), r.getLong(1)))
     val nCust = spark.read.parquet(s"$sf/customer.parquet").count()
     val keptOrders = spark.read.parquet(s"$sf/orders.parquet")
-      .filter(col("o_orderpriority") =!= GraftConfig.default.custDistExcludePriority).count()
+      .filter(col("o_orderpriority") =!= Relational.CustDistExcludePriority).count()
     assert(rows.map(_._2).sum == nCust, "every customer is in exactly one bucket")
     assert(rows.map { case (c, d) => c * d }.sum == keptOrders,
       "bucket-weighted counts must add back to the kept order count")
@@ -250,7 +249,7 @@ class RelationalSpec extends GraftSpec {
   }
 
   test("q191 dormant customers: every reported nation is in the configured key set") {
-    val ks = GraftConfig.default.globalNationKeys.map(_.toLong).toSet
+    val ks = Relational.GlobalNationKeys.map(_.toLong).toSet
     val rows = Relational.q191GlobalCustomers(spark, sf).collect()
     rows.foreach { r =>
       assert(ks(r.getAs[Long]("c_nationkey")))
@@ -306,7 +305,7 @@ class RelationalSpec extends GraftSpec {
     // region restriction: reported nations all belong to the configured region
     val regionNations = spark.read.parquet(s"$sf/nation.parquet")
       .join(spark.read.parquet(s"$sf/region.parquet")
-        .filter(org.apache.spark.sql.functions.col("r_name") === GraftConfig.default.minCostRegion),
+        .filter(org.apache.spark.sql.functions.col("r_name") === Relational.MinCostRegion),
         org.apache.spark.sql.functions.col("n_regionkey") ===
           org.apache.spark.sql.functions.col("r_regionkey"))
       .select("n_name").collect().map(_.getString(0)).toSet
@@ -321,7 +320,7 @@ class RelationalSpec extends GraftSpec {
     import org.apache.spark.sql.functions._
     val li = spark.read.parquet(s"$sf/lineitem.parquet")
     val nk = spark.read.parquet(s"$sf/nation.parquet")
-      .filter(col("n_name") === GraftConfig.default.valueNation)
+      .filter(col("n_name") === Relational.ValueNation)
       .select("n_nationkey").collect().map(_.getInt(0)).toSet
     val sk = spark.read.parquet(s"$sf/supplier.parquet")
       .filter(col("s_nationkey").isin(nk.toSeq.map(Int.box): _*))
@@ -333,7 +332,7 @@ class RelationalSpec extends GraftSpec {
       .collect().map(r => r.getLong(0) -> r.getDecimal(1)).toMap
     val total = pv.values.map(BigDecimal(_)).sum
     val expectKept = pv.filter { case (_, v) =>
-      BigDecimal(v) * GraftConfig.default.valueShareDenom > total }.keySet
+      BigDecimal(v) * Relational.ValueShareDenom > total }.keySet
     assert(rows.map(_.getAs[Long]("p_partkey")).toSet == expectKept)
   }
 
@@ -404,7 +403,7 @@ class RelationalSpec extends GraftSpec {
     val (n0, y0) = keys.head
     val direct = graft.sources.Tables.lineitem(spark, sf)
       .join(graft.sources.Tables.part(spark, sf)
-        .filter(col("p_name").contains(cfg.profitPartToken)), col("l_partkey") === col("p_partkey"))
+        .filter(col("p_name").contains(Relational.ProfitPartToken)), col("l_partkey") === col("p_partkey"))
       .join(graft.sources.Tables.supplier(spark, sf), col("l_suppkey") === col("s_suppkey"))
       .join(graft.sources.Tables.nation(spark, sf).filter(col("n_name") === n0),
         col("s_nationkey") === col("n_nationkey"))
@@ -427,13 +426,13 @@ class RelationalSpec extends GraftSpec {
   test("q313 capacity semijoin: existence-only (no duplicates), all in the audited nation") {
     val cfg = GraftConfig.default
     val rows = Relational.q313CapacitySemijoin(spark, sf).collect()
-    assert(rows.nonEmpty, s"${cfg.pendingNation} has qualifying suppliers at every SF")
+    assert(rows.nonEmpty, s"${Relational.PendingNation} has qualifying suppliers at every SF")
     val keys = rows.map(_.getLong(0))
     assert(keys.distinct.length == keys.length,
       "semijoin must emit each supplier once no matter how many parts qualified it")
     val nat = graft.sources.Tables.supplier(spark, sf)
       .join(graft.sources.Tables.nation(spark, sf), col("s_nationkey") === col("n_nationkey"))
-      .filter(col("n_name") === cfg.pendingNation)
+      .filter(col("n_name") === Relational.PendingNation)
       .select("s_suppkey").collect().map(_.getLong(0)).toSet
     assert(keys.forall(nat), "every surfaced supplier sits in the audited nation")
   }

@@ -707,13 +707,13 @@ class TextStreamSpec extends GraftSpec {
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     d.foreach { r =>
       assert(r.getLong(0) < r.getLong(1))
-      assert(r.getLong(2) >= 0L && r.getLong(2) <= GraftConfig.default.videoNeardupMaxD2)
+      assert(r.getLong(2) >= 0L && r.getLong(2) <= Multimodal.VideoNeardupMaxD2)
       assert(keys(r.getLong(0)) == keys(r.getLong(1)),
         "every emitted pair must share the temporal blocking key")
     }
     // the verify bound is TIGHTER than the key bins: some candidates drop
     val loose = Multimodal.videoNeardupWith(spark, sf,
-      GraftConfig.default.videoDupKeyMaxDf, Long.MaxValue).count()
+      Multimodal.VideoDupKeyMaxDf, Long.MaxValue).count()
     assert(loose > d.length,
       "the exact-verify bound must prune real candidates, not rubber-stamp the key")
   }
