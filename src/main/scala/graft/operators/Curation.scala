@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.GraftConfig
-import graft.sources.Tables
+import graft.sources.{Artifact, Tables}
 
 /** Corpus-curation operators a large-scale training-data pipeline runs
   * between ingestion and training: train/eval contamination detection,
@@ -1622,11 +1622,21 @@ class CurationOps(val cfg: GraftConfig) {
     * doc, is dropped for the same reason overflow headroom matters
     * more than an affine constant.
     *
-    * Scale: one explode→groupBy for the ${DsirBuckets}-row bucket
-    * table (map-combinable), broadcast back onto the token stream,
-    * per-doc sum — a two-scan pipeline with a broadcast-tiny join, no
-    * corpus shuffle beyond the doc_id aggregate. */
-  def q320DsirWeights(spark: SparkSession, dir: String): DataFrame = {
+    * Scale: the per-doc weight table is a persisted artifact
+    * (`dsir_weights`, keyed on the corpus, the bucket count, the
+    * target language and the scale), built once per corpus: one
+    * explode→groupBy for the ${DsirBuckets}-row bucket table
+    * (map-combinable), broadcast back onto the token stream, per-doc
+    * sum — a two-scan pipeline with a broadcast-tiny join, no corpus
+    * shuffle beyond the doc_id aggregate. Every later caller (q321,
+    * the q334 recipe, a per-doc weight request) reads that one
+    * doc-sized table. */
+  def q320DsirWeights(spark: SparkSession, dir: String): DataFrame =
+    Artifact.getOrBuild(spark, "dsir_weights", dir, Seq("documents.parquet"),
+      s"b=$DsirBuckets,lang=$DsirTargetLang,s=${GraftConfig.dsirScale}")(
+      q320DsirWeightsFull(spark, dir).write.parquet(_))
+
+  private def q320DsirWeightsFull(spark: SparkSession, dir: String): DataFrame = {
     val S = GraftConfig.dsirScale
     val tok = dsirTokens(spark, dir)
     // raw and target counts in ONE map-combinable pass (a conditional
@@ -1660,9 +1670,9 @@ class CurationOps(val cfg: GraftConfig) {
     * per-token average weight, so verbose docs don't buy selection
     * mass.
     *
-    * Scale: q320's pipeline + one global TakeOrderedAndProject —
-    * per-partition top-k before a single bounded merge, never a full
-    * sort. */
+    * Scale: a read of q320's persisted weight table + one global
+    * TakeOrderedAndProject — per-partition top-k before a single
+    * bounded merge, never a full sort. */
   def q321ImportanceResample(spark: SparkSession, dir: String): DataFrame = {
     val K = cfg.dsirSampleK
     q320DsirWeights(spark, dir)
@@ -1778,10 +1788,12 @@ class CurationOps(val cfg: GraftConfig) {
     *
     * Scale: three already-scaled operators (each documented at its
     * def) + per-stage map-combinable aggregates; the only new state
-    * is the 3-row audit itself. The composition reads the SAME
-    * persisted artifacts (contain_pairs, famlbl) its stages serve
-    * individually — the recipe is a plan over artifacts, not a
-    * re-derivation. */
+    * is the 3-row audit itself. The stages read the SAME persisted
+    * artifacts their operators serve individually: the per-doc
+    * verdict and weight tables (quote_verdicts, dsir_weights) and the
+    * family labels soft dedup weights from (famlbl_full) — the recipe
+    * is a plan over artifacts, not a re-derivation, and what its build
+    * publishes is exactly what a later per-doc verdict request reads. */
   def q334SelectionRecipe(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val S = GraftConfig.dsirScale

@@ -139,14 +139,16 @@ private[graft] object Artifact {
 
   /** The artifact under `(tag, dataDir, inputs, cfgKey)`; on a miss
     * `build` writes it (parquet, `_SUCCESS` included) to the path it
-    * is given. A hit costs one keyedDir, one `_SUCCESS` check, one
-    * read. */
+    * is given, and the build-and-publish time is recorded as the
+    * [[graft.Trace]] tag `artifact.<tag>`. A hit costs one keyedDir,
+    * one `_SUCCESS` check, one read, and records nothing. */
   def getOrBuild(spark: SparkSession, tag: String, dataDir: String,
       inputs: Seq[String], cfgKey: String)(build: String => Unit): DataFrame = {
     val path = Scratch.keyedDir(tag, dataDir, spark, inputs, cfgKey)
     val dest = new Path(path)
     val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(dest, "_SUCCESS"))) publish(fs, dest, build)
+    if (!fs.exists(new Path(dest, "_SUCCESS")))
+      graft.Trace(s"artifact.$tag")(publish(fs, dest, build))
     spark.read.parquet(path)
   }
 

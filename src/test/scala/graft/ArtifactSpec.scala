@@ -118,4 +118,18 @@ class ArtifactSpec extends GraftSpec {
     assert(offenders.isEmpty,
       s"build-if-absent outside Artifact.getOrBuild in: ${offenders.mkString(", ")}")
   }
+
+  test("every literal artifact tag under src/main names one call site") {
+    // two sites sharing a tag and a config key would read each other's tables
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repository root: ${root.toAbsolutePath}")
+    val call = """Artifact\.getOrBuild\(\s*spark\s*,\s*"([^"]+)"""".r
+    val tags = Files.walk(root).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toList
+      .flatMap(p => call.findAllMatchIn(new String(Files.readAllBytes(p), "UTF-8"))
+        .map(m => m.group(1) -> root.relativize(p).toString))
+    assert(tags.size >= 27, s"the tag scan found only ${tags.size} call sites")
+    val shared = tags.groupBy(_._1).filter(_._2.size > 1)
+    assert(shared.isEmpty, s"artifact tags used at more than one site: $shared")
+  }
 }

@@ -630,8 +630,18 @@ class CurationSpec extends GraftSpec {
       (1L, "alpha alpha alpha alpha", "en", "s"),
       (2L, "beta beta beta beta", "de", "s"),
       (3L, "alpha beta alpha beta", "de", "s"))
-    val got = graft.operators.Curation.q320DsirWeights(spark, dir).collect()
+    def weights(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
+    val (first, built) = artifactBuilds(Curation.q320DsirWeights(spark, dir))
+    assert(built == Seq("dsir_weights"), s"the first call must build the weights; built $built")
+    val got = weights(first)
+    // a second call serves the persisted weight table: no build, same rows
+    val (again, rebuilt) = artifactBuilds(Curation.q320DsirWeights(spark, dir))
+    assert(rebuilt.isEmpty, s"the second call rebuilt $rebuilt")
+    assert(weights(again) == got)
+    val keyed = readDirs(again)
+    assert(keyed.size == 1 && keyed.head.startsWith("graft_dsir_weights_"),
+      s"the second call must read the keyed weight artifact, read $keyed")
     assert(got(0L) == ((4L, 3272724L, 818181L)))
     assert(got(2L) == ((4L, 571428L, 142857L)))
     assert(got(3L) == ((4L, 1922076L, 480519L)),

@@ -1264,12 +1264,30 @@ class DedupSpec extends GraftSpec {
         (5L, (41 to 52).map(i => f"w$i%02d").mkString(" ")))
       .toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val got = Dedup.q329QuoteScrub(spark, dir).collect()
+    def verdicts(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getBoolean(2)))).toMap
+    val (first, built) = artifactBuilds(Dedup.q329QuoteScrub(spark, dir))
+    assert(built.contains("quote_verdicts"), s"the first call must build the verdicts; built $built")
+    val got = verdicts(first)
     assert(got(1L) == ((1L, true)), "the strict quote must die toward its container")
     assert(got(2L) == ((0L, false)), "the container survives")
     assert(got(3L) == ((0L, false)))
     assert(got(4L) == ((0L, false)), "mutual containment: the lower id is the keeper")
     assert(got(5L) == ((1L, true)), "mutual containment: the higher id is the scrubbed copy")
+    // a second call serves the persisted verdict table: no build, same rows
+    val (again, rebuilt) = artifactBuilds(Dedup.q329QuoteScrub(spark, dir))
+    assert(rebuilt.isEmpty, s"the second call rebuilt $rebuilt")
+    assert(verdicts(again) == got)
+    val keyed = readDirs(again)
+    assert(keyed.size == 1 && keyed.head.startsWith("graft_quote_verdicts_"),
+      s"the second call must read the keyed verdict artifact, read $keyed")
+    // a changed corpus in the same dir: doc 2 no longer contains doc 1
+    Seq((1L, words.take(12).mkString(" ")), (2L, (61 to 80).map(i => f"w$i%02d").mkString(" ")))
+      .toDF("doc_id", "text")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val changed = Dedup.q329QuoteScrub(spark, dir)
+    assert(readDirs(changed) != keyed, "a changed corpus must key a new verdict artifact")
+    assert(verdicts(changed)(1L) == ((0L, false)),
+      "doc 1 lost its container: a stale verdict was served")
   }
 }

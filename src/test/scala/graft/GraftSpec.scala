@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,4 +11,16 @@ trait GraftSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = GraftSession.builder("4").getOrCreate()
   val sf = "/root/testdata/sf0.001"
   override def afterAll(): Unit = {} // session shared across suites; JVM exit cleans up
+
+  /** `f`'s result and the tags of the artifacts it built: each miss of
+    * `Artifact.getOrBuild` records an `artifact.<tag>` Trace span. */
+  def artifactBuilds[T](f: => T): (T, Seq[String]) = {
+    Trace.drain()
+    val r = f
+    (r, Trace.drain().map(_._1).filter(_.startsWith("artifact.")).map(_.stripPrefix("artifact.")))
+  }
+
+  /** The dirs a DataFrame's files lie in (an artifact read: its keyed dir). */
+  def readDirs(df: DataFrame): Set[String] =
+    df.inputFiles.map(f => new Path(f).getParent.getName).toSet
 }
