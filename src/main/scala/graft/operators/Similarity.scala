@@ -22,10 +22,10 @@ import graft.functions.Vec
   *
   * Assignment is shuffle-free: the centroid table is packed into a
   * single array-of-structs row and broadcast, and each vector picks its
-  * cell with an `aggregate()` argmax over that array — a pure map
-  * operation over the corpus. The previous shape (crossJoin + per-vector
-  * row_number window) shuffled centroids×corpus rows; at 100 TB that
-  * window shuffle alone dwarfs the actual scan.
+  * cell with the native `vec_nearest_cells` kernel over that array — a
+  * pure map operation over the corpus. The previous shape (crossJoin +
+  * per-vector row_number window) shuffled centroids×corpus rows; at
+  * 100 TB that window shuffle alone dwarfs the actual scan.
   */
 class SimilarityOps(val cfg: GraftConfig) {
   val NumQueries: Int = cfg.annQueries
@@ -131,27 +131,23 @@ class SimilarityOps(val cfg: GraftConfig) {
        |  FROM scored)
        |SELECT query_id, vec_id, rk, cosine FROM ranked WHERE rk <= $TopK""".stripMargin
 
-  /** Nearest-centroid assignment as a pure map: pack the (tiny) centroid
-    * table into ONE array-of-structs row, broadcast it, and argmax with a
-    * codegen'd fixed-point dot inside an `aggregate()` HOF. Ties go to
-    * the lowest cent_id (the array is sorted by cent_id and the fold
-    * replaces only on strictly greater cosine). Zero shuffle. */
-  private[graft] def assign(e: DataFrame, cents: DataFrame): DataFrame = {
-    val packed = broadcast(cents
+  /** The centroid table packed into ONE broadcast row, `cents` =
+    * array<struct<cent_id, ce, cn2>>: the input [[assign]] and the
+    * query probe hand to `vec_nearest_cells`. */
+  private def packedCents(cents: DataFrame): DataFrame =
+    broadcast(cents
       .select(struct(col("cent_id"), col("ce"),
         expr("CAST(vec_dot_fixed(ce, ce) AS DOUBLE)").as("cn2")).as("c"))
-      .groupBy().agg(array_sort(collect_list(col("c"))).as("cents")))
-    e.crossJoin(packed)
-      .withColumn("cell", expr(
-        """aggregate(
-          |  transform(cents, c -> named_struct(
-          |    'cid', c.cent_id,
-          |    'cs', CAST(vec_dot_fixed(embedding, c.ce) AS DOUBLE) / (sqrt(n2) * sqrt(c.cn2)))),
-          |  named_struct('cid', CAST(NULL AS BIGINT), 'cs', CAST(-1e9 AS DOUBLE)),
-          |  (acc, x) -> IF(x.cs > acc.cs, x, acc),
-          |  acc -> acc.cid)""".stripMargin))
+      .groupBy().agg(collect_list(col("c")).as("cents")))
+
+  /** Nearest-centroid assignment as a pure map: each vector's cell is
+    * the native `vec_nearest_cells` argmax (k = 1) over the broadcast
+    * [[packedCents]] row, ties to the lowest cent_id; a NULL embedding
+    * gets a NULL cell. Zero shuffle. */
+  private[graft] def assign(e: DataFrame, cents: DataFrame): DataFrame =
+    e.crossJoin(packedCents(cents))
+      .withColumn("cell", expr("get(vec_nearest_cells(embedding, n2, cents, 1), 0)"))
       .drop("cents")
-  }
 
   /** Exact per-dimension mean: Σ floor(x·1e7) is exact integer
     * arithmetic (order-free), the division is a fixed expression shape —
@@ -168,34 +164,37 @@ class SimilarityOps(val cfg: GraftConfig) {
       .agg(expr("transform(array_sort(collect_list(struct(pos, m))), s -> s.m)").as("ce"))
       .select(col("cell").as("cent_id"), col("ce"))
 
-  /** Query-side cell ranking: each query ranks ALL centroids (broadcast,
-    * so the crossJoin is map-side) and probes its $Nprobe nearest cells —
-    * reference-grade IVF recall decays with centroid count when only the
-    * argmax cell is probed. The window is over queries×centroids rows
-    * (tiny); the corpus side never sees it. */
+  /** Query-side cell ranking: each query ranks ALL centroids with
+    * `vec_nearest_cells` over the broadcast [[packedCents]] row and
+    * probes its $Nprobe nearest cells — reference-grade IVF recall
+    * decays with centroid count when only the argmax cell is probed.
+    * A map over the (tiny) query side: no window, no shuffle. */
   private def probeCells(q: DataFrame, cents: DataFrame, nprobe: Int): DataFrame =
     probeCellsRanked(q, cents, nprobe).select(col("vec_id"), col("cell"))
 
-  /** As [[probeCells]] but keeping the probe rank — q294's IVF-guided
-    * entry selection orders entry candidates by (cell rank, member id). */
-  private def probeCellsRanked(q: DataFrame, cents: DataFrame, nprobe: Int): DataFrame = {
-    val c = broadcast(cents.select(col("cent_id"), col("ce"),
-      expr("CAST(vec_dot_fixed(ce, ce) AS DOUBLE)").as("cn2")))
-    val w = Window.partitionBy("vec_id").orderBy(col("ccos").desc, col("cent_id"))
-    q.crossJoin(c)
-      .select(col("vec_id"), col("cent_id"),
-        (expr("CAST(vec_dot_fixed(embedding, ce) AS DOUBLE)")
-          / (sqrt(col("n2")) * sqrt(col("cn2")))).as("ccos"))
-      .withColumn("crk", row_number().over(w))
-      .filter(col("crk") <= nprobe)
-      .select(col("vec_id"), col("cent_id").as("cell"), col("crk"))
-  }
+  /** As [[probeCells]] but keeping the query's embedding and n2 and the
+    * probe rank `crk` (1 = nearest) — q294's IVF-guided entry selection
+    * orders entry candidates by (cell rank, member id), and
+    * [[serveAssigned]] scores with the query's own vector. A
+    * NULL-embedding query probes no cell. */
+  private def probeCellsRanked(q: DataFrame, cents: DataFrame, nprobe: Int): DataFrame =
+    q.crossJoin(packedCents(cents))
+      .select(col("vec_id"), col("embedding"), col("n2"),
+        posexplode(expr(s"vec_nearest_cells(embedding, n2, cents, $nprobe)")).as(Seq("pos", "cell")))
+      .withColumn("crk", col("pos") + 1)
+      .drop("pos")
 
   /** q41: IVF ANN — deterministic Lloyd k-means (seeded from the first
     * $NumCentroids vectors, $KmeansIters exact-mean iterations), then
     * top-k for the queries over their $Nprobe nearest cells. Every
     * corpus vector lives in exactly one cell, so multi-probe needs no
-    * dedup — the probe list fans the (tiny) query side out ≤ $Nprobe×. */
+    * dedup — the probe list fans the (tiny) query side out ≤ $Nprobe×.
+    *
+    * Scale: the corpus assignment and the query probe are both maps
+    * over one broadcast centroid row (the native `vec_nearest_cells`
+    * kernel, no shuffle, no window); the only exchange and the only
+    * window are the cell join and the per-query top-k, both bounded
+    * by queries × probed-cell size. */
   def q41AnnIvf(spark: SparkSession, dir: String): DataFrame =
     searchWithCentroids(spark, dir, trainIndex(spark, dir))
 
@@ -264,9 +263,8 @@ class SimilarityOps(val cfg: GraftConfig) {
 
   private[graft] def serveAssigned(assigned: DataFrame, qv: DataFrame,
       cents: DataFrame, nprobe: Int, k: Int = IvfTopK): DataFrame = {
-    val queries = probeCells(qv, cents, nprobe)
-      .join(qv.select(col("vec_id"), col("embedding").as("qe"), col("n2").as("qn2")), "vec_id")
-      .select(col("vec_id").as("query_id"), col("qe"), col("qn2"), col("cell"))
+    val queries = probeCellsRanked(qv, cents, nprobe)
+      .select(col("vec_id").as("query_id"), col("embedding").as("qe"), col("n2").as("qn2"), col("cell"))
     val wTop = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("vec_id"))
     queries.join(assigned, "cell")
       .filter(col("vec_id") =!= col("query_id"))
@@ -3343,9 +3341,10 @@ class SimilarityOps(val cfg: GraftConfig) {
     * corpus where the guide stops paying shows up as one subtraction.
     *
     * Scale: two bounded beam walks + two queries×k eval joins; the
-    * entry selection itself is the IVF probe rank (queries×centroids,
-    * map-side) joined against the cell members of nprobe cells per
-    * query — serving-tier point-lookup work, no full-space scoring. */
+    * entry selection itself is the IVF probe rank (a
+    * `vec_nearest_cells` map over the broadcast centroids) joined
+    * against the cell members of nprobe cells per query —
+    * serving-tier point-lookup work, no full-space scoring. */
   def q294BeamEntryEval(spark: SparkSession, dir: String): DataFrame = {
     val edges = persistedKnnGraph(spark, dir)
       .select(col("vec_id").as("src"), col("nbr_id").as("dst"))
@@ -3748,10 +3747,12 @@ class SimilarityOps(val cfg: GraftConfig) {
     * SAME oracle gates both (the q288 twin discipline).
     *
     * Scale: serving is stateless — nothing enters the state store; the
-    * centroids are a broadcast-sized artifact re-read per batch, and
-    * the corpus side is the static stream-static join leg (the q70
-    * shape). Latency is one micro-batch; throughput is q41's per-query
-    * cost. */
+    * centroids are a broadcast-sized artifact whose read starts no
+    * Spark job, and the corpus side is the static stream-static join
+    * leg (the q70 shape). Per batch, the assignment and the probe are
+    * native `vec_nearest_cells` maps over the broadcast centroid row
+    * and the per-query top-k is the one window. Latency is one
+    * micro-batch; throughput is q41's per-query cost. */
   def q305StreamAnnServe(spark: SparkSession, dir: String): DataFrame = {
     graft.plans.GraftExtensions.ensureRegistered(spark)
     // run-unique scratch (the q325/q335 rule) + eager cut before the
@@ -3811,10 +3812,11 @@ class SimilarityOps(val cfg: GraftConfig) {
     * rows — the distribution ships, scalar averaging stays with the
     * caller (the q96/q246 convention).
     *
-    * Scale: one corpus assignment per curve point over the broadcast
-    * centroid artifact (zero-shuffle map) + cell-bounded candidate
-    * scoring — the sweep costs curve-points × q41, and the eval join
-    * is queries×k. */
+    * Scale: ONE corpus assignment (a zero-shuffle `vec_nearest_cells`
+    * map over the broadcast centroid artifact), stage-cut and shared by
+    * every curve point; per point, a query-side probe map, cell-bounded
+    * candidate scoring and one per-query top-k window — the sweep costs
+    * curve-points × q41's serve, and the eval join is queries×k. */
   def q306IvfProbeCurve(spark: SparkSession, dir: String): DataFrame = {
     graft.plans.GraftExtensions.ensureRegistered(spark)
     val e = emb(spark, dir).withColumn("n2", Vec.norm2N("embedding"))

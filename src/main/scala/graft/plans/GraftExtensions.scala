@@ -36,7 +36,7 @@ object GraftExtensions {
           "actualNum" -> cs.length.toString,
           "docroot" -> "https://spark.apache.org/docs/latest"))))
 
-  /** Validate the evaluated k of a registered shingle function: these
+  /** Validate the evaluated k of a registered k-taking function: these
     * are user-facing SQL surfaces, so a NULL k must not NPE and k < 1
     * must not reach the expression (k = 0 would silently emit
     * empty-string shingles; negative k could throw from substring). */
@@ -58,6 +58,10 @@ object GraftExtensions {
   private val functions: Seq[Builder] = Seq(
     function("vec_dot_fixed", classOf[FixedPointDot], "2") {
       case Seq(a, b) => FixedPointDot(a, b)
+    },
+    function("vec_nearest_cells", classOf[NearestCells], "4 (vec, n2, cents, literal k)") {
+      case Seq(v, n2, cents, k) if k.foldable =>
+        NearestCells(v, n2, cents, literalK("vec_nearest_cells", k))
     },
     function("vec_dot_long", classOf[VecDotLong], "2") {
       case Seq(a, b) => VecDotLong(a, b)

@@ -141,7 +141,8 @@ private[graft] object Artifact {
     * `build` writes it (parquet, `_SUCCESS` included) to the path it
     * is given, and the build-and-publish time is recorded as the
     * [[graft.Trace]] tag `artifact.<tag>`. A hit costs one keyedDir,
-    * one `_SUCCESS` check, one read, and records nothing. */
+    * one `_SUCCESS` check and one footer read on the driver
+    * ([[Parquet.read]]); it starts no Spark job and records nothing. */
   def getOrBuild(spark: SparkSession, tag: String, dataDir: String,
       inputs: Seq[String], cfgKey: String)(build: String => Unit): DataFrame = {
     val path = Scratch.keyedDir(tag, dataDir, spark, inputs, cfgKey)
@@ -149,7 +150,7 @@ private[graft] object Artifact {
     val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new Path(dest, "_SUCCESS")))
       graft.Trace(s"artifact.$tag")(publish(fs, dest, build))
-    spark.read.parquet(path)
+    Parquet.read(spark, path)
   }
 
   private def publish(fs: FileSystem, dest: Path, build: String => Unit): Unit = {

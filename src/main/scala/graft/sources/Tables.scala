@@ -4,13 +4,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Loaders for the test-data star schema + corpus tables.
   *
-  * Plain `spark.read.parquet` — column pruning and predicate pushdown are
-  * Catalyst's job: downstream `select`/`filter` reach the scan, so a query
-  * touching 2 columns reads 2 columns. Loaders therefore never pre-select.
+  * A plain parquet scan whose schema comes from the file's footer
+  * ([[Parquet.read]]), so a load starts no Spark job. Column pruning
+  * and predicate pushdown are Catalyst's job: downstream
+  * `select`/`filter` reach the scan, so a query touching 2 columns
+  * reads 2 columns. Loaders therefore never pre-select.
   */
 object Tables {
   private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    Parquet.read(spark, s"$dir/$name.parquet")
 
   /** Fact-table loader. The test files are single-row-group parquet,
     * which caps a scan at one task no matter what maxPartitionBytes says

@@ -4,8 +4,9 @@ import java.nio.file.{Files, Paths}
 import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
-import graft.sources.{Artifact, Scratch}
+import graft.sources.{Artifact, Parquet, Scratch, Tables}
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 
 class ArtifactSpec extends GraftSpec {
 
@@ -30,7 +31,7 @@ class ArtifactSpec extends GraftSpec {
     ids.toDF("id").repartition(3).write.parquet(p)
   }
 
-  private def ids(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+  private def ids(df: DataFrame): Seq[Long] =
     df.collect().map(_.getLong(0)).sorted.toSeq
 
   /** Staging dirs and claim markers the helper left beside `d`. */
@@ -131,5 +132,54 @@ class ArtifactSpec extends GraftSpec {
     assert(tags.size >= 27, s"the tag scan found only ${tags.size} call sites")
     val shared = tags.groupBy(_._1).filter(_._2.size > 1)
     assert(shared.isEmpty, s"artifact tags used at more than one site: $shared")
+  }
+
+  // ---------- the footer-schema read path ----------
+
+  test("a hit starts no Spark job before the caller's action, and reads the inferred schema") {
+    val dir = dataset()
+    val built = getOrBuild(dir)(write(Seq(1L, 2L, 3L)))
+    assert(ids(built) == Seq(1L, 2L, 3L))
+    val (hit, jobs) = withJobCount(getOrBuild(dir)(_ => fail("a hit must not build")))
+    assert(jobs == 0, s"the artifact hit started $jobs Spark jobs")
+    assert(hit.schema == spark.read.parquet(dest(dir).toString).schema)
+  }
+
+  test("every Tables loader reads the schema spark.read.parquet infers, with no Spark job") {
+    val loaders = Seq[(String, (SparkSession, String) => DataFrame)](
+      "region" -> Tables.region, "nation" -> Tables.nation, "customer" -> Tables.customer,
+      "supplier" -> Tables.supplier, "part" -> Tables.part, "orders" -> Tables.orders,
+      "lineitem" -> Tables.lineitem, "events" -> Tables.events, "documents" -> Tables.documents,
+      "embeddings" -> Tables.embeddings)
+    val present = loaders.filter { case (name, _) => Files.exists(Paths.get(sf, s"$name.parquet")) }
+    assert(present.size >= 8, s"only ${present.map(_._1)} exist under $sf")
+    present.foreach { case (name, load) =>
+      load(spark, sf) // the fact tables' one-time split check plans outside the count
+      val (df, jobs) = withJobCount(load(spark, sf))
+      assert(jobs == 0, s"$name: the load started $jobs Spark jobs")
+      val inferred = spark.read.parquet(s"$sf/$name.parquet")
+      val want = if (name == "events") Tables.normalizeEventTs(inferred) else inferred
+      assert(df.schema == want.schema, s"$name: ${df.schema.simpleString} vs ${want.schema.simpleString}")
+    }
+  }
+
+  test("the footer read fails as spark.read.parquet does on a missing path and on a dir with no data file") {
+    val empty = Files.createTempDirectory("nodata")
+    Files.write(empty.resolve("_SUCCESS"), Array.emptyByteArray)
+    Seq(empty.toString, empty.resolve("absent").toString).foreach { p =>
+      val want = intercept[AnalysisException](spark.read.parquet(p))
+      val got = intercept[AnalysisException](Parquet.read(spark, p))
+      assert(got.getCondition == want.getCondition && got.getMessage == want.getMessage,
+        s"${got.getMessage} vs ${want.getMessage}")
+    }
+  }
+
+  test("Tables and the artifact helper hold no raw spark.read.parquet") {
+    val root = Paths.get("src/main/scala/graft/sources")
+    assert(Files.isDirectory(root), s"run from the repository root: ${root.toAbsolutePath}")
+    Seq("Tables.scala", "Scratch.scala").foreach { f =>
+      val src = new String(Files.readAllBytes(root.resolve(f)), "UTF-8")
+      assert(!src.contains("spark.read.parquet("), s"$f reads parquet with a schema-inference job")
+    }
   }
 }

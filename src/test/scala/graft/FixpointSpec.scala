@@ -1,8 +1,6 @@
 package graft
 
 import graft.operators.{Cc, GraphOps, GraphOpsLib, Pipeline, Scc}
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -32,21 +30,8 @@ class FixpointSpec extends GraftSpec with FixpointFixture {
 
   /** (jobs the call ran, jobs the call plus a count of its result ran) */
   private def jobs(f: => DataFrame): (Int, Int) = {
-    val sc = spark.sparkContext
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    ListenerBusDrain(sc)
-    sc.addSparkListener(l)
-    try {
-      val out = f
-      ListenerBusDrain(sc)
-      val call = n.get
-      out.count()
-      ListenerBusDrain(sc)
-      (call, n.get)
-    } finally sc.removeSparkListener(l)
+    val (out, call) = withJobCount(f)
+    (call, call + withJobCount(out.count())._2)
   }
 
   test("each kernel runs the job counts it ran before the driver") {
@@ -57,6 +42,10 @@ class FixpointSpec extends GraftSpec with FixpointFixture {
     // did (48/50 and 15/17 before) since its cut goes through Ck: with
     // a raw lazy localCheckpoint in that cut it ran the old counts
     // again. assembleEdges drops the same 5 jobs (121-122/126-127).
+    // q43, q63 and assembleEdges read `documents` through Tables, whose
+    // footer-schema read starts no job: one schema job fewer for q43
+    // and q63 (20/21 and 21/22 before), three for assembleEdges
+    // (116-117/121-122 before); re-pinned over 2 runs in two JVMs.
     val pinned: Map[String, (Range, Range)] = Map(
       "cc" -> (35 to 38, 36 to 39),
       "scc" -> (161 to 170, 162 to 171),
@@ -64,13 +53,13 @@ class FixpointSpec extends GraftSpec with FixpointFixture {
       "sssp per source" -> (103 to 103, 105 to 105),
       "kcore" -> (17 to 17, 20 to 20),
       "cleanToConvergence" -> (26 to 26, 27 to 27),
-      "q43" -> (20 to 20, 21 to 21),
-      "q63" -> (21 to 21, 22 to 22),
+      "q43" -> (19 to 19, 20 to 20),
+      "q63" -> (20 to 20, 21 to 21),
       "node removal x2" -> (46 to 46, 48 to 48),
       "node removal" -> (12 to 12, 14 to 14),
       "repeat adjust" -> (14 to 14, 20 to 20),
       "chains" -> (24 to 25, 32 to 33),
-      "assembleEdges" -> (116 to 117, 121 to 122))
+      "assembleEdges" -> (113 to 114, 118 to 119))
     val all = kernels(GraphOps) :+ ("assembleEdges" -> (() => Pipeline.assembleEdges(spark, sf, null)))
     val got = all.map { case (name, k) => name -> jobs(k()) }
     val off = got.filterNot { case (name, (call, total)) =>

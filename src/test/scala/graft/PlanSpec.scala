@@ -29,8 +29,8 @@ class PlanSpec extends GraftSpec {
     assert(windows(plan("q18_chimeric_cut")) == 0)
   }
 
-  test("q41 IVF: windows only on the tiny query side (probe rank + final top-k)") {
-    assert(windows(plan("q41_ann_ivf")) == 2)
+  test("q41 IVF: one window, the final top-k on the tiny query side (probe rank is a map)") {
+    assert(windows(plan("q41_ann_ivf")) == 1)
   }
 
   test("dimension joins broadcast (q2 star joins)") {
@@ -648,9 +648,10 @@ class PlanSpec extends GraftSpec {
   test("q306 probe curve: every curve point assigns via broadcast centroids — the corpus never shuffles for the join") {
     val p = plan("q306_probe_curve")
     assert(!p.contains("CartesianProduct"), "no unbounded pair generation in the sweep")
-    // per-point work: windows only on the query side (probe rank + final
-    // top-k per point) — corpus-keyed windows would be the skew-killer
-    assert(windows(p) <= 2 * graft.operators.Similarity.ProbeCurveMax,
+    // per-point work: windows only on the query side (the final top-k
+    // per point; the probe rank is a map) — corpus-keyed windows would
+    // be the skew-killer
+    assert(windows(p) <= graft.operators.Similarity.ProbeCurveMax,
       "windows must stay on the panel side of every curve point")
   }
 
@@ -661,8 +662,9 @@ class PlanSpec extends GraftSpec {
     assert(p.contains(s"= ${graft.operators.Similarity.AnnFilterLabel}"),
       "the label predicate must be in the plan (candidate generation), not post-applied")
     assert(!p.contains("CartesianProduct"), "no unbounded pair generation")
-    // windows only on the query side: probe rank + final top-k
-    assert(windows(p) == 2, "corpus-keyed windows would be the skew-killer")
+    // one window, on the query side: the final top-k (the probe rank
+    // is the vec_nearest_cells map, not a window)
+    assert(windows(p) == 1, "corpus-keyed windows would be the skew-killer")
   }
 
   test("q328 MMR: one exchange to group by query — the greedy is in-group, not a join cascade") {

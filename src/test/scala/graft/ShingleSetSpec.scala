@@ -46,7 +46,8 @@ class ShingleSetSpec extends GraftSpec {
     graft.plans.GraftExtensions.ensureRegistered(spark)
     val one = Seq(("abc", 1)).toDF("t", "tag")
     Seq("shingle_set(t, null)", "shingle_set(t, 0)", "shingle_set(t, -2)",
-        "shingle_stats(t, null)", "shingle_stats(t, 0)").foreach { bad =>
+        "shingle_stats(t, null)", "shingle_stats(t, 0)",
+        "vec_nearest_cells(t, t, t, null)", "vec_nearest_cells(t, t, t, 0)").foreach { bad =>
       val e = intercept[org.apache.spark.sql.AnalysisException] {
         one.select(expr(bad)).collect()
       }
@@ -57,8 +58,10 @@ class ShingleSetSpec extends GraftSpec {
   test("registered builders reject a wrong argument count with WRONG_NUM_ARGS") {
     graft.plans.GraftExtensions.ensureRegistered(spark)
     val one = Seq(("abc", 1)).toDF("t", "tag")
+    // a non-literal k matches no builder case either
     Seq("inter_count(t)" -> "inter_count", "minhash_sig(t, t)" -> "minhash_sig",
-        "sign_bands_long(t)" -> "sign_bands_long").foreach { case (bad, fn) =>
+        "sign_bands_long(t)" -> "sign_bands_long", "vec_nearest_cells(t, t)" -> "vec_nearest_cells",
+        "vec_nearest_cells(t, t, t, tag)" -> "vec_nearest_cells").foreach { case (bad, fn) =>
       val e = intercept[org.apache.spark.sql.AnalysisException] {
         one.select(expr(bad)).collect()
       }
